@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark main (driver contract): times the headline queries at
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
@@ -26,30 +28,26 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // collect_list/set aggs (as-of histories, winnow buckets, centroids)
-      // keep the fast object-hash path at realistic per-partition key
-      // counts; the 128-key default falls back to sort-based almost
-      // immediately (q_asof_broadcast 1.46 s -> 0.95 s at sf0.1)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "8192")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark) // SQL surface on
+    val spark = Sessions.local()
+
+    // Every phase fails loudly: a swallowed warm-up, ramp-pin or
+    // provisioning failure would silently change what the timed row
+    // measures. Failures print, land in the ledger row, and make the
+    // run exit non-zero after the ledger and summary line are written.
+    val failures = scala.collection.mutable.ArrayBuffer.empty[String]
+    def failed(name: String, phase: String, e: Throwable): Unit = {
+      System.err.println(s"[bench] $name $phase failed: ${e.getMessage}")
+      failures += s"$name $phase"
+    }
 
     // Warm the JVM/codegen/file-listing paths once, outside timing: the
     // flagship plus one tiny-SF run of each headline query, so measured
     // times are steady-state execution, not whole-stage-codegen compile.
     force(SparkEntry.entry(spark))
-    val names = SparkEntry.benchQueries.filter(SparkEntry.queries.contains)
+    val names = SparkEntry.benchQueries
     names.foreach { n =>
       try force(SparkEntry.queries(n)(spark, "/root/testdata/sf0.001"))
-      catch { case _: Throwable => () }
+      catch { case NonFatal(e) => failed(n, "warmup", e) }
     }
     // Ramp pin (r18 VERDICT #3): q_corpus_clusters' ledger row showed a
     // 2× spread across QUIET epochs (judge anchors 2.90/4.06 s vs
@@ -71,7 +69,7 @@ object Bench {
     Seq("q_corpus_clusters").foreach { n =>
       if (names.contains(n))
         try force(SparkEntry.queries(n)(spark, sfDir))
-        catch { case _: Throwable => () }
+        catch { case NonFatal(e) => failed(n, "ramp-pin", e) }
     }
     // Epoch tag (r17 VERDICT #4): BENCH_HISTORY medians are only as
     // honest as the epochs behind them — a contended driver row (545 s
@@ -100,7 +98,7 @@ object Bench {
     // round's query time (r15 VERDICT #6).
     names.foreach { n =>
       SparkEntry.provisions.get(n).foreach { p =>
-        try p(spark, sfDir) catch { case _: Throwable => () }
+        try p(spark, sfDir) catch { case NonFatal(e) => failed(n, "provision", e) }
       }
     }
     val results = names.map { name =>
@@ -115,8 +113,7 @@ object Bench {
         Sessions.autosizeFor(df)
         force(df); true
       }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
+        catch { case NonFatal(e) => failed(name, "run", e); false }
       // failed queries report -1 so the JSON can't mistake a crash for a
       // fast run
       name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
@@ -133,7 +130,8 @@ object Bench {
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","load":$loadAvg,"calib_sec":$calibSec,"queries":$qs,"sf":"$sfDir"}"""
+    val failedJson = failures.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","load":$loadAvg,"calib_sec":$calibSec,"failed":$failedJson,"queries":$qs,"sf":"$sfDir"}"""
     // The driver's BENCH_r{N}.json snapshot keeps only the last 2000
     // chars of stdout; the full-precision 93-query line is ~5 KB, so
     // every round's artifact carried a head-truncated tail and
@@ -157,13 +155,14 @@ object Bench {
     def f3r(d: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
     val historyRow =
-      s"""{"ts_ms":${System.currentTimeMillis()},"metric":"total","value":$total,"unit":"sec","load":${f3r(loadAvg)},"calib_sec":${f3r(calibSec)},"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"ts_ms":${System.currentTimeMillis()},"metric":"total","value":$total,"unit":"sec","load":${f3r(loadAvg)},"calib_sec":${f3r(calibSec)},"failed":$failedJson,"queries":$qs,"sf":"$sfDir"}"""
     appendHistory(java.nio.file.Paths.get("BENCH_HISTORY.jsonl"), historyRow)
     // stop BEFORE the summary line prints: any executor/shutdown chatter
     // must not land between the line and process exit, where it would
     // eat into the tail capture's 2000-char budget
     spark.stop()
     println(summaryLine(results, sfDir, loadAvg = loadAvg, calibSec = calibSec))
+    if (failures.nonEmpty) sys.exit(1)
   }
 
   /** Append one ledger row under an OS file lock (the `.lock` sibling

@@ -13,8 +13,8 @@ import graft.streaming.Streaming
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * Every operator from SURVEY.md §2 (plus the LLM-pipeline extensions) is
-  * exposed as a named query; SQL-expressible ones carry a DuckDB oracle in
-  * [[oracleSql]] with column names/types aligned on both sides (the
+  * exposed as a named query in [[catalog]]; SQL-expressible ones carry a
+  * DuckDB oracle there with column names/types aligned on both sides (the
   * driver's compare sorts columns by name before hashing).
   */
 object SparkEntry {
@@ -1812,16 +1812,6 @@ object SparkEntry {
     idx
   }
 
-  /** Untimed once-per-corpus provisioning steps (index writes, dim
-    * materializations) keyed by the bench query that depends on them —
-    * Bench runs these AFTER warmup, BEFORE the timed loop, mirroring an
-    * ingest pipeline where index maintenance is not on the query path.
-    */
-  private[graft] val provisions: Map[String, (SparkSession, String) => Unit] =
-    Map(
-      "q_sim_topk_auto" -> ((s, dir) => { provisionSimTopkAuto(s, dir); () }),
-      "q_zorder_versioned" -> ((s, dir) => { provisionZorderVersioned(s, dir); () }))
-
   private def qSimTopkAuto(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
     val idx = provisionSimTopkAuto(s, dir)
@@ -2719,262 +2709,25 @@ object SparkEntry {
   private def qWinnowFingerprint(s: SparkSession, dir: String): DataFrame =
     TextOps.winnowFingerprints(Tables.documents(s, dir))
 
-  // ---- driver contract maps -------------------------------------------
+  // ---- the query catalog ---------------------------------------------
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_pricing_summary" -> (q1PricingSummary _),
-    "q3_segment_revenue" -> (q3SegmentRevenue _),
-    "q5_region_revenue" -> (q5RegionRevenue _),
-    "q18_large_orders" -> (q18LargeOrders _),
-    "q10_returned_customers" -> (q10ReturnedCustomers _),
-    "q_window_suite" -> (qWindowSuite _),
-    "q_grouping_sets" -> (qGroupingSets _),
-    "q_semi_anti" -> (qSemiAnti _),
-    "q_mode_priority" -> (qModePriority _),
-    "q_scd2" -> (qScd2 _),
-    "q_attribution" -> (qAttribution _),
-    "q_histogram" -> (qHistogram _),
-    "q_histogram_equidepth" -> (qHistogramEquidepth _),
-    "q_segment_filter" -> (qSegmentFilter _),
-    "q_boilerplate" -> (qBoilerplate _),
-    "q_semantic_dedup" -> (qSemanticDedup _),
-    "q7_volume_shipping" -> (q7VolumeShipping _),
-    "q_dedup_segments" -> (qDedupSegments _),
-    "q_oov_rate" -> (qOovRate _),
-    "q_mad" -> (qMad _),
-    "q_stream_outer_join" -> (qStreamOuterJoin _),
-    "q_profile" -> (qProfile _),
-    "q_ri_check" -> (qRiCheck _),
-    "q_revenue_share" -> (qRevenueShare _),
-    "q_multi_window" -> (qMultiWindow _),
-    "q_span_trim" -> (qSpanTrim _),
-    "q_pagerank" -> (qPagerank _),
-    "q_split_leakage" -> (qSplitLeakage _),
-    "q_split_leakage_lsh" -> (qSplitLeakageLsh _),
-    "q_weighted_sample" -> (qWeightedSample _),
-    "q_temporal_split" -> (qTemporalSplit _),
-    "q_auc" -> (qAuc _),
-    "q_auc_daily" -> (qAucDaily _),
-    "q_calibration" -> (qCalibration _),
-    "q_auc_model" -> (qAucModel _),
-    "q_split_exact" -> (qSplitExact _),
-    "q_trailing_distinct" -> (qTrailingDistinct _),
-    "q_trailing_distinct_approx" -> (qTrailingDistinctApprox _),
-    "q_rolling_median_approx" -> (qRollingMedianApprox _),
-    "q_ppl_filter" -> (qPplFilter _),
-    "q_temporal_join" -> (qTemporalJoin _),
-    "q_embed_pca" -> (qEmbedPca _),
-    "q_rolling_median" -> (qRollingMedian _),
-    "q_corpus_pipeline" -> (qCorpusPipeline _),
-    "q_lm_bigram" -> (qLmBigram _),
-    "q_markov_transitions" -> (qMarkovTransitions _),
-    "q_co_occurrence" -> (qCoOccurrence _),
-    "q_sessionize" -> (qSessionize _),
-    "q_fuzzy_match" -> (qFuzzyMatch _),
-    "q_retention_cohort" -> (qRetentionCohort _),
-    "q_incr_agg" -> (qIncrAgg _),
-    "q_incr_cdc" -> (qIncrCdc _),
-    "q_stream_cdc_agg" -> (qStreamCdcAgg _),
-    "q_zorder" -> (qZorder _),
-    "q_zorder_scaled" -> (qZorderScaled _),
-    "q_zorder_ranked" -> (qZorderRanked _),
-    "q_zorder_versioned" -> (qZorderVersioned _),
-    "q_bloom_decontaminate" -> (qBloomDecontaminate _),
-    "q_stream_dedup" -> (qStreamDedup _),
-    "q_funnel" -> (qFunnel _),
-    "q_resample" -> (qResample _),
-    "q_unpivot" -> (qUnpivot _),
-    "q_range_lookup" -> (qRangeLookup _),
-    "q_range_lookup_auto" -> (qRangeLookupAuto _),
-    "q_cube" -> (qCube _),
-    "q_full_outer" -> (qFullOuter _),
-    "q_pseudonymize" -> (qPseudonymize _),
-    "q_embed_centroid" -> (qEmbedCentroid _),
-    "q_rekey" -> (qRekey _),
-    "q_latest_by_key" -> (qLatestByKey _),
-    "q_case_indicator" -> (qCaseIndicator _),
-    "q_timestamp_fmt" -> (qTimestampFmt _),
-    "q_as_array" -> (qAsArray _),
-    "q_cdc_unwrap" -> (qCdcUnwrap _),
-    "q_cdc_unwrap_json" -> (qCdcUnwrapJson _),
-    "q_dim_changes" -> (qDimChanges _),
-    "q_cdc_apply" -> (qCdcApply _),
-    "q_json_props" -> (qJsonProps _),
-    "q_distinct_users" -> (qDistinctUsers _),
-    "q_hopping_pivot" -> (qHoppingPivot _),
-    "q_rolling_600s" -> (qRolling600s _),
-    "q_topk_orders_per_cust" -> (qTopkOrdersPerCust _),
-    "q_left_enrich" -> (qLeftEnrich _),
-    "q_inner_enrich" -> (qInnerEnrich _),
-    "q_dedup_exact" -> (qDedupExact _),
-    "q_text_stats" -> (qTextStats _),
-    "q_token_count" -> (qTokenCount _),
-    "q_fingerprint" -> (qFingerprint _),
-    "q_lang_id" -> (qLangId _),
-    "q_lang_id_ngram" -> (qLangIdNgram _),
-    "q_tfidf_keywords" -> (qTfidfKeywords _),
-    "q_inverted_index" -> (qInvertedIndex _),
-    "q_bm25" -> (qBm25 _),
-    "q_vocab_coverage" -> (qVocabCoverage _),
-    "q_bpe_merges" -> (qBpeMerges _),
-    "q_bpe_tokenize" -> (qBpeTokenize _),
-    "q_domain_keyness" -> (qDomainKeyness _),
-    "q_dsir_weights" -> (qDsirWeights _),
-    "q_source_overlap" -> (qSourceOverlap _),
-    "q_corpus_report" -> (qCorpusReport _),
-    "q_corpus_clusters" -> (qCorpusClusters _),
-    "q_corpus_clusters_fixed" -> (qCorpusClustersFixed _),
-    "q_ewma" -> (qEwma _),
-    "q_bpe_vocab" -> (qBpeVocab _),
-    "q_dup_profile" -> (qDupProfile _),
-    "q_quantile_drift" -> (qQuantileDrift _),
-    "q4_priority_exists" -> (q4PriorityExists _),
-    "q6_forecast_revenue" -> (q6ForecastRevenue _),
-    "q14_promo_revenue" -> (q14PromoRevenue _),
-    "q8_market_share" -> (q8MarketShare _),
-    "q13_count_distribution" -> (q13CountDistribution _),
-    "q15_top_supplier" -> (q15TopSupplier _),
-    "q17_small_qty_revenue" -> (q17SmallQtyRevenue _),
-    "q19_disjunctive" -> (q19Disjunctive _),
-    "q21_blame_supplier" -> (q21BlameSupplier _),
-    "q22_idle_customers" -> (q22IdleCustomers _),
-    "q2_min_cost_supplier" -> (q2MinCostSupplier _),
-    "q9_nation_profit" -> (q9NationProfit _),
-    "q11_important_parts" -> (q11ImportantParts _),
-    "q12_late_priority" -> (q12LatePriority _),
-    "q16_supplier_count" -> (q16SupplierCount _),
-    "q20_dominant_supplier" -> (q20DominantSupplier _),
-    "q_phrase_search" -> (qPhraseSearch _),
-    "q_cms_term_counts" -> (qCmsTermCounts _),
-    "q_cms_exact_terms" -> (qCmsExactTerms _),
-    "q_quality_filter" -> (qQualityFilter _),
-    "q_pii_scrub" -> (qPiiScrub _),
-    "q_repetition_stats" -> (qRepetitionStats _),
-    "q_char_entropy" -> (qCharEntropy _),
-    "q_contamination" -> (qContamination _),
-    "q_stream_contamination" -> (qStreamContamination _),
-    "q_embed_normalize" -> (qEmbedNormalize _),
-    "q_embed_dim_stats" -> (qEmbedDimStats _),
-    "q_embed_covariance" -> (qEmbedCovariance _),
-    "q_sim_topk" -> (qSimTopk _),
-    "q_sim_topk_auto" -> (qSimTopkAuto _),
-    "q_dedup_minhash" -> (qDedupMinhash _),
-    "q_dedup_simhash" -> (qDedupSimhash _),
-    "q_simhash_pairs" -> (qSimhashPairs _),
-    "q_simhash_exact" -> (qSimhashExact _),
-    "q_ngram_jaccard" -> (qNgramJaccard _),
-    "q_ngram_jaccard_exact" -> (qNgramJaccardExact _),
-    "q_ngram_containment" -> (qNgramContainment _),
-    "q_dedup_clusters_exact" -> (qDedupClustersExact _),
-    "q_dedup_apply_exact" -> (qDedupApplyExact _),
-    "q_sim_lsh" -> (qSimLsh _),
-    "q_sim_pq" -> (qSimPq _),
-    "q_sim_ivfpq" -> (qSimIvfPq _),
-    "q_embed_near_dup" -> (qEmbedNearDup _),
-    "q_multimodal_decode" -> (qMultimodalDecode _),
-    "q_multimodal_partitioned" -> (qMultimodalPartitioned _),
-    "q_multimodal_frames" -> (qMultimodalFrames _),
-    "q_winnow_fingerprint" -> (qWinnowFingerprint _),
-    "q_stream_hopping_pivot" -> (qStreamHoppingPivot _),
-    "q_stream_auto_state" -> (qStreamAutoState _),
-    "q_stream_interval_join" -> (qStreamIntervalJoin _),
-    "q_stream_changelog_pivot" -> (qStreamChangelogPivot _),
-    "q_stream_flagship" -> (qStreamFlagship _),
-    "q_stream_flagship_rel" -> (qStreamFlagshipRel _),
-    "q_ml_train_score" -> (qMlTrainScore _),
-    "q_predict_udf" -> (qPredictUdf _),
-    "q_ml_features" -> (qMlFeatures _),
-    "q_tumbling_agg" -> (qTumblingAgg _),
-    "q_session_window" -> (qSessionWindow _),
-    "q_stream_tumbling" -> (qStreamTumbling _),
-    "q_stream_session" -> (qStreamSession _),
-    "q_stream_session_auto" -> (qStreamSessionAuto _),
-    "q_stream_token_budget" -> (qStreamTokenBudget _),
-    "q_stream_token_budget_rel" -> (qStreamTokenBudgetRel _),
-    "q_stream_latest" -> (qStreamLatest _),
-    "q_sim_ivf" -> (qSimIvf _),
-    "q_interval_join" -> (qIntervalJoin _),
-    "q_asof_join" -> (qAsofJoin _),
-    "q_asof_broadcast" -> (qAsofBroadcast _),
-    "q_asof_auto" -> (qAsofAuto _),
-    "q_dedup_clusters" -> (qDedupClusters _),
-    "q_dedup_apply" -> (qDedupApply _),
-    "q_sample_det" -> (qSampleDet _),
-    "q_cap_per_group" -> (qCapPerGroup _),
-    "q_outlier_filter" -> (qOutlierFilter _),
-    "q_winsorize" -> (qWinsorize _),
-    "q_decontaminate" -> (qDecontaminate _),
-    "q_decontam_auto" -> (qDecontamAuto _),
-    "q_split_assign" -> (qSplitAssign _),
-    "q_corpus_order" -> (qCorpusOrder _),
-    "q_curriculum_order" -> (qCurriculumOrder _),
-    "q_embed_quantize" -> (qEmbedQuantize _),
-    "q_winnow_overlap" -> (qWinnowOverlap _),
-    "q_winnow_overlap_exact" -> (qWinnowOverlapExact _),
-    "q_winnow_clean" -> (qWinnowClean _),
-    "q_winnow_clean_exact" -> (qWinnowCleanExact _),
-    "q_sample_stratified" -> (qSampleStratified _),
-    "q_mixture_weights" -> (qMixtureWeights _),
-    "q_sample_temperature" -> (qSampleTemperature _),
-    "q_lm_score" -> (qLmScore _),
-    "q_top_ngrams" -> (qTopNgrams _),
-    "q_token_budget" -> (qTokenBudget _),
-    "q_pack_sequences" -> (qPackSequences _),
-    "q_chunk_docs" -> (qChunkDocs _),
-    "q_stats_profile" -> (qStatsProfile _),
-    "q_set_ops" -> (qSetOps _),
-    "q_distinct_counts" -> (qDistinctCounts _),
-    "q_rollup" -> (qRollup _),
-    "q_salted_agg" -> (qSaltedAgg _),
-    "q_salted_join" -> (qSaltedJoin _),
-    "q_skew_join_auto" -> (qSkewJoinAuto _),
-    "q_approx_distinct" -> (qApproxDistinct _),
-    "q_hll_distinct" -> (qHllDistinct _),
-    "q_kll_quantiles" -> (qKllQuantiles _),
-    "q_theta_overlap" -> (qThetaOverlap _),
-    "q_theta_overlap_exact" -> (qThetaOverlapExact _),
-    "q_pagerank_exact" -> (qPagerankExact _),
-    "q_approx_top_ngrams" -> (qApproxTopNgrams _),
-    "q_dedup_delta" -> (qDedupDelta _),
-    "q_dedup_delta_exact" -> (qDedupDeltaExact _),
-    "q_bucketed_join" -> (qBucketedJoin _)
-  )
-
-  /** Headline subset Bench.scala times per round. */
-  def benchQueries: Seq[String] = Seq(
-    "q1_pricing_summary", "q3_segment_revenue", "q5_region_revenue",
-    "q_hopping_pivot",
-    "q_rolling_600s", "q_latest_by_key", "q_left_enrich", "q_inner_enrich",
-    "q_dedup_exact", "q_dedup_minhash", "q_text_stats", "q_token_count",
-    "q_sim_topk", "q_sim_topk_auto", "q_topk_orders_per_cust", "q_tumbling_agg",
-    "q_session_window", "q_rollup", "q_salted_agg", "q_skew_join_auto",
-    "q_distinct_counts",
-    "q_chunk_docs", "q_pack_sequences", "q_sample_stratified",
-    "q_stats_profile", "q_lm_score", "q_top_ngrams", "q_sim_pq",
-    "q18_large_orders", "q_fuzzy_match", "q_retention_cohort",
-    "q_bloom_decontaminate", "q_decontam_auto", "q_zorder",
-    "q_zorder_ranked", "q_zorder_versioned", "q_funnel",
-    "q_resample",
-    "q10_returned_customers", "q7_volume_shipping", "q_window_suite",
-    "q_boilerplate", "q_oov_rate", "q_semantic_dedup", "q_mad", "q_scd2",
-    "q_span_trim", "q_corpus_pipeline", "q_trailing_distinct",
-    "q_multi_window", "q_rolling_median", "q_ppl_filter",
-    "q_temporal_join", "q_asof_join", "q_markov_transitions",
-    "q_incr_agg", "q_winnow_overlap_exact", "q_incr_cdc",
-    "q_histogram_equidepth", "q_auc", "q_bucketed_join",
-    "q_asof_broadcast", "q_asof_auto", "q_winnow_overlap", "q_winnow_clean",
-    "q_winnow_clean_exact",
-    "q_embed_covariance", "q_corpus_clusters", "q_corpus_order", "q_auc_daily",
-    "q_curriculum_order", "q_inverted_index", "q_bm25",
-    "q_vocab_coverage", "q_bpe_tokenize", "q_domain_keyness",
-    "q_dsir_weights", "q_ewma", "q_source_overlap",
-    "q4_priority_exists", "q6_forecast_revenue", "q14_promo_revenue",
-    "q8_market_share", "q13_count_distribution", "q15_top_supplier",
-    "q17_small_qty_revenue", "q19_disjunctive", "q21_blame_supplier",
-    "q22_idle_customers", "q_phrase_search", "q_cms_term_counts",
-    "q2_min_cost_supplier", "q9_nation_profit", "q11_important_parts",
-    "q12_late_priority", "q16_supplier_count", "q20_dominant_supplier",
-    "q_dim_changes")
+  /** One named query; [[catalog]] holds them all.
+    *
+    * @param build     the query over a session and a corpus directory
+    * @param bench     timed by [[Bench]] every round
+    * @param oracle    DuckDB SQL `tools/compare_oracle.py` hash-matches the
+    *                  result against, column names/types aligned on both sides
+    * @param provision untimed once-per-corpus step (index writes, dim
+    *                  materializations): Bench runs it after warm-up and
+    *                  before the timed loop, mirroring an ingest pipeline
+    *                  where index maintenance is not on the query path
+    */
+  final case class QuerySpec(
+      name: String,
+      build: (SparkSession, String) => DataFrame,
+      bench: Boolean = false,
+      oracle: Option[String] = None,
+      provision: Option[(SparkSession, String) => Unit] = None)
 
   /** Shared DuckDB CTE chain for the exact ngram-Jaccard dedup family:
     * string shingles → all-pairs exact Jaccard → symmetric edges →
@@ -3178,8 +2931,96 @@ object SparkEntry {
       |      ), '  ', ' ')), ' ') AS bpe_text
       |  FROM documents, mm)""".stripMargin
 
-  private def oracleSqlBase: Map[String, String] = Map(
-    "q1_pricing_summary" ->
+  // Oracle SQL shared by several catalog records: a batch query and its
+  // streaming or adaptive executions, which must reproduce it exactly.
+
+  private val zorderRankedOracle =
+    s"""WITH rx AS (
+      |  SELECT v AS xv, CAST(DENSE_RANK() OVER (ORDER BY v) - 1 AS BIGINT) AS xr
+      |  FROM (SELECT DISTINCT l_partkey AS v FROM lineitem)),
+      |ry AS (
+      |  SELECT v AS yv, CAST(DENSE_RANK() OVER (ORDER BY v) - 1 AS BIGINT) AS yr
+      |  FROM (SELECT DISTINCT l_suppkey AS v FROM lineitem)),
+      |n AS (
+      |  SELECT (SELECT MAX(xr) FROM rx) AS nx, (SELECT MAX(yr) FROM ry) AS ny),
+      |t AS (
+      |  SELECT l.l_orderkey, l.l_linenumber,
+      |    CAST(FLOOR(CAST(rx.xr AS DOUBLE)
+      |      * (65535.0 / GREATEST(1, n.nx))) AS BIGINT) AS sx,
+      |    CAST(FLOOR(CAST(ry.yr AS DOUBLE)
+      |      * (65535.0 / GREATEST(1, n.ny))) AS BIGINT) AS sy
+      |  FROM lineitem l
+      |  JOIN rx ON l.l_partkey = rx.xv
+      |  JOIN ry ON l.l_suppkey = ry.yv
+      |  CROSS JOIN n)
+      |SELECT l_orderkey, l_linenumber,
+      |  ${zorderSql("sx", "sy", 16)} AS zvalue
+      |FROM t""".stripMargin
+
+  private val rangeLookupOracle =
+    """WITH tiers(lo, hi, tier) AS (VALUES
+      |  (0.0, 50.0, 'low'), (50.0, 100.0, 'mid'),
+      |  (100.0, 200.0, 'high'), (200.0, 500.0, 'peak'))
+      |SELECT e.event_id, e.value, t.tier
+      |FROM events e JOIN tiers t ON e.value >= t.lo AND e.value < t.hi""".stripMargin
+
+  private val hoppingPivotOracle = hopCte +
+    """
+      |SELECT user_id, w_start,
+      |  STRFTIME(MIN(ts), '%H:%M:%S') AS window_start,
+      |  STRFTIME(MAX(ts), '%H:%M:%S') AS window_end,
+      |  CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS click_views,
+      |  CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS view_views,
+      |  CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchase_views,
+      |  CAST(SUM(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS signup_views,
+      |  CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS error_views
+      |FROM h GROUP BY user_id, w_start""".stripMargin
+
+  private val asofOracle =
+    """WITH r0 AS (
+      |  SELECT o_custkey, CAST(FLOOR(EPOCH(o_orderdate)) AS BIGINT) AS o_sec,
+      |         o_orderkey, o_totalprice,
+      |         ROW_NUMBER() OVER (PARTITION BY o_custkey, o_orderdate
+      |                            ORDER BY o_orderkey DESC) AS rn
+      |  FROM orders),
+      |r AS (SELECT o_custkey, o_sec, o_orderkey AS last_order_key,
+      |             o_totalprice AS last_order_price
+      |      FROM r0 WHERE rn = 1),
+      |l AS (SELECT event_id, user_id, CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS ts_sec
+      |      FROM events)
+      |SELECT l.event_id, l.user_id, l.ts_sec, r.last_order_key, r.last_order_price
+      |FROM l ASOF LEFT JOIN r
+      |  ON l.user_id = r.o_custkey AND l.ts_sec >= r.o_sec""".stripMargin
+
+  private val directJoinOracle =
+    """SELECT e.event_id, e.user_id, c.c_name, c.c_mktsegment
+      |FROM events e JOIN customer c ON e.user_id = c.c_custkey""".stripMargin
+
+  private val simTopkOracle =
+    """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
+      |           FROM embeddings WHERE vec_id < 10),
+      |     c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv
+      |           FROM embeddings),
+      |     s AS (SELECT query_id, neighbor_id,
+      |             ROUND(LIST_DOT_PRODUCT(qv, cv)
+      |               / (SQRT(LIST_DOT_PRODUCT(qv, qv)) * SQRT(LIST_DOT_PRODUCT(cv, cv))), 6) AS cos_sim
+      |           FROM q, c WHERE query_id <> neighbor_id),
+      |     r AS (SELECT query_id, neighbor_id, cos_sim,
+      |             CAST(ROW_NUMBER() OVER (PARTITION BY query_id
+      |               ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rank
+      |           FROM s)
+      |SELECT query_id, neighbor_id, cos_sim, rank FROM r WHERE rank <= 5""".stripMargin
+
+  private val tokenBudgetOracle = samplingCumCte +
+    "\nSELECT doc_id, source, n_tokens, cum_tokens FROM c WHERE cum_tokens <= 700"
+
+  /** Every named query, declared once. Adding a query means adding one
+    * record here. Declared below the shared oracle SQL vals it
+    * concatenates: object vals initialize in order, so an earlier
+    * declaration would embed nulls.
+    */
+  val catalog: Seq[QuerySpec] = Seq(
+    QuerySpec("q1_pricing_summary", q1PricingSummary, bench = true, oracle = Some(
       """SELECT l_returnflag, l_linestatus,
         |  ROUND(SUM(l_quantity), 2) AS sum_qty,
         |  ROUND(SUM(l_extendedprice), 2) AS sum_base_price,
@@ -3191,8 +3032,8 @@ object SparkEntry {
         |  COUNT(*) AS count_order
         |FROM lineitem
         |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "q3_segment_revenue" ->
+        |GROUP BY l_returnflag, l_linestatus""".stripMargin)),
+    QuerySpec("q3_segment_revenue", q3SegmentRevenue, bench = true, oracle = Some(
       """SELECT l.l_orderkey,
         |  CAST(FLOOR(EPOCH(o.o_orderdate)) AS BIGINT) AS o_epoch,
         |  SUM(CAST(FLOOR(l.l_extendedprice * (1 - l.l_discount) * 100 + 0.5) AS BIGINT)) / 100.0 AS revenue
@@ -3202,8 +3043,8 @@ object SparkEntry {
         |WHERE c.c_mktsegment = 'BUILDING'
         |  AND o.o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
         |  AND l.l_shipdate > TIMESTAMP '1995-06-30 00:00:00'
-        |GROUP BY l.l_orderkey, o.o_orderdate""".stripMargin,
-    "q5_region_revenue" ->
+        |GROUP BY l.l_orderkey, o.o_orderdate""".stripMargin)),
+    QuerySpec("q5_region_revenue", q5RegionRevenue, bench = true, oracle = Some(
       """SELECT n_name,
         |  SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) / 100.0 AS revenue
         |FROM lineitem
@@ -3215,8 +3056,8 @@ object SparkEntry {
         |WHERE r_name = 'ASIA'
         |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
         |  AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-        |GROUP BY n_name""".stripMargin,
-    "q18_large_orders" ->
+        |GROUP BY n_name""".stripMargin)),
+    QuerySpec("q18_large_orders", q18LargeOrders, bench = true, oracle = Some(
       """WITH big AS (
         |  SELECT l_orderkey, SUM(l_quantity) AS total_qty
         |  FROM lineitem GROUP BY l_orderkey HAVING SUM(l_quantity) > 200)
@@ -3224,8 +3065,8 @@ object SparkEntry {
         |       o.o_totalprice, b.total_qty
         |FROM orders o
         |JOIN big b ON o.o_orderkey = b.l_orderkey
-        |JOIN customer c ON o.o_custkey = c.c_custkey""".stripMargin,
-    "q7_volume_shipping" ->
+        |JOIN customer c ON o.o_custkey = c.c_custkey""".stripMargin)),
+    QuerySpec("q7_volume_shipping", q7VolumeShipping, bench = true, oracle = Some(
       """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
         |  CAST(EXTRACT(YEAR FROM l.l_shipdate) AS INT) AS l_year,
         |  SUM(CAST(FLOOR(l.l_extendedprice * (1 - l.l_discount) * 100 + 0.5) AS BIGINT)) / 100.0 AS revenue
@@ -3239,16 +3080,16 @@ object SparkEntry {
         |  AND l.l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
         |  AND ((n1.n_name = 'NATION_13' AND n2.n_name = 'NATION_19')
         |    OR (n1.n_name = 'NATION_19' AND n2.n_name = 'NATION_13'))
-        |GROUP BY 1, 2, 3""".stripMargin,
-    "q_dedup_segments" ->
+        |GROUP BY 1, 2, 3""".stripMargin)),
+    QuerySpec("q_dedup_segments", qDedupSegments, oracle = Some(
       """SELECT doc_id,
         |  COALESCE(array_to_string(list_filter(string_split(text, ' merge '),
         |    (x, i) -> list_position(string_split(text, ' merge '), x) = i), ' merge '), '') AS dedup_text,
         |  CAST(len(list_filter(string_split(text, ' merge '),
         |    (x, i) -> list_position(string_split(text, ' merge '), x) = i)) AS INT) AS n_kept,
         |  CAST(len(string_split(text, ' merge ')) AS INT) AS n_total
-        |FROM documents""".stripMargin,
-    "q_oov_rate" ->
+        |FROM documents""".stripMargin)),
+    QuerySpec("q_oov_rate", qOovRate, bench = true, oracle = Some(
       """WITH tok AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents),
         |v AS (SELECT t FROM tok GROUP BY t ORDER BY COUNT(*) DESC, t LIMIT 500)
@@ -3256,8 +3097,8 @@ object SparkEntry {
         |  CAST(SUM(CASE WHEN t IN (SELECT t FROM v) THEN 0 ELSE 1 END) AS BIGINT) AS n_oov,
         |  ROUND(CAST(SUM(CASE WHEN t IN (SELECT t FROM v) THEN 0 ELSE 1 END) AS DOUBLE)
         |        / COUNT(*), 6) AS oov_ratio
-        |FROM tok GROUP BY doc_id""".stripMargin,
-    "q_split_leakage" -> (ngramExactCte +
+        |FROM tok GROUP BY doc_id""".stripMargin)),
+    QuerySpec("q_split_leakage", qSplitLeakage, oracle = Some(ngramExactCte +
       """
         |SELECT d.doc_id, COALESCE(s.survivor, d.doc_id) AS split_key,
         |  CASE WHEN SUBSTR(MD5(CAST(COALESCE(s.survivor, d.doc_id) AS VARCHAR)), 1, 8)
@@ -3265,8 +3106,8 @@ object SparkEntry {
         |       WHEN SUBSTR(MD5(CAST(COALESCE(s.survivor, d.doc_id) AS VARCHAR)), 1, 8)
         |            < 'e6666666' THEN 'val'
         |       ELSE 'test' END AS split
-        |FROM documents d LEFT JOIN surv s ON d.doc_id = s.doc_id""".stripMargin),
-    "q_auc" ->
+        |FROM documents d LEFT JOIN surv s ON d.doc_id = s.doc_id""".stripMargin)),
+    QuerySpec("q_auc", qAuc, bench = true, oracle = Some(
       """WITH h AS (
         |  SELECT value AS s,
         |    SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS np,
@@ -3281,8 +3122,8 @@ object SparkEntry {
         |  CASE WHEN SUM(np) > 0 AND SUM(nn) > 0 THEN
         |    ROUND(SUM(np * (2 * below + nn)) / (2.0 * SUM(np) * SUM(nn)), 6)
         |  END AS auc
-        |FROM c""".stripMargin,
-    "q_auc_daily" ->
+        |FROM c""".stripMargin)),
+    QuerySpec("q_auc_daily", qAucDaily, bench = true, oracle = Some(
       """WITH h AS (
         |  SELECT STRFTIME(ts, '%Y-%m-%d') AS day, value AS s,
         |    SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS np,
@@ -3298,8 +3139,8 @@ object SparkEntry {
         |  CASE WHEN SUM(np) > 0 AND SUM(nn) > 0 THEN
         |    ROUND(SUM(np * (2 * below + nn)) / (2.0 * SUM(np) * SUM(nn)), 6)
         |  END AS auc
-        |FROM c GROUP BY day""".stripMargin,
-    "q_theta_overlap_exact" ->
+        |FROM c GROUP BY day""".stripMargin)),
+    QuerySpec("q_theta_overlap_exact", qThetaOverlapExact, oracle = Some(
       """WITH u AS (
         |  SELECT user_id,
         |    MAX(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS c,
@@ -3311,8 +3152,8 @@ object SparkEntry {
         |  CAST(SUM(c) AS BIGINT) AS n_click,
         |  CAST(SUM(p) AS BIGINT) AS n_purchase,
         |  COUNT(*) AS n_union
-        |FROM u""".stripMargin,
-    "q_pagerank_exact" -> {
+        |FROM u""".stripMargin)),
+    QuerySpec("q_pagerank_exact", qPagerankExact, oracle = Some {
       // the same integer algebra as Graph.pageRankIntScaled, unrolled as
       // a CTE chain: c_i = per-node floor-div contribution sums from
       // r_{i-1}, r_i = base + damped floor-div total. All BIGINT ops.
@@ -3344,13 +3185,13 @@ object SparkEntry {
          |r0 AS (SELECT node, $S // (SELECT n FROM nn) AS r FROM nodes),
          |$iters
          |SELECT node, CAST(r AS BIGINT) AS rank_scaled FROM r3""".stripMargin
-    },
-    "q_multimodal_decode" ->
+    }),
+    QuerySpec("q_multimodal_decode", qMultimodalDecode, oracle = Some(
       """SELECT doc_id AS media_id, 'image' AS modality,
         |  CAST(STRLEN(text) AS INT) AS n_bytes,
         |  3 AS channels, 8 AS n_features
-        |FROM documents""".stripMargin,
-    "q_calibration" ->
+        |FROM documents""".stripMargin)),
+    QuerySpec("q_calibration", qCalibration, oracle = Some(
       """WITH s AS (
         |  SELECT LEAST(GREATEST(value / 500.0, 0.0), 1.0) AS v,
         |    event_type = 'purchase' AS pos
@@ -3362,21 +3203,21 @@ object SparkEntry {
         |  CAST(SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
         |  ROUND(SUM(CASE WHEN pos THEN 1 ELSE 0 END) / CAST(COUNT(*) AS DOUBLE), 6)
         |    AS pos_rate
-        |FROM s GROUP BY 1""".stripMargin,
-    "q_weighted_sample" ->
+        |FROM s GROUP BY 1""".stripMargin)),
+    QuerySpec("q_weighted_sample", qWeightedSample, oracle = Some(
       """SELECT doc_id, n_chars FROM documents
         |WHERE LEAST(n_chars / 3000.0, 1.0) >= 1.0
         |   OR SUBSTR(MD5(CAST(doc_id AS VARCHAR)), 1, 8) <
         |      LPAD(LOWER(HEX(CAST(FLOOR(
         |        LEAST(GREATEST(n_chars / 3000.0, 0.0), 1.0) * 4294967296)
-        |        AS BIGINT))), 8, '0')""".stripMargin,
-    "q_temporal_split" ->
+        |        AS BIGINT))), 8, '0')""".stripMargin)),
+    QuerySpec("q_temporal_split", qTemporalSplit, oracle = Some(
       """SELECT event_id, ts,
         |  CASE WHEN ts < TIMESTAMP '2024-01-25 00:00:00' THEN 'train'
         |       WHEN ts >= TIMESTAMP '2024-01-26 00:00:00' THEN 'test'
         |       ELSE 'embargo' END AS split
-        |FROM events""".stripMargin,
-    "q_split_exact" ->
+        |FROM events""".stripMargin)),
+    QuerySpec("q_split_exact", qSplitExact, oracle = Some(
       """WITH r AS (
         |  SELECT doc_id, lang,
         |    ROW_NUMBER() OVER (PARTITION BY lang
@@ -3387,15 +3228,15 @@ object SparkEntry {
         |  CASE WHEN rn <= FLOOR(0.8 * n) THEN 'train'
         |       WHEN rn <= FLOOR((0.8 + 0.1) * n) THEN 'val'
         |       ELSE 'test' END AS split
-        |FROM r""".stripMargin,
-    "q_trailing_distinct" ->
+        |FROM r""".stripMargin)),
+    QuerySpec("q_trailing_distinct", qTrailingDistinct, bench = true, oracle = Some(
       """SELECT event_id, user_id, ts,
         |  CAST(COUNT(DISTINCT event_type) OVER (PARTITION BY user_id
         |    ORDER BY epoch_us(ts)
         |    RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW) AS BIGINT)
         |    AS n_distinct_3600s
-        |FROM events""".stripMargin,
-    "q_ppl_filter" ->
+        |FROM events""".stripMargin)),
+    QuerySpec("q_ppl_filter", qPplFilter, bench = true, oracle = Some(
       """WITH tok AS (
         |  SELECT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS token FROM documents),
         |c AS (SELECT token, COUNT(*) AS cnt FROM tok GROUP BY token),
@@ -3414,8 +3255,8 @@ object SparkEntry {
         |  FROM s GROUP BY lang)
         |SELECT s.doc_id, s.lang, s.xent
         |FROM s JOIN b USING (lang)
-        |WHERE s.xent >= b.lo AND s.xent <= b.hi""".stripMargin,
-    "q_temporal_join" ->
+        |WHERE s.xent >= b.lo AND s.xent <= b.hi""".stripMargin)),
+    QuerySpec("q_temporal_join", qTemporalJoin, bench = true, oracle = Some(
       """WITH np AS (SELECT * FROM events WHERE event_type <> 'purchase'),
         |chg AS (
         |  SELECT user_id, event_type, ts, event_id,
@@ -3434,14 +3275,14 @@ object SparkEntry {
         |FROM events p LEFT JOIN dim d
         |  ON p.user_id = d.user_id AND d.valid_from <= p.ts
         |  AND (d.valid_to IS NULL OR p.ts < d.valid_to)
-        |WHERE p.event_type = 'purchase'""".stripMargin,
-    "q_rolling_median" ->
+        |WHERE p.event_type = 'purchase'""".stripMargin)),
+    QuerySpec("q_rolling_median", qRollingMedian, bench = true, oracle = Some(
       """SELECT event_id, user_id, ts,
         |  ROUND(quantile_cont(value, 0.5) OVER (PARTITION BY user_id
         |    ORDER BY ts, event_id
         |    ROWS BETWEEN 9 PRECEDING AND CURRENT ROW), 6) AS med10
-        |FROM events""".stripMargin,
-    "q_corpus_pipeline" ->
+        |FROM events""".stripMargin)),
+    QuerySpec("q_corpus_pipeline", qCorpusPipeline, bench = true, oracle = Some(
       ("""WITH corpus AS (SELECT * FROM documents WHERE doc_id % 10 <> 0),
         |q AS (
         |  SELECT doc_id FROM (
@@ -3481,8 +3322,8 @@ object SparkEntry {
         |  CASE WHEN SUBSTR(MD5(CAST(doc_id AS VARCHAR)), 1, 8) < 'cccccccc' THEN 'train'
         |       WHEN SUBSTR(MD5(CAST(doc_id AS VARCHAR)), 1, 8) < 'e6666666' THEN 'val'
         |       ELSE 'test' END AS split
-        |FROM clean""").stripMargin,
-    "q_lm_bigram" ->
+        |FROM clean""").stripMargin)),
+    QuerySpec("q_lm_bigram", qLmBigram, oracle = Some(
       """WITH tok AS (SELECT doc_id, STRING_SPLIT(text, ' ') AS tk FROM documents),
         |bg AS (
         |  SELECT doc_id, UNNEST(LIST_TRANSFORM(RANGE(LEN(tk) - 1),
@@ -3501,8 +3342,8 @@ object SparkEntry {
         |  FROM c JOIN ctx ON STRING_SPLIT(c.g, ' ')[1] = ctx.w1, v)
         |SELECT bg.doc_id, COUNT(*) AS n_bigrams,
         |  ROUND(AVG(-LOG2(p.p)), 6) AS xent2
-        |FROM bg JOIN p USING (g) GROUP BY bg.doc_id""".stripMargin,
-    "q_markov_transitions" ->
+        |FROM bg JOIN p USING (g) GROUP BY bg.doc_id""".stripMargin)),
+    QuerySpec("q_markov_transitions", qMarkovTransitions, bench = true, oracle = Some(
       """WITH pairs AS (
         |  SELECT event_type AS from_type,
         |    lead(event_type) OVER (PARTITION BY user_id
@@ -3514,13 +3355,13 @@ object SparkEntry {
         |t AS (SELECT from_type, SUM(n) AS tot FROM c GROUP BY 1)
         |SELECT c.from_type, c.to_type, CAST(c.n AS BIGINT) AS n,
         |  ROUND(CAST(c.n AS DOUBLE) / CAST(t.tot AS DOUBLE), 6) AS p
-        |FROM c JOIN t USING (from_type)""".stripMargin,
-    "q_co_occurrence" ->
+        |FROM c JOIN t USING (from_type)""".stripMargin)),
+    QuerySpec("q_co_occurrence", qCoOccurrence, oracle = Some(
       """WITH d AS (SELECT DISTINCT user_id AS k, event_type AS v FROM events)
         |SELECT a.v AS item_a, b.v AS item_b, COUNT(*) AS support
         |FROM d a JOIN d b ON a.k = b.k AND a.v < b.v
-        |GROUP BY 1, 2 HAVING COUNT(*) >= 10""".stripMargin,
-    "q_sessionize" ->
+        |GROUP BY 1, 2 HAVING COUNT(*) >= 10""".stripMargin)),
+    QuerySpec("q_sessionize", qSessionize, oracle = Some(
       """WITH g AS (
         |  SELECT event_id, user_id, ts,
         |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
@@ -3533,8 +3374,8 @@ object SparkEntry {
         |    ORDER BY ts, event_id
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS INT)
         |    AS session_no
-        |FROM g""".stripMargin,
-    "q_span_trim" ->
+        |FROM g""".stripMargin)),
+    QuerySpec("q_span_trim", qSpanTrim, bench = true, oracle = Some(
       """WITH tok AS (
         |  SELECT doc_id, string_split(text, ' ') AS l FROM documents),
         |occ AS (
@@ -3559,8 +3400,8 @@ object SparkEntry {
         |    (x, i) -> NOT list_contains(COALESCE(d.ds, CAST([] AS BIGINT[])), i)),
         |    ' '), '') AS trimmed_text,
         |  CAST(COALESCE(d.nd, 0) AS BIGINT) AS n_dropped
-        |FROM tok t LEFT JOIN d ON t.doc_id = d.doc_id""".stripMargin,
-    "q_profile" ->
+        |FROM tok t LEFT JOIN d ON t.doc_id = d.doc_id""".stripMargin)),
+    QuerySpec("q_profile", qProfile, oracle = Some(
       """SELECT 'o_orderkey' AS col_name, CAST(COUNT(*) AS BIGINT) AS n_rows,
         |  CAST(SUM(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
         |  CAST(COUNT(DISTINCT o_orderkey) AS BIGINT) AS n_distinct,
@@ -3578,8 +3419,8 @@ object SparkEntry {
         |  CAST(SUM(CASE WHEN o_totalprice IS NULL THEN 1 ELSE 0 END) AS BIGINT),
         |  CAST(COUNT(DISTINCT o_totalprice) AS BIGINT),
         |  MIN(CAST(o_totalprice AS DOUBLE)), MAX(CAST(o_totalprice AS DOUBLE))
-        |FROM orders""".stripMargin,
-    "q_ri_check" ->
+        |FROM orders""".stripMargin)),
+    QuerySpec("q_ri_check", qRiCheck, oracle = Some(
       """SELECT 'lineitem_orders' AS constraint_name,
         |  CAST((SELECT COUNT(*) FROM lineitem l WHERE NOT EXISTS
         |    (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)) AS BIGINT) AS n_orphans
@@ -3594,8 +3435,8 @@ object SparkEntry {
         |UNION ALL
         |SELECT 'orders_customer',
         |  CAST((SELECT COUNT(*) FROM orders o WHERE NOT EXISTS
-        |    (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)) AS BIGINT)""".stripMargin,
-    "q_revenue_share" ->
+        |    (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)) AS BIGINT)""".stripMargin)),
+    QuerySpec("q_revenue_share", qRevenueShare, oracle = Some(
       """WITH rev AS (
         |  SELECT n_name,
         |    SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS c
@@ -3605,8 +3446,8 @@ object SparkEntry {
         |  GROUP BY n_name)
         |SELECT n_name, c / 100.0 AS revenue,
         |  ROUND(CAST(c AS DOUBLE) / CAST(SUM(c) OVER () AS DOUBLE), 6) AS share
-        |FROM rev""".stripMargin,
-    "q_multi_window" ->
+        |FROM rev""".stripMargin)),
+    QuerySpec("q_multi_window", qMultiWindow, bench = true, oracle = Some(
       """SELECT event_id, user_id, ts,
         |  CAST(COUNT(*) OVER (PARTITION BY user_id ORDER BY epoch_us(ts)
         |    RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW) AS BIGINT) AS n_last_3600s,
@@ -3614,8 +3455,8 @@ object SparkEntry {
         |    RANGE BETWEEN 86400000000 PRECEDING AND CURRENT ROW) AS BIGINT) AS n_last_86400s,
         |  CAST(COUNT(*) OVER (PARTITION BY user_id ORDER BY epoch_us(ts)
         |    RANGE BETWEEN 604800000000 PRECEDING AND CURRENT ROW) AS BIGINT) AS n_last_604800s
-        |FROM events""".stripMargin,
-    "q_stream_outer_join" ->
+        |FROM events""".stripMargin)),
+    QuerySpec("q_stream_outer_join", qStreamOuterJoin, oracle = Some(
       """WITH wm AS (
         |  SELECT LEAST(
         |    (SELECT max(ts) FROM events WHERE event_type = 'click'),
@@ -3634,8 +3475,8 @@ object SparkEntry {
         |WHERE p.ts < wm.w
         |  AND NOT EXISTS (
         |    SELECT 1 FROM c WHERE c.cu = p.user_id
-        |      AND c.cts >= p.ts - INTERVAL 600 SECOND AND c.cts <= p.ts)""".stripMargin,
-    "q_mad" ->
+        |      AND c.cts >= p.ts - INTERVAL 600 SECOND AND c.cts <= p.ts)""".stripMargin)),
+    QuerySpec("q_mad", qMad, bench = true, oracle = Some(
       """WITH m AS (
         |  SELECT l_returnflag AS g, quantile_cont(l_quantity, 0.5) AS med
         |  FROM lineitem GROUP BY 1),
@@ -3644,8 +3485,8 @@ object SparkEntry {
         |  FROM lineitem l JOIN m ON l.l_returnflag = m.g)
         |SELECT g AS l_returnflag, ROUND(MIN(med), 6) AS median,
         |  ROUND(quantile_cont(dev, 0.5), 6) AS mad
-        |FROM d GROUP BY g""".stripMargin,
-    "q10_returned_customers" ->
+        |FROM d GROUP BY g""".stripMargin)),
+    QuerySpec("q10_returned_customers", q10ReturnedCustomers, bench = true, oracle = Some(
       """SELECT c.c_custkey, c.c_name, c.c_acctbal, n.n_name,
         |  SUM(CAST(FLOOR(l.l_extendedprice * (1 - l.l_discount) * 100 + 0.5) AS BIGINT)) / 100.0 AS revenue
         |FROM lineitem l
@@ -3657,8 +3498,8 @@ object SparkEntry {
         |  AND o.o_orderdate < TIMESTAMP '1996-04-01 00:00:00'
         |GROUP BY c.c_custkey, c.c_name, c.c_acctbal, n.n_name
         |ORDER BY revenue DESC, c.c_custkey
-        |LIMIT 20""".stripMargin,
-    "q_window_suite" ->
+        |LIMIT 20""".stripMargin)),
+    QuerySpec("q_window_suite", qWindowSuite, bench = true, oracle = Some(
       """SELECT o_custkey, o_orderkey, o_totalprice,
         |  CAST(row_number() OVER w AS INT) AS seq_no,
         |  lag(o_totalprice, 1) OVER w AS prev_value,
@@ -3668,8 +3509,8 @@ object SparkEntry {
         |  percent_rank() OVER w AS pct_rank,
         |  cume_dist() OVER w AS cume
         |FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)""".stripMargin,
-    "q_grouping_sets" ->
+        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)""".stripMargin)),
+    QuerySpec("q_grouping_sets", qGroupingSets, oracle = Some(
       """SELECT coalesce(l_returnflag, 'ALL') AS l_returnflag,
         |  coalesce(l_linestatus, 'ALL') AS l_linestatus,
         |  CAST(grouping(l_returnflag) AS INT) AS g_flag,
@@ -3677,14 +3518,14 @@ object SparkEntry {
         |  COUNT(*) AS n,
         |  ROUND(SUM(l_quantity), 2) AS sum_qty
         |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))""".stripMargin,
-    "q_semi_anti" ->
+        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))""".stripMargin)),
+    QuerySpec("q_semi_anti", qSemiAnti, oracle = Some(
       """SELECT c_custkey,
         |  EXISTS(SELECT 1 FROM orders
         |         WHERE o_custkey = c_custkey
         |           AND o_orderpriority = '1-URGENT') AS has_urgent
-        |FROM customer""".stripMargin,
-    "q_mode_priority" ->
+        |FROM customer""".stripMargin)),
+    QuerySpec("q_mode_priority", qModePriority, oracle = Some(
       """WITH cnt AS (
         |  SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n
         |  FROM orders GROUP BY 1, 2),
@@ -3695,8 +3536,8 @@ object SparkEntry {
         |  FROM cnt)
         |SELECT o_orderstatus, o_orderpriority AS mode_value,
         |       CAST(n AS BIGINT) AS mode_count
-        |FROM r WHERE rn = 1""".stripMargin,
-    "q_scd2" ->
+        |FROM r WHERE rn = 1""".stripMargin)),
+    QuerySpec("q_scd2", qScd2, bench = true, oracle = Some(
       """WITH chg AS (
         |  SELECT user_id, event_type, ts, event_id,
         |    lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
@@ -3710,8 +3551,8 @@ object SparkEntry {
         |  (lead(ts) OVER w IS NULL) AS is_current,
         |  CAST(row_number() OVER w AS INT) AS version
         |FROM f
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)""".stripMargin,
-    "q_attribution" ->
+        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)""".stripMargin)),
+    QuerySpec("q_attribution", qAttribution, oracle = Some(
       """WITH t AS (
         |  SELECT event_id, user_id, ts, event_type,
         |    last_value(CASE WHEN event_type <> 'purchase' THEN ts END IGNORE NULLS)
@@ -3728,8 +3569,8 @@ object SparkEntry {
         |  CASE WHEN touch_ts IS NOT NULL
         |        AND epoch_us(ts) - epoch_us(touch_ts) <= 86400000000
         |       THEN touch_ts END AS attributed_ts
-        |FROM t WHERE event_type = 'purchase'""".stripMargin,
-    "q_histogram" ->
+        |FROM t WHERE event_type = 'purchase'""".stripMargin)),
+    QuerySpec("q_histogram", qHistogram, oracle = Some(
       """WITH ext AS (
         |  SELECT MIN(o_totalprice) AS mn, MAX(o_totalprice) AS mx
         |  FROM orders WHERE o_totalprice IS NOT NULL),
@@ -3743,8 +3584,8 @@ object SparkEntry {
         |  MIN(o_totalprice) AS bucket_min, MAX(o_totalprice) AS bucket_max,
         |  MIN(mn + bucket * ((mx - mn) / 20.0)) AS edge_lo,
         |  MIN(mn + (bucket + 1) * ((mx - mn) / 20.0)) AS edge_hi
-        |FROM b GROUP BY bucket""".stripMargin,
-    "q_histogram_equidepth" ->
+        |FROM b GROUP BY bucket""".stripMargin)),
+    QuerySpec("q_histogram_equidepth", qHistogramEquidepth, bench = true, oracle = Some(
       s"""WITH b AS (
         |  SELECT [${(1 until 20).map(i =>
               s"ROUND(quantile_cont(o_totalprice, ${i / 20.0}), 6)").mkString(", ")}] AS bs
@@ -3753,16 +3594,16 @@ object SparkEntry {
         |  COUNT(*) AS n,
         |  MIN(o_totalprice) AS bucket_min, MAX(o_totalprice) AS bucket_max
         |FROM orders, b WHERE o_totalprice IS NOT NULL
-        |GROUP BY 1""".stripMargin,
-    "q_segment_filter" ->
+        |GROUP BY 1""".stripMargin)),
+    QuerySpec("q_segment_filter", qSegmentFilter, oracle = Some(
       """SELECT doc_id,
         |  COALESCE(array_to_string(list_filter(string_split(text, ' merge '),
         |    x -> len(string_split(x, ' ')) >= 3), ' merge '), '') AS clean_text,
         |  CAST(len(list_filter(string_split(text, ' merge '),
         |    x -> len(string_split(x, ' ')) >= 3)) AS INT) AS n_kept,
         |  CAST(len(string_split(text, ' merge ')) AS INT) AS n_total
-        |FROM documents""".stripMargin,
-    "q_boilerplate" ->
+        |FROM documents""".stripMargin)),
+    QuerySpec("q_boilerplate", qBoilerplate, bench = true, oracle = Some(
       """WITH segs AS (
         |  SELECT doc_id, unnest(string_split(text, ' merge ')) AS seg FROM documents),
         |boiler AS (
@@ -3773,16 +3614,16 @@ object SparkEntry {
         |    x -> NOT list_contains(bl.l, x)), ' merge '), '') AS clean_text,
         |  CAST(len(list_filter(string_split(d.text, ' merge '),
         |    x -> NOT list_contains(bl.l, x))) AS BIGINT) AS n_kept
-        |FROM documents d, bl""".stripMargin,
-    "q_fuzzy_match" ->
+        |FROM documents d, bl""".stripMargin)),
+    QuerySpec("q_fuzzy_match", qFuzzyMatch, bench = true, oracle = Some(
       """SELECT a.p_brand AS block,
         |  a.p_partkey AS left_id, a.p_name AS left_name,
         |  b.p_partkey AS right_id, b.p_name AS right_name,
         |  CAST(levenshtein(a.p_name, b.p_name) AS INTEGER) AS distance
         |FROM part a JOIN part b
         |  ON a.p_brand = b.p_brand AND a.p_partkey < b.p_partkey
-        |WHERE levenshtein(a.p_name, b.p_name) <= 2""".stripMargin,
-    "q_retention_cohort" ->
+        |WHERE levenshtein(a.p_name, b.p_name) <= 2""".stripMargin)),
+    QuerySpec("q_retention_cohort", qRetentionCohort, bench = true, oracle = Some(
       """WITH days AS (
         |  SELECT DISTINCT user_id AS u, CAST(ts AS DATE) AS d FROM events),
         |f AS (
@@ -3790,16 +3631,16 @@ object SparkEntry {
         |SELECT cohort_day,
         |  CAST(DATE_DIFF('day', cohort_day, d) AS INTEGER) AS day_offset,
         |  COUNT(DISTINCT u) AS n_users
-        |FROM f GROUP BY cohort_day, day_offset""".stripMargin,
-    "q_incr_agg" ->
+        |FROM f GROUP BY cohort_day, day_offset""".stripMargin)),
+    QuerySpec("q_incr_agg", qIncrAgg, bench = true, oracle = Some(
       """SELECT o_custkey,
         |  COUNT(*) AS n_orders,
         |  SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) / 100.0 AS total_price,
         |  MAX(o_totalprice) AS max_price,
         |  ROUND(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) / 100.0
         |        / COUNT(*), 6) AS avg_price
-        |FROM orders GROUP BY o_custkey""".stripMargin,
-    "q_incr_cdc" ->
+        |FROM orders GROUP BY o_custkey""".stripMargin)),
+    QuerySpec("q_incr_cdc", qIncrCdc, bench = true, oracle = Some(
       """SELECT o_custkey,
         |  COUNT(*) AS n_orders,
         |  SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) / 100.0 AS total_price,
@@ -3808,8 +3649,8 @@ object SparkEntry {
         |        / COUNT(*), 6) AS avg_price
         |FROM orders
         |WHERE NOT (o_orderkey % 7 = 0 AND o_orderdate < TIMESTAMP '1998-01-01')
-        |GROUP BY o_custkey""".stripMargin,
-    "q_stream_cdc_agg" ->
+        |GROUP BY o_custkey""".stripMargin)),
+    QuerySpec("q_stream_cdc_agg", qStreamCdcAgg, oracle = Some(
       """SELECT o_custkey,
         |  COUNT(*) AS n_orders,
         |  SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) / 100.0 AS total_price,
@@ -3817,16 +3658,16 @@ object SparkEntry {
         |        / COUNT(*), 6) AS avg_price
         |FROM orders
         |WHERE NOT (o_orderkey % 7 = 0 AND o_orderdate < TIMESTAMP '1998-01-01')
-        |GROUP BY o_custkey""".stripMargin,
-    "q_zorder" ->
+        |GROUP BY o_custkey""".stripMargin)),
+    QuerySpec("q_zorder", qZorder, bench = true, oracle = Some(
       s"""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
         |  ${zorderSql("l_partkey", "l_suppkey", 16)} AS zvalue
-        |FROM lineitem""".stripMargin,
+        |FROM lineitem""".stripMargin)),
     // the scaled write-path key: FLOOR+CAST mirrors Spark's double→long
     // truncation (inputs non-negative); 65535.0 / GREATEST(1, hi-lo) is
     // the same double constant ZOrder.scaleTo computes, so the bucket
     // indices match bit-for-bit before the interleave
-    "q_zorder_scaled" ->
+    QuerySpec("q_zorder_scaled", qZorderScaled, oracle = Some(
       s"""WITH s AS (
         |  SELECT MIN(l_partkey) AS xlo, MAX(l_partkey) AS xhi,
         |         MIN(l_suppkey) AS ylo, MAX(l_suppkey) AS yhi
@@ -3840,36 +3681,22 @@ object SparkEntry {
         |  FROM lineitem, s)
         |SELECT l_orderkey, l_linenumber,
         |  ${zorderSql("sx", "sy", 16)} AS zvalue
-        |FROM t""".stripMargin,
+        |FROM t""".stripMargin)),
     // rank-preprocessed write-path key: the distributed zipWithIndex
     // rank over the distinct domain ≡ DENSE_RANK()-1; the scaling is
     // q_zorder_scaled's with lo=0, hi=maxRank (contiguous by
     // construction, so GREATEST(1, ·) only guards a 1-value domain)
-    "q_zorder_ranked" ->
-      s"""WITH rx AS (
-        |  SELECT v AS xv, CAST(DENSE_RANK() OVER (ORDER BY v) - 1 AS BIGINT) AS xr
-        |  FROM (SELECT DISTINCT l_partkey AS v FROM lineitem)),
-        |ry AS (
-        |  SELECT v AS yv, CAST(DENSE_RANK() OVER (ORDER BY v) - 1 AS BIGINT) AS yr
-        |  FROM (SELECT DISTINCT l_suppkey AS v FROM lineitem)),
-        |n AS (
-        |  SELECT (SELECT MAX(xr) FROM rx) AS nx, (SELECT MAX(yr) FROM ry) AS ny),
-        |t AS (
-        |  SELECT l.l_orderkey, l.l_linenumber,
-        |    CAST(FLOOR(CAST(rx.xr AS DOUBLE)
-        |      * (65535.0 / GREATEST(1, n.nx))) AS BIGINT) AS sx,
-        |    CAST(FLOOR(CAST(ry.yr AS DOUBLE)
-        |      * (65535.0 / GREATEST(1, n.ny))) AS BIGINT) AS sy
-        |  FROM lineitem l
-        |  JOIN rx ON l.l_partkey = rx.xv
-        |  JOIN ry ON l.l_suppkey = ry.yv
-        |  CROSS JOIN n)
-        |SELECT l_orderkey, l_linenumber,
-        |  ${zorderSql("sx", "sy", 16)} AS zvalue
-        |FROM t""".stripMargin,
-    "q_stream_dedup" ->
-      "SELECT DISTINCT user_id, event_type FROM events",
-    "q_funnel" ->
+    QuerySpec("q_zorder_ranked", qZorderRanked, bench = true,
+      oracle = Some(zorderRankedOracle)),
+    // the versioned-root read path stores zorderWriteRanked's layout,
+    // whose z is bit-identical to the ranked construction — roundtrip
+    // through publish/resolve/scan must reproduce it exactly
+    QuerySpec("q_zorder_versioned", qZorderVersioned, bench = true,
+      oracle = Some(zorderRankedOracle),
+      provision = Some((s, dir) => { provisionZorderVersioned(s, dir); () })),
+    QuerySpec("q_stream_dedup", qStreamDedup, oracle = Some(
+      "SELECT DISTINCT user_id, event_type FROM events")),
+    QuerySpec("q_funnel", qFunnel, bench = true, oracle = Some(
       """WITH e1 AS (
         |  SELECT user_id, ts, event_type,
         |    MIN(CASE WHEN event_type = 'signup' THEN ts END)
@@ -3893,8 +3720,8 @@ object SparkEntry {
         |  CASE WHEN MIN(t3) IS NOT NULL THEN 3
         |       WHEN MIN(t2) IS NOT NULL THEN 2
         |       WHEN MIN(t1) IS NOT NULL THEN 1 ELSE 0 END AS stage_reached
-        |FROM e3 GROUP BY user_id""".stripMargin,
-    "q_resample" ->
+        |FROM e3 GROUP BY user_id""".stripMargin)),
+    QuerySpec("q_resample", qResample, bench = true, oracle = Some(
       """WITH b AS (
         |  SELECT user_id, (EPOCH_US(ts) // 1000000) // 3600 AS bucket,
         |    MAX(value) AS v_obs
@@ -3906,36 +3733,32 @@ object SparkEntry {
         |  LAST_VALUE(b.v_obs IGNORE NULLS) OVER (
         |    PARTITION BY g.user_id ORDER BY g.bucket
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v_filled
-        |FROM g LEFT JOIN b ON g.user_id = b.user_id AND g.bucket = b.bucket""".stripMargin,
-    "q_unpivot" ->
-      "SELECT user_id, event_type, COUNT(*) AS n FROM events GROUP BY user_id, event_type",
-    "q_range_lookup" ->
-      """WITH tiers(lo, hi, tier) AS (VALUES
-        |  (0.0, 50.0, 'low'), (50.0, 100.0, 'mid'),
-        |  (100.0, 200.0, 'high'), (200.0, 500.0, 'peak'))
-        |SELECT e.event_id, e.value, t.tier
-        |FROM events e JOIN tiers t ON e.value >= t.lo AND e.value < t.hi""".stripMargin,
-    "q_cube" ->
+        |FROM g LEFT JOIN b ON g.user_id = b.user_id AND g.bucket = b.bucket""".stripMargin)),
+    QuerySpec("q_unpivot", qUnpivot, oracle = Some(
+      "SELECT user_id, event_type, COUNT(*) AS n FROM events GROUP BY user_id, event_type")),
+    QuerySpec("q_range_lookup", qRangeLookup, oracle = Some(rangeLookupOracle)),
+    QuerySpec("q_range_lookup_auto", qRangeLookupAuto, oracle = Some(rangeLookupOracle)),
+    QuerySpec("q_cube", qCube, oracle = Some(
       """SELECT COALESCE(o_orderstatus, 'ALL') AS o_orderstatus,
         |  COALESCE(o_orderpriority, 'ALL') AS o_orderpriority,
         |  COUNT(*) AS n_orders,
         |  SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) / 100.0 AS total_price
-        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)""".stripMargin,
-    "q_full_outer" ->
+        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)""".stripMargin)),
+    QuerySpec("q_full_outer", qFullOuter, oracle = Some(
       """WITH e AS (SELECT user_id, COUNT(*) AS n_events FROM events GROUP BY user_id),
         |o AS (SELECT o_custkey, COUNT(*) AS n_orders FROM orders GROUP BY o_custkey)
         |SELECT COALESCE(e.user_id, o.o_custkey) AS id,
         |  COALESCE(e.n_events, 0) AS n_events,
         |  COALESCE(o.n_orders, 0) AS n_orders
-        |FROM e FULL JOIN o ON e.user_id = o.o_custkey""".stripMargin,
-    "q_pseudonymize" ->
+        |FROM e FULL JOIN o ON e.user_id = o.o_custkey""".stripMargin)),
+    QuerySpec("q_pseudonymize", qPseudonymize, oracle = Some(
       """SELECT event_id,
         |  SHA256('pepper' || CAST(user_id AS VARCHAR)) AS user_id_pseudo
-        |FROM events""".stripMargin,
+        |FROM events""".stripMargin)),
     // centroid components ROUNDED before the dot (AVG summation order
     // differs across engines); the dot itself is the left-to-right array
     // fold both engines evaluate bit-identically
-    "q_embed_centroid" ->
+    QuerySpec("q_embed_centroid", qEmbedCentroid, oracle = Some(
       """WITH e AS (
         |  SELECT d.source, m.vec_id, CAST(m.embedding AS DOUBLE[]) AS v
         |  FROM embeddings m JOIN documents d ON m.vec_id = d.doc_id),
@@ -3949,32 +3772,32 @@ object SparkEntry {
         |  ROUND(LIST_DOT_PRODUCT(e.v, c.cv)
         |    / (SQRT(LIST_DOT_PRODUCT(e.v, e.v)) * SQRT(LIST_DOT_PRODUCT(c.cv, c.cv))), 6)
         |    AS cos_to_centroid
-        |FROM e JOIN cent c USING (source)""".stripMargin,
-    "q_rekey" ->
-      "SELECT event_id, ts, user_id, event_type, value, props FROM events",
-    "q_latest_by_key" -> latestByKeyOracle,
+        |FROM e JOIN cent c USING (source)""".stripMargin)),
+    QuerySpec("q_rekey", qRekey, oracle = Some(
+      "SELECT event_id, ts, user_id, event_type, value, props FROM events")),
+    QuerySpec("q_latest_by_key", qLatestByKey, bench = true, oracle = Some(latestByKeyOracle)),
     // identical oracle: the incremental TABLE's compacted state must be
     // exactly the batch latest-per-key answer
-    "q_stream_latest" -> latestByKeyOracle,
-    "q_case_indicator" ->
+    QuerySpec("q_stream_latest", qStreamLatest, oracle = Some(latestByKeyOracle)),
+    QuerySpec("q_case_indicator", qCaseIndicator, oracle = Some(
       """SELECT event_id, user_id, event_type,
         |  CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS is_click,
         |  CASE WHEN event_type = 'view' THEN 1 ELSE 0 END AS is_view,
         |  CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS is_purchase,
         |  CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END AS is_signup,
         |  CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS is_error
-        |FROM events""".stripMargin,
-    "q_timestamp_fmt" ->
-      "SELECT event_id, STRFTIME(ts, '%H:%M:%S') AS ts_hms FROM events",
-    "q_as_array" ->
+        |FROM events""".stripMargin)),
+    QuerySpec("q_timestamp_fmt", qTimestampFmt, oracle = Some(
+      "SELECT event_id, STRFTIME(ts, '%H:%M:%S') AS ts_hms FROM events")),
+    QuerySpec("q_as_array", qAsArray, oracle = Some(
       """SELECT c_custkey,
         |  CAST(TO_JSON([c_name, c_mktsegment]) AS VARCHAR) AS dims_str,
         |  CAST(TO_JSON([c_custkey, CAST(c_nationkey AS BIGINT)]) AS VARCHAR) AS dims_int
-        |FROM customer""".stripMargin,
-    "q_cdc_unwrap" ->
+        |FROM customer""".stripMargin)),
+    QuerySpec("q_cdc_unwrap", qCdcUnwrap, oracle = Some(
       """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate, o_orderpriority
-        |FROM orders WHERE o_orderstatus <> 'F'""".stripMargin,
-    "q_dim_changes" ->
+        |FROM orders WHERE o_orderstatus <> 'F'""".stripMargin)),
+    QuerySpec("q_dim_changes", qDimChanges, bench = true, oracle = Some(
       """WITH base AS (
         |  SELECT c_custkey, c_nationkey, c_mktsegment, c_acctbal FROM customer),
         |bef AS (SELECT * FROM base WHERE c_custkey % 7 <> 0),
@@ -3994,17 +3817,17 @@ object SparkEntry {
         |WHERE a.c_custkey IS NULL OR b.c_custkey IS NULL
         |   OR a.c_nationkey IS DISTINCT FROM b.c_nationkey
         |   OR a.c_mktsegment IS DISTINCT FROM b.c_mktsegment
-        |   OR a.c_acctbal IS DISTINCT FROM b.c_acctbal""".stripMargin,
+        |   OR a.c_acctbal IS DISTINCT FROM b.c_acctbal""".stripMargin)),
     // the engine reproduces v2 as cdcApply(v1, tableDiff(v1, v2)); the
     // oracle derives v2 DIRECTLY — hash equality proves the closed loop
-    "q_cdc_apply" ->
+    QuerySpec("q_cdc_apply", qCdcApply, oracle = Some(
       """SELECT c_custkey, c_nationkey,
         |  CASE WHEN c_custkey % 10 = 0 THEN 'UPDATED' ELSE c_mktsegment END AS c_mktsegment,
         |  c_acctbal
-        |FROM customer WHERE c_custkey % 97 <> 0""".stripMargin,
+        |FROM customer WHERE c_custkey % 97 <> 0""".stripMargin)),
     // both engines serialize the Debezium JSON envelope AND parse it back
     // — the decode path is exercised on each side, not cancelled out
-    "q_cdc_unwrap_json" ->
+    QuerySpec("q_cdc_unwrap_json", qCdcUnwrapJson, oracle = Some(
       """WITH env AS (
         |  SELECT CAST(TO_JSON(STRUCT_PACK(
         |    before := CAST(NULL AS VARCHAR),
@@ -4023,26 +3846,17 @@ object SparkEntry {
         |  CAST(json_extract_string(value, '$.after.o_orderdate') AS TIMESTAMP) AS o_orderdate,
         |  json_extract_string(value, '$.after.o_orderpriority') AS o_orderpriority
         |FROM env
-        |WHERE json_extract_string(value, '$.op') <> 'd'""".stripMargin,
-    "q_json_props" ->
+        |WHERE json_extract_string(value, '$.op') <> 'd'""".stripMargin)),
+    QuerySpec("q_json_props", qJsonProps, oracle = Some(
       """SELECT event_id,
         |  json_extract_string(props, '$.k') AS k_str,
         |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_num
-        |FROM events""".stripMargin,
-    "q_distinct_users" ->
-      "SELECT DISTINCT user_id FROM events",
-    "q_hopping_pivot" -> (hopCte +
-      """
-        |SELECT user_id, w_start,
-        |  STRFTIME(MIN(ts), '%H:%M:%S') AS window_start,
-        |  STRFTIME(MAX(ts), '%H:%M:%S') AS window_end,
-        |  CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS click_views,
-        |  CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS view_views,
-        |  CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchase_views,
-        |  CAST(SUM(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS signup_views,
-        |  CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS error_views
-        |FROM h GROUP BY user_id, w_start""".stripMargin),
-    "q_rolling_600s" ->
+        |FROM events""".stripMargin)),
+    QuerySpec("q_distinct_users", qDistinctUsers, oracle = Some(
+      "SELECT DISTINCT user_id FROM events")),
+    QuerySpec("q_hopping_pivot", qHoppingPivot, bench = true,
+      oracle = Some(hoppingPivotOracle)),
+    QuerySpec("q_rolling_600s", qRolling600s, bench = true, oracle = Some(
       """SELECT event_id, user_id,
         |  CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS ts_sec,
         |  CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) OVER w AS BIGINT) AS clicks_last_600s,
@@ -4053,32 +3867,32 @@ object SparkEntry {
         |FROM events
         |WINDOW w AS (PARTITION BY user_id
         |             ORDER BY CAST(FLOOR(EPOCH(ts)) AS BIGINT)
-        |             RANGE BETWEEN 600 PRECEDING AND CURRENT ROW)""".stripMargin,
-    "q_topk_orders_per_cust" ->
+        |             RANGE BETWEEN 600 PRECEDING AND CURRENT ROW)""".stripMargin)),
+    QuerySpec("q_topk_orders_per_cust", qTopkOrdersPerCust, bench = true, oracle = Some(
       """SELECT o_custkey, o_orderkey, o_totalprice,
         |  CAST(rn AS INTEGER) AS rank_in_group
         |FROM (SELECT o.*, ROW_NUMBER() OVER (
         |        PARTITION BY o_custkey
         |        ORDER BY o_totalprice DESC, o_orderkey) AS rn
         |      FROM orders o) t
-        |WHERE rn <= 3""".stripMargin,
-    "q_left_enrich" ->
+        |WHERE rn <= 3""".stripMargin)),
+    QuerySpec("q_left_enrich", qLeftEnrich, bench = true, oracle = Some(
       """SELECT a.user_id, a.n_events, a.total_value,
         |  c.c_name, c.c_mktsegment, c.c_acctbal
         |FROM (SELECT user_id, COUNT(*) AS n_events,
         |        ROUND(SUM(value), 2) AS total_value
         |      FROM events GROUP BY user_id) a
-        |LEFT JOIN customer c ON a.user_id = c.c_custkey""".stripMargin,
-    "q_inner_enrich" ->
+        |LEFT JOIN customer c ON a.user_id = c.c_custkey""".stripMargin)),
+    QuerySpec("q_inner_enrich", qInnerEnrich, bench = true, oracle = Some(
       """SELECT c_mktsegment, COUNT(*) AS n_orders,
         |  ROUND(SUM(o_totalprice), 2) AS segment_value
         |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment""".stripMargin,
-    "q_dedup_exact" ->
+        |GROUP BY c_mktsegment""".stripMargin)),
+    QuerySpec("q_dedup_exact", qDedupExact, bench = true, oracle = Some(
       """SELECT MIN(doc_id) AS doc_id, COUNT(*) AS n_copies
         |FROM documents
-        |GROUP BY MD5(TRIM(REGEXP_REPLACE(LOWER(text), '[^a-z0-9]+', ' ', 'g')))""".stripMargin,
-    "q_text_stats" ->
+        |GROUP BY MD5(TRIM(REGEXP_REPLACE(LOWER(text), '[^a-z0-9]+', ' ', 'g')))""".stripMargin)),
+    QuerySpec("q_text_stats", qTextStats, bench = true, oracle = Some(
       ("""SELECT doc_id,
         |  CAST(LENGTH(text) AS INTEGER) AS n_chars_calc,
         |  CAST(LEN(STRING_SPLIT(text, ' ')) AS INTEGER) AS n_words,
@@ -4087,17 +3901,17 @@ object SparkEntry {
         graft.llm.Stopwords.EnSql + """)) AS INTEGER) AS n_stopwords,
         |  ROUND(LEN(LIST_FILTER(STRING_SPLIT(text, ' '), x -> x IN """ +
         graft.llm.Stopwords.EnSql + """)) * 1.0 / LEN(STRING_SPLIT(text, ' ')), 4) AS stopword_ratio
-        |FROM documents""").stripMargin,
-    "q_token_count" ->
+        |FROM documents""").stripMargin)),
+    QuerySpec("q_token_count", qTokenCount, bench = true, oracle = Some(
       """SELECT doc_id,
         |  CAST(LEN(STRING_SPLIT(text, ' ')) AS INTEGER) AS ws_tokens,
         |  CAST(LEN(REGEXP_EXTRACT_ALL(text, '[a-z]+|[A-Z]+|[0-9]+')) AS INTEGER) AS bpe_ish_tokens
-        |FROM documents""".stripMargin,
-    "q_fingerprint" ->
+        |FROM documents""".stripMargin)),
+    QuerySpec("q_fingerprint", qFingerprint, oracle = Some(
       """SELECT doc_id,
         |  MD5(TRIM(REGEXP_REPLACE(LOWER(text), '[^a-z0-9]+', ' ', 'g'))) AS fp
-        |FROM documents""".stripMargin,
-    "q_lang_id" ->
+        |FROM documents""".stripMargin)),
+    QuerySpec("q_lang_id", qLangId, oracle = Some(
       ("""SELECT doc_id,
         |  CAST(LEN(LIST_FILTER(STRING_SPLIT(text, ' '), x -> x IN """ +
         graft.llm.Stopwords.EnSql + """)) AS INTEGER) AS en_hits,
@@ -4116,8 +3930,8 @@ object SparkEntry {
         graft.llm.Stopwords.FrSql + """)) THEN 'de'
         |    ELSE 'fr'
         |  END AS lang_pred
-        |FROM documents""").stripMargin,
-    "q_lang_id_ngram" -> {
+        |FROM documents""").stripMargin)),
+    QuerySpec("q_lang_id_ngram", qLangIdNgram, oracle = Some {
       val en = ngramScoreSql(graft.llm.TextOps.EnTrigrams)
       val de = ngramScoreSql(graft.llm.TextOps.DeTrigrams)
       val fr = ngramScoreSql(graft.llm.TextOps.FrTrigrams)
@@ -4129,8 +3943,8 @@ object SparkEntry {
          |       WHEN $de >= $fr THEN 'de'
          |       ELSE 'fr' END AS lang_pred
          |FROM documents""".stripMargin
-    },
-    "q_stream_flagship_rel" -> (hopCte +
+    }),
+    QuerySpec("q_stream_flagship_rel", qStreamFlagshipRel, oracle = Some(hopCte +
       """,
         |pv AS (
         |  SELECT user_id, w_start,
@@ -4153,8 +3967,8 @@ object SparkEntry {
         |  CAST(COALESCE(nb.n_orders, 0) AS INTEGER) AS nb_orders
         |FROM pv p
         |LEFT JOIN dims d ON p.user_id = d.c_custkey
-        |LEFT JOIN nb ON p.user_id = nb.o_custkey""".stripMargin),
-    "q_ml_features" -> (hopCte +
+        |LEFT JOIN nb ON p.user_id = nb.o_custkey""".stripMargin)),
+    QuerySpec("q_ml_features", qMlFeatures, oracle = Some(hopCte +
       """,
         |per_window AS (
         |  SELECT user_id, w_start,
@@ -4173,60 +3987,18 @@ object SparkEntry {
         |  CASE WHEN p.gallery_views > p.product_views THEN 'bot' ELSE 'user' END AS label
         |FROM per_window p
         |LEFT JOIN dims d ON p.user_id = d.c_custkey
-        |LEFT JOIN nb ON p.user_id = nb.o_custkey""".stripMargin),
-    "q_tumbling_agg" -> tumblingOracle,
-    "q_session_window" -> sessionOracle,
-    "q_stream_tumbling" -> tumblingOracle,
-    "q_stream_session" -> sessionOracle,
-    "q_stream_session_auto" -> sessionOracle,
-    "q_asof_join" ->
-      """WITH r0 AS (
-        |  SELECT o_custkey, CAST(FLOOR(EPOCH(o_orderdate)) AS BIGINT) AS o_sec,
-        |         o_orderkey, o_totalprice,
-        |         ROW_NUMBER() OVER (PARTITION BY o_custkey, o_orderdate
-        |                            ORDER BY o_orderkey DESC) AS rn
-        |  FROM orders),
-        |r AS (SELECT o_custkey, o_sec, o_orderkey AS last_order_key,
-        |             o_totalprice AS last_order_price
-        |      FROM r0 WHERE rn = 1),
-        |l AS (SELECT event_id, user_id, CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS ts_sec
-        |      FROM events)
-        |SELECT l.event_id, l.user_id, l.ts_sec, r.last_order_key, r.last_order_price
-        |FROM l ASOF LEFT JOIN r
-        |  ON l.user_id = r.o_custkey AND l.ts_sec >= r.o_sec""".stripMargin,
-    "q_asof_broadcast" ->
-      """WITH r0 AS (
-        |  SELECT o_custkey, CAST(FLOOR(EPOCH(o_orderdate)) AS BIGINT) AS o_sec,
-        |         o_orderkey, o_totalprice,
-        |         ROW_NUMBER() OVER (PARTITION BY o_custkey, o_orderdate
-        |                            ORDER BY o_orderkey DESC) AS rn
-        |  FROM orders),
-        |r AS (SELECT o_custkey, o_sec, o_orderkey AS last_order_key,
-        |             o_totalprice AS last_order_price
-        |      FROM r0 WHERE rn = 1),
-        |l AS (SELECT event_id, user_id, CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS ts_sec
-        |      FROM events)
-        |SELECT l.event_id, l.user_id, l.ts_sec, r.last_order_key, r.last_order_price
-        |FROM l ASOF LEFT JOIN r
-        |  ON l.user_id = r.o_custkey AND l.ts_sec >= r.o_sec""".stripMargin,
+        |LEFT JOIN nb ON p.user_id = nb.o_custkey""".stripMargin)),
+    QuerySpec("q_tumbling_agg", qTumblingAgg, bench = true, oracle = Some(tumblingOracle)),
+    QuerySpec("q_session_window", qSessionWindow, bench = true, oracle = Some(sessionOracle)),
+    QuerySpec("q_stream_tumbling", qStreamTumbling, oracle = Some(tumblingOracle)),
+    QuerySpec("q_stream_session", qStreamSession, oracle = Some(sessionOracle)),
+    QuerySpec("q_stream_session_auto", qStreamSessionAuto, oracle = Some(sessionOracle)),
+    QuerySpec("q_asof_join", qAsofJoin, bench = true, oracle = Some(asofOracle)),
+    QuerySpec("q_asof_broadcast", qAsofBroadcast, bench = true, oracle = Some(asofOracle)),
     // identical oracle as q_asof_join: the adaptive pick must be
     // invisible to results regardless of which plan it lands on
-    "q_asof_auto" ->
-      """WITH r0 AS (
-        |  SELECT o_custkey, CAST(FLOOR(EPOCH(o_orderdate)) AS BIGINT) AS o_sec,
-        |         o_orderkey, o_totalprice,
-        |         ROW_NUMBER() OVER (PARTITION BY o_custkey, o_orderdate
-        |                            ORDER BY o_orderkey DESC) AS rn
-        |  FROM orders),
-        |r AS (SELECT o_custkey, o_sec, o_orderkey AS last_order_key,
-        |             o_totalprice AS last_order_price
-        |      FROM r0 WHERE rn = 1),
-        |l AS (SELECT event_id, user_id, CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS ts_sec
-        |      FROM events)
-        |SELECT l.event_id, l.user_id, l.ts_sec, r.last_order_key, r.last_order_price
-        |FROM l ASOF LEFT JOIN r
-        |  ON l.user_id = r.o_custkey AND l.ts_sec >= r.o_sec""".stripMargin,
-    "q_interval_join" ->
+    QuerySpec("q_asof_auto", qAsofAuto, bench = true, oracle = Some(asofOracle)),
+    QuerySpec("q_interval_join", qIntervalJoin, oracle = Some(
       """WITH p AS (SELECT event_id AS purchase_id, user_id,
         |             CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS p_sec
         |           FROM events WHERE event_type = 'purchase'),
@@ -4237,8 +4009,8 @@ object SparkEntry {
         |FROM p LEFT JOIN c
         |  ON p.user_id = c.user_id
         | AND c.c_sec >= p.p_sec - 600 AND c.c_sec <= p.p_sec
-        |GROUP BY p.purchase_id, p.user_id, p.p_sec""".stripMargin,
-    "q_set_ops" ->
+        |GROUP BY p.purchase_id, p.user_id, p.p_sec""".stripMargin)),
+    QuerySpec("q_set_ops", qSetOps, oracle = Some(
       """SELECT user_id, 'both' AS op FROM
         |  (SELECT user_id FROM events INTERSECT SELECT o_custkey FROM orders)
         |UNION ALL
@@ -4246,67 +4018,45 @@ object SparkEntry {
         |  (SELECT user_id FROM events EXCEPT SELECT o_custkey FROM orders)
         |UNION ALL
         |SELECT o_custkey AS user_id, 'orders_only' AS op FROM
-        |  (SELECT o_custkey FROM orders EXCEPT SELECT user_id FROM events)""".stripMargin,
-    "q_distinct_counts" ->
+        |  (SELECT o_custkey FROM orders EXCEPT SELECT user_id FROM events)""".stripMargin)),
+    QuerySpec("q_distinct_counts", qDistinctCounts, bench = true, oracle = Some(
       """SELECT event_type,
         |  COUNT(DISTINCT user_id) AS n_users,
         |  COUNT(*) AS n_events
-        |FROM events GROUP BY event_type""".stripMargin,
-    "q_rollup" ->
+        |FROM events GROUP BY event_type""".stripMargin)),
+    QuerySpec("q_rollup", qRollup, bench = true, oracle = Some(
       """SELECT o_orderstatus, o_orderpriority,
         |  COUNT(*) AS n_orders,
         |  SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) / 100.0 AS total
-        |FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)""".stripMargin,
-    "q_salted_agg" ->
+        |FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)""".stripMargin)),
+    QuerySpec("q_salted_agg", qSaltedAgg, bench = true, oracle = Some(
       """SELECT user_id,
         |  CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS value_cents,
         |  COUNT(*) AS n_rows
-        |FROM events GROUP BY user_id""".stripMargin,
+        |FROM events GROUP BY user_id""".stripMargin)),
     // oracle = the DIRECT join: the salt+replicate rewrite must be exact
-    "q_salted_join" ->
-      """SELECT e.event_id, e.user_id, c.c_name, c.c_mktsegment
-        |FROM events e JOIN customer c ON e.user_id = c.c_custkey""".stripMargin,
+    QuerySpec("q_salted_join", qSaltedJoin, oracle = Some(directJoinOracle)),
     // identical oracle: the adaptive pick must be invisible to results
-    "q_skew_join_auto" ->
-      """SELECT e.event_id, e.user_id, c.c_name, c.c_mktsegment
-        |FROM events e JOIN customer c ON e.user_id = c.c_custkey""".stripMargin,
+    QuerySpec("q_skew_join_auto", qSkewJoinAuto, bench = true, oracle = Some(directJoinOracle)),
     // stream-stream join: the incremental two-sided join must emit
     // exactly the batch join's pairs
-    "q_stream_interval_join" ->
+    QuerySpec("q_stream_interval_join", qStreamIntervalJoin, oracle = Some(
       """SELECT p.event_id AS purchase_id, c.event_id AS click_id
         |FROM events p JOIN events c ON p.user_id = c.user_id
         |WHERE p.event_type = 'purchase' AND c.event_type = 'click'
-        |  AND c.ts >= p.ts - INTERVAL 600 SECOND AND c.ts <= p.ts""".stripMargin,
+        |  AND c.ts >= p.ts - INTERVAL 600 SECOND AND c.ts <= p.ts""".stripMargin)),
     // identical oracle as q_hopping_pivot: the compacted changelog-sink
     // state must be exactly the batch answer (sink semantics included)
-    "q_stream_changelog_pivot" -> (hopCte +
-      """
-        |SELECT user_id, w_start,
-        |  STRFTIME(MIN(ts), '%H:%M:%S') AS window_start,
-        |  STRFTIME(MAX(ts), '%H:%M:%S') AS window_end,
-        |  CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS click_views,
-        |  CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS view_views,
-        |  CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchase_views,
-        |  CAST(SUM(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS signup_views,
-        |  CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS error_views
-        |FROM h GROUP BY user_id, w_start""".stripMargin),
+    QuerySpec("q_stream_changelog_pivot", qStreamChangelogPivot,
+      oracle = Some(hoppingPivotOracle)),
     // identical oracle as q_hopping_pivot: incremental execution must
     // produce exactly the batch answer
-    "q_stream_hopping_pivot" -> (hopCte +
-      """
-        |SELECT user_id, w_start,
-        |  STRFTIME(MIN(ts), '%H:%M:%S') AS window_start,
-        |  STRFTIME(MAX(ts), '%H:%M:%S') AS window_end,
-        |  CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS click_views,
-        |  CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS view_views,
-        |  CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchase_views,
-        |  CAST(SUM(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS signup_views,
-        |  CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS error_views
-        |FROM h GROUP BY user_id, w_start""".stripMargin),
+    QuerySpec("q_stream_hopping_pivot", qStreamHoppingPivot, oracle = Some(hoppingPivotOracle)),
+    QuerySpec("q_stream_auto_state", qStreamAutoState, oracle = Some(hoppingPivotOracle)),
     // per-row RANGE(LEN(v)) + NOT NULL guard mirror Spark's posexplode
     // exactly (posexplode emits len(vec) rows and drops NULL arrays) —
     // a hardcoded RANGE(64) would desync on NULL or non-64-dim vectors
-    "q_embed_normalize" ->
+    QuerySpec("q_embed_normalize", qEmbedNormalize, oracle = Some(
       """WITH n AS (
         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
         |         SQRT(LIST_DOT_PRODUCT(CAST(embedding AS DOUBLE[]),
@@ -4318,16 +4068,16 @@ object SparkEntry {
         |SELECT vec_id, CAST(i AS INTEGER) AS dim,
         |  ROUND(CASE WHEN nrm = 0 THEN 0.0
         |             ELSE v[CAST(i AS INTEGER) + 1] / nrm END, 6) AS val
-        |FROM x""".stripMargin,
-    "q_embed_dim_stats" ->
+        |FROM x""".stripMargin)),
+    QuerySpec("q_embed_dim_stats", qEmbedDimStats, oracle = Some(
       """SELECT i.i AS dim,
         |  ROUND(AVG(CAST(embedding[CAST(i.i AS INTEGER) + 1] AS DOUBLE)), 4) AS mean,
         |  ROUND(STDDEV_SAMP(CAST(embedding[CAST(i.i AS INTEGER) + 1] AS DOUBLE)), 4) AS std,
         |  ROUND(MIN(CAST(embedding[CAST(i.i AS INTEGER) + 1] AS DOUBLE)), 4) AS min_v,
         |  ROUND(MAX(CAST(embedding[CAST(i.i AS INTEGER) + 1] AS DOUBLE)), 4) AS max_v
         |FROM embeddings, (SELECT UNNEST(RANGE(64)) AS i) i
-        |GROUP BY i.i""".stripMargin,
-    "q_quality_filter" ->
+        |GROUP BY i.i""".stripMargin)),
+    QuerySpec("q_quality_filter", qQualityFilter, oracle = Some(
       ("""WITH s AS (
         |  SELECT doc_id,
         |    ROUND(
@@ -4338,15 +4088,15 @@ object SparkEntry {
         |      CASE WHEN LENGTH(text) BETWEEN 100 AND 5000 THEN 0.2 ELSE 0.0 END,
         |    4) AS quality_score
         |  FROM documents)
-        |SELECT doc_id, quality_score, quality_score >= 0.5 AS keep FROM s""").stripMargin,
-    "q_pii_scrub" ->
+        |SELECT doc_id, quality_score, quality_score >= 0.5 AS keep FROM s""").stripMargin)),
+    QuerySpec("q_pii_scrub", qPiiScrub, oracle = Some(
       (s"""SELECT doc_id,
         |  CAST(LEN(REGEXP_EXTRACT_ALL(text, '${graft.llm.TextOps.EmailRe}')) AS INTEGER) AS n_emails,
         |  CAST(LEN(REGEXP_EXTRACT_ALL(text, '${graft.llm.TextOps.Ipv4Re}')) AS INTEGER) AS n_ips,
         |  REGEXP_REPLACE(REGEXP_REPLACE(text, '${graft.llm.TextOps.EmailRe}', '<EMAIL>', 'g'),
         |                 '${graft.llm.TextOps.Ipv4Re}', '<IP>', 'g') AS scrubbed
-        |FROM documents""").stripMargin,
-    "q_repetition_stats" ->
+        |FROM documents""").stripMargin)),
+    QuerySpec("q_repetition_stats", qRepetitionStats, oracle = Some(
       """WITH t AS (SELECT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS tok FROM documents),
         |c AS (SELECT doc_id, tok, COUNT(*) AS n FROM t GROUP BY doc_id, tok),
         |a AS (SELECT doc_id, MAX(n) AS mx, SUM(n) AS tot, COUNT(*) AS dist
@@ -4354,8 +4104,8 @@ object SparkEntry {
         |SELECT doc_id,
         |  ROUND(dist * 1.0 / tot, 6) AS type_token_ratio,
         |  ROUND(mx * 1.0 / tot, 6) AS top_token_ratio
-        |FROM a""".stripMargin,
-    "q_char_entropy" ->
+        |FROM a""".stripMargin)),
+    QuerySpec("q_char_entropy", qCharEntropy, oracle = Some(
       """WITH bg AS (
         |  SELECT doc_id, UNNEST(LIST_TRANSFORM(RANGE(LEN(text) - 1),
         |    i -> text[i+1:i+2])) AS bg
@@ -4363,11 +4113,12 @@ object SparkEntry {
         |c AS (SELECT doc_id, bg, COUNT(*) AS c FROM bg GROUP BY 1, 2)
         |SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_bigrams,
         |  ROUND(LOG2(SUM(c)) - SUM(c * LOG2(c)) / SUM(c), 6) AS entropy
-        |FROM c GROUP BY doc_id""".stripMargin,
-    "q_contamination" -> contaminationOracle,
+        |FROM c GROUP BY doc_id""".stripMargin)),
+    QuerySpec("q_contamination", qContamination, oracle = Some(contaminationOracle)),
     // streaming ≡ batch: the incremental execution shares the oracle
-    "q_stream_contamination" -> contaminationOracle,
-    "q_tfidf_keywords" ->
+    QuerySpec("q_stream_contamination", qStreamContamination,
+      oracle = Some(contaminationOracle)),
+    QuerySpec("q_tfidf_keywords", qTfidfKeywords, oracle = Some(
       """WITH terms AS (
         |  SELECT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS term FROM documents),
         |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM terms GROUP BY doc_id, term),
@@ -4383,8 +4134,8 @@ object SparkEntry {
         |    CAST(ROW_NUMBER() OVER (PARTITION BY doc_id
         |      ORDER BY tfidf DESC, term) AS INTEGER) AS rank
         |  FROM scored)
-        |SELECT doc_id, term, tfidf, rank FROM ranked WHERE rank <= 3""".stripMargin,
-    "q_vocab_coverage" ->
+        |SELECT doc_id, term, tfidf, rank FROM ranked WHERE rank <= 3""".stripMargin)),
+    QuerySpec("q_vocab_coverage", qVocabCoverage, bench = true, oracle = Some(
       """WITH c AS (
         |  SELECT term, COUNT(*) AS cnt FROM (
         |    SELECT UNNEST(STRING_SPLIT(text, ' ')) AS term FROM documents)
@@ -4398,30 +4149,30 @@ object SparkEntry {
         |      FROM top)
         |SELECT rank, term, cnt,
         |  ROUND(cum / (SELECT total FROM t), 6) AS coverage
-        |FROM r""".stripMargin,
-    "q_phrase_search" ->
+        |FROM r""".stripMargin)),
+    QuerySpec("q_phrase_search", qPhraseSearch, bench = true, oracle = Some(
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
         |m AS (
         |  SELECT doc_id, i FROM t, UNNEST(range(1, len(tk))) AS g(i)
         |  WHERE tk[i] = 'table' AND tk[i+1] = 'hash')
         |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_matches,
         |  CAST(MIN(i) - 1 AS INT) AS first_pos
-        |FROM m GROUP BY 1""".stripMargin,
-    "q4_priority_exists" ->
+        |FROM m GROUP BY 1""".stripMargin)),
+    QuerySpec("q4_priority_exists", q4PriorityExists, bench = true, oracle = Some(
       """SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS order_count
         |FROM orders
         |WHERE EXISTS (SELECT 1 FROM lineitem
         |  WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
-        |GROUP BY 1""".stripMargin,
-    "q6_forecast_revenue" ->
+        |GROUP BY 1""".stripMargin)),
+    QuerySpec("q6_forecast_revenue", q6ForecastRevenue, bench = true, oracle = Some(
       """SELECT SUM(CAST(FLOOR(l_extendedprice * l_discount * 10000 + 0.5)
         |  AS BIGINT)) / 10000.0 AS revenue
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
         |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
         |  AND l_discount >= 0.05 AND l_discount <= 0.07
-        |  AND l_quantity < 24""".stripMargin,
-    "q14_promo_revenue" ->
+        |  AND l_quantity < 24""".stripMargin)),
+    QuerySpec("q14_promo_revenue", q14PromoRevenue, bench = true, oracle = Some(
       """SELECT ROUND(
         |  SUM(CASE WHEN p_type LIKE 'PROMO%'
         |    THEN CAST(FLOOR(l_extendedprice * (1 - l_discount) * 10000 + 0.5)
@@ -4430,8 +4181,8 @@ object SparkEntry {
         |    AS BIGINT)), 6) AS promo_revenue_pct
         |FROM lineitem JOIN part ON l_partkey = p_partkey
         |WHERE l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'""".stripMargin,
-    "q8_market_share" ->
+        |  AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'""".stripMargin)),
+    QuerySpec("q8_market_share", q8MarketShare, bench = true, oracle = Some(
       """WITH v AS (
         |  SELECT CAST(YEAR(o_orderdate) AS INT) AS o_year, n2.n_name AS supp_nation,
         |    CAST(FLOOR(l_extendedprice * (1 - l_discount) * 10000 + 0.5)
@@ -4449,8 +4200,8 @@ object SparkEntry {
         |SELECT o_year,
         |  ROUND(SUM(CASE WHEN supp_nation = 'NATION_2' THEN disc4 ELSE 0 END)
         |    * 100.0 / SUM(disc4), 6) AS mkt_share_pct
-        |FROM v GROUP BY 1""".stripMargin,
-    "q13_count_distribution" ->
+        |FROM v GROUP BY 1""".stripMargin)),
+    QuerySpec("q13_count_distribution", q13CountDistribution, bench = true, oracle = Some(
       """WITH c AS (
         |  SELECT c_custkey, COUNT(o_orderkey) AS c_count
         |  FROM customer LEFT JOIN orders
@@ -4458,8 +4209,8 @@ object SparkEntry {
         |  GROUP BY 1)
         |SELECT CAST(c_count AS BIGINT) AS c_count,
         |  CAST(COUNT(*) AS BIGINT) AS custdist
-        |FROM c GROUP BY 1""".stripMargin,
-    "q15_top_supplier" ->
+        |FROM c GROUP BY 1""".stripMargin)),
+    QuerySpec("q15_top_supplier", q15TopSupplier, bench = true, oracle = Some(
       """WITH rev AS (
         |  SELECT l_suppkey, SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount)
         |    * 100 + 0.5) AS BIGINT)) AS rev_cents
@@ -4469,8 +4220,8 @@ object SparkEntry {
         |  GROUP BY 1)
         |SELECT s_suppkey, s_name, rev_cents / 100.0 AS total_revenue
         |FROM rev JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE rev_cents = (SELECT MAX(rev_cents) FROM rev)""".stripMargin,
-    "q17_small_qty_revenue" ->
+        |WHERE rev_cents = (SELECT MAX(rev_cents) FROM rev)""".stripMargin)),
+    QuerySpec("q17_small_qty_revenue", q17SmallQtyRevenue, bench = true, oracle = Some(
       """WITH l AS (
         |  SELECT l_partkey, l_quantity, l_extendedprice
         |  FROM lineitem JOIN part
@@ -4479,8 +4230,8 @@ object SparkEntry {
         |SELECT SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) / 700.0
         |  AS avg_yearly
         |FROM l JOIN a USING (l_partkey)
-        |WHERE l_quantity < 0.2 * avg_qty""".stripMargin,
-    "q19_disjunctive" ->
+        |WHERE l_quantity < 0.2 * avg_qty""".stripMargin)),
+    QuerySpec("q19_disjunctive", q19Disjunctive, bench = true, oracle = Some(
       """SELECT SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 10000 + 0.5)
         |  AS BIGINT)) / 10000.0 AS revenue
         |FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -4489,8 +4240,8 @@ object SparkEntry {
         |  OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10
         |    AND l_quantity BETWEEN 10 AND 20)
         |  OR (p_brand = 'Brand#15' AND p_size BETWEEN 20 AND 30
-        |    AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
-    "q21_blame_supplier" ->
+        |    AND l_quantity BETWEEN 20 AND 30)""".stripMargin)),
+    QuerySpec("q21_blame_supplier", q21BlameSupplier, bench = true, oracle = Some(
       """SELECT s_name, CAST(COUNT(*) AS BIGINT) AS numwait
         |FROM lineitem l1
         |JOIN orders ON o_orderkey = l1.l_orderkey AND o_orderstatus = 'F'
@@ -4502,8 +4253,8 @@ object SparkEntry {
         |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
         |    WHERE l3.l_orderkey = l1.l_orderkey
         |      AND l3.l_suppkey <> l1.l_suppkey AND l3.l_returnflag = 'R')
-        |GROUP BY 1""".stripMargin,
-    "q22_idle_customers" ->
+        |GROUP BY 1""".stripMargin)),
+    QuerySpec("q22_idle_customers", q22IdleCustomers, bench = true, oracle = Some(
       """WITH scope AS (
         |  SELECT * FROM customer WHERE c_nationkey IN (1, 3, 5, 7, 9)),
         |s AS (
@@ -4517,8 +4268,8 @@ object SparkEntry {
         |WHERE CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT) * n > sum_cents
         |  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
         |    AND o_orderdate >= TIMESTAMP '2000-01-01 00:00:00')
-        |GROUP BY c_nationkey""".stripMargin,
-    "q2_min_cost_supplier" ->
+        |GROUP BY c_nationkey""".stripMargin)),
+    QuerySpec("q2_min_cost_supplier", q2MinCostSupplier, bench = true, oracle = Some(
       """WITH eur AS (
         |  SELECT s_suppkey, s_name, s_acctbal, n_name
         |  FROM supplier JOIN nation ON s_nationkey = n_nationkey
@@ -4537,8 +4288,8 @@ object SparkEntry {
         |  cost_cents / 100.0 AS cost
         |FROM cost JOIN mn USING (l_partkey)
         |JOIN eur ON l_suppkey = s_suppkey
-        |WHERE cost_cents = m""".stripMargin,
-    "q9_nation_profit" ->
+        |WHERE cost_cents = m""".stripMargin)),
+    QuerySpec("q9_nation_profit", q9NationProfit, bench = true, oracle = Some(
       """SELECT n_name AS nation, CAST(YEAR(o_orderdate) AS INT) AS o_year,
         |  SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 10000 + 0.5)
         |      AS BIGINT)
@@ -4550,8 +4301,8 @@ object SparkEntry {
         |JOIN supplier ON l_suppkey = s_suppkey
         |JOIN nation ON s_nationkey = n_nationkey
         |JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1, 2""".stripMargin,
-    "q11_important_parts" ->
+        |GROUP BY 1, 2""".stripMargin)),
+    QuerySpec("q11_important_parts", q11ImportantParts, bench = true, oracle = Some(
       """WITH v AS (
         |  SELECT l_partkey,
         |    SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS vc
@@ -4561,8 +4312,8 @@ object SparkEntry {
         |  GROUP BY 1),
         |t AS (SELECT SUM(vc) AS tot FROM v)
         |SELECT l_partkey AS p_partkey, vc / 100.0 AS value
-        |FROM v, t WHERE vc * 1000 > tot""".stripMargin,
-    "q12_late_priority" ->
+        |FROM v, t WHERE vc * 1000 > tot""".stripMargin)),
+    QuerySpec("q12_late_priority", q12LatePriority, bench = true, oracle = Some(
       """SELECT l_linestatus,
         |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
         |    THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
@@ -4570,8 +4321,8 @@ object SparkEntry {
         |    THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE l_shipdate > o_orderdate + INTERVAL 90 DAY
-        |GROUP BY 1""".stripMargin,
-    "q16_supplier_count" ->
+        |GROUP BY 1""".stripMargin)),
+    QuerySpec("q16_supplier_count", q16SupplierCount, bench = true, oracle = Some(
       """SELECT p_brand, p_type, p_size,
         |  CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
         |FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -4579,8 +4330,8 @@ object SparkEntry {
         |  AND p_size IN (1, 4, 9, 16, 25, 36, 49)
         |  AND l_suppkey NOT IN (
         |    SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        |GROUP BY 1, 2, 3""".stripMargin,
-    "q20_dominant_supplier" ->
+        |GROUP BY 1, 2, 3""".stripMargin)),
+    QuerySpec("q20_dominant_supplier", q20DominantSupplier, bench = true, oracle = Some(
       """WITH sh AS (
         |  SELECT l_partkey, l_suppkey, SUM(CAST(l_quantity AS BIGINT)) AS q
         |  FROM lineitem
@@ -4593,8 +4344,8 @@ object SparkEntry {
         |FROM supplier
         |WHERE s_suppkey IN (
         |  SELECT l_suppkey FROM sh JOIN tot USING (l_partkey)
-        |  WHERE q * 2 > tq)""".stripMargin,
-    "q_dup_profile" ->
+        |  WHERE q * 2 > tq)""".stripMargin)),
+    QuerySpec("q_dup_profile", qDupProfile, oracle = Some(
       """WITH f AS (
         |  SELECT MD5(TRIM(REGEXP_REPLACE(LOWER(text), '[^a-z0-9]+', ' ', 'g')))
         |    AS fp FROM documents),
@@ -4602,8 +4353,8 @@ object SparkEntry {
         |SELECT CAST(sz AS BIGINT) AS cluster_size,
         |  CAST(COUNT(*) AS BIGINT) AS n_clusters,
         |  CAST(sz * COUNT(*) AS BIGINT) AS n_docs
-        |FROM c GROUP BY sz""".stripMargin,
-    "q_quantile_drift" ->
+        |FROM c GROUP BY sz""".stripMargin)),
+    QuerySpec("q_quantile_drift", qQuantileDrift, oracle = Some(
       """WITH d AS (
         |  SELECT CAST(ts AS DATE) AS day, COUNT(*) AS n_events,
         |    ROUND(quantile_cont(value, 0.5), 6) AS p50,
@@ -4612,8 +4363,8 @@ object SparkEntry {
         |SELECT day, CAST(n_events AS BIGINT) AS n_events, p50, p90,
         |  ROUND(p50 - LAG(p50, 1) OVER (ORDER BY day), 6) AS d_p50,
         |  ROUND(p90 - LAG(p90, 1) OVER (ORDER BY day), 6) AS d_p90
-        |FROM d""".stripMargin,
-    "q_source_overlap" ->
+        |FROM d""".stripMargin)),
+    QuerySpec("q_source_overlap", qSourceOverlap, bench = true, oracle = Some(
       """WITH toks AS (SELECT source, STRING_SPLIT(text, ' ') AS tk FROM documents),
         |sh AS (
         |  SELECT DISTINCT grp, s FROM (
@@ -4624,8 +4375,8 @@ object SparkEntry {
         |SELECT x.grp AS src_a, y.grp AS src_b,
         |  CAST(COUNT(*) AS BIGINT) AS n_shared
         |FROM sh x JOIN sh y ON x.s = y.s AND x.grp < y.grp
-        |GROUP BY 1, 2""".stripMargin,
-    "q_corpus_report" ->
+        |GROUP BY 1, 2""".stripMargin)),
+    QuerySpec("q_corpus_report", qCorpusReport, oracle = Some(
       """SELECT source,
         |  CAST(COUNT(*) AS BIGINT) AS n_docs,
         |  CAST(SUM(LEN(STRING_SPLIT(text, ' '))) AS BIGINT) AS n_tokens,
@@ -4636,11 +4387,11 @@ object SparkEntry {
         |  ROUND(SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) / COUNT(*), 6)
         |    AS en_share,
         |  ROUND(SUM(n_chars) / COUNT(*), 6) AS avg_chars
-        |FROM documents GROUP BY 1""".stripMargin,
+        |FROM documents GROUP BY 1""".stripMargin)),
     // fixed-centroid clustering twin: same d2 algebra and op order as
     // assignToCentroids ((vv - 2·v·c) + cc, ROUND before argmin, ties
     // to the lower cell), same stats as clusterStats
-    "q_corpus_clusters_fixed" ->
+    QuerySpec("q_corpus_clusters_fixed", qCorpusClustersFixed, oracle = Some(
       """WITH c AS (SELECT vec_id AS cell, CAST(embedding AS DOUBLE[]) AS cv,
         |             LIST_DOT_PRODUCT(CAST(embedding AS DOUBLE[]),
         |               CAST(embedding AS DOUBLE[])) AS cc
@@ -4666,8 +4417,8 @@ object SparkEntry {
         |SELECT cluster, n_docs, n_tokens,
         |  ROUND(n_tokens / CAST(SUM(n_tokens) OVER () AS DOUBLE), 6) AS token_share,
         |  n_sources
-        |FROM s""".stripMargin,
-    "q_ewma" ->
+        |FROM s""".stripMargin)),
+    QuerySpec("q_ewma", qEwma, bench = true, oracle = Some(
       """WITH e AS (
         |  SELECT event_id, user_id, value,
         |    CAST(ROUND(value * 1e6) AS BIGINT) AS xm, epoch_us(ts) AS tu
@@ -4684,8 +4435,8 @@ object SparkEntry {
         |  ROUND(CAST(list_sum(list_transform(lst, (x, i) -> x * wts[i]))
         |      AS DOUBLE)
         |    / list_sum(wts[1:len(lst)]) / 1e6, 6) AS ewma
-        |FROM l, w""".stripMargin,
-    "q_domain_keyness" ->
+        |FROM l, w""".stripMargin)),
+    QuerySpec("q_domain_keyness", qDomainKeyness, bench = true, oracle = Some(
       """WITH c AS (
         |  SELECT grp, term, COUNT(*) AS c_in FROM (
         |    SELECT lang AS grp, UNNEST(STRING_SPLIT(text, ' ')) AS term
@@ -4707,8 +4458,8 @@ object SparkEntry {
         |          ORDER BY score DESC, term) AS INTEGER) AS rank
         |      FROM s)
         |SELECT grp AS lang, term, c_in, score, rank FROM r
-        |WHERE rank <= 5""".stripMargin,
-    "q_dsir_weights" ->
+        |WHERE rank <= 5""".stripMargin)),
+    QuerySpec("q_dsir_weights", qDsirWeights, bench = true, oracle = Some(
       """WITH tok AS (
         |  SELECT doc_id, (lang = 'en') AS is_tgt,
         |    UNNEST(STRING_SPLIT(text, ' ')) AS token
@@ -4728,31 +4479,31 @@ object SparkEntry {
         |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
         |  ROUND(SUM(rm) / 1e6, 6) AS logratio
         |FROM tok JOIN r USING (token)
-        |GROUP BY 1""".stripMargin,
-    "q_bpe_merges" ->
+        |GROUP BY 1""".stripMargin)),
+    QuerySpec("q_bpe_merges", qBpeMerges, oracle = Some(
       (bpeTrainCtes +
         """
           |SELECT * FROM (
           |  SELECT 1 AS rank, a AS lhs, b AS rhs, CAST(cnt AS BIGINT) AS freq FROM m1
           |  UNION ALL SELECT 2, a, b, CAST(cnt AS BIGINT) FROM m2
           |  UNION ALL SELECT 3, a, b, CAST(cnt AS BIGINT) FROM m3)
-          |ORDER BY rank""".stripMargin),
-    "q_bpe_tokenize" ->
+          |ORDER BY rank""".stripMargin))),
+    QuerySpec("q_bpe_tokenize", qBpeTokenize, bench = true, oracle = Some(
       (bpeTokenizeCtes +
         """
           |SELECT doc_id, bpe_text,
           |  CAST(len(list_filter(string_split(bpe_text, ' '), t -> t != '')) AS INT)
           |    AS n_subtokens
-          |FROM tok""".stripMargin),
-    "q_bpe_vocab" ->
+          |FROM tok""".stripMargin))),
+    QuerySpec("q_bpe_vocab", qBpeVocab, oracle = Some(
       (bpeTokenizeCtes +
         """
           |SELECT subword, CAST(COUNT(*) AS BIGINT) AS cnt,
           |  (LEN(subword) > 1) AS is_merged
           |FROM (SELECT UNNEST(list_filter(string_split(bpe_text, ' '),
           |        t -> t != '')) AS subword FROM tok)
-          |GROUP BY 1""".stripMargin),
-    "q_inverted_index" ->
+          |GROUP BY 1""".stripMargin))),
+    QuerySpec("q_inverted_index", qInvertedIndex, bench = true, oracle = Some(
       """WITH terms AS (
         |  SELECT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS term FROM documents),
         |tf AS (SELECT term, doc_id, COUNT(*) AS tf FROM terms GROUP BY 1, 2),
@@ -4763,11 +4514,11 @@ object SparkEntry {
         |    ORDER BY tf DESC, doc_id) AS rk FROM kept)
         |SELECT term, df,
         |  STRING_AGG(CAST(doc_id AS VARCHAR), ',' ORDER BY rk) AS postings
-        |FROM ranked WHERE rk <= 10 GROUP BY term, df""".stripMargin,
+        |FROM ranked WHERE rk <= 10 GROUP BY term, df""".stripMargin)),
     // BM25: per-term scores quantized to integer micros BEFORE the
     // per-doc sum (integer sums commute; double sums don't), one
     // rounded division at the end — mirrors Retrieval.bm25 exactly
-    "q_bm25" ->
+    QuerySpec("q_bm25", qBm25, bench = true, oracle = Some(
       """WITH terms AS (
         |  SELECT doc_id, LEN(STRING_SPLIT(text, ' ')) AS dl,
         |         UNNEST(STRING_SPLIT(text, ' ')) AS term FROM documents),
@@ -4786,10 +4537,10 @@ object SparkEntry {
         |    AS sm
         |  FROM hits h JOIN dfs d USING (term) CROSS JOIN st)
         |SELECT doc_id, COUNT(*) AS n_hit, ROUND(SUM(sm) / 1e6, 6) AS bm25
-        |FROM sc GROUP BY doc_id""".stripMargin,
-    "q_ngram_jaccard_exact" -> (ngramExactCte +
-      "\nSELECT a, b, jaccard FROM pairs"),
-    "q_cms_exact_terms" ->
+        |FROM sc GROUP BY doc_id""".stripMargin)),
+    QuerySpec("q_ngram_jaccard_exact", qNgramJaccardExact, oracle = Some(ngramExactCte +
+      "\nSELECT a, b, jaccard FROM pairs")),
+    QuerySpec("q_cms_exact_terms", qCmsExactTerms, oracle = Some(
       """WITH probes(term) AS (
         |  VALUES ('table'), ('hash'), ('join'), ('nosuchterm')),
         |counts AS (
@@ -4798,8 +4549,8 @@ object SparkEntry {
         |  WHERE t.term IN ('table', 'hash', 'join', 'nosuchterm')
         |  GROUP BY 1)
         |SELECT p.term, CAST(COALESCE(c.n, 0) AS BIGINT) AS n
-        |FROM probes p LEFT JOIN counts c USING (term)""".stripMargin,
-    "q_simhash_exact" -> {
+        |FROM probes p LEFT JOIN counts c USING (term)""".stripMargin)),
+    QuerySpec("q_simhash_exact", qSimhashExact, oracle = Some {
       val bitSums = (0 until 32).map(b =>
         s"SUM(CASE WHEN (h >> $b) & 1 = 1 THEN 1 ELSE -1 END) AS c$b")
         .mkString(", ")
@@ -4823,8 +4574,8 @@ object SparkEntry {
         |    CAST(BIT_COUNT(XOR(l.sig, r.sig)) AS INT) AS hamming
         |  FROM sigs l JOIN sigs r ON l.doc_id < r.doc_id)
         |WHERE hamming <= 2""".stripMargin
-    },
-    "q_dedup_delta_exact" ->
+    }),
+    QuerySpec("q_dedup_delta_exact", qDedupDeltaExact, oracle = Some(
       """WITH s AS (
         |  SELECT doc_id,
         |    LIST_DISTINCT(LIST_TRANSFORM(RANGE(LEN(STRING_SPLIT(text, ' ')) - 2),
@@ -4844,65 +4595,55 @@ object SparkEntry {
         |  FROM n x JOIN n y ON x.doc_id < y.doc_id)
         |SELECT a, b, ROUND(inter * 1.0 / (n_a + n_b - inter), 6) AS jaccard
         |FROM p0 WHERE inter > 0
-        |  AND ROUND(inter * 1.0 / (n_a + n_b - inter), 6) >= 0.1""".stripMargin,
-    "q_multimodal_frames" ->
+        |  AND ROUND(inter * 1.0 / (n_a + n_b - inter), 6) >= 0.1""".stripMargin)),
+    QuerySpec("q_multimodal_frames", qMultimodalFrames, oracle = Some(
       """SELECT doc_id AS media_id, CAST(STRLEN(text) AS INT) AS n_bytes,
         |  CAST(f AS INT) AS frame_idx
-        |FROM documents CROSS JOIN (SELECT UNNEST(RANGE(0, 32, 8)) AS f) t""".stripMargin,
-    "q_bucketed_join" ->
+        |FROM documents CROSS JOIN (SELECT UNNEST(RANGE(0, 32, 8)) AS f) t""".stripMargin)),
+    QuerySpec("q_bucketed_join", qBucketedJoin, bench = true, oracle = Some(
       """SELECT e.event_id, e.user_id, o.o_orderkey
-        |FROM events e JOIN orders o ON e.user_id = o.o_custkey""".stripMargin,
-    "q_ngram_containment" -> (ngramExactCte +
+        |FROM events e JOIN orders o ON e.user_id = o.o_custkey""".stripMargin)),
+    QuerySpec("q_ngram_containment", qNgramContainment, oracle = Some(ngramExactCte +
       """
         |SELECT a, b,
         |  ROUND(inter * 1.0 / n_a, 6) AS containment_a,
         |  ROUND(inter * 1.0 / n_b, 6) AS containment_b
         |FROM p0
         |WHERE ROUND(inter * 1.0 / n_a, 6) >= 0.2
-        |   OR ROUND(inter * 1.0 / n_b, 6) >= 0.2""".stripMargin),
-    "q_dedup_clusters_exact" -> (ngramExactCte +
-      "\nSELECT doc_id, survivor, doc_id = survivor AS keep FROM surv"),
-    "q_dedup_apply_exact" -> (ngramExactCte +
+        |   OR ROUND(inter * 1.0 / n_b, 6) >= 0.2""".stripMargin)),
+    QuerySpec("q_dedup_clusters_exact", qDedupClustersExact, oracle = Some(ngramExactCte +
+      "\nSELECT doc_id, survivor, doc_id = survivor AS keep FROM surv")),
+    QuerySpec("q_dedup_apply_exact", qDedupApplyExact, oracle = Some(ngramExactCte +
       """
         |SELECT doc_id, lang, source, n_chars FROM documents
-        |WHERE doc_id NOT IN (SELECT doc_id FROM surv WHERE doc_id <> survivor)""".stripMargin),
-    "q_sim_topk" ->
-      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id < 10),
-        |     c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv
-        |           FROM embeddings),
-        |     s AS (SELECT query_id, neighbor_id,
-        |             ROUND(LIST_DOT_PRODUCT(qv, cv)
-        |               / (SQRT(LIST_DOT_PRODUCT(qv, qv)) * SQRT(LIST_DOT_PRODUCT(cv, cv))), 6) AS cos_sim
-        |           FROM q, c WHERE query_id <> neighbor_id),
-        |     r AS (SELECT query_id, neighbor_id, cos_sim,
-        |             CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-        |               ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rank
-        |           FROM s)
-        |SELECT query_id, neighbor_id, cos_sim, rank FROM r WHERE rank <= 5""".stripMargin,
+        |WHERE doc_id NOT IN (SELECT doc_id FROM surv WHERE doc_id <> survivor)""".stripMargin)),
+    QuerySpec("q_sim_topk", qSimTopk, bench = true, oracle = Some(simTopkOracle)),
+    QuerySpec("q_sim_topk_auto", qSimTopkAuto, bench = true,
+      oracle = Some(simTopkOracle),
+      provision = Some((s, dir) => { provisionSimTopkAuto(s, dir); () })),
     // md5-hex sampling keys: lexicographic hex compare = numeric compare
     // on the top 32 bits; thresholds are hexThreshold(f) literals
-    "q_sample_det" ->
+    QuerySpec("q_sample_det", qSampleDet, oracle = Some(
       """SELECT doc_id, lang, source, n_chars FROM documents
-        |WHERE SUBSTR(MD5(CAST(doc_id AS VARCHAR)), 1, 8) < '40000000'""".stripMargin,
-    "q_sample_stratified" ->
+        |WHERE SUBSTR(MD5(CAST(doc_id AS VARCHAR)), 1, 8) < '40000000'""".stripMargin)),
+    QuerySpec("q_sample_stratified", qSampleStratified, bench = true, oracle = Some(
       """SELECT doc_id, lang, source, n_chars FROM documents
         |WHERE SUBSTR(MD5(CAST(doc_id AS VARCHAR)), 1, 8) <
         |  CASE source WHEN 'src0' THEN 'cccccccc'
         |              WHEN 'src1' THEN '80000000'
         |              WHEN 'src2' THEN '19999999'
-        |              ELSE '4ccccccc' END""".stripMargin,
-    "q_cap_per_group" ->
+        |              ELSE '4ccccccc' END""".stripMargin)),
+    QuerySpec("q_cap_per_group", qCapPerGroup, oracle = Some(
       """SELECT doc_id, source, lang FROM (
         |  SELECT doc_id, source, lang,
         |    ROW_NUMBER() OVER (PARTITION BY source
         |      ORDER BY SUBSTR(MD5(CAST(doc_id AS VARCHAR)), 1, 8), doc_id) AS rk
         |  FROM documents) t
-        |WHERE rk <= 50""".stripMargin,
+        |WHERE rk <= 50""".stripMargin)),
     // bounds ROUNDED to 6 decimals on both sides: quantile_cont
     // interpolates lo + f*(hi-lo) while Spark uses the weighted form —
     // unrounded they can differ in the last ulp at a boundary row
-    "q_outlier_filter" ->
+    QuerySpec("q_outlier_filter", qOutlierFilter, oracle = Some(
       """WITH b AS (
         |  SELECT source,
         |    ROUND(QUANTILE_CONT(CAST(n_chars AS DOUBLE), 0.05), 6) AS lo,
@@ -4910,8 +4651,8 @@ object SparkEntry {
         |  FROM documents GROUP BY source)
         |SELECT d.doc_id, d.source, d.n_chars
         |FROM documents d JOIN b USING (source)
-        |WHERE d.n_chars >= b.lo AND d.n_chars <= b.hi""".stripMargin,
-    "q_winsorize" ->
+        |WHERE d.n_chars >= b.lo AND d.n_chars <= b.hi""".stripMargin)),
+    QuerySpec("q_winsorize", qWinsorize, oracle = Some(
       """WITH b AS (
         |  SELECT source,
         |    ROUND(QUANTILE_CONT(CAST(n_chars AS DOUBLE), 0.05), 6) AS lo,
@@ -4919,17 +4660,19 @@ object SparkEntry {
         |  FROM documents GROUP BY source)
         |SELECT d.doc_id, d.source, d.n_chars,
         |  LEAST(GREATEST(CAST(d.n_chars AS DOUBLE), b.lo), b.hi) AS n_chars_wins
-        |FROM documents d JOIN b USING (source)""".stripMargin,
-    "q_decontaminate" -> decontaminateOracle,
-    "q_bloom_decontaminate" -> decontaminateOracle,
-    "q_decontam_auto" -> decontaminateOracle,
-    "q_split_assign" ->
+        |FROM documents d JOIN b USING (source)""".stripMargin)),
+    QuerySpec("q_decontaminate", qDecontaminate, oracle = Some(decontaminateOracle)),
+    QuerySpec("q_bloom_decontaminate", qBloomDecontaminate, bench = true,
+      oracle = Some(decontaminateOracle)),
+    QuerySpec("q_decontam_auto", qDecontamAuto, bench = true,
+      oracle = Some(decontaminateOracle)),
+    QuerySpec("q_split_assign", qSplitAssign, oracle = Some(
       """SELECT doc_id, source,
         |  CASE WHEN SUBSTR(MD5(CAST(doc_id AS VARCHAR)), 1, 8) < 'cccccccc' THEN 'train'
         |       WHEN SUBSTR(MD5(CAST(doc_id AS VARCHAR)), 1, 8) < 'e6666666' THEN 'val'
         |       ELSE 'test' END AS split
-        |FROM documents""".stripMargin,
-    "q_embed_quantize" ->
+        |FROM documents""".stripMargin)),
+    QuerySpec("q_embed_quantize", qEmbedQuantize, oracle = Some(
       """WITH ex AS (
         |  SELECT vec_id, i.i AS dim,
         |    CAST(embedding[CAST(i.i AS INTEGER) + 1] AS DOUBLE) AS v
@@ -4939,13 +4682,13 @@ object SparkEntry {
         |  CAST(CASE WHEN st.mx = st.mn THEN 0
         |    ELSE LEAST(255.0, FLOOR((e.v - st.mn) / (st.mx - st.mn) * 256.0))
         |  END AS INTEGER) AS q
-        |FROM ex e JOIN st USING (dim)""".stripMargin,
+        |FROM ex e JOIN st USING (dim)""".stripMargin)),
     // integer-micros covariance: quantize each value to BIGINT micros,
     // sum products in 128-bit integer space (DuckDB HUGEINT ≡ Spark
     // DECIMAL(38,0)), one final double division + ROUND(9) — identical
     // on both engines because every input to the division is an exact
     // integer
-    "q_embed_covariance" ->
+    QuerySpec("q_embed_covariance", qEmbedCovariance, bench = true, oracle = Some(
       """WITH m AS (
         |  SELECT LIST_TRANSFORM(embedding,
         |           x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS m
@@ -4962,33 +4705,33 @@ object SparkEntry {
         |  ROUND(CAST(COUNT(*) * SUM(xy) - SUM(x) * SUM(y) AS DOUBLE)
         |        / (CAST(COUNT(*) AS DOUBLE) * CAST(COUNT(*) - 1 AS DOUBLE) * 1e12),
         |        9) AS cov
-        |FROM p GROUP BY dim_i, dim_j""".stripMargin,
+        |FROM p GROUP BY dim_i, dim_j""".stripMargin)),
     // global training order: ROW_NUMBER over the full (md5, key) order —
     // DuckDB may single-sort; the Spark side is the bucket-localized
     // two-level plan, proving the same total order without a global sort
-    "q_corpus_order" ->
+    QuerySpec("q_corpus_order", qCorpusOrder, bench = true, oracle = Some(
       """SELECT doc_id,
         |  ROW_NUMBER() OVER (
         |    ORDER BY SUBSTR(MD5(CAST(doc_id AS VARCHAR)), 1, 8), doc_id) AS ord,
         |  CAST((ROW_NUMBER() OVER (
         |    ORDER BY SUBSTR(MD5(CAST(doc_id AS VARCHAR)), 1, 8), doc_id) - 1) % 32
         |    AS INTEGER) AS shard
-        |FROM documents""".stripMargin,
-    "q_curriculum_order" ->
+        |FROM documents""".stripMargin)),
+    QuerySpec("q_curriculum_order", qCurriculumOrder, bench = true, oracle = Some(
       """SELECT doc_id, CAST(LENGTH(text) AS INTEGER) AS n_chars,
         |  ROW_NUMBER() OVER (ORDER BY LENGTH(text), doc_id) AS ord
-        |FROM documents""".stripMargin,
+        |FROM documents""".stripMargin)),
     // temperature mixing: ROUND(weight,6) BEFORE deriving frac on both
     // sides so the engines' different float-sum orders cannot diverge
-    "q_mixture_weights" ->
+    QuerySpec("q_mixture_weights", qMixtureWeights, oracle = Some(
       """WITH g AS (SELECT source, COUNT(*) AS n_rows FROM documents GROUP BY source),
         |w AS (SELECT source, n_rows,
         |        ROUND(POW(n_rows, 0.5) / SUM(POW(n_rows, 0.5)) OVER (), 6) AS weight
         |      FROM g)
         |SELECT source, n_rows, weight,
         |  ROUND(LEAST(1.0, 300.0 * weight / n_rows), 6) AS frac
-        |FROM w""".stripMargin,
-    "q_sample_temperature" ->
+        |FROM w""".stripMargin)),
+    QuerySpec("q_sample_temperature", qSampleTemperature, oracle = Some(
       """WITH g AS (SELECT source, COUNT(*) AS n_rows FROM documents GROUP BY source),
         |w AS (SELECT source, n_rows,
         |        ROUND(POW(n_rows, 0.5) / SUM(POW(n_rows, 0.5)) OVER (), 6) AS weight
@@ -5000,8 +4743,8 @@ object SparkEntry {
         |      FROM f)
         |SELECT d.doc_id, d.source, d.lang
         |FROM documents d JOIN t USING (source)
-        |WHERE SUBSTR(MD5(CAST(d.doc_id AS VARCHAR)), 1, 8) < t.thr""".stripMargin,
-    "q_lm_score" ->
+        |WHERE SUBSTR(MD5(CAST(d.doc_id AS VARCHAR)), 1, 8) < t.thr""".stripMargin)),
+    QuerySpec("q_lm_score", qLmScore, bench = true, oracle = Some(
       """WITH tok AS (SELECT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS token FROM documents),
         |c AS (SELECT token, COUNT(*) AS cnt FROM tok GROUP BY token),
         |t AS (SELECT CAST(SUM(cnt) AS DOUBLE) AS total,
@@ -5011,19 +4754,18 @@ object SparkEntry {
         |  COUNT(*) AS n_tokens,
         |  ROUND(AVG(-LOG2(p.p)), 6) AS xent
         |FROM tok JOIN p USING (token)
-        |GROUP BY tok.doc_id""".stripMargin,
-    "q_top_ngrams" ->
+        |GROUP BY tok.doc_id""".stripMargin)),
+    QuerySpec("q_top_ngrams", qTopNgrams, bench = true, oracle = Some(
       """WITH t AS (SELECT STRING_SPLIT(text, ' ') AS toks FROM documents),
         |g AS (SELECT UNNEST(LIST_TRANSFORM(RANGE(LEN(toks) - 1),
         |        i -> ARRAY_TO_STRING(toks[i+1:i+2], ' '))) AS gram
         |      FROM t WHERE LEN(toks) >= 2)
         |SELECT gram, COUNT(*) AS cnt FROM g GROUP BY gram
-        |ORDER BY cnt DESC, gram LIMIT 20""".stripMargin,
-    "q_token_budget" -> (samplingCumCte +
-      "\nSELECT doc_id, source, n_tokens, cum_tokens FROM c WHERE cum_tokens <= 700"),
-    "q_stream_token_budget_rel" -> (samplingCumCte +
-      "\nSELECT doc_id, source, n_tokens, cum_tokens FROM c WHERE cum_tokens <= 700"),
-    "q_pack_sequences" -> (samplingCumCte +
+        |ORDER BY cnt DESC, gram LIMIT 20""".stripMargin)),
+    QuerySpec("q_token_budget", qTokenBudget, oracle = Some(tokenBudgetOracle)),
+    QuerySpec("q_stream_token_budget_rel", qStreamTokenBudgetRel,
+      oracle = Some(tokenBudgetOracle)),
+    QuerySpec("q_pack_sequences", qPackSequences, bench = true, oracle = Some(samplingCumCte +
       """
         |SELECT doc_id, source, n_tokens,
         |  cum_tokens - n_tokens AS start_offset,
@@ -5031,8 +4773,8 @@ object SparkEntry {
         |  (n_tokens > 0 AND
         |   CAST(FLOOR((cum_tokens - n_tokens) / 128.0) AS BIGINT)
         |     <> CAST(FLOOR((cum_tokens - 1) / 128.0) AS BIGINT)) AS crosses_boundary
-        |FROM c""".stripMargin),
-    "q_chunk_docs" ->
+        |FROM c""".stripMargin)),
+    QuerySpec("q_chunk_docs", qChunkDocs, bench = true, oracle = Some(
       """WITH t AS (
         |  SELECT doc_id, STRING_SPLIT(text, ' ') AS toks,
         |         LEN(STRING_SPLIT(text, ' ')) AS n
@@ -5045,11 +4787,11 @@ object SparkEntry {
         |SELECT doc_id, CAST(chunk_id AS INTEGER) AS chunk_id,
         |  ARRAY_TO_STRING(toks[chunk_id*16 + 1 : chunk_id*16 + 32], ' ') AS chunk_text,
         |  CAST(LEAST(n - chunk_id*16, 32) AS INTEGER) AS n_chunk_tokens
-        |FROM c""".stripMargin,
+        |FROM c""".stripMargin)),
     // winnowing with string-min selection: substring k-grams, per-window
     // MIN over a rows-following frame, distinct selection, pair counts —
     // plain relational algebra both engines evaluate identically
-    "q_winnow_clean_exact" ->
+    QuerySpec("q_winnow_clean_exact", qWinnowCleanExact, bench = true, oracle = Some(
       """WITH segs AS (
         |  SELECT doc_id, unnest(string_split(text, ' merge ')) AS seg FROM documents),
         |boiler AS (
@@ -5077,8 +4819,8 @@ object SparkEntry {
         |SELECT x.doc_id AS a, y.doc_id AS b, COUNT(*) AS shared_fps
         |FROM f x JOIN f y ON x.fp = y.fp AND x.doc_id < y.doc_id
         |GROUP BY x.doc_id, y.doc_id
-        |HAVING COUNT(*) >= 2""".stripMargin,
-    "q_winnow_overlap_exact" ->
+        |HAVING COUNT(*) >= 2""".stripMargin)),
+    QuerySpec("q_winnow_overlap_exact", qWinnowOverlapExact, bench = true, oracle = Some(
       """WITH g0 AS (
         |  SELECT doc_id, text, LENGTH(text) - 4 AS ng
         |  FROM documents WHERE LENGTH(text) >= 8),
@@ -5096,8 +4838,8 @@ object SparkEntry {
         |SELECT x.doc_id AS a, y.doc_id AS b, COUNT(*) AS shared_fps
         |FROM f x JOIN f y ON x.fp = y.fp AND x.doc_id < y.doc_id
         |GROUP BY x.doc_id, y.doc_id
-        |HAVING COUNT(*) >= 2""".stripMargin,
-    "q_stats_profile" ->
+        |HAVING COUNT(*) >= 2""".stripMargin)),
+    QuerySpec("q_stats_profile", qStatsProfile, bench = true, oracle = Some(
       """SELECT l_returnflag,
         |  COUNT(*) AS n,
         |  ROUND(QUANTILE_CONT(l_quantity, 0.5), 4) AS p50_qty,
@@ -5107,19 +4849,66 @@ object SparkEntry {
         |  ROUND(CORR(l_quantity, l_extendedprice), 6) + 0.0 AS corr_qty_price,
         |  ROUND(COVAR_SAMP(l_discount, l_tax), 6) + 0.0 AS cov_disc_tax
         |FROM lineitem
-        |GROUP BY l_returnflag""".stripMargin
+        |GROUP BY l_returnflag""".stripMargin)),
+    // rows-only queries: not SQL-expressible (seeded hashes, sketches,
+    // ML models, ANN indexes); unit tests and `_exact` twins cover them
+    QuerySpec("q_semantic_dedup", qSemanticDedup, bench = true),
+    QuerySpec("q_pagerank", qPagerank),
+    QuerySpec("q_split_leakage_lsh", qSplitLeakageLsh),
+    QuerySpec("q_auc_model", qAucModel),
+    QuerySpec("q_trailing_distinct_approx", qTrailingDistinctApprox),
+    QuerySpec("q_rolling_median_approx", qRollingMedianApprox),
+    QuerySpec("q_embed_pca", qEmbedPca),
+    QuerySpec("q_corpus_clusters", qCorpusClusters, bench = true),
+    QuerySpec("q_cms_term_counts", qCmsTermCounts, bench = true),
+    QuerySpec("q_dedup_minhash", qDedupMinhash, bench = true),
+    QuerySpec("q_dedup_simhash", qDedupSimhash),
+    QuerySpec("q_simhash_pairs", qSimhashPairs),
+    QuerySpec("q_ngram_jaccard", qNgramJaccard),
+    QuerySpec("q_sim_lsh", qSimLsh),
+    QuerySpec("q_sim_pq", qSimPq, bench = true),
+    QuerySpec("q_sim_ivfpq", qSimIvfPq),
+    QuerySpec("q_embed_near_dup", qEmbedNearDup),
+    QuerySpec("q_multimodal_partitioned", qMultimodalPartitioned),
+    QuerySpec("q_winnow_fingerprint", qWinnowFingerprint),
+    QuerySpec("q_stream_flagship", qStreamFlagship),
+    QuerySpec("q_ml_train_score", qMlTrainScore),
+    QuerySpec("q_predict_udf", qPredictUdf),
+    QuerySpec("q_stream_token_budget", qStreamTokenBudget),
+    QuerySpec("q_sim_ivf", qSimIvf),
+    QuerySpec("q_dedup_clusters", qDedupClusters),
+    QuerySpec("q_dedup_apply", qDedupApply),
+    QuerySpec("q_winnow_overlap", qWinnowOverlap, bench = true),
+    QuerySpec("q_winnow_clean", qWinnowClean, bench = true),
+    QuerySpec("q_approx_distinct", qApproxDistinct),
+    QuerySpec("q_hll_distinct", qHllDistinct),
+    QuerySpec("q_kll_quantiles", qKllQuantiles),
+    QuerySpec("q_theta_overlap", qThetaOverlap),
+    QuerySpec("q_approx_top_ngrams", qApproxTopNgrams),
+    QuerySpec("q_dedup_delta", qDedupDelta)
   )
 
-  /** Oracle table: the base map plus alias rows — adaptive operators
-    * hash-matched verbatim against the exact plan they must reproduce
-    * at fixture volume.
+  /** Name-keyed index of `specs`. Unique names are required: a Map
+    * built from a duplicated name silently keeps only one record.
     */
-  def oracleSql: Map[String, String] = oracleSqlBase ++ Map(
-    "q_sim_topk_auto" -> oracleSqlBase("q_sim_topk"),
-    "q_range_lookup_auto" -> oracleSqlBase("q_range_lookup"),
-    "q_stream_auto_state" -> oracleSqlBase("q_stream_hopping_pivot"),
-    // the versioned-root read path stores zorderWriteRanked's layout,
-    // whose z is bit-identical to the ranked construction — roundtrip
-    // through publish/resolve/scan must reproduce it exactly
-    "q_zorder_versioned" -> oracleSqlBase("q_zorder_ranked"))
+  private[graft] def indexByName(specs: Seq[QuerySpec]): Map[String, QuerySpec] = {
+    val dups = specs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty, s"duplicate query names: ${dups.toSeq.sorted.mkString(", ")}")
+    specs.map(s => s.name -> s).toMap
+  }
+
+  private val byName = indexByName(catalog)
+
+  // views of the catalog, in the shapes Bench, Verify and the tools read
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    byName.map { case (n, s) => n -> s.build }
+
+  /** Headline subset Bench times per round, in catalog order. */
+  val benchQueries: Seq[String] = catalog.filter(_.bench).map(_.name)
+
+  val oracleSql: Map[String, String] =
+    byName.flatMap { case (n, s) => s.oracle.map(n -> _) }
+
+  private[graft] val provisions: Map[String, (SparkSession, String) => Unit] =
+    byName.flatMap { case (n, s) => s.provision.map(n -> _) }
 }

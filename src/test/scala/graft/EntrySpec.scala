@@ -30,6 +30,13 @@ class EntrySpec extends SparkSpec {
     assert(SparkEntry.benchQueries.forall(SparkEntry.queries.contains))
   }
 
+  test("catalog: building the views requires unique query names") {
+    val dup = SparkEntry.catalog.head
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.indexByName(SparkEntry.catalog :+ dup.copy(bench = !dup.bench)))
+    assert(e.getMessage.contains(dup.name), e.getMessage)
+  }
+
   test("q_revenue_share: the share window consumes the 25-row aggregate, not orders") {
     // the q_auc round-7 hazard class: a whole-relation window is only
     // scale-safe when its input is a bounded group relation. Assert the

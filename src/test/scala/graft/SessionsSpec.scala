@@ -4,6 +4,22 @@ import java.nio.file.Files
 
 class SessionsSpec extends SparkSpec {
 
+  test("local: the shared session carries the session policy") {
+    // first test of the suite: `spark` was just (re)built by
+    // Sessions.local, so no earlier test's conf edits are visible
+    val cores = Sessions.localCores
+    assert(spark.sparkContext.master == s"local[$cores]")
+    assert(spark.sparkContext.defaultParallelism == cores)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == cores.toString)
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.conf.get(
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold") == "8192")
+    assert(spark.conf.get("spark.sql.warehouse.dir").endsWith("/tmp/graft_warehouse"))
+    // the graft SQL surface resolves with no register call in this suite
+    assert(!spark.sql("SELECT simhash64('a b c d e') AS s").head().isNullAt(0))
+  }
+
   test("shufflePartitionsFor: floors at cores, scales with bytes, caps") {
     // small corpus → core count (never undersubscribe)
     assert(Sessions.shufflePartitionsFor(15L << 20, cores = 32) == 32)

@@ -5,18 +5,12 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (getOrCreate → one JVM-wide
-  * session; forked test JVM gets the build.sbt --add-opens flags).
+  * session built by [[Sessions.local]]; forked test JVM gets the
+  * build.sbt --add-opens flags).
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "8192")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    Sessions.local("spark.sql.warehouse.dir" -> "/tmp/graft_warehouse")
 
   lazy val sf0001 = "/root/testdata/sf0.001"
 

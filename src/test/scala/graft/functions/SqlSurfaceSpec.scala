@@ -13,8 +13,6 @@ import graft.model.Tables
 class SqlSurfaceSpec extends SparkSpec {
   import spark.implicits._
 
-  GraftFunctions.register(spark)
-
   test("extensions path injects the full function table") {
     val ext = new SparkSessionExtensions
     new GraftExtensions().apply(ext)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures [[graft.llm.Dedup.resolveClusters]] convergence rounds vs
@@ -19,13 +18,7 @@ import org.apache.spark.sql.functions._
 object CcRoundsProbe {
   def main(args: Array[String]): Unit = {
     val maxD = args.headOption.map(_.toInt).getOrElse(100000)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
 
     def rounds(pairs: org.apache.spark.sql.DataFrame): (Int, Long, Double) = {
       graft.Sessions.clearDecisions()

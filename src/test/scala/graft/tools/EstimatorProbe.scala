@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.model.Tables
 import graft.operators.WindowOps
 
@@ -19,14 +17,7 @@ object EstimatorProbe {
     val dirs =
       if (args.nonEmpty) args.toSeq
       else Seq("target/scaledata/sf10", "target/scaledata/sf100")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
 
     for (dir <- dirs) {
       val ev = Tables.events(spark, dir)

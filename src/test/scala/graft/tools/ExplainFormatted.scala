@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Writes `.explain("formatted")` output for named SparkEntry queries to
@@ -17,14 +16,8 @@ object ExplainFormatted {
     require(args.length == 4,
       "usage: ExplainFormatted <sfDir> <outDir> <suffix> <q1,q2,...>")
     val Array(dir, outDir, suffix, csv) = args
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "8192")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false).getOrCreate()
+    val spark = graft.Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     csv.split(",").foreach { q =>
       val df = graft.SparkEntry.queries(q)(spark, dir)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.llm.Similarity
@@ -54,14 +53,7 @@ object IvfDriftProbe {
     val shares =
       if (args.length > 1) args.drop(1).toSeq.map(_.toDouble)
       else Seq(0.1, 0.25, 0.5, 1.0)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
 
     // 64-dim vectors with energy confined to one 32-dim half (the other
     // half near-zero): full cosine variety inside the active subspace

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Whole-suite physical-plan audit: runs every batch query at a small
   * SF (noop sink, so AQE finalizes its runtime decisions), extracts
   * plan-health counts from the FINAL plan, and writes one deterministic
@@ -101,19 +99,12 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("PLANS.json")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "8192")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.Sessions.local(
+      "spark.sql.shuffle.partitions" -> "8",
       // default 100 truncates wide ReadSchemas mid-field (lineitem's 11
       // columns overflow it) — print plan metadata in full so the scan
       // width the artifact records is the scan width
-      .config("spark.sql.maxMetadataStringLength", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.maxMetadataStringLength" -> "10000")
 
     val only = args.lift(2).map(_.split(",").map(_.trim).toSet)
     val rows = graft.SparkEntry.queries.toSeq.sortBy(_._1)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-query plan-stability checker: run one query N times (fresh
   * `newSession` each rep, same JVM), print the PlanAudit counts per rep,
   * and dump each rep's final plan to /tmp/qplan_<i>.txt for diffing.
@@ -18,14 +16,9 @@ object PlanLoop {
     val q = args(0)
     val reps = args.lift(1).map(_.toInt).getOrElse(6)
     val dir = args.lift(2).getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "8192")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxMetadataStringLength", "10000")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(
+      "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.maxMetadataStringLength" -> "10000")
     for (i <- 1 to reps) {
       val df = graft.SparkEntry.queries(q)(spark.newSession(), dir)
       df.collect()

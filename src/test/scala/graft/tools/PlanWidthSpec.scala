@@ -22,7 +22,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PlanWidthSpec extends AnyFunSuite {
 
-  private val floor = 8L // the audit sessions run local[8]
+  private val floor = 8L // the audits are generated with SPARK_GRAFT_CPUS=8
 
   test("PLANS.json widths: at the core floor or above, and consistent " +
     "with the sizing function applied to the recorded leaf bytes") {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 import graft.SparkEntry
 
@@ -29,18 +29,7 @@ object ProfileQuery {
     require(names.nonEmpty, "usage: ProfileQuery <query>... [reps] [--no-warm]")
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // Same as Bench/Verify/SparkSpec — without it, collect_list-heavy
-      // profiles (as-of histories, winnow buckets) don't reproduce bench
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "8192")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+    val spark = graft.Sessions.local()
 
     // Per-rep Spark-job counter: iterative queries (MLlib k-means fit,
     // star contraction) run DOZENS of sub-100 ms jobs, so their wall is

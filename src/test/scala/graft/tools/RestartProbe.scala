@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 
@@ -48,15 +47,8 @@ object RestartProbe {
     val crashAfter = opt("crash-after").map(_.toInt).getOrElse(4)
     val maxFiles = opt("max-files").map(_.toInt).getOrElse(4)
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // long-replay companion (see applyBigStateConfs scaladoc)
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // long-replay companion (see applyBigStateConfs scaladoc)
+    val spark = graft.Sessions.local("spark.cleaner.periodicGC.interval" -> "60s")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       Streaming.RocksDbStateProvider)
     Streaming.applyBigStateConfs(spark)

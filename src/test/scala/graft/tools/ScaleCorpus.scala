@@ -119,8 +119,8 @@ object ScaleCorpus {
       // per table, so a plain rewrite would leave the 10× table as ONE
       // 7–80 MB file → one scan partition → map-side work (hopping's 5×
       // Expand, as-of probes) serializing on a single core. A real
-      // corpus at this size ships many files; 32 matches the harness's
-      // local[32] so scans parallelize like production. The 32-way
+      // corpus at this size ships many files; 32 matches a 32-core
+      // harness session so scans parallelize like production. The 32-way
       // spread inside replicate() already yields 32 balanced output
       // files — no second full-corpus shuffle needed here.
       replicate(src, keys, replicas, stride)
@@ -135,14 +135,7 @@ object ScaleCorpus {
     val replicas = args.lift(1).map(_.toInt).getOrElse(10)
     val srcDir = args.lift(2).getOrElse("/root/testdata/sf0.1")
     val stride = args.lift(3).map(_.toLong).getOrElse(Stride)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     build(spark, srcDir, outDir, replicas, stride)
     spark.stop()
   }

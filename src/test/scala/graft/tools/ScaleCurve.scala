@@ -56,15 +56,7 @@ object ScaleCurve {
     require(new java.io.File(big).isDirectory,
       s"big dir $big missing — run graft.tools.ScaleCorpus first")
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "8192")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+    val spark = graft.Sessions.local()
 
     val out = new java.io.PrintWriter(
       new java.io.FileWriter("target/scale_curve.jsonl", /*append=*/ false))

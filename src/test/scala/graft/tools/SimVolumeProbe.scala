@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 import graft.llm.Similarity
@@ -29,14 +29,7 @@ object SimVolumeProbe {
     val volumes =
       if (args.length > 1) args.drop(1).toSeq.map(_.toLong)
       else Seq(10L, 64L, 256L, 1024L)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
 
     val emb = Tables.embeddings(spark, dir)
     val idx = s"$dir/_ivf_probe_index"

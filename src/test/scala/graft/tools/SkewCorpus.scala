@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 /** Derives a SKEWED events fixture from a uniform one: a chosen
@@ -35,13 +35,7 @@ object SkewCorpus {
     val hotUser = args.lift(3).map(_.toLong).getOrElse(7L)
     require(hotPct >= 1 && hotPct <= 99, s"hotPct in [1,99], got $hotPct")
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
 
     val src = spark.read.parquet(s"$srcDir/events.parquet")
     src

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.model.Tables
@@ -38,15 +38,7 @@ object SkewJoinProbe {
     val skew50 = args.lift(2).getOrElse("target/skewdata/sf1x50")
     val reps = args.lift(3).map(_.toInt).getOrElse(3)
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local("spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
     // dim comes from the UNIFORM corpus in every run: only the fact
     // side's key distribution varies across corpora

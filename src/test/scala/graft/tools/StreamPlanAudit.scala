@@ -112,15 +112,10 @@ object StreamPlanAudit {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("STREAM_PLANS.json")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxMetadataStringLength", "10000")
-      .config("spark.sql.streaming.forceDeleteTempCheckpointLocation", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(
+      "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.maxMetadataStringLength" -> "10000",
+      "spark.sql.streaming.forceDeleteTempCheckpointLocation" -> "true")
 
     val entries: Seq[(String, OutputMode, SparkSession => DataFrame)] = Seq(
       ("hopping_pivot", OutputMode.Complete(),

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 import graft.model.Tables
@@ -81,13 +80,6 @@ object StreamScale {
     require(new java.io.File(big).isDirectory,
       s"big dir $big missing — run graft.tools.ScaleCorpus first")
 
-    val builder = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "8192")
-      .config("spark.ui.enabled", "false")
     // Shuffle-file cleanup is GC-driven (ContextCleaner collects
     // ShuffleDependency refs): a big heap under no allocation pressure
     // never GCs during a long replay, so every finished micro-batch's
@@ -95,9 +87,8 @@ object StreamScale {
     // sf100, ENOSPC before half the leg. Context-level conf, so it must
     // be set HERE, not in applyBigStateConfs (whose scaladoc documents
     // this builder-side companion).
-    if (bigstate) builder.config("spark.cleaner.periodicGC.interval", "60s")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(
+      (if (bigstate) Seq("spark.cleaner.periodicGC.interval" -> "60s") else Nil): _*)
     if (rocksdb) {
       // operational posture comparison: the same pipeline under the
       // RocksDB state-store provider (large-state production default)
@@ -546,7 +537,8 @@ object StreamScale {
             .localCheckpoint()
           // the two-sided twin checks sort ~50 M wide scored rows at sf10
           // — size the verification shuffle to the state volume (the
-          // stream itself ran at 32; UNABLE_TO_ACQUIRE_MEMORY otherwise)
+          // stream itself runs at the session width; UNABLE_TO_ACQUIRE_MEMORY
+          // otherwise)
           val checkWidth = math.min(2048L,
             math.max(32L, state.count() / 200000L)).toInt
           spark.conf.set("spark.sql.shuffle.partitions", checkWidth.toString)
@@ -632,7 +624,8 @@ object StreamScale {
             (if (nState == nBatch && mismOld == 0 && mismNew == 0) "EQUAL"
             else "MISMATCH"))
         }
-        spark.conf.set("spark.sql.shuffle.partitions", "32") // stream width
+        // back to the stream width
+        spark.conf.set("spark.sql.shuffle.partitions", graft.Sessions.localCores.toString)
         // free this leg's on-disk artifacts before the next (decade)
         // leg starts: the sf10 changelog idling beside the sf100 run
         // was part of the first attempt's ENOSPC

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Fresh-JVM sweep over every benched query at sf0.1 — the
   * whole-suite version of [[ProfileQuery]]'s judge-methodology audit
@@ -15,14 +15,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SweepProf {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "8192")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
     def force(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
     val dir = "/root/testdata/sf0.1"
     val results = graft.SparkEntry.benchQueries.flatMap { q =>

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Cost side of the r18 versioned-root adoption decision (DEPLOY.md):
@@ -19,14 +18,7 @@ object VersionedRootProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.collectFirst { case a if a.startsWith("--sf=") =>
       a.drop(5) }.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     import graft.functions.ZOrder
 
     val li = graft.model.Tables.lineitem(spark, sfDir)

@@ -21,12 +21,7 @@ object WinnowDiag {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "8192")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
     val docs = graft.model.Tables.documents(spark, "/root/testdata/sf0.1")
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** 3-D companion of [[ZOrderProbe]]: measures what zorderWriteN buys
@@ -19,14 +18,7 @@ object ZOrder3Probe {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(60000000L)
     val numFiles = args.lift(1).map(_.toInt).getOrElse(64)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local("spark.sql.adaptive.enabled" -> "false")
 
     val dom = 1L << 20
     val src = spark.range(n).select(

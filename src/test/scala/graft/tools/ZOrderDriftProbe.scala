@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measures what append-under-drift does to a ranked z-order table's
@@ -30,14 +30,7 @@ object ZOrderDriftProbe {
     val nums = args.filterNot(_.startsWith("--"))
     val baseN = nums.headOption.map(_.toLong).getOrElse(2000000L)
     val sliceN = nums.lift(1).map(_.toLong).getOrElse(250000L)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local("spark.sql.adaptive.enabled" -> "false")
     import graft.functions.ZOrder
 
     val W = 1L << 20

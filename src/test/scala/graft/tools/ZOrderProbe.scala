@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
@@ -60,14 +60,7 @@ object ZOrderProbe {
     // 1–4); 20 sits deep inside scaled bucket 0 — the 40 %-of-rows blob
     // where min/max z is constant and only the rank layout can prune
     val q0 = args.lift(2).map(_.toInt).getOrElse(40)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local("spark.sql.adaptive.enabled" -> "false")
 
     val skewMode = dir.startsWith("skew:")
     val src =
