@@ -45,16 +45,17 @@ object Tables {
   private val eventsIsNanos =
     scala.collection.concurrent.TrieMap.empty[String, Boolean]
 
-  /** Cache key = dir + the max mtime under its events.parquet — a
-    * driver-side listing of one fixture dir (constant cost), so a
-    * fixture regenerated IN PLACE mid-JVM gets a fresh probe instead of
-    * a stale conversion (local paths only; on an object store the
-    * listing finds no local files and the key degrades to the dir —
-    * i.e. the old immutable-fixture assumption, now scoped to exactly
-    * where it's unverifiable).
+  /** Cache key = path + the max mtime under it (the events file, or
+    * every file of a Spark-written events directory) — a driver-side
+    * listing of one fixture path (constant cost), so a fixture
+    * regenerated IN PLACE mid-JVM gets a fresh probe instead of a stale
+    * conversion (local paths only; on an object store the listing finds
+    * no local files and the key degrades to the path — i.e. the old
+    * immutable-fixture assumption, now scoped to exactly where it's
+    * unverifiable).
     */
-  private def eventsCacheKey(dir: String): String = {
-    val root = java.nio.file.Paths.get(p(dir, "events"))
+  private def eventsCacheKey(path: String): String = {
+    val root = java.nio.file.Paths.get(path)
     val mtime =
       try {
         val s = java.nio.file.Files.walk(root)
@@ -62,7 +63,7 @@ object Tables {
           .max.orElse(0L)
         finally s.close()
       } catch { case _: java.io.IOException => 0L }
-    s"$dir@$mtime"
+    s"$path@$mtime"
   }
 
   /** One-row probe: reading ts as raw INT64 succeeds for any timestamp
@@ -70,12 +71,12 @@ object Tables {
     * ~1e18, micros ~1e15 — three orders apart for any date this side of
     * year 33658). Filters nulls so a null-leading file can't fall into
     * the wrong branch; touches a single page of a single file — constant
-    * cost at any corpus size. Cached per (dir, fixture mtime) so in-place
-    * regeneration invalidates the verdict.
+    * cost at any corpus size. Cached per (path, fixture mtime) so
+    * in-place regeneration invalidates the verdict.
     */
-  def eventsTsIsNanos(spark: SparkSession, dir: String): Boolean =
-    eventsIsNanos.getOrElseUpdate(eventsCacheKey(dir), {
-      spark.read.schema(eventsRawSchema).parquet(p(dir, "events"))
+  private def eventsTsIsNanos(spark: SparkSession, path: String): Boolean =
+    eventsIsNanos.getOrElseUpdate(eventsCacheKey(path), {
+      spark.read.schema(eventsRawSchema).parquet(path)
         .select(col("ts")).where(col("ts").isNotNull).limit(1).collect()
         .headOption.exists(r => math.abs(r.getLong(0)) > 3e17.toLong)
     })
@@ -90,7 +91,14 @@ object Tables {
     * unchanged and DuckDB's naive reading stays identical).
     */
   def eventsReadSpec(spark: SparkSession, dir: String): (StructType, DataFrame => DataFrame) =
-    if (eventsTsIsNanos(spark, dir))
+    eventsReadSpecAt(spark, p(dir, "events"))
+
+  /** [[eventsReadSpec]] sniffed from the events file or Spark-written
+    * events directory at `path`; the stream reader passes the first
+    * file its layout rule matches, which need not be `events.parquet`.
+    */
+  def eventsReadSpecAt(spark: SparkSession, path: String): (StructType, DataFrame => DataFrame) =
+    if (eventsTsIsNanos(spark, path))
       (eventsRawSchema, _.withColumn("ts", timestamp_micros(expr("ts DIV 1000"))))
     else
       (eventsNtzSchema, _.withColumn("ts", col("ts").cast(TimestampType)))

@@ -1,10 +1,12 @@
 package graft.streaming
 
+import java.io.FileNotFoundException
 import java.util.UUID
 
+import org.apache.hadoop.fs.{FileStatus, GlobFilter, Path}
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamReader, DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.model.Tables
@@ -33,17 +35,20 @@ object Streaming {
   /** Streaming read of the events fixture (file source stands in for the
     * Kafka+Avro topic; one file = one replayed partition).
     *
-    * Schema + ts conversion come from [[Tables.eventsReadSpec]] — the SAME
-    * footer-sniffed nanos/micros adaptation the batch reader uses, so
-    * `eventsStream(dir) ≡ Tables.events(dir)` holds by construction on
+    * Schema + ts conversion come from [[Tables.eventsReadSpecAt]] — the
+    * SAME footer-sniffed nanos/micros adaptation the batch reader uses,
+    * so `eventsStream(dir) ≡ Tables.events(dir)` holds by construction on
     * every fixture format (the round-10 regression was exactly these two
-    * paths diverging).
+    * paths diverging). The sniffed file is the first one the
+    * [[fileSource]] layout rule matches, so a directory of
+    * `events_NNNNN.parquet` shards alone streams too.
     */
   def eventsStream(
       spark: SparkSession,
       dir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val (schema, normalizeTs) = Tables.eventsReadSpec(spark, dir)
+    val source = fileSource(spark, dir, "events")
+    val (schema, normalizeTs) = Tables.eventsReadSpecAt(spark, source.sample)
     // maxFilesPerTrigger bounds each micro-batch: without it,
     // AvailableNow replays the WHOLE backlog as one batch, whose live
     // shuffle footprint scales with the corpus (measured: ≥28 GB at
@@ -54,8 +59,8 @@ object Streaming {
     val bounded = maxFilesPerTrigger
       .map(n => reader.option("maxFilesPerTrigger", n.toString))
       .getOrElse(reader)
-    // glob form: the file source wants a directory/glob, not a bare file
-    normalizeTs(bounded.parquet(s"$dir/events*.parquet"))
+    // one root path, not a per-file glob: see fileSource
+    normalizeTs(source.load(bounded))
   }
 
   /** Streaming read of the documents fixture — the continuously-ingesting
@@ -67,7 +72,53 @@ object Streaming {
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
       StructField("n_chars", LongType)))
-    spark.readStream.schema(schema).parquet(s"$dir/documents*.parquet")
+    fileSource(spark, dir, "documents").load(spark.readStream.schema(schema))
+  }
+
+  /** Where a file stream over `dir`'s `table` files reads from, picked
+    * from the files' layout on disk:
+    *  - a Spark-written table directory `<dir>/<table>.parquet/` is
+    *    streamed as it is;
+    *  - otherwise the flat `<table>*.parquet` files in `dir` (a fixture's
+    *    single file, or a live directory's `<table>_NNNNN.parquet`
+    *    shards) are streamed from `dir` through `pathGlobFilter`.
+    *
+    * Either way the source has ONE root path, which Spark lists on the
+    * driver with a plain `listStatus` per trigger. A per-file glob such
+    * as `$dir/events*.parquet` expands to one root path per file instead,
+    * and past `parallelPartitionDiscovery.threshold` (32) roots every
+    * listing runs as a Spark job with one task per file. (Spark lists a
+    * micro-batch's own files again when it reads them, with a job too
+    * once the batch has more than 32 files.)
+    */
+  private def fileSource(spark: SparkSession, dir: String, table: String): FileSource = {
+    val tableDir = new Path(dir, s"$table.parquet")
+    val fs = tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val isTableDir =
+      try fs.getFileStatus(tableDir).isDirectory
+      catch { case _: FileNotFoundException => false }
+    if (isTableDir) FileSource(tableDir.toString, None, tableDir.toString)
+    else {
+      val pattern = s"$table*.parquet"
+      val files =
+        try fs.listStatus(new Path(dir), new GlobFilter(pattern)).filter(_.isFile)
+        catch { case _: FileNotFoundException => Array.empty[FileStatus] }
+      val first = files.map(_.getPath.getName).sorted.headOption.getOrElse(
+        throw new IllegalArgumentException(
+          s"no $table stream input in $dir: expected a $table.parquet directory " +
+            s"or files matching $pattern"))
+      FileSource(dir, Some(pattern), new Path(dir, first).toString)
+    }
+  }
+
+  /** A [[fileSource]] pick: the stream's single root path, the file-name
+    * filter for flat files, and the first matching file (in name order)
+    * or the table directory, for footer and schema reads.
+    */
+  private final case class FileSource(
+      root: String, pathGlobFilter: Option[String], sample: String) {
+    def load(reader: DataStreamReader): DataFrame =
+      pathGlobFilter.fold(reader)(reader.option("pathGlobFilter", _)).parquet(root)
   }
 
   /** Streaming CDC aggregation WITH retractions — the ksql TABLE
@@ -737,11 +788,12 @@ object Streaming {
     purchaseClickIntervalJoin(spark, dir, "left_outer")
 
 
-  /** Streaming read of the orders fixture (schema lifted from the batch
-    * read's footer — one metadata-only pass).
+  /** Streaming read of the orders fixture (schema lifted from the
+    * footer of the first file the [[fileSource]] rule matches — one
+    * metadata-only pass).
     */
   def ordersStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = Tables.orders(spark, dir).schema
-    spark.readStream.schema(schema).parquet(s"$dir/orders*.parquet")
+    val source = fileSource(spark, dir, "orders")
+    source.load(spark.readStream.schema(spark.read.parquet(source.sample).schema))
   }
 }

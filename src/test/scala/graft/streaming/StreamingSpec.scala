@@ -1,5 +1,10 @@
 package graft.streaming
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -40,6 +45,177 @@ class StreamingSpec extends SparkSpec {
       .collect().toSet
     assert(batchOrders.nonEmpty)
     assert(streamedOrders == batchOrders)
+  }
+
+  /** Moves `df`'s rows into `dir` as flat files named `names`: one
+    * round-robin partition per file, written by Spark then renamed.
+    */
+  private def writeFlat(df: DataFrame, dir: String, names: Seq[String]): Unit = {
+    val tmp = Files.createTempDirectory("flat_parts").toString
+    df.repartition(names.size).write.mode("overwrite").parquet(tmp)
+    val parts = new java.io.File(tmp).list()
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).sorted
+    assert(parts.length == names.size, s"want ${names.size} files, Spark wrote ${parts.length}")
+    parts.zip(names).foreach { case (p, n) => Files.move(Paths.get(tmp, p), Paths.get(dir, n)) }
+  }
+
+  private def shardNames(table: String, n: Int): Seq[String] =
+    (0 until n).map(i => f"${table}_$i%05d.parquet")
+
+  /** The raw events fixture: re-written as it is, unlike
+    * `Tables.events`' normalized ts, it keeps the footer annotation
+    * `eventsStream` sniffs.
+    */
+  private def rawEvents: DataFrame = spark.read.parquet(s"$sf0001/events.parquet")
+
+  test("eventsStream on a directory of events_NNNNN.parquet shards alone; " +
+    "no input at all names the directory and the pattern") {
+    // the ts-annotation probe used to read <dir>/events.parquet, which a
+    // live shard directory need not have (PATH_NOT_FOUND before any row)
+    val dir = Files.createTempDirectory("shards_only").toString
+    writeFlat(rawEvents, dir, shardNames("events", 4))
+    val streamed = Streaming.runToMemory(
+      spark, Streaming.eventsStream(spark, dir), OutputMode.Append()).collect().toSet
+    assert(streamed.nonEmpty && streamed == Tables.events(spark, sf0001).collect().toSet)
+
+    val empty = Files.createTempDirectory("no_events").toString
+    val err = intercept[IllegalArgumentException](Streaming.eventsStream(spark, empty))
+    assert(err.getMessage.contains(empty) && err.getMessage.contains("events*.parquet"),
+      err.getMessage)
+  }
+
+  test("file streams find new files with a driver listing, not a Spark job, " +
+    "on flat shards and on a Spark-written table directory") {
+    // A per-file glob (`$dir/events*.parquet`) expands to one root path
+    // per file; past parallelPartitionDiscovery.threshold (32) roots Spark
+    // lists them with a "Listing leaf files" job on every trigger whose
+    // cached file list has run out. One root path is listed on the driver.
+    val listing = "Listing leaf files and directories"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        jobs.add(prop("spark.jobGroup.id").getOrElse("") ->
+          prop("spark.job.description").getOrElse(""))
+        ()
+      }
+    }
+    /** Runs `df` to completion on checkpoint `ck`, appending its rows to
+      * `out`; the descriptions of the jobs the query ran.
+      */
+    def runJobs(df: DataFrame, ck: String, out: String): Seq[String] = {
+      val q = df.writeStream.option("checkpointLocation", ck)
+        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row], _: Long) =>
+          b.write.mode("append").parquet(out)
+        }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      // one listener queue delivers in order: once a later job is seen,
+      // every job of the query has been seen
+      val drain = "drain_" + q.runId
+      spark.sparkContext.setJobGroup(drain, drain)
+      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!jobs.asScala.exists(_._1 == drain) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      val run = q.runId.toString
+      jobs.asScala.collect { case (`run`, d) => d }.toSeq
+    }
+    def tmp(prefix: String): String = Files.createTempDirectory(prefix).toString
+    // event_id / doc_id / o_orderkey are positive; the decoy's are not
+    def decoy(df: DataFrame): DataFrame = {
+      val id = df.columns.head
+      df.limit(5).withColumn(id, -col(id) - 1)
+    }
+    val (evSchema, evNorm) = Tables.eventsReadSpec(spark, sf0001)
+    val inputs: Seq[(String, DataFrame, DataFrame => DataFrame, String => DataFrame)] = Seq(
+      ("events", rawEvents, evNorm,
+        d => Streaming.eventsStream(spark, d, Some(8))),
+      ("documents", Tables.documents(spark, sf0001), identity,
+        d => Streaming.documentsStream(spark, d)),
+      ("orders", Tables.orders(spark, sf0001), identity,
+        d => Streaming.ordersStream(spark, d)))
+    spark.sparkContext.addSparkListener(listener)
+    try
+      for (flat <- Seq(true, false); (table, rows, normalize, stream) <- inputs) {
+        val layout = if (flat) "40 flat shards" else s"a $table.parquet/ directory"
+        val dir = tmp(s"listing_$table")
+        val target = if (flat) dir else s"$dir/$table.parquet"
+        val names =
+          if (flat) shardNames(table, 40) else (0 until 40).map(i => f"part-$i%05d.parquet")
+        val held = tmp(s"listing_held_$table")
+        writeFlat(rows, held, names)
+        writeFlat(decoy(rows), dir, Seq("other.parquet"))
+        Files.createDirectories(Paths.get(target))
+        val (ck, out) = (tmp("listing_ck"), tmp("listing_out") + "/rows")
+        // the files arrive in two halves, one run each: the second run's
+        // listing finds all 40 (each run's batches stay under 32 files,
+        // which Spark would list again with a job when it reads them)
+        val descs = names.grouped(20).toSeq.flatMap { half =>
+          half.foreach(n => Files.move(Paths.get(held, n), Paths.get(target, n)))
+          runJobs(stream(dir), ck, out)
+        }
+        assert(!descs.exists(_.startsWith(listing)),
+          s"$table over $layout ran a listing job: ${descs.filter(_.startsWith(listing))}")
+        val streamed = spark.read.parquet(out).collect().toSet
+        val expected = normalize(spark.read.schema(rows.schema)
+          .parquet(names.map(n => s"$target/$n"): _*)).collect().toSet
+        assert(expected.nonEmpty && streamed == expected,
+          s"$table over $layout: ${streamed.size} streamed vs ${expected.size} rows")
+        val id = rows.columns.head
+        assert(!streamed.exists(_.getAs[Long](id) < 0), s"$table over $layout read the decoy")
+        if (flat && table == "events") {
+          // the reader before the change, as the control that the
+          // listener sees the job this case guards against
+          val glob = evNorm(spark.readStream.schema(evSchema)
+            .option("maxFilesPerTrigger", "8").parquet(s"$dir/events*.parquet"))
+          assert(runJobs(glob, tmp("listing_ck"), tmp("listing_out") + "/rows")
+            .exists(_.startsWith(listing)),
+            "control: the per-file glob no longer runs a listing job")
+        }
+      }
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a checkpoint written by the per-file glob reader resumes under " +
+    "eventsStream: no file re-read or skipped") {
+    val dir = Files.createTempDirectory("resume_in").toString
+    val held = Files.createTempDirectory("resume_held").toString
+    val ck = Files.createTempDirectory("resume_ck").toString
+    val out = Files.createTempDirectory("resume_out").toString + "/changelog"
+    val names = shardNames("events", 10)
+    writeFlat(rawEvents, held, names)
+    def arrive(ns: Seq[String]): Unit =
+      ns.foreach(n => Files.move(Paths.get(held, n), Paths.get(dir, n)))
+    def runOnce(events: DataFrame): Long = {
+      Streaming.changelogWriter(
+        WindowOps.hoppingPivot(Streaming.withLateness(events, Streaming.ReplayLateness),
+          eventTypes = Tables.EventTypes), out)
+        .option("checkpointLocation", ck)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
+      spark.read.parquet(out).agg(max("_batch_id")).head().getLong(0)
+    }
+    arrive(names.take(6))
+    // the reference: the reader before the change, rooted at one glob
+    // path per file
+    val (schema, normalizeTs) = Tables.eventsReadSpec(spark, sf0001)
+    val globbed = normalizeTs(spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "3").parquet(s"$dir/events*.parquet"))
+    assert(runOnce(globbed) == 1L, "the glob reader should commit two micro-batches")
+    assert(runOnce(Streaming.eventsStream(spark, dir, Some(3))) == 1L,
+      "resuming with nothing new must run no batch")
+    arrive(names.drop(6))
+    assert(runOnce(Streaming.eventsStream(spark, dir, Some(3))) == 3L,
+      "the four new files should make two more micro-batches")
+    // RestartProbe's exactly-once check: the compacted changelog equals
+    // the batch pivot, two-sided — a re-read file inflates its windows'
+    // counts, a skipped one deflates them
+    val state = Streaming.readChangelogState(spark, out, Seq("user_id", "w_start"))
+    val batch = WindowOps.hoppingPivot(Tables.events(spark, sf0001), eventTypes = Tables.EventTypes)
+    val (onlyState, onlyBatch) = (state.exceptAll(batch).count(), batch.exceptAll(state).count())
+    assert(state.count() == batch.count() && onlyState == 0 && onlyBatch == 0,
+      s"only_state=$onlyState only_batch=$onlyBatch")
   }
 
   test("stateful streaming ≡ batch under the RocksDB state-store provider (ST6 parity)") {
