@@ -149,9 +149,9 @@ object Bench {
     //     "[success]" trailer inside the 2000), 3-decimal values. The
     //     heavy queries — the only ones perf triage flags — always
     //     parse; the cut sub-second tail is in the files.
-    try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LOCAL.json"),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case scala.util.control.NonFatal(_) => () }
+    val localPath = java.nio.file.Paths.get("BENCH_LOCAL.json")
+    try java.nio.file.Files.write(localPath, (line + "\n").getBytes("UTF-8"))
+    catch { case NonFatal(e) => ledgerWriteFailed(localPath, e) }
     def f3r(d: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
     val historyRow =
@@ -176,12 +176,13 @@ object Bench {
     * OverlappingFileLockException for a second lock in one JVM — the
     * NonFatal catch would have silently dropped that writer's row, r15
     * ADVICE), then the OS FileLock serializes cross-process. Failures
-    * (read-only FS, lock unsupported) degrade to skipping the history
-    * row, same as before.
+    * (read-only FS, lock unsupported, missing directory) skip the
+    * history row and say so on stderr: a silently missing row would
+    * let bench_diff.py compare against an older one without warning.
     */
   private val historyMonitor = new Object
 
-  private def appendHistory(path: java.nio.file.Path, row: String): Unit =
+  private[graft] def appendHistory(path: java.nio.file.Path, row: String): Unit =
     historyMonitor.synchronized {
       try {
         val lockPath = java.nio.file.Paths.get(path.toString + ".lock")
@@ -195,8 +196,14 @@ object Bench {
             java.nio.file.StandardOpenOption.APPEND)
           finally lock.release()
         } finally lockCh.close()
-      } catch { case scala.util.control.NonFatal(_) => () }
+      } catch { case NonFatal(e) => ledgerWriteFailed(path, e) }
     }
+
+  /** A ledger file that could not be written is reported, not thrown:
+    * the timed results and the stdout summary line still stand.
+    */
+  private def ledgerWriteFailed(path: java.nio.file.Path, e: Throwable): Unit =
+    Console.err.println(s"[bench] ledger write failed: $path: ${e.getMessage}")
 
   /** The epoch tag from the opening and closing calibration runs: the
     * MAX — a row is only as clean as its dirtiest calibrated endpoint,

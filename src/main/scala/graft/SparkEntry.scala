@@ -820,7 +820,8 @@ object SparkEntry {
 
   /** The clustering key zorderWrite actually sorts by: both dimensions
     * min/max-scaled to the full bits width, THEN interleaved (the
-    * unequal-domain fix ZOrderProbe forced — see ZOrder.scaleTo). The
+    * unequal-domain fix of SCALE.md "Round 14: z-order clustering" —
+    * see ZOrder.scaleTo). The
     * min/max constants come from one Spark agg and are embedded as
     * literals; the oracle recomputes them in SQL, and the affine
     * scaling is the same double arithmetic in both engines, so the
@@ -879,9 +880,9 @@ object SparkEntry {
   }
 
   /** The VERSIONED-root read path on the bench ledger (r18 VERDICT #6):
-    * resolve `_CURRENT` at plan time (the 0.72 ms/resolve the
-    * VersionedRootProbe measured — now a ledger row, so a resolve-cost
-    * regression lands in BENCH_HISTORY, not just the probe) and scan
+    * resolve `_CURRENT` at plan time (0.72 ms/resolve, SCALE.md
+    * "Round 18: versioned-root protocol cost" — now a ledger row, so a
+    * resolve-cost regression lands in BENCH_HISTORY) and scan
     * the live generation. The generation stores zorderWriteRanked's
     * layout, whose z is bit-identical to q_zorder_ranked's — shared
     * oracle.
@@ -909,7 +910,8 @@ object SparkEntry {
     * sit under the Bloom crossover, so the auto picks the exact shingle
     * join — and both plans are bit-identical anyway, so the auto shares
     * q_decontaminate's oracle at ANY pick. Flip + guard spec-asserted
-    * (TextOpsSpec), crossover measured (DecontamProbe, SCALE.md r14).
+    * (TextOpsSpec), crossover measured (SCALE.md "Round 14:
+    * decontamination").
     */
   private def qDecontamAuto(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
@@ -2485,9 +2487,10 @@ object SparkEntry {
     // plan branches (hot agg + both self-join sides, r19 shape), and
     // without a materialization barrier the whole removeBoilerplate
     // pipeline (segment explode, two aggs, re-assembly join) replays in
-    // every branch — measured 2.65 → 1.64 s at sf0.1 (WinnowDiag r20
-    // A/B; the checkpointed relation is one narrow row per doc, so the
-    // barrier is cheap where the r19 fps-checkpoint was not). At 100 TB
+    // every branch — measured 2.65 → 1.64 s at sf0.1 (r20 A/B: VERDICT.md
+    // family 1, plans/r20/; the checkpointed relation is one narrow row
+    // per doc, so the barrier is cheap where the r19 fps-checkpoint was
+    // not). At 100 TB
     // the stripped corpus would be written once and winnowed from
     // storage — same barrier, durable form.
     Dedup.winnowOverlapPairs(
@@ -2507,7 +2510,7 @@ object SparkEntry {
     */
   private def qWinnowCleanExact(s: SparkSession, dir: String): DataFrame =
     // same materialization barrier as qWinnowClean (two fps branches
-    // here): 2.12 → 1.46 s at sf0.1 (WinnowDiag r20 A/B)
+    // here): 2.12 → 1.46 s at sf0.1 (r20 A/B, VERDICT.md family 1)
     Dedup.winnowOverlapPairsExact(
       TextOps.removeBoilerplate(Tables.documents(s, dir), " merge ", minDocs = 2)
         .select(col("doc_id"), col("clean_text").as("text"))

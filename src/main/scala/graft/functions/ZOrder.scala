@@ -67,8 +67,9 @@ object ZOrder {
     * comparable bit widths: with x spanning 15 bits and y spanning 10,
     * z's high bits are x's alone (y's bits 10-14 are constant zero), so
     * range-partitioning on z degenerates to partitioning on x and the
-    * y-dimension gets no locality at all — ZOrderProbe measured 99 % of
-    * rows scanned for a 5 % y-range predicate under raw interleaving.
+    * y-dimension gets no locality at all — measured: 99 % of rows
+    * scanned for a 5 % y-range predicate under raw interleaving
+    * (SCALE.md "Round 14: z-order clustering").
     * Scaling both dimensions to the same width restores the alternating
     * quadtree cuts that make BOTH dimensions prunable. (Min/max scaling
     * assumes roughly uniform domains — the fixture's and TPC-H's shape;
@@ -168,7 +169,7 @@ object ZOrder {
     * key: min/max scaling of raw values collapses under heavy-tailed
     * domains — one 2⁴⁰ outlier over a 2²⁰-wide mass maps the entire
     * mass to scaled bucket 0, silently degenerating the layout the same
-    * way the unequal-domain bug did (ZOrderProbe r14, 99.15 % scanned)
+    * way the unequal-domain bug did (r14, 99.15 % scanned)
     * — while ranks are distribution-free: exactly ⌈n/2^bits⌉ distinct
     * values per bucket for ANY input distribution. Rows with a null in
     * either dimension are dropped (no rank exists for them), matching
@@ -233,9 +234,9 @@ object ZOrder {
     * knowledge ("for heavily skewed columns, map values to ranks
     * first"). Same range-partitioned, within-sorted, bytes-sized write
     * as [[zorderWrite]]; only the key preprocessing differs. Measured
-    * (ZOrderProbe `skew:` mode): on log-uniform heavy-tailed keys the
-    * min/max layout collapses while this one prunes like the uniform
-    * case — SCALE.md r15.
+    * on log-uniform heavy-tailed keys: the min/max layout collapses
+    * while this one prunes like the uniform case — SCALE.md "Round 15:
+    * z-order under heavy-tailed domains".
     */
   def zorderWriteRanked(
       df: DataFrame,
@@ -454,7 +455,7 @@ object ZOrder {
     * clamps whole batches into one or few coarse z cells, the files
     * written there overlap in z-space, and footer pruning for queries
     * in that region decays as the appended mass grows — measured, not
-    * asserted (ZOrderDriftProbe; SCALE.md r16).
+    * asserted (SCALE.md "Round 16: z-order append staleness").
     *
     * The trigger must be computable without re-scanning the table:
     * signal = appendedShare × cellSkew, both from the `_zmeta` bucket
@@ -475,14 +476,15 @@ object ZOrder {
     * product only prices once appends reach 2× the base VOLUME, while
     * a drip of tiny batches gets there in file COUNT long before
     * (measured: 2–5× stale-vs-rebuilt gap at share ≤ 0.5 under 1-file
-    * slices, flat under production 128 MiB slices — ZOrderDriftProbe,
-    * SCALE.md r16). The `_zmeta/appendlog` ledger counts files per
-    * append; total appended files ≥ `maxAppendFiles` fires a rebuild —
-    * the OPTIMIZE cadence every production table format schedules.
-    * `maxAppendFiles = 16` is probe-swept (r17, `ZOrderDriftProbe
-    * --sweep` 4/8/16/32): each halving doubles rebuild spend and
-    * halves mean scan amplification; 16 bounds a point query's extra
-    * file opens at ~16 — a table-size-independent latency bound —
+    * slices, flat under production 128 MiB slices — SCALE.md "Round 16:
+    * z-order append staleness"). The `_zmeta/appendlog` ledger counts
+    * files per append; total appended files ≥ `maxAppendFiles` fires a
+    * rebuild — the OPTIMIZE cadence every production table format
+    * schedules. `maxAppendFiles = 16` is swept (r17, 4/8/16/32;
+    * SCALE.md "Round 17: maxAppendFiles probe-swept"): each halving
+    * doubles rebuild spend and halves mean scan amplification; 16
+    * bounds a point query's extra file opens at ~16 — a
+    * table-size-independent latency bound —
     * while rebuild cost grows WITH table size, which at 100 TB pushes
     * the crossover toward higher thresholds (read-heavy medium tables:
     * pass 8). Returns "append" | "rebuild".

@@ -322,8 +322,9 @@ object Dedup {
     * SOCC'14) — the O(log d)-ROUND algorithm, replacing r14's min-label
     * propagation whose round count was the graph DIAMETER (r15 VERDICT
     * #4: a boilerplate template chain can exceed any fixed diameter
-    * bound at corpus scale; CcRoundsProbe measures a 10k-node path
-    * converging in 8 rounds here vs 10 000 propagation steps before).
+    * bound at corpus scale; measured: a 10k-node path converges in 8
+    * rounds here vs 10 000 propagation steps before — SCALE.md
+    * "Round 16: cluster resolution in O(log d) rounds").
     * Each round, per node u with neighborhood Γ(u) and m = min(Γ⁺(u)):
     *  - large-star rewires every LARGER neighbor v > u to m — distances
     *    to the component min roughly halve (pointer-doubling effect);
@@ -512,11 +513,12 @@ object Dedup {
     * when EVERY band it collides in is hot — with rows = k/bands = 4,
     * a pair at similarity s collides per band with probability s⁴, so
     * high-similarity pairs collide in several independent bands and
-    * survive any single hot bucket; the r12 CapAudit measured the
-    * largest real band bucket at 4 (sf0.1) and 40 (derived sf1, 10×
-    * duplicated corpus), so the 4096 default is two orders above
-    * anything a non-adversarial corpus produces — results on the
-    * fixtures are bit-identical to the uncapped r11 shape.
+    * survive any single hot bucket; r12 measured the largest real
+    * band bucket at 4 (sf0.1) and 40 (derived sf1, 10× duplicated
+    * corpus; SCALE.md "Cap knobs, observed biting"), so the 4096
+    * default is two orders above anything a non-adversarial corpus
+    * produces — results on the fixtures are bit-identical to the
+    * uncapped r11 shape.
     */
   def minhashNearDups(
       docs: DataFrame,
@@ -588,9 +590,10 @@ object Dedup {
     * measured ~2× SLOWER than the plain fp self-join at sf0.1 (3.0–4.4 s
     * vs 1.5–2.1 s capped; 20–50 s vs 6–7 s uncapped), because the
     * sort-merge join streams pair generation without collect buffers and
-    * AQE rebalances hot-fp partitions at runtime (WinnowDiag,
-    * OPTIMIZATION_r19.md). The exchanges are narrow either way: fp
-    * shuffles of (fp, doc_id) and one (a,b) shuffle of 8-byte pair keys.
+    * AQE rebalances hot-fp partitions at runtime (OPTIMIZATION_r19.md
+    * "1. Winnow family", Change B′). The exchanges are narrow either
+    * way: fp shuffles of (fp, doc_id) and one (a,b) shuffle of 8-byte
+    * pair keys.
     * At 100 TB the full pair relation is itself the scale killer (it
     * grows quadratically with shared boilerplate); the operating mode
     * is this capped relation → [[dedupClusters]]-style resolution.
@@ -605,8 +608,9 @@ object Dedup {
     // the fingerprint compute must not serialize behind a narrow scan.
     // NO localCheckpoint (r19, measured): recomputing the fingerprints
     // per join branch is cheaper end-to-end than materializing the
-    // exploded relation once (WinnowDiag e2e 2.0–3.1 s vs 2.4–3.7 s),
-    // and it avoids pinning |fps| in executor storage — at scale the
+    // exploded relation once (e2e 2.0–3.1 s vs 2.4–3.7 s;
+    // OPTIMIZATION_r19.md Change B″), and it avoids pinning |fps| in
+    // executor storage — at scale the
     // recompute is two corpus scans, the checkpoint is an
     // eviction/lineage liability. (A count-over-window hot filter that
     // rides the join's own exchange was also measured: 13.8–14.3 s —
@@ -663,7 +667,8 @@ object Dedup {
     * spread, and even chunk-block splitting measured 20–50 s at sf0.1
     * against the join tail's 6–7 s — AQE's skew-join splitting
     * rebalances the hot-fingerprint SMJ partitions at runtime, which no
-    * static expansion layout matched (WinnowDiag, OPTIMIZATION_r19.md).
+    * static expansion layout matched (OPTIMIZATION_r19.md "1. Winnow
+    * family", Change B).
     * The exact twin has no hot-bucket cap (the oracle contract), so its
     * worst case is the data's own fingerprint density either way.
     *

@@ -793,9 +793,10 @@ object Similarity {
     * doesn't: vectors from an uncovered region all land in their few
     * nearest (wrong) cells, the PQ codebook quantizes them coarsely,
     * and recall for queries in that region decays as the appended mass
-    * grows — measured, not asserted (IvfDriftProbe; SCALE.md r15:
-    * same-distribution appends hold recall flat at ANY share, shifted
-    * appends decay it, and the decay tracks the signal below).
+    * grows — measured, not asserted (SCALE.md "Round 15: IVF+PQ append
+    * staleness": same-distribution appends hold recall flat at ANY
+    * share, shifted appends decay it, and the decay tracks the signal
+    * below).
     *
     * The rebuild trigger must be computable WITHOUT ground truth
     * (recall needs a brute-force pass — if you could afford it per
@@ -982,8 +983,9 @@ object Similarity {
     * work reduction wins. The crossover is measured, not asserted —
     * SCALE.md r14 established the volume axis and r15 CALIBRATED the
     * default with a fine sweep at two corpus sizes a decade apart
-    * (SimVolumeProbe, 2 M and 20 M vectors, warm): the crossover sits
-    * at or below ~16 queries at BOTH sizes, differences below it are
+    * (2 M and 20 M vectors, warm; SCALE.md "Round 15: simTopKAuto
+    * threshold calibrated"): the crossover sits at or below ~16
+    * queries at BOTH sizes, differences below it are
     * noise-level (≤ ~0.3 s — the price of staying exact), and above
     * ~24 the index wins 1.4–1.8× growing with volume. The default is
     * 24 = 1.5× margin over the highest observed crossover: still

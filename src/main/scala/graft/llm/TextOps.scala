@@ -568,10 +568,10 @@ object TextOps {
     *    shingles reach any exchange.
     *
     * The deciding regime variable is NOT corpus size alone — it is the
-    * SURVIVOR SHARE. DecontamProbe measured (SCALE.md r14): against a
-    * low-overlap benchmark (share ≈ 0, the normal production shape —
-    * eval sets barely intersect a crawl) the prefilter wins at every
-    * corpus ≥ ~5 MB (sf1 0.85 s vs 1.07 s; sf10 1.72 s vs 2.09 s),
+    * SURVIVOR SHARE. Measured (SCALE.md "Round 14: decontamination"):
+    * against a low-overlap benchmark (share ≈ 0, the normal production
+    * shape — eval sets barely intersect a crawl) the prefilter wins at
+    * every corpus ≥ ~5 MB (sf1 0.85 s vs 1.07 s; sf10 1.72 s vs 2.09 s),
     * while against a same-distribution benchmark (share → 1, every
     * shingle survives) Bloom's second corpus scan + build cost is pure
     * loss (sf10: 3.19 s vs 2.88 s). So the decision is two-stage:

@@ -439,10 +439,11 @@ object Joins {
     * candidates, multiplying residual-filter evaluations. At the
     * median length, replication is ~2 rows per interval while a fact's
     * candidate set stays proportional to its LOCAL interval density —
-    * both within a small constant of their floors (RangeWidthProbe
-    * measures the sweep; SCALE.md r14). Result is width-invariant
-    * (the residual filter is exact), so mis-estimation is
-    * performance-only — spec-asserted across a 256× width sweep.
+    * both within a small constant of their floors (the measured sweep:
+    * SCALE.md "Round 14: range-lookup bucket width, measured").
+    * Result is width-invariant (the residual filter is exact), so
+    * mis-estimation is performance-only — spec-asserted across a 256×
+    * width sweep.
     */
   def rangeLookupJoinAuto(
       facts: DataFrame,

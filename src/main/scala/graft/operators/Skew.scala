@@ -190,8 +190,8 @@ object Skew {
     * salted join above it, sizing `saltBuckets` from the measurement
     * instead of a generous constant.
     *
-    * Calibration is SkewJoinProbe's measured table (SCALE.md §"Join
-    * skew, measured"): salting reached parity at skew factor ~6.4
+    * Calibration is the measured table in SCALE.md §"Join skew,
+    * measured": salting reached parity at skew factor ~6.4
     * (20 % hot × 32 tasks) and won 1.6× at 16 (50 % hot), with 4
     * buckets dominating 16 everywhere — so the default threshold is 8
     * (just past measured parity) and buckets = ceil(skewFactor / 4)

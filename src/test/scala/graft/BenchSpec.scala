@@ -65,4 +65,15 @@ class BenchSpec extends AnyFunSuite {
     // idle both ends: the tag is the floor-scale number
     assert(Bench.epochTag(2.2, 2.3) == 2.3)
   }
+
+  test("a ledger row that cannot be written is reported on stderr, not thrown") {
+    val root = java.nio.file.Files.createTempDirectory("bench-ledger")
+    val path = root.resolve("missing").resolve("BENCH_HISTORY.jsonl")
+    val err = new java.io.ByteArrayOutputStream()
+    Console.withErr(err)(Bench.appendHistory(path, """{"metric":"total"}"""))
+    val msg = err.toString("UTF-8")
+    assert(msg.startsWith(s"[bench] ledger write failed: $path: "), msg)
+    assert(!java.nio.file.Files.exists(path))
+    java.nio.file.Files.delete(root)
+  }
 }

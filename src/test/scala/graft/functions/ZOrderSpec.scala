@@ -75,10 +75,10 @@ class ZOrderSpec extends SparkSpec {
     "(the scaling fix)") {
     // lineitem's l_partkey spans ~8× the bits of l_suppkey at this SF.
     // Raw interleaving put only partkey bits in z's high bits, so every
-    // file spanned the full suppkey domain (ZOrderProbe measured 99 %
-    // scanned for a 5 % y-predicate). With min/max scaling, z cuts
-    // alternate dimensions and each file's y-extent must be a fraction
-    // of the domain.
+    // file spanned the full suppkey domain (measured: 99 % scanned for a
+    // 5 % y-predicate, SCALE.md "Round 14: z-order clustering"). With
+    // min/max scaling, z cuts alternate dimensions and each file's
+    // y-extent must be a fraction of the domain.
     val dir = java.nio.file.Files.createTempDirectory("zorder2").toString
     val li = Tables.lineitem(spark, sf0001)
     ZOrder.zorderWrite(li, "l_partkey", "l_suppkey", dir,

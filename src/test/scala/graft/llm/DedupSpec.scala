@@ -274,8 +274,9 @@ class DedupSpec extends SparkSpec {
     val uncapped = pairs(Dedup.minhashNearDups(corpus, maxBucket = Int.MaxValue))
     assert(capped == uncapped.filterNot(p => p._1 <= 200L && p._2 <= 200L))
     // ...and the registered default (4096, two orders above the largest
-    // CapAudit-measured real bucket) is inert even on this corpus: the
-    // r11 uncapped results are reproduced bit-identically
+    // measured real bucket, SCALE.md "Cap knobs, observed biting") is
+    // inert even on this corpus: the r11 uncapped results are
+    // reproduced bit-identically
     assert(pairs(Dedup.minhashNearDups(corpus)) == uncapped)
   }
 

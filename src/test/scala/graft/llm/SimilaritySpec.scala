@@ -246,7 +246,8 @@ class SimilaritySpec extends SparkSpec {
 
   test("ivfPqAppendAuto: staleness signal flips append -> rebuild, and the " +
     "rebuild restores recall parity with a scratch build") {
-    // controllable geometry (same construction as IvfDriftProbe): base
+    // controllable geometry (the construction of SCALE.md "Round 15:
+    // IVF+PQ append staleness"): base
     // energy in dims 0-31; the drifted batch in dims 32-63 — a region
     // the frozen quantizer cannot cover
     def gen(n: Long, idOffset: Long, activeFrom: Int) = {
@@ -277,7 +278,7 @@ class SimilaritySpec extends SparkSpec {
     // drifted ingest: signal = share × cell skew crosses the threshold,
     // the auto rebuilds, and the rebuilt index's recall on the drifted
     // region restores to scratch-build parity (stale would be ~4× lower
-    // — IvfDriftProbe, SCALE.md r15)
+    // — SCALE.md "Round 15: IVF+PQ append staleness")
     val p2 = java.nio.file.Files.createTempDirectory("ivfauto2").toString + "/idx"
     Similarity.ivfPqWriteIndex(base, p2, nlist = 16, m = 16, ksub = 8)
     val drifted = gen(500L, 2000000L, 32)

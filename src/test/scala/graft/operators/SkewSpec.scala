@@ -92,7 +92,8 @@ class SkewSpec extends SparkSpec {
     // the same shapes at 32+ tasks (SCALE.md calibration)
     val sUniform = Skew.factSkewFactor(ev, "user_id", sampleFraction = 1.0)
     assert(sUniform < 2.0, s"uniform skew factor $sUniform")
-    // hot corpus: 60 % of rows remapped to one key (SkewCorpus's rule)
+    // hot corpus: 60 % of rows remapped to one key (the pmod(event_id,
+    // 100) remap rule of SCALE.md "Skew behavior, measured (round 12)")
     val hotKey = cust.select(col("c_custkey")).head().getLong(0)
     val hot = ev.withColumn("user_id",
       when(pmod(col("event_id"), lit(100)) < 60, lit(hotKey))
