@@ -1891,27 +1891,19 @@ object SparkEntry {
       key = Seq("o_custkey"), orderBy = Seq("o_orderdate", "o_orderkey"))
 
   /** Token-budget admission executed incrementally — 8 bytes of state
-    * per source. Rows-only: admission order is per-micro-batch hash
-    * order, not the batch operator's global hash order (single-batch
-    * equivalence and the budget invariant are spec-asserted).
+    * per source. Serves two catalog rows. q_stream_token_budget is
+    * rows-only: admission order is per-micro-batch hash order, not the
+    * batch operator's global hash order (single-batch equivalence and
+    * the budget invariant are spec-asserted). q_stream_token_budget_rel
+    * applies the q_stream_flagship_rel trick: the same incremental run,
+    * hash-checked against the BATCH operator's DuckDB oracle — legal
+    * because the fixture replays as one micro-batch, where the stream's
+    * per-batch md5-hash admission order coincides with the batch
+    * window's global hash order (StreamingSpec's
+    * single-batch-equivalence test is the in-repo proof; multi-batch
+    * runs keep the budget invariant but not the order).
     */
   private def qStreamTokenBudget(s: SparkSession, dir: String): DataFrame =
-    Streaming.runToMemory(s,
-      Streaming.tokenBudgetStream(
-        Streaming.documentsStream(s, dir), budgetTokens = 700L),
-      org.apache.spark.sql.streaming.OutputMode.Append())
-
-  /** The q_stream_flagship_rel trick applied to token-budget admission:
-    * the INCREMENTAL stateful run (8-byte state per source), hash-checked
-    * against the BATCH operator's DuckDB oracle — legal because the
-    * fixture replays as one micro-batch, where the stream's per-batch
-    * md5-hash admission order coincides with the batch window's global
-    * hash order (StreamingSpec's single-batch-equivalence test is the
-    * in-repo proof; multi-batch runs keep the budget invariant but not
-    * the order, which is why q_stream_token_budget itself stays
-    * rows-only).
-    */
-  private def qStreamTokenBudgetRel(s: SparkSession, dir: String): DataFrame =
     Streaming.runToMemory(s,
       Streaming.tokenBudgetStream(
         Streaming.documentsStream(s, dir), budgetTokens = 700L),
@@ -2609,16 +2601,18 @@ object SparkEntry {
     * compacted changelog state must be exactly the batch answer.
     */
   private def qStreamChangelogPivot(s: SparkSession, dir: String): DataFrame = {
-    // per-process fixed path (same rationale as qDedupDelta) — but the
-    // changelog sink APPENDS, so wipe the dir first or a second run in
-    // the same JVM would stack a second replay's emissions
+    // per-process fixed path (same rationale as qDedupDelta); wipe it
+    // first: a second run in the same JVM starts a fresh checkpoint at
+    // batch 0, and any higher batch_id directory the first run left
+    // would win the compaction with stale rows
     val path = s"${System.getProperty("java.io.tmpdir")}/graft_changelog_pivot_${ProcessHandle.current().pid()}"
     def rm(x: java.io.File): Unit = {
       if (x.isDirectory) Option(x.listFiles()).foreach(_.foreach(rm))
       x.delete(): Unit
     }
     rm(new java.io.File(path))
-    Streaming.sinkChangelog(Streaming.hoppingPivotStream(s, dir), path)
+    Streaming.runToEnd(
+      Streaming.changelogWriter(Streaming.hoppingPivotStream(s, dir), path)())
     Streaming.readChangelogState(s, path, Seq("user_id", "w_start"))
   }
 
@@ -4766,7 +4760,7 @@ object SparkEntry {
         |SELECT gram, COUNT(*) AS cnt FROM g GROUP BY gram
         |ORDER BY cnt DESC, gram LIMIT 20""".stripMargin)),
     QuerySpec("q_token_budget", qTokenBudget, oracle = Some(tokenBudgetOracle)),
-    QuerySpec("q_stream_token_budget_rel", qStreamTokenBudgetRel,
+    QuerySpec("q_stream_token_budget_rel", qStreamTokenBudget,
       oracle = Some(tokenBudgetOracle)),
     QuerySpec("q_pack_sequences", qPackSequences, bench = true, oracle = Some(samplingCumCte +
       """

@@ -4,9 +4,9 @@ import java.io.FileNotFoundException
 import java.util.UUID
 
 import org.apache.hadoop.fs.{FileStatus, GlobFilter, Path}
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamReader, DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamReader, DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.model.Tables
@@ -221,17 +221,24 @@ object Streaming {
     */
   val MeasuredStateBytesPerEntry = 325L
 
+  /** The [[stateProviderFor]] margins: state-map versions the default
+    * provider holds on heap while a new one commits
+    * (`numVersionsToRetainInMemory`), and the heap share live state may
+    * take (the rest is the query's working set: shuffle, sink batches,
+    * codegen).
+    */
+  val RetainedStateVersions = 2
+  val StateHeapFraction = 0.5
+
   /** ST6 sizing decision: which state-store provider can hold
-    * `estStateRows` live entries. The default provider keeps every
-    * loaded version's map ON HEAP (`numVersionsToRetainInMemory` = 2
-    * in-flight copies while a new version commits) and wins the
-    * measured 1.7–1.9× RocksDB tax while that fits
+    * `estStateRows` live entries. The default provider keeps
+    * [[RetainedStateVersions]] copies of the state map ON HEAP and wins
+    * the measured 1.7–1.9× RocksDB tax while that fits
     * (SCALE.md: 5 M and 50 M entries); RocksDB keeps state in native
     * memory + local SST files and is the only provider that survives
     * state ≫ heap — the third streaming decade's territory. The flip
     * is the conservative inequality: estimated live bytes × retained
-    * versions must fit in `heapFraction` of the heap (the rest is the
-    * query's own working set: shuffle, sink batches, codegen). Wrong
+    * versions must fit in [[StateHeapFraction]] of the heap. Wrong
     * in the safe direction by construction when fed
     * [[graft.operators.WindowOps.hoppingStateUpperBound]] — an
     * over-estimate pays the documented tax, never an OOM.
@@ -239,13 +246,10 @@ object Streaming {
   def stateProviderFor(
       estStateRows: Long,
       heapBytes: Long = Runtime.getRuntime.maxMemory,
-      bytesPerEntry: Long = MeasuredStateBytesPerEntry,
-      retainedVersions: Int = 2,
-      heapFraction: Double = 0.5): String = {
-    require(estStateRows >= 0 && heapBytes > 0 && bytesPerEntry > 0 &&
-      retainedVersions > 0 && heapFraction > 0)
-    val need = BigInt(estStateRows) * bytesPerEntry * retainedVersions
-    if (need <= BigInt((heapBytes * heapFraction).toLong)) DefaultStateProvider
+      bytesPerEntry: Long = MeasuredStateBytesPerEntry): String = {
+    require(estStateRows >= 0 && heapBytes > 0 && bytesPerEntry > 0)
+    val need = BigInt(estStateRows) * bytesPerEntry * RetainedStateVersions
+    if (need <= BigInt((heapBytes * StateHeapFraction).toLong)) DefaultStateProvider
     else RocksDbStateProvider
   }
 
@@ -271,10 +275,18 @@ object Streaming {
       heapBytes: Long = Runtime.getRuntime.maxMemory): (SparkSession, String) = {
     val est = WindowOps.hoppingStateUpperBound(
       Tables.events(spark, dir), size = size, slide = slide)
-    val provider = stateProviderFor(est, heapBytes = heapBytes)
+    stateSessionFor(spark, "autoStateSession", est, heapBytes, MeasuredStateBytesPerEntry)
+  }
+
+  /** The two pickers' shared tail: pick, record under `op`, and return
+    * an isolated session carrying the pick.
+    */
+  private def stateSessionFor(spark: SparkSession, op: String, est: Long,
+      heapBytes: Long, bytesPerEntry: Long): (SparkSession, String) = {
+    val provider = stateProviderFor(est, heapBytes, bytesPerEntry)
     // threshold in the estimate's own unit: live rows that fit the heap
-    graft.Sessions.recordDecision("autoStateSession", est.toDouble,
-      heapBytes * 0.5 / (MeasuredStateBytesPerEntry * 2.0),
+    graft.Sessions.recordDecision(op, est.toDouble,
+      heapBytes * StateHeapFraction / (bytesPerEntry * RetainedStateVersions.toDouble),
       provider.split('.').last)
     val s2 = graft.Sessions.isolatedSession(spark)
     s2.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
@@ -315,15 +327,8 @@ object Streaming {
       heapBytes: Long = Runtime.getRuntime.maxMemory): (SparkSession, String) = {
     val est = WindowOps.sessionStateUpperBound(
       Tables.events(spark, dir), gap = gap)
-    val provider = stateProviderFor(est, heapBytes = heapBytes,
-      bytesPerEntry = MeasuredSessionStateBytesPerEntry)
-    graft.Sessions.recordDecision("autoStateSessionWindow", est.toDouble,
-      heapBytes * 0.5 / (MeasuredSessionStateBytesPerEntry * 2.0),
-      provider.split('.').last)
-    val s2 = graft.Sessions.isolatedSession(spark)
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
-    if (provider == RocksDbStateProvider) applyBigStateConfs(s2)
-    (s2, provider)
+    stateSessionFor(spark, "autoStateSessionWindow", est, heapBytes,
+      MeasuredSessionStateBytesPerEntry)
   }
 
   /** Checkpoint posture for state ≫ heap streaming jobs. Two confs,
@@ -376,6 +381,19 @@ object Streaming {
       "org.apache.spark.sql.execution.streaming.state.RocksDB",
       org.apache.logging.log4j.Level.ERROR)
 
+  /** Run `writer`'s query over the input present when it starts
+    * (Trigger.AvailableNow, in micro-batches bounded by source limits
+    * such as `maxFilesPerTrigger` — ST4's earliest-offsets replay) and
+    * return the terminated query, whose progress and
+    * [[finalWatermarkSec]] stay readable. A checkpoint goes on `writer`;
+    * a live stream sets its own trigger and starts the writer itself.
+    */
+  def runToEnd(writer: DataStreamWriter[Row]): StreamingQuery = {
+    val q = writer.trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    q
+  }
+
   /** Run a streaming DataFrame to completion over the finite fixture
     * (Trigger.AvailableNow) into a memory sink; return the materialized
     * result. This is a *real* incremental execution — state store,
@@ -386,12 +404,7 @@ object Streaming {
       streamed: DataFrame,
       mode: OutputMode = OutputMode.Complete()): DataFrame = {
     val name = "mem_" + UUID.randomUUID().toString.replace("-", "")
-    val q = streamed.writeStream
-      .format("memory").queryName(name)
-      .outputMode(mode)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runToEnd(streamed.writeStream.format("memory").queryName(name).outputMode(mode))
     spark.table(name)
   }
 
@@ -409,171 +422,82 @@ object Streaming {
       hoppingPivotStream(spark, dir),
       Tables.customer(spark, dir), "user_id", "c_custkey")
 
-  /** S6/S7 — file/document sink via foreachBatch (the reference's
-    * Kafka-topic CSAS sink and Mongo Connect sink both reduce to "write
-    * each emitted batch to an external store"). Parquet here; swapping
-    * the body for `.format("mongodb")`/`.format("kafka")` is the whole
-    * change. Runs the stream to completion over the finite fixture.
+  /** The engine's streaming sink (S6/S7): the reference's Kafka-topic
+    * CSAS sink and Mongo Connect sink both reduce to "write each emitted
+    * micro-batch to an external store" — parquet here; a
+    * `.format("mongodb")`/`.format("kafka")` write is the whole swap.
+    * Returns the writer unstarted: [[runToEnd]] replays the finite
+    * input; a checkpoint or another trigger goes on the writer.
+    *
+    * Micro-batch N is written to `path/batch_id=N` with OVERWRITE.
+    * `foreachBatch` is AT-LEAST-once (after a crash the in-flight batch
+    * re-runs under the same id), so this idempotent write plus a
+    * replayable source is end-to-end exactly-once, the Structured
+    * Streaming paper's recipe: a replay replaces its own output, even
+    * when `transform` read CHANGED dims the second time. (No `_` prefix:
+    * file discovery skips `_`-prefixed directories.)
+    *
+    * By `mode`: Update (default) makes a CHANGELOG of every re-emission,
+    * compacted by [[readChangelogState]] the way the reference's Mongo
+    * upsert sink (infra/connect/mongo-sink.json) or a compacted Kafka
+    * topic is read; Append writes each result row once; Complete the
+    * full result per batch.
+    *
+    * `transform(batch, batchId)` runs per micro-batch in BATCH land, the
+    * continuously-updated-TABLE join (r15 VERDICT #2): a stream-static
+    * join freezes the dim's FILE LISTING at plan time, but the
+    * reference's `users` TABLE is CDC-maintained (README.md:29,56-58); a
+    * `spark.read.parquet(dimPath)` inside `transform` re-resolves per
+    * batch (a small dim still broadcasts), so a refresh between batches
+    * N and N+1 reaches every emission from N+1 on.
+    *
+    * SESSION windows take `OutputMode.Append()`: Spark rejects Update
+    * for them (`STREAMING_OUTPUT_MODE.UNSUPPORTED_OPERATION`), as merging
+    * sessions have no stable upsert key. Each session is emitted EXACTLY
+    * ONCE when the watermark passes its end (last event + gap), with no
+    * key to compact on, so the per-batch overwrite is what keeps a
+    * replay from duplicating sessions. State holds only the open
+    * sessions inside the lateness horizon, so a bounded-batch replay
+    * must arrive roughly time-ordered (StreamScale --session range-sorts
+    * its corpus): the infinite [[ReplayLateness]] would keep every
+    * session open and emit nothing. Sessions still open at end-of-input
+    * are the batch twin's sessions ending after [[finalWatermarkSec]] of
+    * the query [[runToEnd]] returns.
     */
-  def sinkToParquet(
+  def changelogWriter(
       streamed: DataFrame,
       path: String,
-      mode: OutputMode = OutputMode.Update()): Unit = {
-    // Complete mode re-emits the FULL result each micro-batch → the sink
-    // replaces. Append emits each result row exactly once → append is a
-    // faithful materialization. Update mode appends every re-emission, so
-    // the parquet output is a CHANGELOG, not current state — readers take
-    // latestByKey over it (exactly how a Kafka compacted topic or the
-    // reference's Mongo upsert sink would be consumed).
-    val saveMode = if (mode == OutputMode.Complete()) "overwrite" else "append"
-    val q = streamed.writeStream
-      .outputMode(mode)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        batch.write.mode(saveMode).parquet(path)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Update-mode changelog sink with an explicit emission-order column:
-    * each re-emitted aggregate row is appended stamped with its
-    * micro-batch id, so a downstream reader recovers CURRENT state with
-    * latestByKey(key, orderBy=_batch_id) — exactly how the reference's
-    * Mongo sink consumes the stream (document _id upsert,
-    * infra/connect/mongo-sink.json) and how a compacted Kafka topic is
-    * read. [[sinkToParquet]]'s comment documents these semantics; this
-    * sink makes them executable and testable.
-    */
-  def changelogWriter(streamed: DataFrame, path: String): DataStreamWriter[Row] =
+      mode: OutputMode = OutputMode.Update())(
+      transform: (Dataset[Row], Long) => DataFrame = (b, _) => b): DataStreamWriter[Row] =
     streamed.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        batch.withColumn("_batch_id", lit(batchId))
-          .write.mode("append").parquet(path)
+      .outputMode(mode)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        transform(batch, batchId).write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
       }
 
-  def sinkChangelog(streamed: DataFrame, path: String): Unit = {
-    val q = changelogWriter(streamed, path).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
-
-  /** [[sinkChangelog]] with a PER-BATCH transform applied inside
-    * foreachBatch — the continuously-updated-TABLE join posture (r15
-    * VERDICT #2). A plan-embedded stream-static join freezes the static
-    * side's FILE LISTING at plan time, so a dimension row updated while
-    * the query runs never reaches later micro-batches — but the
-    * reference's stream-TABLE join (`users` is CDC-maintained,
-    * README.md:29,56-58) enriches each event against the table's
-    * CURRENT state. This sink restores that semantics Spark-natively:
-    * `transform(batch, batchId)` runs per micro-batch in BATCH land,
-    * so a `spark.read.parquet(dimPath)` inside it re-resolves the
-    * dimension at that moment (Catalyst plans the per-batch join fresh
-    * — a small dim still broadcasts), and a refresh landed between
-    * batches N and N+1 enriches every emission from N+1 on. Emission
-    * semantics are unchanged: Update-mode changelog stamped with
-    * `_batch_id`, compacted by [[readChangelogState]] — re-emission on
-    * later events is exactly what propagates a dim update into the
-    * upsert view, the same way the reference's ksql join re-emits when
-    * either side changes.
+  /** [[changelogWriter]] with a per-batch `transform`, run to the end of
+    * the input.
     */
   def sinkChangelogWith(streamed: DataFrame, path: String)(
-      transform: (org.apache.spark.sql.Dataset[Row], Long) => DataFrame): Unit = {
-    val q = streamed.writeStream
-      .outputMode(OutputMode.Update())
-      // one `batch_id=N` partition dir per batch with OVERWRITE, not a
-      // blind append: foreachBatch is AT-LEAST-once, and unlike the
-      // static changelog sink — whose replayed batch re-emits IDENTICAL
-      // rows that latestByKey compaction absorbs — a replayed batch
-      // here re-reads the dims, which may have CHANGED between the
-      // attempts, appending different rows under the same batch id and
-      // making compaction nondeterministic. The per-batch overwrite
-      // (the sinkSessionsAppend discipline) keeps exactly one version
-      // of each batch under any replay; `batch_id` stays readable as
-      // the partition column (no underscore prefix: hidden-path
-      // filtering would drop `_batch_id=N` dirs from file discovery).
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        transform(batch, batchId)
-          .write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      transform: (Dataset[Row], Long) => DataFrame): Unit =
+    runToEnd(changelogWriter(streamed, path)(transform)): Unit
 
-  /** Recover current state from a [[sinkChangelog]] directory: the upsert
-    * view a document store would hold after consuming the stream.
+  /** Recover current state from an Update-mode [[changelogWriter]]
+    * directory: the upsert view a document store would hold after
+    * consuming the stream — each key's row from its newest `batch_id`.
     */
   def readChangelogState(
-      spark: SparkSession, path: String, keyCols: Seq[String]): DataFrame = {
-    val df = spark.read.parquet(path)
-    // [[sinkChangelog]] stamps a `_batch_id` column; [[sinkChangelogWith]]
-    // writes `batch_id=N` partition dirs — compact on whichever this
-    // changelog carries
-    val ord = if (df.columns.contains("_batch_id")) "_batch_id" else "batch_id"
+      spark: SparkSession, path: String, keyCols: Seq[String]): DataFrame =
     graft.operators.Relational
-      .latestByKey(df, keyCols, Seq(ord))
-      .drop(ord)
-  }
-
-  /** The SESSION-window production sink contract, in one place: Spark
-    * supports session aggregations in Append (+watermark) and Complete
-    * modes ONLY — Update is rejected at analysis
-    * (`STREAMING_OUTPUT_MODE.UNSUPPORTED_OPERATION`), because merging
-    * sessions have no stable upsert key (start only decreases, end only
-    * increases as events arrive, so no (key, window) identity survives
-    * a merge for a changelog consumer to compact on). The consequence
-    * for operating at scale: a session pipeline emits each session
-    * EXACTLY ONCE when the watermark passes its end (last event + gap)
-    * — an append sink, not an upsert store — and state holds only the
-    * OPEN sessions inside the lateness horizon, which also means a
-    * bounded-batch replay must arrive approximately time-ordered (a
-    * live stream does; a hash-partitioned file corpus must be
-    * range-sorted on event time first, or the watermark jump after
-    * batch 1 silently drops everything later — the same replay caveat
-    * as [[withLateness]], but UNAVOIDABLE here because the infinite
-    * replay watermark that fixes fixed-window replays would keep every
-    * session open forever and emit nothing in Append mode).
-    * This sink implements that posture (StreamScale --session runs it
-    * at decade scale); the sessions still open at end-of-input are the
-    * expected tail — equal to the batch twin's sessions ending after
-    * the final watermark, which [[finalWatermarkSec]] exposes so
-    * callers can verify emitted ≡ batch-below-watermark exactly.
-    * Returns the terminated query for that purpose.
-    *
-    * Exactly-once under crash: `foreachBatch` is AT-LEAST-once — after
-    * a kill the in-flight batch re-runs, and a blind append would
-    * DUPLICATE its sessions (the changelog sink tolerates this because
-    * latestByKey compaction absorbs re-emissions; Append-mode sessions
-    * have no compaction key, so the sink itself must be idempotent).
-    * Each batch therefore writes its own `batch_id=N` partition
-    * directory with OVERWRITE: a replayed batch overwrites its own
-    * half-written output instead of appending beside it. Verified
-    * under a real `Runtime.halt` by RestartProbe --pipeline=session
-    * (prefix-closure equality would count any duplicate).
-    */
-  def sinkSessionsAppend(
-      streamed: DataFrame,
-      path: String,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = streamed.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
-    q.awaitTermination()
-    q
-  }
+      .latestByKey(spark.read.parquet(path), keyCols, Seq("batch_id"))
+      .drop("batch_id")
 
   /** The terminated query's final event-time watermark, as epoch
     * seconds — the boundary below which every session has been emitted
     * exactly once (and above which the batch twin's sessions are the
     * expected open tail).
     */
-  def finalWatermarkSec(
-      q: org.apache.spark.sql.streaming.StreamingQuery): Option[Long] =
+  def finalWatermarkSec(q: StreamingQuery): Option[Long] =
     Option(q.lastProgress)
       .flatMap(p => Option(p.eventTime.get("watermark")))
       .map(s => java.time.Instant.parse(s).getEpochSecond)

@@ -68,6 +68,21 @@ class StreamingSpec extends SparkSpec {
     */
   private def rawEvents: DataFrame = spark.read.parquet(s"$sf0001/events.parquet")
 
+  /** The newest micro-batch a [[Streaming.changelogWriter]] wrote to `path`. */
+  private def maxBatchId(path: String): Int =
+    spark.read.parquet(path).agg(max("batch_id")).head().getInt(0)
+
+  /** RestartProbe's exactly-once check: a compacted changelog equals the
+    * fixture's batch pivot, two-sided — a re-read file inflates its
+    * windows' counts, a skipped one deflates them.
+    */
+  private def assertBatchPivot(state: DataFrame): Unit = {
+    val batch = WindowOps.hoppingPivot(Tables.events(spark, sf0001), eventTypes = Tables.EventTypes)
+    val (onlyState, onlyBatch) = (state.exceptAll(batch).count(), batch.exceptAll(state).count())
+    assert(state.count() == batch.count() && onlyState == 0 && onlyBatch == 0,
+      s"only_state=$onlyState only_batch=$onlyBatch")
+  }
+
   test("eventsStream on a directory of events_NNNNN.parquet shards alone; " +
     "no input at all names the directory and the pattern") {
     // the ts-annotation probe used to read <dir>/events.parquet, which a
@@ -104,12 +119,10 @@ class StreamingSpec extends SparkSpec {
       * `out`; the descriptions of the jobs the query ran.
       */
     def runJobs(df: DataFrame, ck: String, out: String): Seq[String] = {
-      val q = df.writeStream.option("checkpointLocation", ck)
+      val q = Streaming.runToEnd(df.writeStream.option("checkpointLocation", ck)
         .foreachBatch { (b: org.apache.spark.sql.Dataset[Row], _: Long) =>
           b.write.mode("append").parquet(out)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        })
       // one listener queue delivers in order: once a later job is seen,
       // every job of the query has been seen
       val drain = "drain_" + q.runId
@@ -187,14 +200,12 @@ class StreamingSpec extends SparkSpec {
     writeFlat(rawEvents, held, names)
     def arrive(ns: Seq[String]): Unit =
       ns.foreach(n => Files.move(Paths.get(held, n), Paths.get(dir, n)))
-    def runOnce(events: DataFrame): Long = {
-      Streaming.changelogWriter(
+    def runOnce(events: DataFrame): Int = {
+      Streaming.runToEnd(Streaming.changelogWriter(
         WindowOps.hoppingPivot(Streaming.withLateness(events, Streaming.ReplayLateness),
-          eventTypes = Tables.EventTypes), out)
-        .option("checkpointLocation", ck)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start().awaitTermination()
-      spark.read.parquet(out).agg(max("_batch_id")).head().getLong(0)
+          eventTypes = Tables.EventTypes), out)()
+        .option("checkpointLocation", ck))
+      maxBatchId(out)
     }
     arrive(names.take(6))
     // the reference: the reader before the change, rooted at one glob
@@ -202,20 +213,13 @@ class StreamingSpec extends SparkSpec {
     val (schema, normalizeTs) = Tables.eventsReadSpec(spark, sf0001)
     val globbed = normalizeTs(spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "3").parquet(s"$dir/events*.parquet"))
-    assert(runOnce(globbed) == 1L, "the glob reader should commit two micro-batches")
-    assert(runOnce(Streaming.eventsStream(spark, dir, Some(3))) == 1L,
+    assert(runOnce(globbed) == 1, "the glob reader should commit two micro-batches")
+    assert(runOnce(Streaming.eventsStream(spark, dir, Some(3))) == 1,
       "resuming with nothing new must run no batch")
     arrive(names.drop(6))
-    assert(runOnce(Streaming.eventsStream(spark, dir, Some(3))) == 3L,
+    assert(runOnce(Streaming.eventsStream(spark, dir, Some(3))) == 3,
       "the four new files should make two more micro-batches")
-    // RestartProbe's exactly-once check: the compacted changelog equals
-    // the batch pivot, two-sided — a re-read file inflates its windows'
-    // counts, a skipped one deflates them
-    val state = Streaming.readChangelogState(spark, out, Seq("user_id", "w_start"))
-    val batch = WindowOps.hoppingPivot(Tables.events(spark, sf0001), eventTypes = Tables.EventTypes)
-    val (onlyState, onlyBatch) = (state.exceptAll(batch).count(), batch.exceptAll(state).count())
-    assert(state.count() == batch.count() && onlyState == 0 && onlyBatch == 0,
-      s"only_state=$onlyState only_batch=$onlyBatch")
+    assertBatchPivot(Streaming.readChangelogState(spark, out, Seq("user_id", "w_start")))
   }
 
   test("stateful streaming ≡ batch under the RocksDB state-store provider (ST6 parity)") {
@@ -240,14 +244,15 @@ class StreamingSpec extends SparkSpec {
       val q = Streaming.latestByKeyStream(df, "id", Seq("ts"))
         .writeStream.format("memory").queryName("latest_rocksdb")
         .outputMode(OutputMode.Update()).start()
-      input.addData(("a", "v1", 1L), ("b", "x1", 1L))
-      q.processAllAvailable()
-      input.addData(("a", "v2", 2L))
-      q.processAllAvailable()
+      try {
+        input.addData(("a", "v1", 1L), ("b", "x1", 1L))
+        q.processAllAvailable()
+        input.addData(("a", "v2", 2L))
+        q.processAllAvailable()
+      } finally q.stop()
       val state = spark.table("latest_rocksdb")
         .groupBy("id").agg(max_by(col("v"), col("ts")).as("v"))
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      q.stop()
       assert(state == Map("a" -> "v2", "b" -> "x1"))
     } finally
       spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
@@ -290,16 +295,17 @@ class StreamingSpec extends SparkSpec {
     val q = Streaming.latestByKeyStream(df, "id", Seq("ts"))
       .writeStream.format("memory").queryName("latest_tbl")
       .outputMode(OutputMode.Update()).start()
-    input.addData(("a", "v1", 1L), ("b", "x1", 1L))
-    q.processAllAvailable()
-    input.addData(("a", "v2", 2L)) // upsert a
-    q.processAllAvailable()
-    input.addData(("a", "v0", 0L)) // stale update must NOT win
-    q.processAllAvailable()
+    try {
+      input.addData(("a", "v1", 1L), ("b", "x1", 1L))
+      q.processAllAvailable()
+      input.addData(("a", "v2", 2L)) // upsert a
+      q.processAllAvailable()
+      input.addData(("a", "v0", 0L)) // stale update must NOT win
+      q.processAllAvailable()
+    } finally q.stop()
     val state = spark.table("latest_tbl")
       .groupBy("id").agg(max_by(col("v"), col("ts")).as("v"))
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    q.stop()
     assert(state == Map("a" -> "v2", "b" -> "x1"))
   }
 
@@ -339,12 +345,13 @@ class StreamingSpec extends SparkSpec {
     val out = java.nio.file.Files
       .createTempDirectory("cdc_loop_out").toString + "/changelog"
     val q = Streaming.changelogWriter(
-      Streaming.latestByKeyStream(wire, "k", Seq("seq")), out).start()
-    input.addData(snapshot: _*) // micro-batch 0: the initial snapshot
-    q.processAllAvailable()
-    input.addData(incremental: _*) // micro-batch 1: the v1→v2 changelog
-    q.processAllAvailable()
-    q.stop()
+      Streaming.latestByKeyStream(wire, "k", Seq("seq")), out)().start()
+    try {
+      input.addData(snapshot: _*) // micro-batch 0: the initial snapshot
+      q.processAllAvailable()
+      input.addData(incremental: _*) // micro-batch 1: the v1→v2 changelog
+      q.processAllAvailable()
+    } finally q.stop()
 
     // the STORE: compact the Update-mode changelog, retract tombstones
     val state = Streaming.readChangelogState(spark, out, Seq("k"))
@@ -483,14 +490,11 @@ class StreamingSpec extends SparkSpec {
           .option("maxFilesPerTrigger", "1").parquet(s"$stage/*.parquet")
         val scored = graft.SparkEntry.scoredFlagship(spark,
           WindowOps.hoppingPivot(streamed, eventTypes = Tables.EventTypes), sf0001)
-        val q = Streaming.changelogWriter(scored, out)
-          .option("checkpointLocation", ck)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        Streaming.runToEnd(Streaming.changelogWriter(scored, out)()
+          .option("checkpointLocation", ck))
       }
       runOnce()
-      val mid = spark.read.parquet(out).agg(max("_batch_id")).head().getLong(0)
+      val mid = maxBatchId(out)
       assert(mid >= 1, s"expected >= 2 single-file micro-batches, max id $mid")
       // the rest of the corpus "arrives"; restart from the same checkpoint
       new java.io.File(hold).listFiles().foreach { f =>
@@ -498,7 +502,7 @@ class StreamingSpec extends SparkSpec {
           java.nio.file.Paths.get(stage, f.getName))
       }
       runOnce()
-      assert(spark.read.parquet(out).agg(max("_batch_id")).head().getLong(0) > mid,
+      assert(maxBatchId(out) > mid,
         "restart must process the late-arriving files as NEW micro-batches")
       val state = Streaming
         .readChangelogState(spark, out, Seq("user_id", "w_start"))
@@ -518,17 +522,16 @@ class StreamingSpec extends SparkSpec {
     val ck = java.nio.file.Files.createTempDirectory("st7_ck").toString
     val out = java.nio.file.Files.createTempDirectory("st7_out").toString + "/data"
     def runOnce(): Unit = {
-      val q = Streaming.eventsStream(spark, sf0001)
+      // a blind append, not the changelog sink's per-batch overwrite:
+      // a replayed batch must show up here as extra rows
+      Streaming.runToEnd(Streaming.eventsStream(spark, sf0001)
         .select("event_id", "user_id")
         .writeStream
         .option("checkpointLocation", ck)
         .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
         .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
           b.write.mode("append").parquet(out)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        })
     }
     runOnce()
     val n1 = spark.read.parquet(out).count()
@@ -537,17 +540,18 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() == n1)
   }
 
-  test("Update-mode changelog sink: latestByKey over _batch_id recovers upsert state") {
+  test("Update-mode changelog sink: latestByKey over batch_id recovers upsert state") {
     val dir = java.nio.file.Files.createTempDirectory("changelog").toString + "/out"
     val input = MemoryStream[(String, Long)](spark)
     val counts = input.toDF().toDF("user", "v")
       .groupBy("user").agg(count(lit(1)).as("n"))
-    val q = Streaming.changelogWriter(counts, dir).start()
-    input.addData(("a", 1L), ("b", 1L))
-    q.processAllAvailable()
-    input.addData(("a", 2L)) // re-emits a with n=2 in a later batch
-    q.processAllAvailable()
-    q.stop()
+    val q = Streaming.changelogWriter(counts, dir)().start()
+    try {
+      input.addData(("a", 1L), ("b", 1L))
+      q.processAllAvailable()
+      input.addData(("a", 2L)) // re-emits a with n=2 in a later batch
+      q.processAllAvailable()
+    } finally q.stop()
     // the raw sink is a CHANGELOG: key a appears once per emission
     val raw = spark.read.parquet(dir)
     assert(raw.filter(col("user") === "a").count() == 2)
@@ -556,19 +560,68 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(state == Map("a" -> 2L, "b" -> 1L))
 
-    // crash semantics, in-suite: foreachBatch is AT-LEAST-ONCE — after a
-    // mid-batch crash the restarted query re-runs the in-flight batch
-    // and appends its rows AGAIN under the same _batch_id (RestartProbe
-    // demonstrates this under an actual Runtime.halt at sf10). The
-    // compacted view must absorb that replay exactly: duplicate the
-    // last batch's rows verbatim and re-read.
-    val lastId = raw.agg(max("_batch_id")).head().getLong(0)
-    raw.filter(col("_batch_id") === lastId)
-      .write.mode("append").parquet(dir)
+    // the compaction must also absorb rows duplicated within one batch
+    // (a store that received a batch twice): duplicate the last batch's
+    // rows verbatim beside it and re-read
+    val lastId = maxBatchId(dir)
+    raw.filter(col("batch_id") === lastId).drop("batch_id").localCheckpoint()
+      .write.mode("append").parquet(s"$dir/batch_id=$lastId")
     val afterReplay = Streaming.readChangelogState(spark, dir, Seq("user"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(afterReplay == state,
-      s"at-least-once batch replay changed the upsert view: $afterReplay")
+      s"a duplicated batch changed the upsert view: $afterReplay")
+  }
+
+  test("a replayed micro-batch is written once: live trigger with a transform " +
+    "and a checkpoint, last commit lost, restart re-runs the batch") {
+    // foreachBatch is AT-LEAST-ONCE: a crash between a batch's write and
+    // its commit-log entry re-runs the batch on restart (RestartProbe,
+    // under a real Runtime.halt); losing the last commits/<N> file does too
+    val dir = Files.createTempDirectory("replay_in").toString
+    val held = Files.createTempDirectory("replay_held").toString
+    val ck = Files.createTempDirectory("replay_ck").toString
+    val out = Files.createTempDirectory("replay_out").toString + "/changelog"
+    // one file per half: a single rename is atomic, so the running
+    // query sees each half whole and makes exactly one batch of it
+    val halves = shardNames("events", 2)
+    writeFlat(rawEvents, held, halves)
+    def arrive(n: String): Unit = Files.move(Paths.get(held, n), Paths.get(dir, n)): Unit
+    // the transform stamps each batch with its attempt number
+    val attempts = scala.collection.concurrent.TrieMap.empty[Long, Int]
+    def writer() = Streaming.changelogWriter(
+      WindowOps.hoppingPivot(Streaming.eventsStream(spark, dir), eventTypes = Tables.EventTypes),
+      out) { (b, id) =>
+      attempts(id) = attempts.getOrElse(id, 0) + 1
+      b.withColumn("attempt", lit(attempts(id)))
+    }.option("checkpointLocation", ck)
+
+    // live: Spark's default unbounded trigger; the stream is built once
+    // the first half is there (its reader sniffs the first file)
+    arrive(halves(0))
+    val q = writer().start()
+    try {
+      q.processAllAvailable()
+      arrive(halves(1))
+      q.processAllAvailable()
+    } finally q.stop()
+    val last = maxBatchId(out)
+    assert(last == 1 && attempts.values.forall(_ == 1), s"attempts=$attempts")
+    val firstCopy = spark.read.parquet(s"$out/batch_id=$last").drop("attempt")
+      .localCheckpoint()
+
+    val commit = new java.io.File(s"$ck/commits/$last")
+    assert(commit.delete(), s"no commit file $commit")
+    new java.io.File(s"$ck/commits/.$last.crc").delete(): Unit
+    Streaming.runToEnd(writer())
+    assert(attempts(last.toLong) == 2, s"batch $last did not re-run: $attempts")
+
+    val replayed = spark.read.parquet(s"$out/batch_id=$last")
+    assert(replayed.filter(col("attempt") =!= 2).count() == 0,
+      "the first attempt's rows survived beside the replay")
+    assert(replayed.drop("attempt").exceptAll(firstCopy).count() == 0 &&
+      firstCopy.exceptAll(replayed.drop("attempt")).count() == 0, "the replay wrote different rows")
+    assertBatchPivot(
+      Streaming.readChangelogState(spark, out, Seq("user_id", "w_start")).drop("attempt"))
   }
 
   test("mid-stream dimension update enriches subsequent batches " +
@@ -676,15 +729,12 @@ class StreamingSpec extends SparkSpec {
     val stage = java.nio.file.Files.createTempDirectory("stream_ivf_in").toString
     arriving.repartition(4).write.mode("overwrite").parquet(stage)
     graft.Sessions.clearDecisions()
-    val q = spark.readStream.schema(arriving.schema)
+    Streaming.runToEnd(spark.readStream.schema(arriving.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$stage/*.parquet")
       .writeStream
       .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         if (!b.isEmpty) { Similarity.ivfPqAppendAuto(b.toDF(), idx); () }
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      })
     // every arrived vector is in the index, a decision was recorded per
     // batch, and same-distribution ingest never forced a rebuild
     assert(spark.read.parquet(s"$idx/data").count() == emb.count())
@@ -711,13 +761,14 @@ class StreamingSpec extends SparkSpec {
       .writeStream.format("memory").queryName("dedup_tbl")
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()).start()
     val base = 1704067200L
-    input.addData((1L, base, "a"), (2L, base + 1, "b"), (1L, base + 2, "a-dup"))
-    q.processAllAvailable()
-    input.addData((1L, base + 3, "a-dup-2"), (3L, base + 4, "c"))
-    q.processAllAvailable()
+    try {
+      input.addData((1L, base, "a"), (2L, base + 1, "b"), (1L, base + 2, "a-dup"))
+      q.processAllAvailable()
+      input.addData((1L, base + 3, "a-dup-2"), (3L, base + 4, "c"))
+      q.processAllAvailable()
+    } finally q.stop()
     val ids = spark.table("dedup_tbl").select("event_id")
       .collect().map(_.getLong(0)).sorted.toSeq
-    q.stop()
     assert(ids == Seq(1L, 2L, 3L), s"ids=$ids")
   }
 
@@ -851,14 +902,14 @@ class StreamingSpec extends SparkSpec {
       .outputMode(OutputMode.Complete())
       .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("50 milliseconds"))
       .start()
-    input.addData((1L, "a"), (2L, "b"))
-    q.processAllAvailable()
-    assert(spark.table("push_tbl").count() == 2)
-    input.addData((3L, "a")) // the running query picks this up on its own
-    q.processAllAvailable()
-    val a = spark.table("push_tbl").filter(col("k") === "a")
-      .head().getLong(1)
-    q.stop()
+    val a = try {
+      input.addData((1L, "a"), (2L, "b"))
+      q.processAllAvailable()
+      assert(spark.table("push_tbl").count() == 2)
+      input.addData((3L, "a")) // the running query picks this up on its own
+      q.processAllAvailable()
+      spark.table("push_tbl").filter(col("k") === "a").head().getLong(1)
+    } finally q.stop()
     assert(a == 2L, "second batch must update the continuously-served result")
   }
 
@@ -870,31 +921,21 @@ class StreamingSpec extends SparkSpec {
     val q = agg.writeStream.format("memory").queryName("late_tbl")
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Update()).start()
     val base = 1704067200L
-    input.addData((1L, base + 1000, "click")) // establish event-time progress
-    q.processAllAvailable()
-    val before = spark.table("late_tbl")
+    def clicks() = spark.table("late_tbl")
       .filter(col("w_start") === (base - base % 120) && col("user_id") === 1L)
       .select("click_views").collect().map(_.getLong(0))
-    input.addData((1L, base, "click")) // LATE: 1000s behind; no watermark → accepted
-    q.processAllAvailable()
-    val after = spark.table("late_tbl")
-      .filter(col("w_start") === (base - base % 120) && col("user_id") === 1L)
-      .select("click_views").collect().map(_.getLong(0))
-    q.stop()
+    val (before, after) = try {
+      input.addData((1L, base + 1000, "click")) // establish event-time progress
+      q.processAllAvailable()
+      val before = clicks()
+      input.addData((1L, base, "click")) // LATE: 1000s behind; no watermark → accepted
+      q.processAllAvailable()
+      (before, clicks())
+    } finally q.stop()
     // no-watermark Update mode (ksql 5.4 no-grace semantics): the late
     // event lands in its original windows and updated rows re-emit
     assert(before.isEmpty || before.max == 0L)
     assert(after.nonEmpty && after.max == 1L)
-  }
-
-  test("foreachBatch parquet sink materializes exactly the batch answer") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sink").toString + "/out"
-    Streaming.sinkToParquet(
-      Streaming.hoppingPivotStream(spark, sf0001), tmp, OutputMode.Complete())
-    val written = spark.read.parquet(tmp).collect().toSet
-    val batch = WindowOps.hoppingPivot(
-      Tables.events(spark, sf0001), eventTypes = Tables.EventTypes).collect().toSet
-    assert(written == batch)
   }
 
   test("watermarked stream still matches batch when no data is late") {
@@ -924,8 +965,7 @@ class StreamingSpec extends SparkSpec {
     val q1 = Streaming.tokenBudgetStream(df1, budgetTokens = 40L)
       .writeStream.format("memory").queryName("tb_one")
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()).start()
-    in1.addData(docRows(1 to 40): _*)
-    q1.processAllAvailable(); q1.stop()
+    try { in1.addData(docRows(1 to 40): _*); q1.processAllAvailable() } finally q1.stop()
     val streamed = spark.table("tb_one")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSet
     val batch = graft.llm.Sampling.tokenBudgetSample(
@@ -941,10 +981,12 @@ class StreamingSpec extends SparkSpec {
     val q2 = Streaming.tokenBudgetStream(df2, budgetTokens = 12L)
       .writeStream.format("memory").queryName("tb_two")
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()).start()
-    in2.addData(docRows(1 to 10): _*)
-    q2.processAllAvailable()
-    in2.addData(docRows(11 to 20): _*)
-    q2.processAllAvailable(); q2.stop()
+    try {
+      in2.addData(docRows(1 to 10): _*)
+      q2.processAllAvailable()
+      in2.addData(docRows(11 to 20): _*)
+      q2.processAllAvailable()
+    } finally q2.stop()
     val rows2 = spark.table("tb_two")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
     assert(rows2.nonEmpty)
@@ -966,13 +1008,14 @@ class StreamingSpec extends SparkSpec {
 
   test("state-store provider auto-choice: threshold flip, bound estimator, isolated session") {
     import Streaming._
-    // the flip, pinned with explicit parameters so recalibrating the
-    // measured bytes/entry constant can't silently move this test:
-    // need = rows × bytesPerEntry × versions vs heapFraction × heap
-    assert(stateProviderFor(100L, heapBytes = 800L, bytesPerEntry = 2L,
-      retainedVersions = 2, heapFraction = 0.5) == DefaultStateProvider)
-    assert(stateProviderFor(101L, heapBytes = 800L, bytesPerEntry = 2L,
-      retainedVersions = 2, heapFraction = 0.5) == RocksDbStateProvider)
+    // the flip, pinned with an explicit heap and bytes/entry so
+    // recalibrating the measured constant can't silently move this test:
+    // need = rows × bytesPerEntry × RetainedStateVersions (2) vs
+    // StateHeapFraction (0.5) × heap
+    assert(stateProviderFor(100L, heapBytes = 800L, bytesPerEntry = 2L) ==
+      DefaultStateProvider)
+    assert(stateProviderFor(101L, heapBytes = 800L, bytesPerEntry = 2L) ==
+      RocksDbStateProvider)
     // and the decade anchors under the measured default constants
     // (SCALE.md: 5 M entries in-heap wins, ~500 M is RocksDB territory)
     assert(stateProviderFor(5000000L, heapBytes = 32L << 30) == DefaultStateProvider)
@@ -1060,11 +1103,11 @@ class StreamingSpec extends SparkSpec {
     // upsert key across merges) — pin that fact so a Spark behavior
     // change re-opens the changelog-sink design consciously
     val updateAttempt = intercept[org.apache.spark.sql.AnalysisException] {
-      Streaming.sinkChangelog(
+      Streaming.runToEnd(Streaming.changelogWriter(
         WindowOps.sessionAgg(
           Streaming.withLateness(Streaming.eventsStream(spark, sf0001)),
           gap = "30 minutes"),
-        java.nio.file.Files.createTempDirectory("sess_up").toString + "/x")
+        java.nio.file.Files.createTempDirectory("sess_up").toString + "/x")())
     }
     assert(updateAttempt.getMessage.contains("STREAMING_OUTPUT_MODE"))
 
@@ -1072,10 +1115,10 @@ class StreamingSpec extends SparkSpec {
     // the watermark passes its end; the open tail stays in state
     val out = java.nio.file.Files
       .createTempDirectory("sess_ap").toString + "/sessions"
-    val q = Streaming.sinkSessionsAppend(
+    val q = Streaming.runToEnd(Streaming.changelogWriter(
       WindowOps.sessionAgg(
         Streaming.withLateness(Streaming.eventsStream(spark, sf0001), "1 minute"),
-        gap = "30 minutes"), out)
+        gap = "30 minutes"), out, OutputMode.Append())())
     val wm = Streaming.finalWatermarkSec(q).get
     val emitted = spark.read.parquet(out)
       .select("user_id", "session_start", "session_end", "n_events")
@@ -1146,25 +1189,26 @@ class StreamingSpec extends SparkSpec {
       .flatMap(p => Option(p.eventTime.get("watermark")))
       .map(java.time.Instant.parse(_).getEpochSecond)
       .maxOption.getOrElse(0L)
-    input.addData((1L, 36000L))
-    q.processAllAvailable()
-    assert(maxWm == 35400L,
-      s"convention (a) shifted: expected the batch to REPORT the watermark " +
-        s"its own data advanced to (35400), got $maxWm")
-    input.addData((2L, 34200L), (1L, 39600L))
-    q.processAllAvailable()
-    assert(drops == 0L,
-      s"convention (b) shifted: the discriminating event was dropped — " +
-        "the filter no longer uses the PREVIOUS batch's watermark " +
-        "(or admissibility is no longer session-end-based); " +
-        "StreamScale.survivingEvents' wm(bid-1) reconstruction is now wrong")
-    input.addData((3L, 34200L))
-    q.processAllAvailable()
-    assert(drops == 1L,
-      s"expected exactly the re-sent stale event dropped under wm 10:50, " +
-        s"got $drops — a lag longer than one batch would over-keep")
-    q.processAllAvailable()
-    q.stop()
+    try {
+      input.addData((1L, 36000L))
+      q.processAllAvailable()
+      assert(maxWm == 35400L,
+        s"convention (a) shifted: expected the batch to REPORT the watermark " +
+          s"its own data advanced to (35400), got $maxWm")
+      input.addData((2L, 34200L), (1L, 39600L))
+      q.processAllAvailable()
+      assert(drops == 0L,
+        s"convention (b) shifted: the discriminating event was dropped — " +
+          "the filter no longer uses the PREVIOUS batch's watermark " +
+          "(or admissibility is no longer session-end-based); " +
+          "StreamScale.survivingEvents' wm(bid-1) reconstruction is now wrong")
+      input.addData((3L, 34200L))
+      q.processAllAvailable()
+      assert(drops == 1L,
+        s"expected exactly the re-sent stale event dropped under wm 10:50, " +
+          s"got $drops — a lag longer than one batch would over-keep")
+      q.processAllAvailable()
+    } finally q.stop()
     val emitted = spark.table("wm_convention")
       .select("user_id", "session_start", "session_end", "n_events")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))

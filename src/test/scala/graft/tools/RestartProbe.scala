@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener}
 
 import graft.model.Tables
 import graft.operators.WindowOps
@@ -31,8 +31,8 @@ import graft.streaming.Streaming
   * state restore + one batch) and `total_s`, then verifies the
   * compacted changelog equals the batch hopping pivot via two-sided
   * `except` — the at-least-once foreachBatch sink re-runs the
-  * in-flight batch after a crash, and the (key, batch) compaction in
-  * readChangelogState must absorb that replay exactly.
+  * in-flight batch after a crash, and its per-batch overwrite must
+  * leave exactly one copy of that batch.
   */
 object RestartProbe {
 
@@ -57,14 +57,13 @@ object RestartProbe {
     val out = s"$work/changelog"
     // --pipeline=session: crash-recover the Append-mode session sink
     // instead of the pivot changelog. foreachBatch is at-least-once, so
-    // the in-flight batch RE-RUNS after the kill — the changelog sink
-    // absorbs that via latestByKey compaction, but Append-mode sessions
-    // have no compaction key, so sinkSessionsAppend's per-batch
-    // overwrite is what must make the replay idempotent; the two-sided
-    // prefix-closure equality below counts any duplicate. Pass a
+    // the in-flight batch RE-RUNS after the kill, and Append-mode
+    // sessions have no compaction key to hide a duplicate: the sink's
+    // per-batch overwrite alone must make the replay idempotent; the
+    // two-sided prefix-closure equality below counts any duplicate. Pass a
     // TIME-SORTED corpus (StreamScale --session builds
     // target/scaledata/_tsorted_*): sessions need ordered arrival with
-    // the real watermark (Streaming.sinkSessionsAppend scaladoc).
+    // the real watermark (Streaming.changelogWriter scaladoc).
     val sessionPipe = opt("pipeline").contains("session")
     // --pipeline=flagship: crash-recover the full SCORED flagship
     // (pivot → dim/order enrich → predict UDF → changelog), r15 VERDICT
@@ -107,14 +106,11 @@ object RestartProbe {
           eventTypes = Tables.EventTypes)
         if (flagshipPipe) scoredOf(p) else p
       }
-    def startSink(): Unit =
-      if (sessionPipe) { Streaming.sinkSessionsAppend(pivotStream(), out, Some(ck)); () }
-      else {
-        val q = Streaming.changelogWriter(pivotStream(), out)
-          .option("checkpointLocation", ck)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+    def startSink(): Unit = {
+      val mode = if (sessionPipe) OutputMode.Append() else OutputMode.Update()
+      Streaming.runToEnd(Streaming.changelogWriter(pivotStream(), out, mode)()
+        .option("checkpointLocation", ck))
+    }
 
     phase match {
       case "crash" =>

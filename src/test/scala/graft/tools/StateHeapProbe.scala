@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.model.Tables
 import graft.operators.WindowOps
@@ -81,16 +81,10 @@ object StateHeapProbe {
     val t0 = System.nanoTime()
     try {
       // sessions reject Update mode — their production sink is Append
-      // (Streaming.sinkSessionsAppend scaladoc); the pivot keeps the
+      // (Streaming.changelogWriter scaladoc); the pivot keeps the
       // Update-mode changelog
-      val q =
-        if (sessionPipe) Streaming.sinkSessionsAppend(pivot, out)
-        else {
-          val qq = Streaming.changelogWriter(pivot, out)
-            .trigger(Trigger.AvailableNow()).start()
-          qq.awaitTermination()
-          qq
-        }
+      val mode = if (sessionPipe) OutputMode.Append() else OutputMode.Update()
+      val q = Streaming.runToEnd(Streaming.changelogWriter(pivot, out, mode)())
       val secs = (System.nanoTime() - t0) / 1e9
       // PEAK across progresses, not lastProgress: the end-of-batch
       // watermark pass evicts nearly all windows, so the final

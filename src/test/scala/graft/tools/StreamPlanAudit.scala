@@ -2,15 +2,16 @@ package graft.tools
 
 import java.io.ByteArrayOutputStream
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.streaming.Streaming
 
 /** Plan audit for the STREAMING surface — the 15 queries PlanAudit
-  * skips. Each representative pipeline runs AvailableNow into a no-op
-  * foreachBatch sink; afterwards `StreamingQuery.explain()` (the public
-  * API for the last micro-batch's executed plan) is captured and
+  * skips. Each representative pipeline runs AvailableNow into the
+  * engine's changelog sink (a temp directory); afterwards
+  * `StreamingQuery.explain()` (the public API for the last
+  * micro-batch's executed plan) is captured and
   * reduced to the batch counts PLUS the stateful-operator counts that
   * are the streaming scale story: where StateStoreRestore/Save pairs
   * sit, that a stream-static enrich broadcasts per micro-batch rather
@@ -89,21 +90,13 @@ object StreamPlanAudit {
     v.result()
   }
 
-  /** Run the stream to completion on a no-op sink and return the last
-    * micro-batch's executed-plan text via the public explain() API.
+  /** Run the stream to completion into a temp changelog and return the
+    * last micro-batch's executed-plan text via the public explain() API.
     */
   def lastBatchPlan(
       streamed: DataFrame, mode: OutputMode): String = {
-    val q = streamed.writeStream
-      .outputMode(mode)
-      // noop write, not an empty body: Spark 4 validates that
-      // foreachBatch processed every partition (state stores only
-      // commit when their partition runs)
-      .foreachBatch((b: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        b.write.format("noop").mode("append").save())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val out = java.nio.file.Files.createTempDirectory("stream_plan").toString
+    val q = Streaming.runToEnd(Streaming.changelogWriter(streamed, out, mode)())
     val buf = new ByteArrayOutputStream()
     Console.withOut(buf) { q.explain() }
     buf.toString("UTF-8")
