@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-
 import org.apache.spark.sql.SparkSession
 
 /** Shuffle-partition autosizing — DEPLOY.md's third-decade lesson as
@@ -11,8 +9,9 @@ import org.apache.spark.sql.SparkSession
   * pivot) while 256 partitions restored sub-linear scaling with no plan
   * change; and AQE only coalesces DOWN from
   * `coalescePartitions.initialPartitionNum`, never up, so the initial
-  * number must be sized for the data. This helper derives it from
-  * scanned input bytes so the fix happens without a hand-set knob.
+  * number must be sized for the data. [[autosizeFor]] derives it from
+  * each query's scanned input bytes so the fix happens without a
+  * hand-set knob.
   *
   * Also home of [[local]], the one factory every main and test builds its
   * session through.
@@ -48,22 +47,6 @@ object Sessions {
     spark
   }
 
-  /** Total regular-file bytes under `dir` (recursive — a parquet corpus
-    * directory of table subdirs). 0 for a missing path, so callers fall
-    * back to the core-count floor rather than crash on a not-yet-built
-    * fixture.
-    */
-  def inputBytes(dir: String): Long = {
-    val root = Paths.get(dir)
-    if (!Files.exists(root)) 0L
-    else {
-      val stream = Files.walk(root)
-      try stream.filter(Files.isRegularFile(_: Path))
-        .mapToLong(Files.size(_: Path)).sum()
-      finally stream.close()
-    }
-  }
-
   /** Partition count for a corpus: one shuffle task per
     * `targetInputBytesPerTask` of ON-DISK input, floored at the core
     * count (never undersubscribe the cluster) and capped (a runaway
@@ -92,17 +75,6 @@ object Sessions {
         .max(0L).toInt
     fromBytes.max(cores).min(maxPartitions.max(cores))
   }
-
-  /** Size the session's shuffle parallelism for the corpus at `dir`:
-    * sets BOTH `spark.sql.shuffle.partitions` (the non-AQE path and
-    * AQE's fallback when no advisory target applies) and
-    * `spark.sql.adaptive.coalescePartitions.initialPartitionNum` (the
-    * ceiling AQE coalesces down from). Both are runtime-settable confs.
-    * Returns the derived count so mains can log it.
-    */
-  def autosize(spark: SparkSession, dir: String): Int =
-    applyConfs(spark, shufflePartitionsFor(
-      inputBytes(dir), spark.sparkContext.defaultParallelism))
 
   /** The query's SCANNED bytes: the sum of its leaf relations' Catalyst
     * size estimates (file sizes for parquet scans). Free (no job), and

@@ -2339,6 +2339,14 @@ object SparkEntry {
       threshold = 0.3)
   }
 
+  /** Delete a local file tree (a no-op when `x` does not exist) — the
+    * per-process scratch dirs builders reset before re-running.
+    */
+  private def rmTree(x: java.io.File): Unit = {
+    if (x.isDirectory) Option(x.listFiles()).foreach(_.foreach(rmTree))
+    x.delete(): Unit
+  }
+
   /** SMB bucketed-layout join executed under the driver: both sides
     * written bucketed + sorted on the key once (Bucketed.writeBucketed,
     * per-process table names like the qDedupDelta index pattern), then
@@ -2353,13 +2361,9 @@ object SparkEntry {
       "spark.sql.warehouse.dir", "spark-warehouse"))
     val whPath = if (whUri.getScheme == null) whUri.toString
       else java.nio.file.Paths.get(whUri).toString
-    def rm(x: java.io.File): Unit = {
-      if (x.isDirectory) Option(x.listFiles()).foreach(_.foreach(rm))
-      x.delete(): Unit
-    }
     for (t <- Seq(tE, tO)) {
       s.sql(s"DROP TABLE IF EXISTS $t")
-      rm(new java.io.File(whPath, t))
+      rmTree(new java.io.File(whPath, t))
     }
     graft.sources.Bucketed.writeBucketed(
       Tables.events(s, dir).select(col("event_id"), col("user_id")),
@@ -2606,11 +2610,7 @@ object SparkEntry {
     // batch 0, and any higher batch_id directory the first run left
     // would win the compaction with stale rows
     val path = s"${System.getProperty("java.io.tmpdir")}/graft_changelog_pivot_${ProcessHandle.current().pid()}"
-    def rm(x: java.io.File): Unit = {
-      if (x.isDirectory) Option(x.listFiles()).foreach(_.foreach(rm))
-      x.delete(): Unit
-    }
-    rm(new java.io.File(path))
+    rmTree(new java.io.File(path))
     Streaming.runToEnd(
       Streaming.changelogWriter(Streaming.hoppingPivotStream(s, dir), path)())
     Streaming.readChangelogState(s, path, Seq("user_id", "w_start"))

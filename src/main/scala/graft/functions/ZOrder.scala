@@ -363,33 +363,26 @@ object ZOrder {
       .drop(tmpIn, tmpIdx)
   }
 
-  /** Append a batch to a [[zorderWriteRanked]] table under the FROZEN
-    * write-time layout: both dimensions mapped through the stored
-    * anchor boundaries (never re-ranked — re-ranking would silently
-    * shear new files' z space against old files'), z interleaved at
-    * the table's bits, the batch range-partitioned and sorted on z and
-    * written as new files beside the existing ones. Per-batch coarse
-    * cell counts are appended to `_zmeta/appendbuckets`, so the
-    * staleness decision ([[zorderAppendAuto]]) is metadata-only.
-    * Rows with a null in either dimension are dropped, matching the
-    * write. The batch must carry the table's data columns.
+  /** Append a batch to a [[zorderWriteRankedVersioned]] root under the
+    * FROZEN write-time layout: both dimensions mapped through the live
+    * generation's stored anchor boundaries (never re-ranked —
+    * re-ranking would silently shear new files' z space against old
+    * files'), z interleaved at the table's bits, the batch
+    * range-partitioned and sorted on z and written as new files beside
+    * the existing ones, INSIDE the live generation (additive — readers
+    * tolerate new files the same way they do on any parquet table).
+    * Per-batch coarse cell counts are appended to
+    * `_zmeta/appendbuckets`, so the staleness decision
+    * ([[zorderAppendAuto]]) is metadata-only. Rows with a null in
+    * either dimension are dropped, matching the write. The batch must
+    * carry the table's data columns. A flat root is refused before any
+    * write.
     */
   def zorderAppendRanked(batch: DataFrame, path: String): Unit = {
     val spark = batch.sparkSession
-    // generation-versioned root (r18): appends land INSIDE the live
-    // generation (additive — readers tolerate new files the same way
-    // they do on a flat table), and there is no swap state to recover;
-    // flat legacy roots keep the Swap recovery gate.
-    val live =
-      if (graft.sources.DimStore.isVersionedRoot(spark, path))
-        zorderResolve(spark, path)
-      else { zorderRecover(spark, path); path }
-    appendRankedInto(batch, live)
-  }
-
-  private def appendRankedInto(batch: DataFrame, path: String): Unit = {
-    val spark = batch.sparkSession
-    val meta = spark.read.parquet(s"$path/_zmeta/meta").head()
+    requireVersioned(spark, path, "zorderAppendRanked")
+    val live = graft.sources.DimStore.currentPath(spark, path, zComplete)
+    val meta = spark.read.parquet(s"$live/_zmeta/meta").head()
     val (xCol, yCol, bits) =
       (meta.getString(0), meta.getString(1), meta.getInt(2))
     val clean = batch
@@ -403,8 +396,8 @@ object ZOrder {
     // per micro-batch must not accumulate a materialized copy per
     // batch (r16 review)
     val withZ = frozenScaled(
-      frozenScaled(clean, xCol, s"$path/_zmeta/xbounds", bits, "__zx"),
-      yCol, s"$path/_zmeta/ybounds", bits, "__zy")
+      frozenScaled(clean, xCol, s"$live/_zmeta/xbounds", bits, "__zx"),
+      yCol, s"$live/_zmeta/ybounds", bits, "__zy")
       .withColumn("z", zValue2(col("__zx"), col("__zy"), bits))
       .drop("__zx", "__zy")
       .cache()
@@ -420,9 +413,9 @@ object ZOrder {
       // accumulation).
       withZ.count()
       val files = filesFor(graft.Sessions.statsBytes(withZ), 1)
-      val fs = new org.apache.hadoop.fs.Path(path)
+      val fs = new org.apache.hadoop.fs.Path(live)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def partCount: Long = fs.listStatus(new org.apache.hadoop.fs.Path(path))
+      def partCount: Long = fs.listStatus(new org.apache.hadoop.fs.Path(live))
         .count(_.getPath.getName.endsWith(".parquet")).toLong
       val before = partCount
       // DATA FIRST, ledgers second: a crash between the two leaves the
@@ -431,10 +424,10 @@ object ZOrder {
       // rows that never landed and could fire a spurious full rebuild
       withZ.repartitionByRange(files, col("z"))
         .sortWithinPartitions(col("z"))
-        .write.mode("append").parquet(path)
+        .write.mode("append").parquet(live)
       withZ.groupBy(zCell(col("z"), bits).as("zb"))
         .agg(count(lit(1)).as("rows"))
-        .coalesce(1).write.mode("append").parquet(s"$path/_zmeta/appendbuckets")
+        .coalesce(1).write.mode("append").parquet(s"$live/_zmeta/appendbuckets")
       // one ledger row per append: how many files this batch ACTUALLY
       // added — a before/after root listing, not the requested
       // partition count, so empty range partitions (which write no
@@ -442,7 +435,7 @@ object ZOrder {
       // axis (see zorderAppendAuto's maxAppendFiles; r16 ADVICE)
       import spark.implicits._
       Seq(math.max(1L, partCount - before)).toDF("files")
-        .coalesce(1).write.mode("append").parquet(s"$path/_zmeta/appendlog")
+        .coalesce(1).write.mode("append").parquet(s"$live/_zmeta/appendlog")
     } finally { withZ.unpersist(); () }
   }
 
@@ -487,7 +480,9 @@ object ZOrder {
     * table-size-independent latency bound —
     * while rebuild cost grows WITH table size, which at 100 TB pushes
     * the crossover toward higher thresholds (read-heavy medium tables:
-    * pass 8). Returns "append" | "rebuild".
+    * pass 8). A fired rebuild is [[zorderRebuildVersioned]]: the next
+    * generation, published beside the live one. Returns "append" |
+    * "rebuild".
     */
   def zorderAppendAuto(
       batch: DataFrame,
@@ -497,14 +492,12 @@ object ZOrder {
       minShare: Double = 0.05,
       maxAppendFiles: Long = 16L): String = {
     val spark = batch.sparkSession
+    requireVersioned(spark, path, "zorderAppendAuto")
     // resolve the generation ONCE: the append below lands in it, the
     // ledgers are read from it, and a fired rebuild publishes the NEXT
-    // generation (flat legacy roots: live == path, rebuild swaps)
-    val versioned = graft.sources.DimStore.isVersionedRoot(spark, path)
-    val live = if (versioned) zorderResolve(spark, path) else path
-    def rebuildNow(): Unit =
-      if (versioned) { zorderRebuildVersioned(spark, path); () }
-      else zorderRebuildRanked(spark, path)
+    // generation
+    val live = graft.sources.DimStore.currentPath(spark, path, zComplete)
+    def rebuildNow(): Unit = { zorderRebuildVersioned(spark, path); () }
     zorderAppendRanked(batch, path)
     // ledgers may not exist yet when every append so far was empty
     // (empty batches are no-ops and write nothing)
@@ -555,67 +548,22 @@ object ZOrder {
     if (rebuild) { rebuildNow(); "rebuild" } else "append"
   }
 
-  /** Side-build completeness gate for [[graft.Swap.commit]]: a rebuilt
-    * z-order table carries its `_zmeta` and at least one data file.
-    */
-  private val zIntegrity: (org.apache.hadoop.fs.FileSystem, String) => Boolean =
-    (fs, tmp) =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$tmp/_zmeta")) &&
-        fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-          .exists(_.getPath.getName.endsWith(".parquet"))
-
-  /** Re-cluster a ranked z-order table from its CURRENT rows: fresh
-    * rank maps over base + everything appended, re-written beside the
-    * live table (`$path/_rebuild`) and swapped in via the engine-wide
-    * [[graft.Swap]] protocol (crash-safe at every phase boundary, NOT
-    * reader-atomic — readers needing a consistent view quiesce for the
-    * swap window; see Swap's concurrency contract). NO checkpoint of
-    * `current`: materializing the FULL table to executor storage is
-    * exactly what cannot happen at 100 TB — the side build's scans
-    * re-read the live files, all of which complete before any rename
-    * moves them (r16 review).
-    */
-  def zorderRebuildRanked(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    require(!graft.sources.DimStore.isVersionedRoot(spark, path),
-      s"$path is a generation-versioned root — use zorderRebuildVersioned " +
-        "(reader-atomic); the in-place swap is for flat legacy tables")
-    zorderRecover(spark, path)
-    val meta = spark.read.parquet(s"$path/_zmeta/meta").head()
-    val (xCol, yCol, bits) =
-      (meta.getString(0), meta.getString(1), meta.getInt(2))
-    val current = spark.read.parquet(path).drop("z")
-    zorderWriteRanked(current, xCol, yCol, s"$path/_rebuild", bits)
-    graft.Swap.commit(spark, path, zIntegrity, "zorderRebuildRanked")
-  }
-
-  /** Crash recovery for [[zorderRebuildRanked]]'s swap — the shared
-    * [[graft.Swap.recover]] with the z-order integrity gate. Run by
-    * every append/rebuild entry; MAINTENANCE-ONLY and single-writer by
-    * contract (see [[graft.Swap]] for the full phase matrix and the
-    * reader-quiesce requirement).
-    */
-  def zorderRecover(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    graft.Swap.recover(spark, path, zIntegrity, "zorderRecover")
-
-  // ——— GENERATION-VERSIONED roots: reader-ATOMIC rebuilds (r17 #7) ———
+  // ——— GENERATION-VERSIONED roots: the one maintained layout (r17 #7) ———
   //
-  // The swap protocol's one contractual weakness is the reader-quiesce
-  // window (displace/move-in briefly exposes a partial file set). A
-  // versioned root removes it STRUCTURALLY, the DimStore way: each
-  // rebuild publishes a complete new GENERATION (`$root/vNNNNN/…` with
-  // its own `_zmeta`) beside the live one and flips `$root/_CURRENT`;
-  // readers resolve the pointer at plan time and scan one immutable
-  // generation end to end, so a rebuild landing mid-query changes the
-  // NEXT query, never a running scan. Appends stay IN-PLACE inside the
-  // live generation — additive file writes readers tolerate exactly as
-  // on a flat table — so the append cadence and ledgers are untouched,
-  // and every generation's fresh `_zmeta` resets them on rebuild for
-  // free. Cost vs the swap: the superseded generation lingers until
-  // [[graft.sources.DimStore.prune]] (a retention window for pinned
-  // readers — bounded extra disk, the price of atomicity). Flat legacy
-  // roots keep the Swap path; every entry point takes either layout.
+  // A maintained z-order table is a versioned root, the DimStore way:
+  // each rebuild publishes a complete new GENERATION (`$root/vNNNNN/…`
+  // with its own `_zmeta`) beside the live one and flips
+  // `$root/_CURRENT`; readers resolve the pointer at plan time and scan
+  // one immutable generation end to end, so a rebuild landing mid-query
+  // changes the NEXT query, never a running scan, and no reader ever
+  // quiesces. Appends stay IN-PLACE inside the live generation —
+  // additive file writes readers tolerate exactly as on any parquet
+  // table — and every generation's fresh `_zmeta` resets the append
+  // ledgers on rebuild for free. Cost: the superseded generation
+  // lingers until [[graft.sources.DimStore.prune]] (a retention window
+  // for pinned readers — bounded extra disk, the price of atomicity).
+  // A flat [[zorderWriteRanked]] table still reads through
+  // [[zorderResolve]], but it is write-once: append and rebuild refuse it.
 
   /** z-order completeness as a [[graft.sources.DimStore.Complete]]:
     * a servable generation has its `_zmeta`, ≥ 1 data file, AND the
@@ -628,11 +576,24 @@ object ZOrder {
     * Build closures stamp the marker after ALL `_zmeta` children land.
     */
   private val zComplete: graft.sources.DimStore.Complete =
-    graft.sources.DimStore.stamped((fs, dir) => zIntegrity(fs, dir.toString))
+    graft.sources.DimStore.stamped((fs, dir) =>
+      fs.exists(new org.apache.hadoop.fs.Path(dir, "_zmeta")) &&
+        fs.listStatus(dir).exists(_.getPath.getName.endsWith(".parquet")))
+
+  /** The maintenance entry points' first step: a flat table — including
+    * one an older binary left mid-swap — is refused here, before any
+    * write, with the one-time migration named.
+    */
+  private def requireVersioned(
+      spark: org.apache.spark.sql.SparkSession, root: String, op: String): Unit =
+    require(graft.sources.DimStore.isVersionedRoot(spark, root),
+      s"$op: $root is not a generation-versioned root — append and rebuild " +
+        "maintain versioned roots only; migrate a flat z-order table once " +
+        "by writing its rows (without `z`) with zorderWriteRankedVersioned")
 
   /** The live data directory of a z-order root: versioned roots
     * resolve through `_CURRENT` (mid-flip crash falls back to the
-    * highest complete generation), flat legacy tables resolve to
+    * highest complete generation), flat write-once tables resolve to
     * themselves. Call PER QUERY (plan-time resolution = per-scan
     * immutability).
     */
@@ -673,9 +634,10 @@ object ZOrder {
     val meta = spark.read.parquet(s"$live/_zmeta/meta").head()
     val (xCol, yCol, bits) =
       (meta.getString(0), meta.getString(1), meta.getInt(2))
-    // NO checkpoint of `current`, same as the flat rebuild: the build's
-    // scans re-read the live generation's files, which are immutable —
-    // here not even a later rename can touch them before prune
+    // NO checkpoint of `current`: materializing the FULL table to
+    // executor storage is exactly what cannot happen at 100 TB, and the
+    // build's scans re-read the live generation's files, which nothing
+    // renames or deletes before prune
     val current = spark.read.parquet(live).drop("z")
     val out = graft.sources.DimStore.publishWith(spark, root, zComplete) {
       dir =>

@@ -76,23 +76,20 @@ object LangModel {
     * aggregate and the ratio projection prune different columns, so
     * exchange reuse does not fire — measured, not assumed). At demo
     * scale the redundant scan is cheaper than a checkpoint (A/B'd at
-    * sf0.1: 0.52 s vs 0.63 s); when corpus tokenization dominates, set
-    * `reuseCounts = true` to materialize the vocab-sized counts once.
+    * sf0.1: 0.52 s vs 0.63 s).
     */
   def dsirWeights(
       docs: DataFrame,
       targetPred: Column,
       textCol: String = "text",
       idCol: String = "doc_id",
-      addK: Double = 0.5,
-      reuseCounts: Boolean = false): DataFrame = {
+      addK: Double = 0.5): DataFrame = {
     require(addK > 0.0, s"addK must be positive for unseen-token mass, got $addK")
-    val counts0 = docs
+    val counts = docs
       .select(targetPred.as("is_tgt"), explode(TextOps.tokens(col(textCol))).as("token"))
       .groupBy(col("token"))
       .agg(count(lit(1)).as("c_all"),
         sum(when(col("is_tgt"), 1L).otherwise(0L)).as("c_tgt"))
-    val counts = if (reuseCounts) counts0.localCheckpoint() else counts0
     val totals = counts.agg(
       sum(col("c_all")).cast("double").as("t_all"),
       sum(col("c_tgt")).cast("double").as("t_tgt"),

@@ -575,8 +575,8 @@ object Similarity {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
     // per-cell row counts AT BUILD TIME — the staleness baseline
     // [[ivfPqAppendAuto]] diffs against (footer-only scan: cell is the
-    // partition column, count needs no data pages). Older indexes
-    // without this file degrade to "never rebuild", documented there.
+    // partition column, count needs no data pages). A versioned
+    // generation without it is incomplete, so it is never appended to.
     spark.read.parquet(s"$path/data").groupBy("cell").count()
       .withColumnRenamed("count", "base_rows")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/basecells")
@@ -594,8 +594,11 @@ object Similarity {
     * appended row is exactly what the original build would have written
     * for that vector. Distribution drift is handled by
     * [[ivfPqAppendAuto]], which measures a staleness signal per ingest
-    * and triggers [[ivfPqRebuildIndex]] from it — caller knowledge
+    * and triggers [[ivfPqRebuildVersioned]] from it — caller knowledge
     * ("rebuild periodically") promoted to engine behavior (r15).
+    * The index is a [[ivfPqWriteIndexVersioned]] root; rows land
+    * INSIDE its live generation (additive). A flat index is refused
+    * before any write.
     */
   def ivfPqAppendIndex(
       newVecs: DataFrame,
@@ -603,37 +606,23 @@ object Similarity {
       vecCol: String = "embedding",
       idCol: String = "vec_id"): Unit = {
     val spark = newVecs.sparkSession
-    // generation-versioned root (r18): appends land INSIDE the live
-    // generation (additive) and there is no swap state to recover;
-    // flat legacy roots keep the Swap recovery gate.
-    val live =
-      if (graft.sources.DimStore.isVersionedRoot(spark, path))
-        ivfResolve(spark, path)
-      else { ivfPqRecoverIndex(spark, path); path }
-    appendIndexInto(newVecs, live, vecCol, idCol)
-  }
-
-  private def appendIndexInto(
-      newVecs: DataFrame,
-      path: String,
-      vecCol: String,
-      idCol: String): Unit = {
-    val spark = newVecs.sparkSession
+    requireVersioned(spark, path, "ivfPqAppendIndex")
+    val live = graft.sources.DimStore.currentPath(spark, path, ivfComplete)
     // empty batches are a no-op: a ledger row for them would let idle
     // micro-batches alone drive the compaction trigger into a rebuild
     if (newVecs.isEmpty) return
-    val meta = spark.read.parquet(s"$path/codebook").collect().head
+    val meta = spark.read.parquet(s"$live/codebook").collect().head
     val m = meta.getInt(0)
     val ksub = meta.getInt(1)
     val cb = meta.getSeq[Double](2).toArray
-    val centroids = spark.read.parquet(s"$path/centroids")
+    val centroids = spark.read.parquet(s"$live/centroids")
     val assigned = probeCells(newVecs, centroids, 1, vecCol, idCol)
       .select(col("query_id").as("neighbor_id"), col("qv").as("cv"),
         col("qn").as("cn"), col("cell"))
     val coded = pqEncode(newVecs, cb, m, ksub, vecCol, idCol)
     assigned.join(coded, "neighbor_id")
       .select(col("neighbor_id"), col("cv"), col("cn"), col("codes"), col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(s"$path/data")
+      .write.mode("append").partitionBy("cell").parquet(s"$live/data")
     // one ledger row per append: each batch adds ≥1 file to every cell
     // it touches, so per-cell file count — and probed-cell open cost —
     // grows linearly with append COUNT regardless of volume (the same
@@ -641,45 +630,19 @@ object Similarity {
     // table). ivfPqAppendAuto's maxAppendBatches trigger reads this.
     import spark.implicits._
     Seq(1).toDF("batches")
-      .coalesce(1).write.mode("append").parquet(s"$path/appendlog")
+      .coalesce(1).write.mode("append").parquet(s"$live/appendlog")
   }
 
-  private val ivfPqSubdirs = Seq("data", "centroids", "codebook", "basecells")
-
-  /** Side-build completeness gate for [[graft.Swap.commit]]: a rebuilt
-    * IVF+PQ index carries all four index subdirs.
-    */
-  private val ivfIntegrity
-      : (org.apache.hadoop.fs.FileSystem, String) => Boolean =
-    (fs, tmp) => ivfPqSubdirs.forall(sub =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$tmp/$sub")))
-
-  /** Crash recovery for a [[ivfPqRebuildIndex]] swap interrupted at any
-    * point — the shared [[graft.Swap.recover]] with the IVF integrity
-    * gate (r17 unified the two hand-rolled layer protocols; see Swap
-    * for the phase matrix). Run by the MAINTENANCE entry points
-    * (append/rebuild), never by readers: maintenance is single-writer
-    * by contract (DEPLOY.md) — recovery's rollback branch deletes a
-    * pre-commit `_rebuild`, indistinguishable from another maintainer's
-    * build IN FLIGHT (r16 review finding), and readers
-    * ([[ivfPqQueryIndex]]) never mutate. The old protocol's explicit
-    * `appendlog` ledger reset is now the displace-all phase itself:
-    * the live ledger moves aside with every other child and the
-    * rebuild carries none, so a post-swap index always starts at batch
-    * count 0 — same invariant, one protocol.
-    */
-  def ivfPqRecoverIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    graft.Swap.recover(spark, path, ivfIntegrity, "ivfPqRecoverIndex")
-
-  // ——— GENERATION-VERSIONED roots: reader-ATOMIC rebuilds (r17 #7) ———
-  // Same adoption as the z-order layer (see ZOrder's section + the
+  // ——— GENERATION-VERSIONED roots: the one maintained layout (r17 #7) ———
+  // Same layout as the z-order layer (see ZOrder's section + the
   // DEPLOY.md decision page): rebuilds publish a complete new
   // generation (`$root/vNNNNN/{data,centroids,codebook,basecells}`)
   // and flip `$root/_CURRENT`; readers resolve the pointer at plan
   // time, so no quiesce window exists. Appends stay in-place inside
   // the live generation; a fresh generation carries no `appendlog`,
-  // so the compaction ledger resets on rebuild for free.
+  // so the compaction ledger resets on rebuild for free. A flat
+  // [[ivfPqWriteIndex]] index still answers queries through
+  // [[ivfResolve]], but it is write-once: append and rebuild refuse it.
 
   /** IVF+PQ completeness as a [[graft.sources.DimStore.Complete]]:
     * all four index subdirs present AND the generation's terminal
@@ -694,11 +657,24 @@ object Similarity {
     * not directory existence.
     */
   private val ivfComplete: graft.sources.DimStore.Complete =
-    graft.sources.DimStore.stamped((fs, dir) => ivfIntegrity(fs, dir.toString))
+    graft.sources.DimStore.stamped((fs, dir) =>
+      Seq("data", "centroids", "codebook", "basecells")
+        .forall(sub => fs.exists(new org.apache.hadoop.fs.Path(dir, sub))))
+
+  /** The maintenance entry points' first step: a flat index — including
+    * one an older binary left mid-swap — is refused here, before any
+    * write, with the one-time migration named.
+    */
+  private def requireVersioned(
+      spark: org.apache.spark.sql.SparkSession, root: String, op: String): Unit =
+    require(graft.sources.DimStore.isVersionedRoot(spark, root),
+      s"$op: $root is not a generation-versioned root — append and rebuild " +
+        "maintain versioned roots only; migrate a flat IVF+PQ index once " +
+        "by writing its corpus with ivfPqWriteIndexVersioned")
 
   /** The live index directory of an IVF root: versioned roots resolve
     * through `_CURRENT` (mid-flip crash falls back to the highest
-    * complete generation), flat legacy indexes resolve to themselves.
+    * complete generation), flat write-once indexes resolve to themselves.
     */
   def ivfResolve(
       spark: org.apache.spark.sql.SparkSession, root: String): String =
@@ -754,38 +730,6 @@ object Similarity {
     out
   }
 
-  /** Rebuild a written IVF+PQ index from its own stored vectors —
-    * refit the coarse quantizer and PQ codebook on the CURRENT corpus
-    * (base + everything appended), write side-by-side under
-    * `$path/_rebuild`, then swap in via the engine-wide [[graft.Swap]]
-    * protocol: crash-safe at every phase boundary (SwapProtocolSpec
-    * kills at each), NOT reader-atomic — a reader racing the swap can
-    * see a mixed or momentarily partial layout, so readers needing a
-    * consistent view quiesce for the swap window (Swap's concurrency
-    * contract; reader-side recovery removed r16: it raced live
-    * builds). Parameters (nlist, m, ksub) are recovered from the
-    * stored index so a rebuild cannot drift from the build; `seed`
-    * defaults to the build default.
-    */
-  def ivfPqRebuildIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      seed: Long = 42L): Unit = {
-    require(!graft.sources.DimStore.isVersionedRoot(spark, path),
-      s"$path is a generation-versioned root — use ivfPqRebuildVersioned " +
-        "(reader-atomic); the in-place swap is for flat legacy indexes")
-    ivfPqRecoverIndex(spark, path)
-    val meta = spark.read.parquet(s"$path/codebook").collect().head
-    val m = meta.getInt(0)
-    val ksub = meta.getInt(1)
-    val nlist = spark.read.parquet(s"$path/centroids").count().toInt
-    val corpus = spark.read.parquet(s"$path/data")
-      .select(col("neighbor_id"), col("cv"))
-    ivfPqWriteIndex(corpus, s"$path/_rebuild", nlist = nlist, m = m,
-      ksub = ksub, seed = seed, vecCol = "cv", idCol = "neighbor_id")
-    graft.Swap.commit(spark, path, ivfIntegrity, "ivfPqRebuildIndex")
-  }
-
   /** Append + staleness decision — the EIGHTH adaptive element.
     * [[ivfPqAppendIndex]] encodes new rows against the FROZEN coarse
     * centroids and codebook; that is exactly right while the appended
@@ -825,10 +769,6 @@ object Similarity {
     * (below `minShare` the damage is confined to a sliver of queries
     * and one more ingest crosses the floor anyway).
     *
-    * Indexes written before `basecells` existed degrade to "append,
-    * never rebuild" (signal unmeasurable), surfaced in the decision
-    * log.
-    *
     * Third trigger (r16), the COMPACTION axis: every append batch adds
     * ≥1 file to each cell it touches, so probed-cell file count — and
     * per-query open cost — grows linearly with append COUNT regardless
@@ -836,8 +776,9 @@ object Similarity {
     * of tiny batches (the z-order sibling measured 10→25 % box-scan
     * decay over 16 one-file appends; same mechanism, SCALE.md r16).
     * The `appendlog` ledger counts batches; `maxAppendBatches` (16)
-    * fires a compacting rebuild and both rebuild paths reset it.
-    * Returns the choice ("append" | "rebuild" | "append(nometa)").
+    * fires a compacting rebuild, whose fresh generation resets it.
+    * A fired rebuild is [[ivfPqRebuildVersioned]].
+    * Returns the choice ("append" | "rebuild").
     */
   def ivfPqAppendAuto(
       newVecs: DataFrame,
@@ -850,14 +791,12 @@ object Similarity {
       idCol: String = "vec_id",
       maxAppendBatches: Long = 16L): String = {
     val spark = newVecs.sparkSession
+    requireVersioned(spark, path, "ivfPqAppendAuto")
     // resolve the generation ONCE: the append lands in it, the ledgers
     // are read from it, and a fired rebuild publishes the NEXT
-    // generation (flat legacy roots: live == path, rebuild swaps)
-    val versioned = graft.sources.DimStore.isVersionedRoot(spark, path)
-    val live = if (versioned) ivfResolve(spark, path) else path
-    def rebuildNow(): Unit =
-      if (versioned) { ivfPqRebuildVersioned(spark, path, seed); () }
-      else ivfPqRebuildIndex(spark, path, seed)
+    // generation
+    val live = graft.sources.DimStore.currentPath(spark, path, ivfComplete)
+    def rebuildNow(): Unit = { ivfPqRebuildVersioned(spark, path, seed); () }
     ivfPqAppendIndex(newVecs, path, vecCol, idCol)
     // compaction axis (r16, mirrors zorderAppendAuto's third trigger):
     // per-cell file count grows ~1 per append batch — rebuild compacts
@@ -871,13 +810,6 @@ object Similarity {
         maxAppendBatches.toDouble, s"rebuild(batches $batches)")
       rebuildNow()
       return "rebuild"
-    }
-    val baseP = new org.apache.hadoop.fs.Path(s"$live/basecells")
-    val fs = baseP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(baseP)) {
-      graft.Sessions.recordDecision("ivfPqAppendAuto", -1.0, rebuildThreshold,
-        "append(nometa)")
-      return "append(nometa)"
     }
     val base = spark.read.parquet(s"$live/basecells")
     val nlist = base.count()
@@ -925,8 +857,8 @@ object Similarity {
       vecCol: String = "embedding",
       idCol: String = "vec_id"): DataFrame = {
     val spark = queries.sparkSession
-    // NO recovery here: readers must not mutate (see ivfPqRecoverIndex);
-    // versioned roots resolve to the live generation at plan time (r18)
+    // readers never mutate the index; versioned roots resolve to the
+    // live generation at plan time (r18), flat indexes to themselves
     val indexPath = ivfResolve(spark, root)
     val meta = spark.read.parquet(s"$indexPath/codebook").collect().head
     val m = meta.getInt(0)

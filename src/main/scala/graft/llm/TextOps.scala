@@ -184,22 +184,19 @@ object TextOps {
     * otherwise). The counts subtree feeds four consumers whose pruned
     * projections defeat exchange reuse, so physically the corpus
     * aggregates more than once; at demo scale that beats a checkpoint
-    * (same A/B finding as [[LangModel.dsirWeights]]) — set
-    * `reuseCounts = true` when corpus tokenization dominates.
+    * (same A/B finding as [[LangModel.dsirWeights]]).
     */
   def domainKeyness(
       docs: DataFrame,
       groupCol: String = "lang",
       k: Int = 5,
       minCount: Long = 1L,
-      textCol: String = "text",
-      reuseCounts: Boolean = false): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     require(k >= 1, s"domainKeyness: k >= 1, got $k")
     import org.apache.spark.sql.expressions.Window
-    val counts0 = docs
+    val counts = docs
       .select(col(groupCol).as("grp"), explode(tokens(col(textCol))).as("term"))
       .groupBy(col("grp"), col("term")).agg(count(lit(1)).as("c_in"))
-    val counts = if (reuseCounts) counts0.localCheckpoint() else counts0
     val termTot = counts.groupBy(col("term")).agg(sum(col("c_in")).as("c_all"))
     val grpTot = counts.groupBy(col("grp")).agg(sum(col("c_in")).as("tot_in"))
     val grand = grpTot.agg(sum(col("tot_in")).as("_t"))

@@ -7,11 +7,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * are UPDATED while streams join against them (the reference's
   * CDC-maintained `users` TABLE, README.md:29,56-58).
   *
-  * The in-place build-beside swap ([[graft.Swap]]) is crash-safe but
-  * not reader-ATOMIC: during its displace/move-in window a concurrent
-  * scan can see a partial — even momentarily empty — file set, so
-  * swapped layouts require quiesced readers (DEPLOY.md). A
-  * continuously-enriching stream (`Streaming.sinkChangelogWith`
+  * Rebuilding a flat directory IN PLACE (move the old files aside, move
+  * the new ones in) can be made crash-safe but never reader-ATOMIC:
+  * during the displace/move-in window a concurrent scan can see a
+  * partial — even momentarily empty — file set, so such layouts
+  * require quiesced readers. A continuously-enriching stream (`Streaming.sinkChangelogWith`
   * re-reading its dims every micro-batch — the live-TABLE posture the
   * r16/r17 dim-update legs measured to sf100) cannot quiesce. This
   * store removes the window structurally instead of contractually:
@@ -32,10 +32,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * scale; at 100 TB the flip is one small-file rename regardless of
   * table size, and version dirs are exactly the "write v2 beside v1,
   * flip a pointer" discipline DEPLOY.md prescribes — now a primitive
-  * instead of a convention.
+  * instead of a convention. It is also the ONE maintenance protocol of
+  * the engine's on-disk indexes: z-order tables and IVF+PQ indexes are
+  * appended to and rebuilt only as versioned roots ([[publishWith]]
+  * with the layer's own completeness gate).
   *
-  * Crash matrix (single WRITER — same contract as [[graft.Swap]],
-  * now runtime-ENFORCED by the [[WriterLock]] tripwire; readers are
+  * Crash matrix (single WRITER — the maintenance contract of every
+  * layer on this store, runtime-ENFORCED by the [[WriterLock]] tripwire; readers are
   * always safe). A writer that died at ANY point leaves the lock
   * behind, so the re-publish throws until the dead writer is
   * confirmed and the lock cleared — detection, deliberately, over
@@ -133,9 +136,10 @@ object DimStore {
   }
 
   /** Whether `root` is a versioned store at all: a `_CURRENT` marker or
-    * any vNNNNN child. Lets layers accept BOTH layouts (a flat legacy
-    * table resolves to itself; a versioned root resolves through the
-    * pointer).
+    * any vNNNNN child. Layer READERS accept both layouts (a flat
+    * write-once table resolves to itself; a versioned root resolves
+    * through the pointer); layer MAINTENANCE (append, rebuild) requires
+    * a versioned root and refuses a flat one before any write.
     */
   def isVersionedRoot(spark: SparkSession, root: String): Boolean = {
     val fs = fsOf(spark, root)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 class SessionsSpec extends SparkSpec {
 
   test("local: the shared session carries the session policy") {
@@ -37,15 +35,6 @@ class SessionsSpec extends SparkSpec {
     assert(Sessions.shufflePartitionsFor(Long.MaxValue, cores = 32) == 65536)
   }
 
-  test("inputBytes: recursive file sizes; 0 for a missing dir") {
-    val dir = Files.createTempDirectory("graft_sessions")
-    Files.write(dir.resolve("a.bin"), Array.fill[Byte](1000)(1))
-    val sub = Files.createDirectory(dir.resolve("t.parquet"))
-    Files.write(sub.resolve("part-0"), Array.fill[Byte](2345)(2))
-    assert(Sessions.inputBytes(dir.toString) == 3345L)
-    assert(Sessions.inputBytes(dir.resolve("nope").toString) == 0L)
-  }
-
   test("statsBytes/autosizeFor: per-query sizing from plan stats") {
     val ev = graft.model.Tables.events(spark, sf0001)
     val b = Sessions.statsBytes(ev)
@@ -56,6 +45,8 @@ class SessionsSpec extends SparkSpec {
       // tiny input → floored at the core count
       assert(n == spark.sparkContext.defaultParallelism)
       assert(spark.conf.get("spark.sql.shuffle.partitions") == n.toString)
+      assert(spark.conf.get(
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum") == n.toString)
       // a synthetic big input would scale: the pure function backs it
       assert(Sessions.shufflePartitionsFor(5000L << 20, 32) == 625)
     } finally {
@@ -103,23 +94,6 @@ class SessionsSpec extends SparkSpec {
     // the graft SQL surface survives the clone (registries are
     // session-scoped; isolatedSession re-registers)
     assert(!sA.sql("SELECT simhash64('a b c d e') AS s").head().isNullAt(0))
-  }
-
-  test("autosize: both confs land on the derived count") {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val dir = Files.createTempDirectory("graft_autosize")
-    Files.write(dir.resolve("x"), Array.fill[Byte](100)(3))
-    try {
-      val n = Sessions.autosize(spark, dir.toString)
-      // tiny corpus → floored at defaultParallelism
-      assert(n == spark.sparkContext.defaultParallelism)
-      assert(spark.conf.get("spark.sql.shuffle.partitions") == n.toString)
-      assert(spark.conf.get(
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum") == n.toString)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      spark.conf.unset("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
-    }
   }
 
   test("decision ledger: adaptive picks are recorded, bounded, clearable") {

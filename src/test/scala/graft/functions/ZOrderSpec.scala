@@ -211,16 +211,16 @@ class ZOrderSpec extends SparkSpec {
       (rnd.nextInt(width).toLong + lo, rnd.nextInt(width).toLong + lo))
       .toDF("x", "y")
     val dir = java.nio.file.Files.createTempDirectory("zapp").toString + "/t"
-    ZOrder.zorderWriteRanked(batch(20000, 0, 4096), "x", "y", dir,
-      bits = 16, numFiles = 8)
-    val baseRows = spark.read.parquet(dir).count()
+    val gen = ZOrder.zorderWriteRankedVersioned(batch(20000, 0, 4096),
+      "x", "y", dir, bits = 16, numFiles = 8)
+    val baseRows = spark.read.parquet(gen).count()
     ZOrder.zorderAppendRanked(batch(2000, 0, 4096), dir)
-    assert(spark.read.parquet(dir).count() == baseRows + 2000)
+    assert(spark.read.parquet(gen).count() == baseRows + 2000)
     // appended cells ⊆ occupied base cells (same distribution): the
     // appendbuckets ledger against basebuckets
-    val baseCells = spark.read.parquet(s"$dir/_zmeta/basebuckets")
+    val baseCells = spark.read.parquet(s"$gen/_zmeta/basebuckets")
       .select("zb").collect().map(_.getLong(0)).toSet
-    val appCells = spark.read.parquet(s"$dir/_zmeta/appendbuckets")
+    val appCells = spark.read.parquet(s"$gen/_zmeta/appendbuckets")
       .select("zb").collect().map(_.getLong(0)).toSet
     assert(appCells.subsetOf(baseCells),
       s"same-dist append left the base cells: ${appCells -- baseCells}")
@@ -238,7 +238,7 @@ class ZOrderSpec extends SparkSpec {
       (rnd.nextInt(width).toLong + lo, rnd.nextInt(width).toLong + lo))
       .toDF("x", "y")
     val dir = java.nio.file.Files.createTempDirectory("zdrift").toString + "/t"
-    ZOrder.zorderWriteRanked(batch(20000, 0, 4096), "x", "y", dir,
+    ZOrder.zorderWriteRankedVersioned(batch(20000, 0, 4096), "x", "y", dir,
       bits = 16, numFiles = 8)
     // drifted: a region far past the build max — every value clamps to
     // the top frozen anchor
@@ -250,7 +250,8 @@ class ZOrderSpec extends SparkSpec {
     // post-rebuild: per-file z ranges disjoint again (the pruning
     // guarantee) over the FULL corpus incl. the drifted region, and the
     // append ledger reset
-    val ranges = spark.read.parquet(dir)
+    val live = ZOrder.zorderResolve(spark, dir)
+    val ranges = spark.read.parquet(live)
       .groupBy(input_file_name().as("f"))
       .agg(min("z").as("lo"), max("z").as("hi"))
       .collect().map(r => (r.getAs[Long]("lo"), r.getAs[Long]("hi")))
@@ -261,11 +262,11 @@ class ZOrderSpec extends SparkSpec {
       ranges.sliding(2).foreach { case Array((_, hi1), (lo2, _)) =>
         assert(hi1 <= lo2, s"overlapping file z-ranges after rebuild: $hi1 > $lo2")
       }
-    assert(spark.read.parquet(dir).count() == 24000L)
-    val fs = new org.apache.hadoop.fs.Path(dir)
+    assert(spark.read.parquet(live).count() == 24000L)
+    val fs = new org.apache.hadoop.fs.Path(live)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_zmeta/appendbuckets")) ||
-      spark.read.parquet(s"$dir/_zmeta/appendbuckets").count() == 0,
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$live/_zmeta/appendbuckets")) ||
+      spark.read.parquet(s"$live/_zmeta/appendbuckets").count() == 0,
       "rebuild must reset the append ledger")
     // a same-dist append AFTER the rebuild sees the refreshed anchors
     assert(ZOrder.zorderAppendAuto(batch(1000, 1L << 30, 4096), dir) == "append")
@@ -277,7 +278,7 @@ class ZOrderSpec extends SparkSpec {
     def batch(n: Int) = Seq.fill(n)(
       (rnd.nextInt(4096).toLong, rnd.nextInt(4096).toLong)).toDF("x", "y")
     val dir = java.nio.file.Files.createTempDirectory("zdrip").toString + "/t"
-    ZOrder.zorderWriteRanked(batch(20000), "x", "y", dir, bits = 16,
+    ZOrder.zorderWriteRankedVersioned(batch(20000), "x", "y", dir, bits = 16,
       numFiles = 8)
     graft.Sessions.clearDecisions()
     // each tiny batch writes ONE file spanning the full z range; the
@@ -289,7 +290,8 @@ class ZOrderSpec extends SparkSpec {
     assert(picks.last == "rebuild", s"file-count trigger never fired: $picks")
     val d = graft.Sessions.decisions.filter(_.op == "zorderAppendAuto").last
     assert(d.choice.startsWith("rebuild(files"), d.choice)
-    assert(spark.read.parquet(dir).count() == 20000L + 16 * 500)
+    assert(spark.read.parquet(ZOrder.zorderResolve(spark, dir)).count() ==
+      20000L + 16 * 500)
     // the rebuild reset the ledgers: the next tiny append is file 1/16
     assert(ZOrder.zorderAppendAuto(batch(500), dir) == "append")
   }
@@ -300,27 +302,29 @@ class ZOrderSpec extends SparkSpec {
     def batch(n: Int) = Seq.fill(n)(
       (rnd.nextInt(1024).toLong, rnd.nextInt(1024).toLong)).toDF("x", "y")
     val dir = java.nio.file.Files.createTempDirectory("zedge").toString + "/t"
-    ZOrder.zorderWriteRanked(batch(2000), "x", "y", dir, bits = 16, numFiles = 4)
-    val before = spark.read.parquet(dir).count()
+    val gen = ZOrder.zorderWriteRankedVersioned(batch(2000), "x", "y", dir,
+      bits = 16, numFiles = 4)
+    val before = spark.read.parquet(gen).count()
     // empty batch: appends nothing, the auto has nothing to decide
     ZOrder.zorderAppendRanked(batch(0), dir)
-    assert(spark.read.parquet(dir).count() == before)
+    assert(spark.read.parquet(gen).count() == before)
     assert(ZOrder.zorderAppendAuto(batch(0), dir) == "append")
     // all-null batch: dropped entirely (matches the write's non-null rule)
     val nulls = Seq.fill(5)((Option.empty[Long], Option.empty[Long]))
       .toDF("x", "y")
     ZOrder.zorderAppendRanked(nulls, dir)
-    assert(spark.read.parquet(dir).count() == before)
+    assert(spark.read.parquet(gen).count() == before)
     // single-distinct-value dimension: one anchor, constant scaled —
     // the frozenScaled < 2-boundary path
     val dir2 = java.nio.file.Files.createTempDirectory("zedge1").toString + "/t"
     val const = spark.range(500).selectExpr("7L as x", "id as y")
-    ZOrder.zorderWriteRanked(const, "x", "y", dir2, bits = 16, numFiles = 2)
+    val gen2 = ZOrder.zorderWriteRankedVersioned(const, "x", "y", dir2,
+      bits = 16, numFiles = 2)
     ZOrder.zorderAppendRanked(
       spark.range(50).selectExpr("9L as x", "(id + 1000) as y"), dir2)
-    assert(spark.read.parquet(dir2).count() == 550)
+    assert(spark.read.parquet(gen2).count() == 550)
     // appended x=9 clamps to the single x anchor; y maps normally
-    assert(spark.read.parquet(dir2).filter(col("x") === 9).count() == 50)
+    assert(spark.read.parquet(gen2).filter(col("x") === 9).count() == 50)
   }
 
   test("append sizing: an RDD-backed batch with NO leaf stats writes " +
@@ -334,66 +338,47 @@ class ZOrderSpec extends SparkSpec {
     def rows(n: Int) = Seq.fill(n)(
       (rnd.nextInt(1024).toLong, rnd.nextInt(1024).toLong)).toDF("x", "y")
     val dir = java.nio.file.Files.createTempDirectory("zrdd").toString + "/t"
-    ZOrder.zorderWriteRanked(rows(2000), "x", "y", dir, bits = 16, numFiles = 4)
+    val gen = ZOrder.zorderWriteRankedVersioned(rows(2000), "x", "y", dir,
+      bits = 16, numFiles = 4)
     val base = rows(300)
     val rddBacked = spark.createDataFrame(base.rdd, base.schema) // stats-less leaf
     assert(rddBacked.queryExecution.optimizedPlan.collectLeaves()
       .exists(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]))
     ZOrder.zorderAppendRanked(rddBacked, dir)
-    val logged = spark.read.parquet(s"$dir/_zmeta/appendlog")
+    val logged = spark.read.parquet(s"$gen/_zmeta/appendlog")
       .agg(max(col("files"))).head().getLong(0)
     assert(logged <= 4,
       s"stats-less batch logged $logged files — sentinel leaked into sizing")
-    assert(spark.read.parquet(dir).count() == 2300)
+    assert(spark.read.parquet(gen).count() == 2300)
     // and the compaction trigger is NOT poisoned: the next auto appends
     val more = rows(200)
     assert(ZOrder.zorderAppendAuto(
       spark.createDataFrame(more.rdd, more.schema), dir) == "append")
   }
 
-  test("zorderRecover: a swap interrupted at any crash point yields a " +
-    "consistent table (forward past _COMMIT, back before it)") {
+  test("append and auto-rebuild refuse a flat root before any write, " +
+    "naming the versioned writer") {
     val rnd = new scala.util.Random(31)
     def batch(n: Int) = Seq.fill(n)(
       (rnd.nextInt(2048).toLong, rnd.nextInt(2048).toLong)).toDF("x", "y")
-    def fsp(s: String) = new org.apache.hadoop.fs.Path(s)
-    val fs = fsp("/tmp").getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = java.nio.file.Files.createTempDirectory("zrec").toString + "/t"
+    val dir = java.nio.file.Files.createTempDirectory("zflat").toString + "/t"
     ZOrder.zorderWriteRanked(batch(5000), "x", "y", dir, bits = 16, numFiles = 4)
-    def content(p: String): Seq[(Long, Long)] =
-      spark.read.parquet(p).select("x", "y").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val live = content(dir)
-
-    // crash A: side build complete + committed, swap not started — the
-    // next open must roll forward to the rebuilt layout with same rows
-    ZOrder.zorderWriteRanked(spark.read.parquet(dir).drop("z"),
-      "x", "y", s"$dir/_rebuild", bits = 16, numFiles = 4)
-    fs.create(fsp(s"$dir/_rebuild/_COMMIT"), true).close()
-    ZOrder.zorderRecover(spark, dir)
-    assert(!fs.exists(fsp(s"$dir/_rebuild")) && !fs.exists(fsp(s"$dir/_old")))
-    assert(content(dir) == live, "roll-forward must preserve every row")
-
-    // crash B: mid-phase-1 (some files moved aside, _CLEARED not yet
-    // written) — recovery finishes clearing then swaps in
-    ZOrder.zorderWriteRanked(spark.read.parquet(dir).drop("z"),
-      "x", "y", s"$dir/_rebuild", bits = 16, numFiles = 4)
-    fs.create(fsp(s"$dir/_rebuild/_COMMIT"), true).close()
-    fs.mkdirs(fsp(s"$dir/_old"))
-    val firstPart = fs.listStatus(fsp(dir))
-      .map(_.getPath.getName).filter(_.endsWith(".parquet")).min
-    fs.rename(fsp(s"$dir/$firstPart"), fsp(s"$dir/_old/$firstPart"))
-    ZOrder.zorderRecover(spark, dir)
-    assert(content(dir) == live)
-    assert(!fs.exists(fsp(s"$dir/_rebuild")) && !fs.exists(fsp(s"$dir/_old")))
-
-    // crash C: build died pre-commit — partial _rebuild discarded, live
-    // table untouched
-    fs.mkdirs(fsp(s"$dir/_rebuild"))
-    fs.create(fsp(s"$dir/_rebuild/part-junk.parquet"), true).close()
-    ZOrder.zorderRecover(spark, dir)
-    assert(!fs.exists(fsp(s"$dir/_rebuild")))
-    assert(content(dir) == live)
+    // the same refusal covers a flat root an older binary left mid-swap
+    val swapped = java.nio.file.Files.createTempDirectory("zflatswap").toString + "/t"
+    ZOrder.zorderWriteRanked(batch(500), "x", "y", swapped, bits = 16, numFiles = 2)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(swapped, "_rebuild"))
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(swapped, "_rebuild", "_COMMIT"))
+    for (root <- Seq(dir, swapped)) {
+      val before = treeListing(root)
+      val errs = Seq(
+        intercept[IllegalArgumentException](ZOrder.zorderAppendRanked(batch(100), root)),
+        intercept[IllegalArgumentException](ZOrder.zorderAppendAuto(batch(100), root)))
+      errs.foreach(e => assert(e.getMessage.contains("zorderWriteRankedVersioned"),
+        e.getMessage))
+      assert(treeListing(root) == before, s"a refused call wrote under $root")
+    }
+    // readers are unchanged: a flat table resolves to itself
+    assert(ZOrder.zorderResolve(spark, dir) == dir)
   }
 
   test("numFiles=0 derives file count from leaf stats at 128 MiB/file") {
@@ -420,7 +405,7 @@ class ZOrderSpec extends SparkSpec {
     assert(g1.endsWith("/v00001"))
     assert(ZOrder.zorderResolve(spark, root) == g1)
     assert(spark.read.parquet(g1).count() == 20000)
-    // appends land INSIDE the live generation, same entry point as flat
+    // appends land INSIDE the live generation
     ZOrder.zorderAppendRanked(batch(2000), root)
     assert(spark.read.parquet(ZOrder.zorderResolve(spark, root))
       .count() == 22000)
@@ -443,11 +428,6 @@ class ZOrderSpec extends SparkSpec {
       ranges.sliding(2).foreach { case Array((_, hi1), (lo2, _)) =>
         assert(hi1 <= lo2, s"overlapping z-ranges in new generation")
       }
-    // the in-place swap entry refuses versioned roots
-    val e = intercept[IllegalArgumentException] {
-      ZOrder.zorderRebuildRanked(spark, root)
-    }
-    assert(e.getMessage.contains("zorderRebuildVersioned"))
     // retention: prune to 1 retires the superseded generation
     graft.sources.DimStore.prune(spark, root, keep = 1)
     assert(!new java.io.File(g1).exists(), "pruned generation must be gone")
@@ -480,9 +460,9 @@ class ZOrderSpec extends SparkSpec {
 
   test("versioned root: a reader RACING rebuilds never sees a partial " +
     "layout — the atomicity claim under actual concurrency") {
-    // the exact scenario the in-place swap contractually cannot survive
+    // the exact scenario an in-place rebuild cannot survive
     // (displace/move-in exposes a partial, momentarily empty file set —
-    // Swap's scaladoc): a reader loop resolving + scanning while
+    // DimStore's scaladoc): a reader loop resolving + scanning while
     // rebuilds land under it. With generation dirs every resolve pins
     // one immutable directory, and keep=2 retention outlives any scan
     // that started within the previous rebuild cycle.
@@ -531,7 +511,7 @@ class ZOrderSpec extends SparkSpec {
       root, bits = 16, numFiles = 8)
     // a rebuild killed mid-build: data landed, _zmeta never written —
     // _SUCCESS exists (parquet wrote it) but the LAYER completeness
-    // (zIntegrity) correctly rejects the gutted generation
+    // (zComplete) correctly rejects the gutted generation
     batch(10).write.parquet(s"$root/v00002")
     assert(ZOrder.zorderResolve(spark, root) == g1,
       "a generation without _zmeta must never be served")
@@ -560,7 +540,7 @@ class ZOrderSpec extends SparkSpec {
       root, bits = 16, numFiles = 4)
     // the crash state the r18 ADVICE named: data parquet landed and
     // `_zmeta` exists (meta written, xbounds/ybounds/basebuckets jobs
-    // never finished) — zIntegrity alone would pass this, and appends
+    // never finished) — the structural check alone would pass this, and appends
     // against it would fail on the missing sidecars
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -263,24 +263,25 @@ class SimilaritySpec extends SparkSpec {
 
     // same-distribution ingest: signal ≈ share, stays below threshold
     val p1 = java.nio.file.Files.createTempDirectory("ivfauto1").toString + "/idx"
-    Similarity.ivfPqWriteIndex(base, p1, nlist = 16, m = 16, ksub = 8)
+    val g1 = Similarity.ivfPqWriteIndexVersioned(base, p1, nlist = 16, m = 16, ksub = 8)
     assert(Similarity.ivfPqAppendAuto(gen(400L, 1000000L, 0), p1) == "append")
     val d1 = graft.Sessions.decisions.last
     assert(d1.op == "ivfPqAppendAuto" && d1.estimate < 2.0)
 
-    // pre-basecells index (older format): signal unmeasurable, surfaced
+    // an index without its basecells baseline (the pre-r15 format) is
+    // no complete generation: maintenance refuses it, never appends blind
     val fs = new org.apache.hadoop.fs.Path(p1)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$p1/basecells"), true)
-    assert(Similarity.ivfPqAppendAuto(
-      gen(10L, 3000000L, 0), p1) == "append(nometa)")
+    fs.delete(new org.apache.hadoop.fs.Path(s"$g1/basecells"), true)
+    intercept[IllegalArgumentException](
+      Similarity.ivfPqAppendAuto(gen(10L, 3000000L, 0), p1))
 
     // drifted ingest: signal = share × cell skew crosses the threshold,
     // the auto rebuilds, and the rebuilt index's recall on the drifted
     // region restores to scratch-build parity (stale would be ~4× lower
     // — SCALE.md "Round 15: IVF+PQ append staleness")
     val p2 = java.nio.file.Files.createTempDirectory("ivfauto2").toString + "/idx"
-    Similarity.ivfPqWriteIndex(base, p2, nlist = 16, m = 16, ksub = 8)
+    Similarity.ivfPqWriteIndexVersioned(base, p2, nlist = 16, m = 16, ksub = 8)
     val drifted = gen(500L, 2000000L, 32)
     assert(Similarity.ivfPqAppendAuto(drifted, p2) == "rebuild")
     val d2 = graft.Sessions.decisions.last
@@ -291,7 +292,7 @@ class SimilaritySpec extends SparkSpec {
     // signature (same-dist skew is multinomially bounded ~1.4) —
     // measured under-fire case from the probe's 10x base
     val p4 = java.nio.file.Files.createTempDirectory("ivfauto4").toString + "/idx"
-    Similarity.ivfPqWriteIndex(base, p4, nlist = 16, m = 16, ksub = 8)
+    Similarity.ivfPqWriteIndexVersioned(base, p4, nlist = 16, m = 16, ksub = 8)
     assert(Similarity.ivfPqAppendAuto(gen(100L, 4000000L, 32), p4) == "rebuild")
     val d4 = graft.Sessions.decisions.last
     assert(d4.estimate < 2.0 && d4.choice.startsWith("rebuild(skew"),
@@ -348,14 +349,14 @@ class SimilaritySpec extends SparkSpec {
     val base = emb.filter($"vec_id" % 2 === 0)
     val batch = emb.filter($"vec_id" % 2 === 1)
     val path = java.nio.file.Files.createTempDirectory("ivfpq_append").toString
-    Similarity.ivfPqWriteIndex(base, path, nlist = 8, m = 16, ksub = 8)
-    val before = spark.read.parquet(s"$path/data").count()
+    val gen = Similarity.ivfPqWriteIndexVersioned(base, path, nlist = 8, m = 16, ksub = 8)
+    val before = spark.read.parquet(s"$gen/data").count()
     Similarity.ivfPqAppendIndex(batch, path)
-    val data = spark.read.parquet(s"$path/data")
+    val data = spark.read.parquet(s"$gen/data")
     assert(data.count() == before + batch.count(), "append adds exactly the batch")
     // appended codes are exactly what the stored codebook produces — no
     // retraining happened
-    val meta = spark.read.parquet(s"$path/codebook").collect().head
+    val meta = spark.read.parquet(s"$gen/codebook").collect().head
     val expect = Similarity.pqEncode(batch, meta.getSeq[Double](2).toArray,
       meta.getInt(0), meta.getInt(1)).collect()
       .map(r => r.getAs[Long]("neighbor_id") -> r.getSeq[Int](1)).toMap
@@ -385,7 +386,7 @@ class SimilaritySpec extends SparkSpec {
         array(dims: _*).as("embedding")).localCheckpoint()
     }
     val p = java.nio.file.Files.createTempDirectory("ivfdrip").toString + "/idx"
-    Similarity.ivfPqWriteIndex(gen(1000L, 0L), p, nlist = 8, m = 16, ksub = 8)
+    Similarity.ivfPqWriteIndexVersioned(gen(1000L, 0L), p, nlist = 8, m = 16, ksub = 8)
     graft.Sessions.clearDecisions()
     // 20-row same-dist batches: drift signal cold, batch count climbs
     val picks = (1 to 16).map(i =>
@@ -396,79 +397,31 @@ class SimilaritySpec extends SparkSpec {
     val d = graft.Sessions.decisions.filter(_.op == "ivfPqAppendAuto").last
     assert(d.choice.startsWith("rebuild(batches"), d.choice)
     // the rebuild compacted base + appends and reset the ledger
-    assert(spark.read.parquet(s"$p/data").count() == 1000L + 16 * 20)
+    assert(spark.read.parquet(s"${Similarity.ivfResolve(spark, p)}/data")
+      .count() == 1000L + 16 * 20)
     assert(Similarity.ivfPqAppendAuto(gen(20L, 9900000L), p) == "append")
   }
 
-  test("ivfPqRecoverIndex: a swap interrupted at ANY crash point recovers " +
-    "to a fully consistent index (r15 ADVICE)") {
+  test("append and auto-rebuild refuse a flat index before any write, " +
+    "naming the versioned writer") {
     val emb = Tables.embeddings(spark, sf0001)
     val base = emb.filter($"vec_id" % 2 === 0)
     val batch = emb.filter($"vec_id" % 2 === 1)
+    val path = java.nio.file.Files.createTempDirectory("ivfflat").toString + "/idx"
+    Similarity.ivfPqWriteIndex(base, path, nlist = 8, m = 16, ksub = 8)
     val q = emb.filter($"vec_id" < 5).localCheckpoint()
-    def fsp(s: String) = new org.apache.hadoop.fs.Path(s)
-    val fs = fsp("/tmp").getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def mkIndex(tag: String): String = {
-      val p = java.nio.file.Files.createTempDirectory(tag).toString + "/idx"
-      Similarity.ivfPqWriteIndex(base, p, nlist = 8, m = 16, ksub = 8)
-      Similarity.ivfPqAppendIndex(batch, p)
-      p
-    }
-    def results(p: String): Set[(Long, Long)] =
-      Similarity.ivfPqQueryIndex(q, p, k = 5, nprobe = 4, rerankFactor = 6)
-        .collect()
-        .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
-
-    // expected post-rebuild answer: a clean rebuild on an identical twin
-    // (writes and appends are seed-deterministic, so the twin IS the
-    // same index byte-for-byte in content terms)
-    val twin = mkIndex("ivfrec_twin")
-    Similarity.ivfPqRebuildIndex(spark, twin)
-    val rebuilt = results(twin)
-
-    // crash point A: side build COMPLETE (_COMMIT written), swap halted
-    // mid-DISPLACEMENT — data already moved aside into _old, the other
-    // subdirs still live, _CLEARED not yet written (unified graft.Swap
-    // protocol, r17). Recovery must finish displacing, then roll
-    // FORWARD to exactly the rebuilt index.
-    val pA = mkIndex("ivfrec_a")
-    val metaA = spark.read.parquet(s"$pA/codebook").collect().head
-    Similarity.ivfPqWriteIndex(
-      spark.read.parquet(s"$pA/data").select($"neighbor_id", $"cv"),
-      s"$pA/_rebuild", nlist = 8, m = metaA.getInt(0), ksub = metaA.getInt(1),
-      vecCol = "cv", idCol = "neighbor_id")
-    fs.create(fsp(s"$pA/_rebuild/_COMMIT"), true).close()
-    fs.mkdirs(fsp(s"$pA/_old"))
-    fs.rename(fsp(s"$pA/data"), fsp(s"$pA/_old/data"))
-    // readers never mutate (r16): healing happens at the next
-    // MAINTENANCE entry — invoke recovery the way an append would
-    Similarity.ivfPqRecoverIndex(spark, pA)
-    assert(results(pA) == rebuilt, "mid-swap crash must roll forward")
-    assert(!fs.exists(fsp(s"$pA/_rebuild")) && !fs.exists(fsp(s"$pA/_old")))
-
-    // crash point B: the side BUILD died before _COMMIT — live index
-    // untouched; recovery rolls back (deletes the partial build)
-    val pB = mkIndex("ivfrec_b")
-    val live = results(pB)
-    fs.mkdirs(fsp(s"$pB/_rebuild/data"))
-    fs.create(fsp(s"$pB/_rebuild/data/part-junk.parquet"), true).close()
-    Similarity.ivfPqRecoverIndex(spark, pB)
-    assert(!fs.exists(fsp(s"$pB/_rebuild")))
-    assert(results(pB) == live, "pre-commit crash must leave the live index")
-
-    // crash point C: swap finished, only the _old cleanup was lost —
-    // displacement completed, so _CLEARED is present (an _old WITHOUT
-    // it is the pre-r17 legacy signature recover now refuses, r18)
-    fs.mkdirs(fsp(s"$pB/_old/centroids"))
-    fs.create(fsp(s"$pB/_old/_CLEARED"), true).close()
-    Similarity.ivfPqRecoverIndex(spark, pB)
-    assert(!fs.exists(fsp(s"$pB/_old")))
-    assert(results(pB) == live)
-
-    // and a REAL uninterrupted rebuild leaves no markers behind
-    Similarity.ivfPqRebuildIndex(spark, pB)
-    assert(!fs.exists(fsp(s"$pB/_rebuild")) && !fs.exists(fsp(s"$pB/_old")))
-    assert(results(pB) == rebuilt)
+    def answer = Similarity.ivfPqQueryIndex(q, path, k = 5, nprobe = 4)
+      .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
+    val answered = answer
+    val before = treeListing(path)
+    val errs = Seq(
+      intercept[IllegalArgumentException](Similarity.ivfPqAppendIndex(batch, path)),
+      intercept[IllegalArgumentException](Similarity.ivfPqAppendAuto(batch, path)))
+    errs.foreach(e => assert(e.getMessage.contains("ivfPqWriteIndexVersioned"),
+      e.getMessage))
+    assert(treeListing(path) == before, "a refused call wrote into the index")
+    // readers are unchanged: the write-once flat index still answers
+    assert(answered.nonEmpty && answer == answered)
   }
 
   test("centroidCosine: in-group vectors score high, a planted outlier scores lowest") {
@@ -649,11 +602,6 @@ class SimilaritySpec extends SparkSpec {
     // content it held at supersession (base + both appends — appends
     // mutate the LIVE generation; immutability starts at supersession)
     assert(spark.read.parquet(s"$g1/data").count() == 1700)
-    // the in-place swap entry refuses versioned roots
-    val e = intercept[IllegalArgumentException] {
-      Similarity.ivfPqRebuildIndex(spark, root)
-    }
-    assert(e.getMessage.contains("ivfPqRebuildVersioned"))
     // the rebuilt generation answers queries through the same root path
     val out2 = Similarity.ivfPqQueryIndex(q, root, k = 3, nprobe = 4)
     assert(out2.count() == 12)

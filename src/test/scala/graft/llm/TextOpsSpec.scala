@@ -328,9 +328,6 @@ class TextOpsSpec extends SparkSpec {
       .findAllMatchIn(plan).map(_.group(1)).toList
     assert(winSpecs.nonEmpty && winSpecs.forall(_.contains("grp")),
       s"keyness window must partition by group:\n$plan")
-    // the reuseCounts scale path is relation-identical
-    val ckpt = TextOps.domainKeyness(df, groupCol = "lang", k = 5, reuseCounts = true)
-    assert(ckpt.exceptAll(TextOps.domainKeyness(df, groupCol = "lang", k = 5)).isEmpty)
   }
 
   test("corpusReport: exact per-source counts, dup rate, shares") {

@@ -402,14 +402,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("llm text ops run unchanged over a stream (shared-expression principle)") {
-    val docsSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("lang", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("source", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("n_chars", org.apache.spark.sql.types.LongType)))
-    val docsStream = spark.readStream.schema(docsSchema)
-      .parquet(s"$sf0001/documents*.parquet")
+    val docsStream = Streaming.documentsStream(spark, sf0001)
     val streamed = Streaming.runToMemory(
       spark, graft.llm.TextOps.piiScrub(docsStream), OutputMode.Append())
       .collect().toSet
@@ -487,7 +480,7 @@ class StreamingSpec extends SparkSpec {
 
       def runOnce(): Unit = {
         val streamed = spark.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$stage/*.parquet")
+          .option("maxFilesPerTrigger", "1").parquet(stage)
         val scored = graft.SparkEntry.scoredFlagship(spark,
           WindowOps.hoppingPivot(streamed, eventTypes = Tables.EventTypes), sf0001)
         Streaming.runToEnd(Streaming.changelogWriter(scored, out)()
@@ -646,7 +639,7 @@ class StreamingSpec extends SparkSpec {
 
     @volatile var dimPath = s"$dimsDir/v1"
     val streamed = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$stage/*.parquet")
+      .option("maxFilesPerTrigger", "1").parquet(stage)
     val pivot = WindowOps.hoppingPivot(streamed, eventTypes = Tables.EventTypes)
     Streaming.sinkChangelogWith(pivot, out) { (b, id) =>
       // the dim read resolves NOW — this is the whole mechanism
@@ -725,19 +718,19 @@ class StreamingSpec extends SparkSpec {
     val base = emb.filter($"vec_id" % 2 === 0)
     val arriving = emb.filter($"vec_id" % 2 === 1)
     val idx = java.nio.file.Files.createTempDirectory("stream_ivf").toString + "/idx"
-    Similarity.ivfPqWriteIndex(base, idx, nlist = 8, m = 16, ksub = 8)
+    val gen = Similarity.ivfPqWriteIndexVersioned(base, idx, nlist = 8, m = 16, ksub = 8)
     val stage = java.nio.file.Files.createTempDirectory("stream_ivf_in").toString
     arriving.repartition(4).write.mode("overwrite").parquet(stage)
     graft.Sessions.clearDecisions()
     Streaming.runToEnd(spark.readStream.schema(arriving.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$stage/*.parquet")
+      .option("maxFilesPerTrigger", "1").parquet(stage)
       .writeStream
       .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         if (!b.isEmpty) { Similarity.ivfPqAppendAuto(b.toDF(), idx); () }
       })
     // every arrived vector is in the index, a decision was recorded per
     // batch, and same-distribution ingest never forced a rebuild
-    assert(spark.read.parquet(s"$idx/data").count() == emb.count())
+    assert(spark.read.parquet(s"$gen/data").count() == emb.count())
     val ds = graft.Sessions.decisions.filter(_.op == "ivfPqAppendAuto")
     assert(ds.size >= 4 && ds.forall(_.choice == "append"), ds.map(_.choice))
     // the maintained index answers queries over old AND new vectors
@@ -852,7 +845,7 @@ class StreamingSpec extends SparkSpec {
     val streamed = spark.readStream
       .schema(ev.schema)
       .option("maxFilesPerTrigger", "1")
-      .parquet(s"$dir/*.parquet")
+      .parquet(dir)
     val out = Streaming.runToMemory(spark,
       WindowOps.hoppingPivot(streamed, eventTypes = Tables.EventTypes))
       .collect().toSet
@@ -885,7 +878,7 @@ class StreamingSpec extends SparkSpec {
         org.apache.spark.sql.types.StructField("op",
           org.apache.spark.sql.types.StringType))))
       .option("maxFilesPerTrigger", "1")
-      .parquet(s"$dir/*.parquet")
+      .parquet(dir)
     val out = Streaming.runToMemory(spark, Streaming.signedOrderAgg(streamed))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     assert(out == Map(1L -> (1L, 30.0)),
