@@ -44,81 +44,32 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"
     val reg = tempRegistry()
-    Trainer.trainAndRegister(spark, dir, reg, "Bot Detector", useCv = false)
-    Scorer.registerPredictUdf(spark, reg.rootDir, preload = Seq("Bot Detector"))
+    Trainer.trainAndRegister(spark, dir, reg, useCv = false)
+    Scorer.registerPredictUdf(spark, reg.rootDir, preload = Seq(Trainer.ModelName))
     scoredFlagship(spark,
       WindowOps.hoppingPivot(Tables.events(spark, dir), eventTypes = ET), dir)
   }
 
-  /** Shared README.md:56-70 tail — enrich windowed features with user
-    * dims + order counts and score in-query with the predict UDF. The
-    * SAME expression serves the batch flagship ([[entry]]) and the
-    * streaming flagship (q_stream_flagship): the incremental-query
-    * principle, with the dims/nbOrders sides static (broadcast per
-    * micro-batch in streaming).
+  /** Shared README.md:56-70 tail — the model's own feature relation
+    * scored in-query with the predict UDF. The SAME expression serves
+    * the batch flagship ([[entry]]) and the streaming flagship
+    * (q_stream_flagship): the incremental-query principle.
     */
   private[graft] def scoredFlagship(
       spark: SparkSession, feats: DataFrame, dir: String): DataFrame =
-    scoredFlagshipWith(feats,
-      flagshipDims(spark, dir), flagshipOrderCounts(spark, dir))
+    Trainer.withPrediction(Trainer.featureRelation(spark, feats, dir))
 
-  /** The two STATIC relations the flagship enriches with, exposed so a
-    * long-running streaming deployment can MATERIALIZE them once
-    * (write to parquet, read back) instead of re-aggregating orders
-    * inside every micro-batch — Spark re-executes a stream-static
-    * join's static side per batch, so at sf100 the inline form would
-    * re-group 150 M orders rows on each of the replay's micro-batches
-    * while the materialized form re-reads a 15 M-row aggregate
-    * (StreamScale's flagship leg measures the materialized posture,
-    * which is also the reference's: its ksql enrich reads TABLES, not
-    * re-aggregations).
-    */
+  // forwards for callers that materialize the static sides once
   private[graft] def flagshipDims(spark: SparkSession, dir: String): DataFrame =
-    Tables.customer(spark, dir)
-      .join(broadcast(Tables.nation(spark, dir)),
-        col("c_nationkey") === col("n_nationkey"), "left")
-      .select(col("c_custkey"), col("n_name").as("country"),
-        col("c_mktsegment").as("platform"), col("c_acctbal"))
+    Trainer.userDims(spark, dir)
 
   private[graft] def flagshipOrderCounts(
       spark: SparkSession, dir: String): DataFrame =
-    Tables.orders(spark, dir)
-      .groupBy(col("o_custkey")).agg(count(lit(1)).as("nb_orders"))
+    Trainer.orderCounts(spark, dir)
 
   private[graft] def scoredFlagshipWith(
       feats: DataFrame, dims: DataFrame, nbOrders: DataFrame): DataFrame =
-    enrichedFlagshipWith(feats, dims, nbOrders)
-      .withColumn("predicted_label",
-        call_udf("predict", lit("Bot Detector"),
-          Relational.asArray(col("country"), col("platform")),
-          Relational.asArray(
-            col("purchase_views").cast("int"), col("view_views").cast("int"),
-            col("click_views").cast("int"), col("nb_orders"))))
-
-  /** The flagship's RELATIONAL PREFIX — everything up to (not
-    * including) the predict UDF column: hopping pivot features
-    * left-enriched with user dims and order counts. Split out so the
-    * streaming flagship's relational algebra can be driver-hash-checked
-    * on its own (q_stream_flagship_rel): the model column is not
-    * SQL-expressible, but this prefix is plain ANSI.
-    */
-  private def enrichedFlagship(
-      spark: SparkSession, feats: DataFrame, dir: String): DataFrame =
-    enrichedFlagshipWith(feats,
-      flagshipDims(spark, dir), flagshipOrderCounts(spark, dir))
-
-  private def enrichedFlagshipWith(
-      feats: DataFrame, dims: DataFrame, nbOrders: DataFrame): DataFrame = {
-    Joins.leftEnrich(feats, dims, "user_id", "c_custkey")
-      .join(broadcast(nbOrders), col("user_id") === col("o_custkey"), "left")
-      .select(
-        col("user_id"), col("w_start"), col("window_start"), col("window_end"),
-        col("click_views"), col("view_views"), col("purchase_views"),
-        col("signup_views"), col("error_views"),
-        coalesce(col("country"), lit("UNKNOWN")).as("country"),
-        coalesce(col("platform"), lit("UNKNOWN")).as("platform"),
-        coalesce(col("nb_orders"), lit(0L)).cast("int").as("nb_orders"))
-  }
+    Trainer.withPrediction(Trainer.featureRelationWith(feats, dims, nbOrders))
 
   // ---- query implementations ------------------------------------------
 
@@ -2625,8 +2576,8 @@ object SparkEntry {
     */
   private def qStreamFlagship(s: SparkSession, dir: String): DataFrame = {
     val reg = tempRegistry()
-    Trainer.trainAndRegister(s, dir, reg, "Bot Detector", useCv = false)
-    Scorer.registerPredictUdf(s, reg.rootDir, preload = Seq("Bot Detector"))
+    Trainer.trainAndRegister(s, dir, reg, useCv = false)
+    Scorer.registerPredictUdf(s, reg.rootDir, preload = Seq(Trainer.ModelName))
     Streaming.runToMemory(s,
       scoredFlagship(s, Streaming.hoppingPivotStream(s, dir), dir))
   }
@@ -2641,7 +2592,7 @@ object SparkEntry {
     */
   private def qStreamFlagshipRel(s: SparkSession, dir: String): DataFrame =
     Streaming.runToMemory(s,
-      enrichedFlagship(s, Streaming.hoppingPivotStream(s, dir), dir))
+      Trainer.featureRelation(s, Streaming.hoppingPivotStream(s, dir), dir))
 
   private def tempRegistry(): Registry =
     new Registry(java.nio.file.Files.createTempDirectory("graft_reg").toString)

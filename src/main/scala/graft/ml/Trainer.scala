@@ -5,11 +5,11 @@ import org.apache.spark.ml.classification.DecisionTreeClassifier
 import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
 import org.apache.spark.ml.feature.{IndexToString, OneHotEncoder, StringIndexer, StringIndexerModel, VectorAssembler}
 import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Tables
-import graft.operators.{Joins, WindowOps}
+import graft.operators.{Joins, Relational, WindowOps}
 
 /** Bot-detector training pipeline — the Scala-MLlib restatement of
   * /root/reference/model-trainer/train.py (M1–M14, SURVEY.md §2.7):
@@ -26,17 +26,78 @@ import graft.operators.{Joins, WindowOps}
   */
 object Trainer {
 
-  val FeatureCols: Seq[String] = Seq(
-    "country", "platform", "product_views", "listing_views",
-    "gallery_views", "nb_orders")
+  /** The served model's registry name and its output column. */
+  val ModelName = "Bot Detector"
+  private val Predicted = "predicted_label"
+
+  /** One model input: training-frame and signature name, signature type,
+    * and the column it is served from over [[featureRelationWith]].
+    */
+  final case class Input(name: String, sigType: String, served: Column)
+
+  /** The input table, in signature order: the training frame, the
+    * registry signature, the assembler and `predict` all read it.
+    */
+  val Inputs: Seq[Input] = Seq(
+    Input("country", "string", col("country")),
+    Input("platform", "string", col("platform")),
+    Input("product_views", "integer", col("purchase_views").cast("int")),
+    Input("listing_views", "integer", col("view_views").cast("int")),
+    Input("gallery_views", "integer", col("click_views").cast("int")),
+    Input("nb_orders", "integer", col("nb_orders")))
+
+  /** customer ⨝ nation: country, platform (and `c_acctbal`, which
+    * published dimension versions carry; the model does not read it).
+    */
+  def userDims(spark: SparkSession, dir: String): DataFrame =
+    Tables.customer(spark, dir)
+      .join(broadcast(Tables.nation(spark, dir)),
+        col("c_nationkey") === col("n_nationkey"), "left")
+      .select(col("c_custkey"), col("n_name").as("country"),
+        col("c_mktsegment").as("platform"), col("c_acctbal"))
+
+  def orderCounts(spark: SparkSession, dir: String): DataFrame =
+    Tables.orders(spark, dir)
+      .groupBy(col("o_custkey")).agg(count(lit(1)).as("nb_orders"))
+
+  /** The feature relation: pivot rows (columns passed through) left-
+    * enriched with user dims and order counts, defaulting to `UNKNOWN`
+    * and 0. Training, batch and streaming scoring all read it; a
+    * streaming deployment passes dims and counts MATERIALIZED once, as
+    * Spark re-executes a stream-static join's static side per batch.
+    */
+  def featureRelationWith(
+      pivot: DataFrame, dims: DataFrame, nbOrders: DataFrame): DataFrame =
+    Joins.leftEnrich(pivot, dims, "user_id", "c_custkey")
+      .join(broadcast(nbOrders), col("user_id") === col("o_custkey"), "left")
+      .select(pivot.columns.toSeq.map(col) ++ Seq(
+        coalesce(col("country"), lit("UNKNOWN")).as("country"),
+        coalesce(col("platform"), lit("UNKNOWN")).as("platform"),
+        coalesce(col("nb_orders"), lit(0L)).cast("int").as("nb_orders")): _*)
+
+  def featureRelation(spark: SparkSession, pivot: DataFrame, dir: String): DataFrame =
+    featureRelationWith(pivot, userDims(spark, dir), orderCounts(spark, dir))
+
+  /** The keys plus the model's inputs, projected through [[Inputs]]. */
+  def modelInputs: Seq[Column] =
+    col("user_id") +: col("w_start") +: Inputs.map(i => i.served.as(i.name))
+
+  /** Scores in-query with the registered `predict` UDF, which binds string
+    * inputs in signature order, then int inputs.
+    */
+  def withPrediction(features: DataFrame): DataFrame = {
+    val (strings, ints) = Inputs.partition(_.sigType == "string")
+    features.withColumn(Predicted, call_udf("predict", lit(ModelName),
+      Relational.asArray(strings.map(_.served): _*),
+      Relational.asArray(ints.map(_.served): _*)))
+  }
 
   /** Assemble the training frame from fixtures (FIXTURES.md §C mapping):
-    * per-(user × hopping window) pivot counts — the SAME granularity and
-    * scale the serving path scores (README.md:41-70 serves 10-minute
-    * window counts; the reference trains on rolling-600s features,
-    * train.py:260-276, deliberately matching that scale) — joined with
-    * the user dimension: country from nation via c_nationkey, platform
-    * from c_mktsegment, nb_orders counted from orders.
+    * the feature relation over per-(user × hopping window) pivot counts
+    * — the SAME granularity and scale the serving path scores
+    * (README.md:41-70 serves 10-minute window counts; the reference
+    * trains on rolling-600s features, train.py:260-276, deliberately
+    * matching that scale) — projected through the input table.
     *
     * Training on lifetime totals and serving on window counts was the
     * first implementation here and produced a constant predictor at
@@ -48,29 +109,13 @@ object Trainer {
     * features — more gallery than product views in the window.
     */
   def trainingFrame(spark: SparkSession, dir: String): DataFrame = {
-    val perWindow = graft.operators.WindowOps.hoppingPivot(
+    val pivot = WindowOps.hoppingPivot(
       Tables.events(spark, dir), eventTypes = Tables.EventTypes)
-    val nbOrders = Tables.orders(spark, dir)
-      .groupBy(col("o_custkey")).agg(count(lit(1)).as("nb_orders"))
-    val dims = Tables.customer(spark, dir)
-      .join(broadcast(Tables.nation(spark, dir)),
-        col("c_nationkey") === col("n_nationkey"), "left")
-      .select(col("c_custkey"), col("n_name").as("country"),
-        col("c_mktsegment").as("platform"))
-    perWindow
-      .join(broadcast(dims), col("user_id") === col("c_custkey"), "left")
-      .join(broadcast(nbOrders), col("user_id") === col("o_custkey"), "left")
-      .select(
-        col("user_id"),
-        col("w_start"),
-        coalesce(col("country"), lit("UNKNOWN")).as("country"),
-        coalesce(col("platform"), lit("UNKNOWN")).as("platform"),
-        col("purchase_views").cast("int").as("product_views"),
-        col("view_views").cast("int").as("listing_views"),
-        col("click_views").cast("int").as("gallery_views"),
-        coalesce(col("nb_orders"), lit(0L)).cast("int").as("nb_orders"),
-        when(col("click_views") > col("purchase_views"), lit("bot"))
-          .otherwise(lit("user")).as("label"))
+    // labeled in the same projection: a label over the cast inputs
+    // would stack a second Project the optimizer does not collapse
+    val label = when(col("click_views") > col("purchase_views"), lit("bot"))
+      .otherwise(lit("user")).as("label")
+    featureRelation(spark, pivot, dir).select(modelInputs :+ label: _*)
   }
 
   /** M1–M7 stages. The label indexer arrives pre-fit (like
@@ -78,25 +123,24 @@ object Trainer {
     * a transformer) so train/test splits can never hit unseen labels.
     */
   private def stages(labelModel: StringIndexerModel, labels: Array[String])
-      : (Array[PipelineStage], IndexToString) = {
-    val countryIdx = new StringIndexer().setInputCol("country")
-      .setOutputCol("country_idx").setHandleInvalid("keep")
-    val countryOhe = new OneHotEncoder().setInputCol("country_idx")
-      .setOutputCol("country_ohe")
-    val platformIdx = new StringIndexer().setInputCol("platform")
-      .setOutputCol("platform_idx").setHandleInvalid("keep")
-    val platformOhe = new OneHotEncoder().setInputCol("platform_idx")
-      .setOutputCol("platform_ohe")
+      : Array[PipelineStage] = {
+    // one index + one-hot pair per string input, assembled in input order
+    val encoders = Inputs.filter(_.sigType == "string").flatMap { i =>
+      Seq(
+        new StringIndexer().setInputCol(i.name)
+          .setOutputCol(s"${i.name}_idx").setHandleInvalid("keep"),
+        new OneHotEncoder().setInputCol(s"${i.name}_idx")
+          .setOutputCol(s"${i.name}_ohe"))
+    }
     val assembler = new VectorAssembler()
-      .setInputCols(Array("country_ohe", "platform_ohe", "product_views",
-        "listing_views", "gallery_views", "nb_orders"))
+      .setInputCols(Inputs.map(i =>
+        if (i.sigType == "string") s"${i.name}_ohe" else i.name).toArray)
       .setOutputCol("features")
     val dtc = new DecisionTreeClassifier()
       .setLabelCol("indexed_label").setFeaturesCol("features").setSeed(42L)
     val unindex = new IndexToString().setInputCol("prediction")
-      .setOutputCol("predicted_label").setLabels(labels)
-    (Array(countryIdx, countryOhe, platformIdx, platformOhe, assembler,
-      labelModel, dtc, unindex), unindex)
+      .setOutputCol(Predicted).setLabels(labels)
+    (encoders ++ Seq(assembler, labelModel, dtc, unindex)).toArray
   }
 
   case class Trained(
@@ -115,7 +159,7 @@ object Trainer {
       .setInputCol("label").setOutputCol("indexed_label")
       .setStringOrderType("alphabetDesc").fit(df)
     val labels = labelModel.labelsArray(0)
-    val (st, _) = stages(labelModel, labels)
+    val st = stages(labelModel, labels)
     val pipeline = new Pipeline().setStages(st)
 
     val Array(train, test) = df.randomSplit(Array(0.7, 0.3), seed = 42L)
@@ -128,7 +172,7 @@ object Trainer {
 
     val fitted: PipelineModel =
       if (useCv) {
-        val dtc = st(6).asInstanceOf[DecisionTreeClassifier]
+        val dtc = st.collectFirst { case d: DecisionTreeClassifier => d }.get
         // maxBins {8,16} vs the reference grid's {2,4} (train.py:330-333):
         // deliberate — the fixture's 25-country one-hot needs maxBins ≥
         // the largest categorical cardinality per split or the tree
@@ -146,9 +190,9 @@ object Trainer {
 
     val metric = evaluator.evaluate(fitted.transform(test))
 
-    // M11 serving surgery: drop stage 5 (label indexer) so the scorer
+    // M11 serving surgery: drop the label indexer so the scorer
     // consumes raw features and emits predicted_label.
-    val servingStages = fitted.stages.patch(5, Nil, 1)
+    val servingStages = fitted.stages.patch(st.indexOf(labelModel), Nil, 1)
     val serving = org.apache.spark.ml.GraftMlBridge.pipelineModel(
       fitted.uid + "-serving", servingStages)
     Trained(serving, metric, labels)
@@ -159,16 +203,13 @@ object Trainer {
       spark: SparkSession,
       dir: String,
       registry: Registry,
-      modelName: String = "Bot Detector",
+      modelName: String = ModelName,
       useCv: Boolean = true): (Int, Double) = {
     val df = trainingFrame(spark, dir)
     val t = fit(df, useCv)
     val version = registry.save(
       modelName, t.serving,
-      inputCols = Seq("country" -> "string", "platform" -> "string",
-        "product_views" -> "integer", "listing_views" -> "integer",
-        "gallery_views" -> "integer", "nb_orders" -> "integer"),
-      outputCol = "predicted_label")
+      inputCols = Inputs.map(i => i.name -> i.sigType), outputCol = Predicted)
     (version, t.metric)
   }
 }

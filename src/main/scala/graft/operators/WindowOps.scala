@@ -64,6 +64,18 @@ object WindowOps {
     iv.days * 86400000000L + iv.microseconds
   }
 
+  /** Σ over input files of the file's distinct (`_k`, `_ws`) groups
+    * (`_g`), and the row count (`_n`). Each file's count is estimated
+    * from its rows alone: the file name only groups, so the same rows in
+    * the same files give the same sums when a rewrite renames the files.
+    */
+  private def perFileGroups(keyed: DataFrame): DataFrame =
+    keyed.groupBy(input_file_name())
+      .agg(count(lit(1)).as("_n"),
+        approx_count_distinct(struct(col("_k"), col("_ws"))).as("_g"))
+      .agg(coalesce(sum(col("_n")), lit(0L)).as("_n"),
+        coalesce(sum(col("_g")), lit(0L)).as("_g"))
+
   /** Measured WITHIN-MAP-PARTITION (key, hop-window) multiplicity — the
     * default plan's partial-aggregation reduction factor — from a
     * deterministic KEY sample over a BOUNDED file subset.
@@ -124,13 +136,10 @@ object WindowOps {
         else col(tsCol).cast("timestamp")
       val e = unix_micros(ts)
       val aligned = e - pmod(e, lit(slideUs))
-      val row = src
+      val row = perFileGroups(src
         .filter(pmod(xxhash64(col(keyCol)), lit(keySampleMod.toLong)) === 0)
         .select(col(keyCol).as("_k"), explode(
-          sequence(aligned - lit(sizeUs - slideUs), aligned, lit(slideUs))).as("_ws"),
-          input_file_name().as("_f"))
-        .agg(count(lit(1)).as("_n"),
-          approx_count_distinct(struct(col("_k"), col("_ws"), col("_f"))).as("_g"))
+          sequence(aligned - lit(sizeUs - slideUs), aligned, lit(slideUs))).as("_ws")))
         .head()
       val n = row.getAs[Long]("_n")
       val g = row.getAs[Long]("_g")
@@ -191,11 +200,9 @@ object WindowOps {
         else col(tsCol).cast("timestamp")
       val e = unix_micros(ts)
       val aligned = e - pmod(e, lit(slideUs))
-      val perFile = src
+      val perFile = perFileGroups(src
         .select(col(keyCol).as("_k"), explode(
-          sequence(aligned - lit(sizeUs - slideUs), aligned, lit(slideUs))).as("_ws"),
-          input_file_name().as("_f"))
-        .agg(approx_count_distinct(struct(col("_k"), col("_ws"), col("_f"))).as("_g"))
+          sequence(aligned - lit(sizeUs - slideUs), aligned, lit(slideUs))).as("_ws")))
         .head().getAs[Long]("_g")
       math.min(trivial, perFile.toDouble * total / read).max(1.0)
     }.toLong

@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.{DataStreamReader, DataStreamWriter, Group
 import org.apache.spark.sql.types._
 
 import graft.model.Tables
-import graft.operators.{Joins, WindowOps}
+import graft.operators.WindowOps
 
 /** Structured-Streaming variants of the batch operators (SURVEY.md §2.5).
   *
@@ -408,19 +408,15 @@ object Streaming {
     spark.table(name)
   }
 
-  /** Flagship streaming pipeline (README.md:41-70 shape): hopping pivot
-    * over the event stream, then stream-static left join with the user
-    * dimension. Aggregation state lives in the state store; the dimension
-    * is broadcast per micro-batch.
+  /** The flagship's streaming features (README.md:41-70 shape): the
+    * hopping pivot over the event stream, aggregation state in the
+    * state store. The flagship enriches and scores it with the model's
+    * own feature relation, [[graft.ml.Trainer.featureRelation]], whose
+    * static dims broadcast per micro-batch.
     */
   def hoppingPivotStream(spark: SparkSession, dir: String): DataFrame =
     WindowOps.hoppingPivot(eventsStream(spark, dir),
       eventTypes = Tables.EventTypes)
-
-  def flagshipStream(spark: SparkSession, dir: String): DataFrame =
-    Joins.leftEnrich(
-      hoppingPivotStream(spark, dir),
-      Tables.customer(spark, dir), "user_id", "c_custkey")
 
   /** The engine's streaming sink (S6/S7): the reference's Kafka-topic
     * CSAS sink and Mongo Connect sink both reduce to "write each emitted

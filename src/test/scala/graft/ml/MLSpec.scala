@@ -3,6 +3,7 @@ package graft.ml
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 import graft.SparkSpec
 
 class MLSpec extends SparkSpec {
@@ -15,9 +16,38 @@ class MLSpec extends SparkSpec {
 
   test("training frame has both labels and the 6-feature contract") {
     val df = Trainer.trainingFrame(spark, sf0001)
-    assert(Trainer.FeatureCols.forall(df.columns.contains))
     val labels = df.select("label").distinct().collect().map(_.getString(0)).toSet
     assert(labels == Set("bot", "user"), s"labels=$labels")
+    // the registry signature IS the input table, in order
+    trained
+    val signature = reg.load("Bot Detector").signature.inputs
+    assert(Trainer.Inputs.size == 6)
+    assert(signature == Trainer.Inputs.map(i => i.name -> i.sigType))
+    // and every input column trains with the Spark type its signature names
+    val sparkType = Map("string" -> StringType, "integer" -> IntegerType,
+      "long" -> LongType)
+    signature.foreach { case (name, sigType) =>
+      assert(df.schema(name).dataType == sparkType(sigType), s"column $name")
+    }
+  }
+
+  test("training ≡ serving: the batch flagship scores every training key " +
+    "with the label the trained model gives its training row") {
+    // the flagship enriches and scores through Trainer's relation and
+    // `predict`; the training frame projects the same relation — so the
+    // key sets match and every key gets the same prediction
+    val served = graft.SparkEntry.entry(spark)
+      .select("user_id", "w_start", "predicted_label").collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getString(2)).toMap
+    trained
+    val trainedOn = Scorer.scoreClean(
+      reg.load("Bot Detector"), Trainer.trainingFrame(spark, sf0001))
+      .select("user_id", "w_start", "predicted_label").collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getString(2)).toMap
+    assert(served.nonEmpty)
+    assert(served.keySet == trainedOn.keySet)
+    val disagree = served.filter { case (k, p) => trainedOn(k) != p }
+    assert(disagree.isEmpty, s"${disagree.size} keys disagree, e.g. ${disagree.take(3)}")
   }
 
   test("train → register → load roundtrip with Production stage") {
@@ -26,7 +56,7 @@ class MLSpec extends SparkSpec {
     assert(reg.latestProduction("Bot Detector").contains(1))
     val loaded = reg.load("Bot Detector")
     assert(loaded.signature.output == "predicted_label")
-    assert(loaded.signature.inputs.map(_._1) == Trainer.FeatureCols)
+    assert(loaded.signature.inputs.map(_._1) == Trainer.Inputs.map(_.name))
     assert(metric >= 0.0 && metric <= 1.0)
   }
 

@@ -204,6 +204,24 @@ class WindowOpsSpec extends SparkSpec {
     assert(bSampled >= 1L && bSampled <= rowsTimesHops, s"sampled $bSampled")
   }
 
+  test("hopping estimators: the same rows in the same files give the same estimate") {
+    // two writes of one layout differ only in their part-file names
+    val dir = java.nio.file.Files.createTempDirectory("hopsame").toString
+    val rows = Tables.events(spark, sf0001).select($"user_id", $"ts", $"event_type")
+      .withColumn("copy", explode(sequence(lit(1L), lit(8L)))).drop("copy")
+    Seq("a", "b").foreach { c =>
+      rows.repartition(8, $"user_id").write.mode("overwrite").parquet(s"$dir/$c")
+    }
+    def estimates(c: String): (Long, Double) = {
+      val df = spark.read.parquet(s"$dir/$c")
+      graft.Sessions.clearEstimates()
+      (WindowOps.hoppingStateUpperBound(df, maxSampleBytes = Long.MaxValue),
+        WindowOps.hoppingMultiplicity(df, keySampleMod = 1,
+          maxSampleBytes = Long.MaxValue))
+    }
+    assert(estimates("a") == estimates("b"))
+  }
+
   test("hopping auto: plan pick flips with the regime, results identical") {
     val ev = Tables.events(spark, sf0001)
     val dup = ev.withColumn("_r",

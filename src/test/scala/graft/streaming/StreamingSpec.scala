@@ -270,11 +270,11 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("flagship stream (pivot + stream-static left join) produces enriched rows") {
-    val out = Streaming.runToMemory(spark, Streaming.flagshipStream(spark, sf0001))
+    val out = Streaming.runToMemory(spark, graft.ml.Trainer.featureRelation(
+      spark, Streaming.hoppingPivotStream(spark, sf0001), sf0001))
     assert(out.count() > 0)
-    assert(out.columns.contains("c_mktsegment"))
-    // every user in the fixture matches a customer → no null enrichment
-    assert(out.filter(col("c_name").isNull).count() == 0)
+    // every user in the fixture matches a customer → no defaulted platform
+    assert(out.filter(col("platform") === "UNKNOWN").count() == 0)
   }
 
   test("scored flagship: streaming incremental execution ≡ batch entry") {
@@ -374,21 +374,9 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("stream_reg").toString)
     graft.ml.Trainer.trainAndRegister(spark, sf0001, reg, "Bot Detector", useCv = false)
     val loaded = reg.load("Bot Detector")
-    val enriched = Streaming.flagshipStream(spark, sf0001)
-      .join(
-        Tables.orders(spark, sf0001).groupBy(col("o_custkey"))
-          .agg(count(lit(1)).as("nb_orders")),
-        col("user_id") === col("o_custkey"), "left")
-      .join(Tables.nation(spark, sf0001),
-        col("c_nationkey") === col("n_nationkey"), "left")
-      .select(
-        col("user_id"), col("w_start"),
-        coalesce(col("n_name"), lit("UNKNOWN")).as("country"),
-        coalesce(col("c_mktsegment"), lit("UNKNOWN")).as("platform"),
-        col("purchase_views").cast("int").as("product_views"),
-        col("view_views").cast("int").as("listing_views"),
-        col("click_views").cast("int").as("gallery_views"),
-        coalesce(col("nb_orders"), lit(0L)).cast("int").as("nb_orders"))
+    val enriched = graft.ml.Trainer.featureRelation(
+      spark, Streaming.hoppingPivotStream(spark, sf0001), sf0001)
+      .select(graft.ml.Trainer.modelInputs: _*)
     // PipelineModel.transform composes onto the streaming DataFrame —
     // scoring runs inside each micro-batch
     val scored = graft.ml.Scorer.scoreDF(loaded, enriched)

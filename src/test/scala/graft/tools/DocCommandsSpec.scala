@@ -70,4 +70,30 @@ class DocCommandsSpec extends AnyFunSuite {
     }
     assert(dangling.isEmpty, dangling.distinct.mkString("\n", "\n", ""))
   }
+
+  /** Spark, Hadoop and MongoDB API names the docs cite bare. */
+  private val externalNames = Set(
+    "checkpointLocation", "cleanSource", "countDistinct",
+    "dropDuplicatesWithinWatermark", "exceptAll", "foreachBatch",
+    "initialPartitionNum", "listStatus", "localCheckpoint",
+    "mapGroupsWithState", "mapPartitions", "newSession",
+    "numRowsDroppedByWatermark", "randomSplit", "rangeBetween", "replaceOne",
+    "sourceArchiveDir", "withWatermark", "writeStream")
+
+  test("bare backticked lowerCamelCase names in the docs are declared in the code") {
+    val sources = Seq("src/main", "src/test", "perfbench/src").flatMap { tree =>
+      Files.walk(Paths.get(tree)).iterator().asScala.map(_.toString)
+        .filter(_.endsWith(".scala")).map(read).toSeq
+    }.mkString("\n")
+    // a definition, or a parameter in a parameter list
+    def declared(name: String): Boolean =
+      s"""\\b(?:def|val|var|class|object|type|trait)\\s+\\Q$name\\E\\b|[(,]\\s*\\Q$name\\E\\s*:""".r
+        .findFirstIn(sources).isDefined
+    val bare = """`([a-z]\w*[A-Z]\w*)(?:\([^`\n]*\))?`""".r
+    val dangling = (docs.filter(_.endsWith(".md")) :+ "COVERAGE.md").flatMap { doc =>
+      bare.findAllMatchIn(read(doc)).map(_.group(1))
+        .filterNot(n => externalNames(n) || declared(n)).map(n => s"$doc: `$n`")
+    }
+    assert(dangling.isEmpty, dangling.distinct.mkString("\n", "\n", ""))
+  }
 }

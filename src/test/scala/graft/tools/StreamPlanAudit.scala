@@ -114,7 +114,7 @@ object StreamPlanAudit {
       ("hopping_pivot", OutputMode.Complete(),
         s => Streaming.hoppingPivotStream(s, dir)),
       ("flagship_enrich", OutputMode.Complete(),
-        s => Streaming.flagshipStream(s, dir)),
+        s => graft.ml.Trainer.featureRelation(s, Streaming.hoppingPivotStream(s, dir), dir)),
       ("contamination", OutputMode.Complete(),
         s => Streaming.contaminationStream(s, dir)),
       ("cdc_agg", OutputMode.Complete(),

@@ -43,9 +43,9 @@ object StreamScale {
     val pivotOnly = args.contains("--pivot-only")
     // --session: measure the SESSION-window pipeline (merging state, a
     // different growth law) instead of the hopping pivot — r14 VERDICT
-    // #5's decade leg. State recovery uses containment compaction
-    // (Streaming.compactSessionChangelog), not latestByKey: session
-    // endpoints are not stable upsert keys.
+    // #5's decade leg. Its check reads every Append-mode emission and
+    // matches fragments to batch sessions by span containment, not
+    // latestByKey: session endpoints are not stable upsert keys.
     val sessionMode = args.contains("--session")
     // ... and need the big-state checkpoint posture: with the defaults
     // (full snapshot per batch × 100-batch retention) the sf100 leg
