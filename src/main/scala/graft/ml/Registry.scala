@@ -3,7 +3,8 @@ package graft.ml
 import java.nio.file.{Files, Paths, Path}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.ml.PipelineModel
+import org.apache.spark.SPARK_VERSION
+import org.apache.spark.ml.{GraftMlBridge, PipelineModel}
 
 /** Local model registry replacing the reference's MLflow server
   * (U7/U10/U13 — /root/reference/udf/src/main/java/com/getindata/ksql/
@@ -11,7 +12,14 @@ import org.apache.spark.ml.PipelineModel
   * stage "Production").
   *
   * Layout: <root>/<name>/<version>/ {model/ (Spark-native PipelineModel
-  * save), metadata.json (signature), STAGE (promotion marker)}.
+  * save), metadata.json (signature + the Spark version that wrote the
+  * model), STAGE (promotion marker)}.
+  *
+  * `model/` is written and read by MLlib's own writer and reader in its
+  * local saving mode ([[org.apache.spark.ml.GraftMlBridge.locally]]):
+  * plain files moved on the driver, no Spark job either way. That format
+  * is MLlib's, not a stable one, so a model is loaded only by the Spark
+  * version that wrote it; after an upgrade, re-register.
   */
 class Registry(val rootDir: String) {
 
@@ -30,12 +38,12 @@ class Registry(val rootDir: String) {
     val version = latestVersion(name).getOrElse(0) + 1
     val vdir = nameDir(name).resolve(version.toString)
     Files.createDirectories(vdir)
-    model.write.overwrite().save(vdir.resolve("model").toString)
+    GraftMlBridge.locally(model.write.overwrite().save(vdir.resolve("model").toString))
     val inputsJson = inputCols
       .map { case (n, t) => s"""{"name": "$n", "type": "$t"}""" }
       .mkString("[", ", ", "]")
     Files.writeString(vdir.resolve("metadata.json"),
-      s"""{"inputs": $inputsJson, "output": "$outputCol"}""")
+      s"""{"inputs": $inputsJson, "output": "$outputCol", "spark": "$SPARK_VERSION"}""")
     Files.writeString(vdir.resolve("STAGE"), stage)
     version
   }
@@ -66,18 +74,34 @@ class Registry(val rootDir: String) {
 
   /** U10 analog — load the production model + its signature.
     * Throws if no production version exists (caller turns this into
-    * null-on-error per U6).
+    * null-on-error per U6), and refuses, naming the model and version, a
+    * model this registry cannot read: one saved by the job-based writer
+    * (its `model/metadata` is a directory of part files) or by another
+    * Spark version.
     */
   def load(name: String): LoadedModel = {
     val v = latestProduction(name).getOrElse(
       throw new IllegalArgumentException(s"no Production version of model '$name'"))
     val vdir = nameDir(name).resolve(v.toString)
+    val modelDir = vdir.resolve("model")
+    if (Files.isDirectory(modelDir.resolve("metadata")))
+      throw new IllegalStateException(
+        s"model '$name' version $v was saved by MLlib's job-based writer, " +
+          "which this registry no longer reads; re-register it")
     val meta = Files.readString(vdir.resolve("metadata.json"))
+    val writtenBy = SparkVersionRe.findFirstMatchIn(meta).map(_.group(1))
+    if (!writtenBy.contains(SPARK_VERSION))
+      throw new IllegalStateException(
+        s"model '$name' version $v was written by Spark " +
+          s"${writtenBy.getOrElse("<unrecorded>")} and this is Spark $SPARK_VERSION; " +
+          "MLlib's saved format is per version, so re-register it")
     LoadedModel(
-      PipelineModel.load(vdir.resolve("model").toString),
+      GraftMlBridge.locally(PipelineModel.load(modelDir.toString)),
       Signature.parse(meta),
       name, v)
   }
+
+  private val SparkVersionRe = """"spark": "([^"]+)"""".r
 }
 
 /** U11 — model holder (reference MLModel.java:6-36). */

@@ -5,6 +5,7 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.ml.classification.DecisionTreeClassificationModel
 import org.apache.spark.ml.feature.{IndexToString, OneHotEncoderModel, StringIndexerModel, VectorAssembler}
 import org.apache.spark.ml.linalg.Vectors
+import org.apache.spark.ml.param.Params
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -135,7 +136,8 @@ object Scorer {
 /** A PipelineModel compiled to a plain row-at-a-time evaluator: the
   * supported stage algebra is exactly what [[Trainer]] produces
   * (StringIndexerModel → OneHotEncoderModel → VectorAssembler →
-  * DecisionTreeClassificationModel → IndexToString). Serializable, no
+  * DecisionTreeClassificationModel → IndexToString; the first two over
+  * one or several columns). Serializable, no
   * SparkSession needed at eval time — usable inside UDFs on executors.
   */
 case class LocalScorer(
@@ -164,22 +166,23 @@ object LocalScorer {
     val steps: Seq[Map[String, Any] => Map[String, Any]] =
       loaded.model.stages.toSeq.map {
         case m: StringIndexerModel =>
-          val labels = m.labelsArray(0)
-          val idx = labels.zipWithIndex.toMap
-          val in = m.getInputCol; val out = m.getOutputCol
-          (row: Map[String, Any]) =>
-            // handleInvalid=keep → unseen gets index numLabels
-            row + (out -> idx.getOrElse(String.valueOf(row(in)), labels.length).toDouble)
+          // handleInvalid=keep → unseen gets index numLabels
+          val cols = inOut(m).zip(m.labelsArray).map { case ((in, out), labels) =>
+            (in, out, labels.zipWithIndex.toMap, labels.length)
+          }
+          (row: Map[String, Any]) => cols.foldLeft(row) { case (r, (in, out, idx, unseen)) =>
+            r + (out -> idx.getOrElse(String.valueOf(r(in)), unseen).toDouble)
+          }
         case m: OneHotEncoderModel =>
-          val size = m.categorySizes(0) - (if (m.getDropLast) 1 else 0)
-          // OneHotEncoder accepts singular or plural col params
-          val in = if (m.isSet(m.inputCol)) m.getInputCol else m.getInputCols.head
-          val out = if (m.isSet(m.outputCol)) m.getOutputCol else m.getOutputCols.head
-          (row: Map[String, Any]) => {
-            val i = row(in).asInstanceOf[Double].toInt
+          val drop = if (m.getDropLast) 1 else 0
+          val cols = inOut(m).zip(m.categorySizes).map { case ((in, out), n) =>
+            (in, out, n - drop)
+          }
+          (row: Map[String, Any]) => cols.foldLeft(row) { case (r, (in, out, size)) =>
+            val i = r(in).asInstanceOf[Double].toInt
             val v = Array.fill(size)(0.0)
             if (i >= 0 && i < size) v(i) = 1.0
-            row + (out -> Vectors.dense(v))
+            r + (out -> Vectors.dense(v))
           }
         case m: VectorAssembler =>
           val ins = m.getInputCols.toSeq; val out = m.getOutputCol
@@ -214,5 +217,15 @@ object LocalScorer {
       stringCols = sig.inputs.filter(_._2 == "string").map(_._1),
       intCols = sig.inputs.filter(i => i._2 == "integer" || i._2 == "long").map(_._1),
       eval = row => String.valueOf(program(row)(sig.output)))
+  }
+
+  /** (input, output) column pairs of a stage set with either the
+    * one-column params (`inputCol`/`outputCol`) or the multi-column ones.
+    */
+  private def inOut(m: Params): Seq[(String, String)] = {
+    def param[T](name: String): T = m.getOrDefault(m.getParam(name)).asInstanceOf[T]
+    if (m.isSet(m.getParam("inputCols")))
+      param[Array[String]]("inputCols").toSeq.zip(param[Array[String]]("outputCols"))
+    else Seq(param[String]("inputCol") -> param[String]("outputCol"))
   }
 }

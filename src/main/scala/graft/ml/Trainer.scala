@@ -7,13 +7,15 @@ import org.apache.spark.ml.feature.{IndexToString, OneHotEncoder, StringIndexer,
 import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.model.Tables
 import graft.operators.{Joins, Relational, WindowOps}
 
 /** Bot-detector training pipeline — the Scala-MLlib restatement of
   * /root/reference/model-trainer/train.py (M1–M14, SURVEY.md §2.7):
-  * StringIndexer×2 + OneHotEncoder×2 + VectorAssembler(6 features) +
+  * StringIndexer + OneHotEncoder (one multi-column stage each, over the
+  * two string inputs) + VectorAssembler(6 features) +
   * label StringIndexer + DecisionTreeClassifier + IndexToString,
   * CrossValidator over maxDepth × maxBins, then "serving surgery"
   * (drop the label indexer; train.py:349-351) so the served pipeline
@@ -124,14 +126,15 @@ object Trainer {
     */
   private def stages(labelModel: StringIndexerModel, labels: Array[String])
       : Array[PipelineStage] = {
-    // one index + one-hot pair per string input, assembled in input order
-    val encoders = Inputs.filter(_.sigType == "string").flatMap { i =>
-      Seq(
-        new StringIndexer().setInputCol(i.name)
-          .setOutputCol(s"${i.name}_idx").setHandleInvalid("keep"),
-        new OneHotEncoder().setInputCol(s"${i.name}_idx")
-          .setOutputCol(s"${i.name}_ohe"))
-    }
+    // one multi-column indexer and one multi-column one-hot encoder over
+    // the string inputs: one counting pass for all of them, the same
+    // per-column vocabularies and vectors as one pair per input
+    val strings = Inputs.filter(_.sigType == "string").map(_.name).toArray
+    val encoders = Seq(
+      new StringIndexer().setInputCols(strings)
+        .setOutputCols(strings.map(n => s"${n}_idx")).setHandleInvalid("keep"),
+      new OneHotEncoder().setInputCols(strings.map(n => s"${n}_idx"))
+        .setOutputCols(strings.map(n => s"${n}_ohe")))
     val assembler = new VectorAssembler()
       .setInputCols(Inputs.map(i =>
         if (i.sigType == "string") s"${i.name}_ohe" else i.name).toArray)
@@ -154,6 +157,37 @@ object Trainer {
     * reproducibility bug we do not copy).
     */
   def fit(df: DataFrame, useCv: Boolean = true): Trained = {
+    // the label fit, the split, every fit pass and the evaluation read
+    // the frame: computed once, not once per action. `persist` keeps the
+    // lineage, so a lost block is recomputed instead of failing the job.
+    // A frame the caller persisted stays persisted.
+    val owned = df.storageLevel == StorageLevel.NONE
+    if (owned) persistAsRead(df)
+    try fitPersisted(df, useCv) finally if (owned) df.unpersist()
+  }
+
+  private val CanChangeCachedPartitioning =
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
+  /** Persists `df` in the partitions an uncached read of it has. Spark
+    * plans a cached query with AQE's final-stage shuffle coalescing off
+    * unless [[CanChangeCachedPartitioning]] is set when the query is
+    * cached, so a small frame would be cached in more partitions than it
+    * is read in. The seeded split, the tree's split-candidate sample and
+    * the CV folds all sample per partition: other partitions, another
+    * model. The setting is read once, when the plan is cached, and
+    * restored right after.
+    */
+  private def persistAsRead(df: DataFrame): Unit = {
+    val conf = df.sparkSession.conf
+    val prior = conf.getOption(CanChangeCachedPartitioning)
+    conf.set(CanChangeCachedPartitioning, "true")
+    try df.persist()
+    finally prior.fold(conf.unset(CanChangeCachedPartitioning))(
+      conf.set(CanChangeCachedPartitioning, _))
+  }
+
+  private def fitPersisted(df: DataFrame, useCv: Boolean): Trained = {
     // label vocabulary fit eagerly like train.py:306 (one fixed order)
     val labelModel: StringIndexerModel = new StringIndexer()
       .setInputCol("label").setOutputCol("indexed_label")

@@ -108,32 +108,66 @@ object Tables {
     normalizeTs(spark.read.schema(schema).parquet(p(dir, "events")))
   }
 
-  def customer(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(p(dir, "customer"))
+  /** Reads `name` with its declared schema: Spark builds the DataFrame
+    * without the one-task job that reads a parquet footer to infer it.
+    */
+  private def read(spark: SparkSession, dir: String, name: String): DataFrame =
+    spark.read.schema(Schemas(name)).parquet(p(dir, name))
 
-  def orders(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(p(dir, "orders"))
+  private def fields(fs: (String, DataType)*): StructType =
+    StructType(fs.map { case (n, t) => StructField(n, t) })
 
-  def lineitem(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(p(dir, "lineitem"))
+  /** The declared schema of every fixture table but events (whose ts
+    * annotation is sniffed, above): exactly what Spark infers from the
+    * fixtures, field order, types and nullability included — the
+    * generator's `TIMESTAMP(MICROS, isAdjustedToUTC=false)` columns are
+    * TIMESTAMP_NTZ, and every column is nullable. `TablesSpec` compares
+    * each one with the inferred schema at sf0.001, sf0.01 and sf0.1.
+    */
+  private val Schemas: Map[String, StructType] = Map(
+    "customer" -> fields("c_custkey" -> LongType, "c_name" -> StringType,
+      "c_nationkey" -> IntegerType, "c_acctbal" -> DoubleType,
+      "c_mktsegment" -> StringType),
+    "orders" -> fields("o_orderkey" -> LongType, "o_custkey" -> LongType,
+      "o_orderstatus" -> StringType, "o_totalprice" -> DoubleType,
+      "o_orderdate" -> TimestampNTZType, "o_orderpriority" -> StringType),
+    "lineitem" -> fields("l_orderkey" -> LongType, "l_partkey" -> LongType,
+      "l_suppkey" -> LongType, "l_linenumber" -> IntegerType,
+      "l_quantity" -> DoubleType, "l_extendedprice" -> DoubleType,
+      "l_discount" -> DoubleType, "l_tax" -> DoubleType,
+      "l_returnflag" -> StringType, "l_linestatus" -> StringType,
+      "l_shipdate" -> TimestampNTZType),
+    "part" -> fields("p_partkey" -> LongType, "p_name" -> StringType,
+      "p_brand" -> StringType, "p_type" -> StringType, "p_size" -> IntegerType,
+      "p_retailprice" -> DoubleType),
+    "supplier" -> fields("s_suppkey" -> LongType, "s_name" -> StringType,
+      "s_nationkey" -> IntegerType, "s_acctbal" -> DoubleType),
+    "nation" -> fields("n_nationkey" -> IntegerType, "n_name" -> StringType,
+      "n_regionkey" -> IntegerType),
+    "region" -> fields("r_regionkey" -> IntegerType, "r_name" -> StringType),
+    "documents" -> fields("doc_id" -> LongType, "text" -> StringType,
+      "lang" -> StringType, "source" -> StringType, "n_chars" -> LongType),
+    "embeddings" -> fields("vec_id" -> LongType,
+      "embedding" -> ArrayType(FloatType, containsNull = true),
+      "label" -> IntegerType))
 
-  def part(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(p(dir, "part"))
+  def customer(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "customer")
 
-  def supplier(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(p(dir, "supplier"))
+  def orders(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "orders")
 
-  def nation(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(p(dir, "nation"))
+  def lineitem(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "lineitem")
 
-  def region(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(p(dir, "region"))
+  def part(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "part")
 
-  def documents(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(p(dir, "documents"))
+  def supplier(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "supplier")
 
-  def embeddings(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(p(dir, "embeddings"))
+  def nation(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "nation")
+
+  def region(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "region")
+
+  def documents(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "documents")
+
+  def embeddings(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "embeddings")
 
   /** events with an epoch-seconds column for range-window ops. The
     * session runs in UTC everywhere (build.sbt / Verify), so the cast to

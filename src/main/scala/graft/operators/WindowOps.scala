@@ -164,17 +164,18 @@ object WindowOps {
     *    sample by file count — Σ over files of within-file groups
     *    counts a globally-shared group once per file it touches, so the
     *    full-corpus statistic is ≥ the true group count; much tighter
-    *    than `rows × hops` whenever duplicates cluster. The Σ statistic
-    *    is ≥ truth DETERMINISTICALLY only over ALL files; a file sample
-    *    of it is unbiased with between-file variance either way
+    *    than `rows × hops` whenever duplicates cluster. The distinct
+    *    count is exact (one shuffle over the bounded sample), so over
+    *    ALL files the statistic is ≥ truth DETERMINISTICALLY — a
+    *    per-file `approx_count_distinct` could sum below it. A file
+    *    sample of it is unbiased with between-file variance either way
     *    (spec-pinned: a 2-of-8 clustered sample can sit well under the
-    *    mean), on top of `approx_count_distinct`'s ±few-%; the
-    *    decision's heap-fraction margin (not this estimator) absorbs
-    *    that, same division of labor as the multiplicity estimator's 3×
-    *    pick margin. The default sample is 128 MiB — twice the
-    *    multiplicity estimator's — because this estimate feeds an
-    *    OOM-guard, and doubling the file count halves the wobble for a
-    *    still-bounded probe.
+    *    mean); the decision's heap-fraction margin (not this estimator)
+    *    absorbs that, same division of labor as the multiplicity
+    *    estimator's 3× pick margin. The default sample is 128 MiB —
+    *    twice the multiplicity estimator's — because this estimate feeds
+    *    an OOM-guard, and doubling the file count halves the wobble for
+    *    a still-bounded probe.
     *
     * Memoized like every plan-choice estimate (stale values pick a
     * provider, never enter a result).
@@ -200,10 +201,12 @@ object WindowOps {
         else col(tsCol).cast("timestamp")
       val e = unix_micros(ts)
       val aligned = e - pmod(e, lit(slideUs))
-      val perFile = perFileGroups(src
-        .select(col(keyCol).as("_k"), explode(
-          sequence(aligned - lit(sizeUs - slideUs), aligned, lit(slideUs))).as("_ws")))
-        .head().getAs[Long]("_g")
+      // exact distinct (file, key, hop) count: an approximate per-file
+      // count can sum below the truth, and this value is read as a bound
+      val perFile = src
+        .select(input_file_name().as("_f"), col(keyCol).as("_k"), explode(
+          sequence(aligned - lit(sizeUs - slideUs), aligned, lit(slideUs))).as("_ws"))
+        .distinct().count()
       math.min(trivial, perFile.toDouble * total / read).max(1.0)
     }.toLong
   }

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Versioned dimension store — publish-by-pointer-flip for tables that
   * are UPDATED while streams join against them (the reference's
@@ -167,10 +168,14 @@ object DimStore {
     */
   def publish(df: DataFrame, root: String, numFiles: Int = 0,
       keep: Int = 2): String = {
+    val spark = df.sparkSession
     val sized = if (numFiles > 0) df.repartition(numFiles) else df
-    val out = publishWith(df.sparkSession, root)(dir =>
+    val out = publishWith(spark, root)(dir =>
       sized.write.mode("overwrite").parquet(dir)) // _SUCCESS = complete
-    if (keep > 0) prune(df.sparkSession, root, keep)
+    // the version holds the frame just written: [[read]] takes its schema
+    // from here instead of from the footers
+    successTime(spark, out).foreach(w => readSchemas.put(root, (out, w, df.schema)))
+    if (keep > 0) prune(spark, root, keep)
     out
   }
 
@@ -288,9 +293,40 @@ object DimStore {
     * transform, the `sinkChangelogWith` posture) so every micro-batch
     * joins the version current at that moment: live-TABLE semantics
     * with per-scan immutability.
+    *
+    * The marker is resolved on every call (driver-side listing), but the
+    * parquet footers are read once per published version: the schema of
+    * the version last read under `root` is kept, keyed by its path and
+    * the modification time of its `_SUCCESS`, and reused while the
+    * marker still names that version, so a re-read of an unchanged
+    * version runs no Spark job. [[publish]] records the schema of the
+    * frame it wrote, so in the publishing process even the first read of
+    * a new version runs none. A publish changes the path, and a root
+    * deleted and rebuilt under a reused version number changes the
+    * `_SUCCESS` time; either way a version this process did not publish
+    * is read from its footers once. One entry per root, replaced on each
+    * new version.
     */
-  def read(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(currentPath(spark, root))
+  def read(spark: SparkSession, root: String): DataFrame = {
+    val path = currentPath(spark, root)
+    val written = successTime(spark, path)
+    written.flatMap(w => Option(readSchemas.get(root)).collect {
+      case (`path`, `w`, schema) => spark.read.schema(schema).parquet(path)
+    }).getOrElse {
+      val df = spark.read.parquet(path)
+      written.foreach(w => readSchemas.put(root, (path, w, df.schema)))
+      df
+    }
+  }
+
+  /** root → (version path, its `_SUCCESS` modification time, schema). */
+  private val readSchemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, Long, StructType)]()
+
+  private def successTime(spark: SparkSession, version: String): Option[Long] =
+    try Some(fsOf(spark, version).getFileStatus(new Path(version, "_SUCCESS"))
+      .getModificationTime)
+    catch { case _: java.io.FileNotFoundException => None }
 
   /** Retire old versions: keep the newest `keep` COMPLETE versions
     * (and always the current one); everything older — including

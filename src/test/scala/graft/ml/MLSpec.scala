@@ -2,6 +2,7 @@ package graft.ml
 
 import java.nio.file.Files
 
+import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 import graft.SparkSpec
@@ -70,6 +71,7 @@ class MLSpec extends SparkSpec {
   }
 
   test("vectorized scoreDF and row-at-a-time predict UDF agree") {
+    // on every training row: LocalScorer compiles the multi-column stages
     trained
     val loaded = reg.load("Bot Detector")
     val frame = Trainer.trainingFrame(spark, sf0001)
@@ -77,7 +79,8 @@ class MLSpec extends SparkSpec {
       .select("user_id", "w_start", "predicted_label").collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getString(2)).toMap
     val rows = frame.collect()
-    rows.take(50).foreach { r =>
+    assert(rows.length == viaDF.size)
+    rows.foreach { r =>
       val viaUdf = Scorer.predictOne(reg.rootDir, "Bot Detector",
         Seq(r.getAs[String]("country"), r.getAs[String]("platform")),
         Seq(r.getAs[Int]("product_views"), r.getAs[Int]("listing_views"),
@@ -147,5 +150,79 @@ class MLSpec extends SparkSpec {
       java.nio.file.Paths.get(reg.rootDir, "Bot Detector", "2", "STAGE"),
       "Archived")
     assert(reg.latestProduction("Bot Detector").contains(1))
+  }
+
+  test("the trained model is pinned: every training row's prediction, raw " +
+    "prediction and probability hash to the committed digest") {
+    // the held-out AUC is 1.0 whatever the tree (the label is a function
+    // of two served inputs), so it cannot show a model change; this can.
+    // The leaves are pure, so the probabilities alone would not show a
+    // changed split either: the raw leaf counts do.
+    val (version, metric) = trained
+    assert(version == 1)
+    assert(java.lang.Double.doubleToLongBits(metric) == 0x3ff0000000000000L, s"metric $metric")
+    val rows = Scorer.scoreDF(reg.load("Bot Detector"), Trainer.trainingFrame(spark, sf0001))
+      .select(col("user_id"), col("w_start"), col("predicted_label"),
+        vector_to_array(col("rawPrediction")), vector_to_array(col("probability")))
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getSeq[Double](3) ++ r.getSeq[Double](4)))
+      .sortBy(r => (r._1, r._2))
+    assert(rows.length == 4944 && rows.count(_._3 == "bot") == 1040,
+      s"${rows.length} rows, ${rows.count(_._3 == "bot")} bot")
+    val text = rows.map { case (u, w, p, scores) =>
+      s"$u,$w,$p," + scores.map(d =>
+        java.lang.Long.toHexString(java.lang.Double.doubleToLongBits(d))).mkString(",")
+    }.mkString("\n")
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(text.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    assert(digest == "1dac6f4e932ffe07735a865f0369beeef7f7cf22dd4ff7b059de8ab67e9b0868")
+  }
+
+  test("registry save, load and LocalScorer.compile run no Spark job") {
+    trained
+    val loaded = reg.load("Bot Detector")
+    val other = new Registry(Files.createTempDirectory("graft_reg_jobs").toString)
+    val (v, saveJobs) = withJobCount(other.save("Bot Detector", loaded.model,
+      loaded.signature.inputs, loaded.signature.output))
+    assert(v == 1)
+    val (reloaded, loadJobs) = withJobCount(other.load("Bot Detector"))
+    val (_, compileJobs) = withJobCount(LocalScorer.compile(reloaded))
+    assert((saveJobs, loadJobs, compileJobs) == ((0, 0, 0)),
+      s"save ran $saveJobs jobs, load $loadJobs, compile $compileJobs")
+    assert(reloaded.model.stages.map(_.uid).toSeq == loaded.model.stages.map(_.uid).toSeq)
+  }
+
+  /** A fresh registry holding the trained model as version 1. */
+  private def copyRegistry(tag: String): Registry = {
+    trained
+    val loaded = reg.load("Bot Detector")
+    val r = new Registry(Files.createTempDirectory(tag).toString)
+    r.save("Bot Detector", loaded.model, loaded.signature.inputs, loaded.signature.output)
+    r
+  }
+
+  test("registry load refuses a model saved by MLlib's job-based writer, " +
+    "naming the model and version") {
+    val r = copyRegistry("graft_reg_jobwriter")
+    val modelDir = java.nio.file.Paths.get(r.rootDir, "Bot Detector", "1", "model")
+    // the writer outside local saving mode: metadata as a part-file directory
+    reg.load("Bot Detector").model.write.overwrite().save(modelDir.toString)
+    assert(Files.isDirectory(modelDir.resolve("metadata")))
+    val err = intercept[IllegalStateException](r.load("Bot Detector"))
+    assert(err.getMessage.contains("'Bot Detector' version 1") &&
+      err.getMessage.contains("re-register"), err.getMessage)
+  }
+
+  test("registry load refuses a model another Spark version wrote, naming both versions") {
+    val r = copyRegistry("graft_reg_version")
+    val meta = java.nio.file.Paths.get(r.rootDir, "Bot Detector", "1", "metadata.json")
+    val written = Files.readString(meta)
+    assert(written.contains(s""""spark": "${org.apache.spark.SPARK_VERSION}""""), written)
+    Files.writeString(meta, written.replace(org.apache.spark.SPARK_VERSION, "3.5.1"))
+    val err = intercept[IllegalStateException](r.load("Bot Detector"))
+    assert(err.getMessage.contains("'Bot Detector' version 1") &&
+      err.getMessage.contains("Spark 3.5.1") &&
+      err.getMessage.contains(s"Spark ${org.apache.spark.SPARK_VERSION}") &&
+      err.getMessage.contains("re-register"), err.getMessage)
   }
 }

@@ -43,6 +43,41 @@ class DimStoreSpec extends SparkSpec {
       .filter(col("country") === "UPDATED").count() == 0)
   }
 
+  test("read reads a version's footers once: a re-read of an unchanged " +
+    "version runs no Spark job, and the first read after a publish " +
+    "returns the new version's rows") {
+    val root = tmpRoot("readonce")
+    DimStore.publish(dim(1L -> "PL", 2L -> "DE"), root)
+    DimStore.read(spark, root)
+    val (again, jobs) = withJobCount(DimStore.read(spark, root))
+    assert(jobs == 0, s"a re-read of an unchanged version ran $jobs jobs")
+    assert(again.as[(Long, String)].collect().toSet == Set(1L -> "PL", 2L -> "DE"))
+    val p2 = DimStore.publish(dim(1L -> "UPDATED", 2L -> "DE", 3L -> "FR"), root)
+    // publish hands read the written frame's schema: no footer job, and
+    // the schema is the one Spark infers from the footers
+    val (next, nextJobs) = withJobCount(DimStore.read(spark, root))
+    assert(nextJobs == 0, s"the first read after a publish ran $nextJobs jobs")
+    assert(next.schema == spark.read.parquet(p2).schema)
+    assert(next.as[(Long, String)].collect().toSet ==
+      Set(1L -> "UPDATED", 2L -> "DE", 3L -> "FR"))
+  }
+
+  test("a root deleted and republished under the same version number " +
+    "with another schema is read with the new schema") {
+    val root = tmpRoot("reschema")
+    val p1 = DimStore.publish(dim(1L -> "PL"), root)
+    assert(DimStore.read(spark, root).columns.toSeq == Seq("k", "country"))
+    fs.delete(new Path(root), true)
+    // written through publishWith, whose content the store does not
+    // know: only the rebuilt version's `_SUCCESS` time tells read
+    val again = DimStore.publishWith(spark, root)(dir =>
+      Seq((1L, "PL", 7)).toDF("k", "country", "tier").write.parquet(dir))
+    assert(again == p1, "the republish should reuse the version number")
+    val read = DimStore.read(spark, root)
+    assert(read.columns.toSeq == Seq("k", "country", "tier"))
+    assert(read.as[(Long, String, Int)].collect().toSeq == Seq((1L, "PL", 7)))
+  }
+
   test("crash after data, before flip: marker wins — the orphan " +
     "complete version is not served") {
     val root = tmpRoot("orphan")
