@@ -5,7 +5,6 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.ml.classification.DecisionTreeClassificationModel
 import org.apache.spark.ml.feature.{IndexToString, OneHotEncoderModel, StringIndexerModel, VectorAssembler}
 import org.apache.spark.ml.linalg.Vectors
-import org.apache.spark.ml.param.Params
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -136,9 +135,9 @@ object Scorer {
 /** A PipelineModel compiled to a plain row-at-a-time evaluator: the
   * supported stage algebra is exactly what [[Trainer]] produces
   * (StringIndexerModel → OneHotEncoderModel → VectorAssembler →
-  * DecisionTreeClassificationModel → IndexToString; the first two over
-  * one or several columns). Serializable, no
-  * SparkSession needed at eval time — usable inside UDFs on executors.
+  * DecisionTreeClassificationModel → IndexToString; the first two
+  * multi-column). Serializable, no SparkSession needed at eval time —
+  * usable inside UDFs on executors.
   */
 case class LocalScorer(
     stringCols: Seq[String],
@@ -167,16 +166,16 @@ object LocalScorer {
       loaded.model.stages.toSeq.map {
         case m: StringIndexerModel =>
           // handleInvalid=keep → unseen gets index numLabels
-          val cols = inOut(m).zip(m.labelsArray).map { case ((in, out), labels) =>
-            (in, out, labels.zipWithIndex.toMap, labels.length)
+          val cols = m.getInputCols.zip(m.getOutputCols).zip(m.labelsArray).map {
+            case ((in, out), labels) => (in, out, labels.zipWithIndex.toMap, labels.length)
           }
           (row: Map[String, Any]) => cols.foldLeft(row) { case (r, (in, out, idx, unseen)) =>
             r + (out -> idx.getOrElse(String.valueOf(r(in)), unseen).toDouble)
           }
         case m: OneHotEncoderModel =>
           val drop = if (m.getDropLast) 1 else 0
-          val cols = inOut(m).zip(m.categorySizes).map { case ((in, out), n) =>
-            (in, out, n - drop)
+          val cols = m.getInputCols.zip(m.getOutputCols).zip(m.categorySizes).map {
+            case ((in, out), n) => (in, out, n - drop)
           }
           (row: Map[String, Any]) => cols.foldLeft(row) { case (r, (in, out, size)) =>
             val i = r(in).asInstanceOf[Double].toInt
@@ -217,15 +216,5 @@ object LocalScorer {
       stringCols = sig.inputs.filter(_._2 == "string").map(_._1),
       intCols = sig.inputs.filter(i => i._2 == "integer" || i._2 == "long").map(_._1),
       eval = row => String.valueOf(program(row)(sig.output)))
-  }
-
-  /** (input, output) column pairs of a stage set with either the
-    * one-column params (`inputCol`/`outputCol`) or the multi-column ones.
-    */
-  private def inOut(m: Params): Seq[(String, String)] = {
-    def param[T](name: String): T = m.getOrDefault(m.getParam(name)).asInstanceOf[T]
-    if (m.isSet(m.getParam("inputCols")))
-      param[Array[String]]("inputCols").toSeq.zip(param[Array[String]]("outputCols"))
-    else Seq(param[String]("inputCol") -> param[String]("outputCol"))
   }
 }

@@ -7,7 +7,6 @@ import org.apache.spark.ml.feature.{IndexToString, OneHotEncoder, StringIndexer,
 import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.model.Tables
 import graft.operators.{Joins, Relational, WindowOps}
@@ -160,76 +159,54 @@ object Trainer {
     // the label fit, the split, every fit pass and the evaluation read
     // the frame: computed once, not once per action. `persist` keeps the
     // lineage, so a lost block is recomputed instead of failing the job.
-    // A frame the caller persisted stays persisted.
-    val owned = df.storageLevel == StorageLevel.NONE
-    if (owned) persistAsRead(df)
-    try fitPersisted(df, useCv) finally if (owned) df.unpersist()
-  }
+    // Cached in the partitions it is read in: the seeded split, the
+    // tree's split-candidate sample and the CV folds all sample per
+    // partition, so other partitions would train another model.
+    org.apache.spark.sql.GraftSqlBridge.persistAsRead(df)
+    try {
+      // label vocabulary fit eagerly like train.py:306 (one fixed order)
+      val labelModel: StringIndexerModel = new StringIndexer()
+        .setInputCol("label").setOutputCol("indexed_label")
+        .setStringOrderType("alphabetDesc").fit(df)
+      val labels = labelModel.labelsArray(0)
+      val st = stages(labelModel, labels)
+      val pipeline = new Pipeline().setStages(st)
 
-  private val CanChangeCachedPartitioning =
-    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+      val Array(train, test) = df.randomSplit(Array(0.7, 0.3), seed = 42L)
+      // deliberate deviation from the reference (train.py:334-336 points
+      // the evaluator at the hard 'prediction' column): AUC over 0/1
+      // predictions is threshold-degenerate and makes CV selection
+      // tie-blind; the tree's rawPrediction column gives a real ROC
+      val evaluator = new BinaryClassificationEvaluator()
+        .setLabelCol("indexed_label").setRawPredictionCol("rawPrediction")
 
-  /** Persists `df` in the partitions an uncached read of it has. Spark
-    * plans a cached query with AQE's final-stage shuffle coalescing off
-    * unless [[CanChangeCachedPartitioning]] is set when the query is
-    * cached, so a small frame would be cached in more partitions than it
-    * is read in. The seeded split, the tree's split-candidate sample and
-    * the CV folds all sample per partition: other partitions, another
-    * model. The setting is read once, when the plan is cached, and
-    * restored right after.
-    */
-  private def persistAsRead(df: DataFrame): Unit = {
-    val conf = df.sparkSession.conf
-    val prior = conf.getOption(CanChangeCachedPartitioning)
-    conf.set(CanChangeCachedPartitioning, "true")
-    try df.persist()
-    finally prior.fold(conf.unset(CanChangeCachedPartitioning))(
-      conf.set(CanChangeCachedPartitioning, _))
-  }
+      val fitted: PipelineModel =
+        if (useCv) {
+          val dtc = st.collectFirst { case d: DecisionTreeClassifier => d }.get
+          // maxBins {8,16} vs the reference grid's {2,4} (train.py:330-333):
+          // deliberate — the fixture's 25-country one-hot needs maxBins ≥
+          // the largest categorical cardinality per split or the tree
+          // cannot separate categories; {2,4} underfits here by design of
+          // the reference's tiny demo dims
+          val grid = new ParamGridBuilder()
+            .addGrid(dtc.maxDepth, Array(2, 3, 4))
+            .addGrid(dtc.maxBins, Array(8, 16))
+            .build()
+          val cv = new CrossValidator().setEstimator(pipeline)
+            .setEvaluator(evaluator).setEstimatorParamMaps(grid)
+            .setNumFolds(3).setSeed(42L)
+          cv.fit(train).bestModel.asInstanceOf[PipelineModel]
+        } else pipeline.fit(train)
 
-  private def fitPersisted(df: DataFrame, useCv: Boolean): Trained = {
-    // label vocabulary fit eagerly like train.py:306 (one fixed order)
-    val labelModel: StringIndexerModel = new StringIndexer()
-      .setInputCol("label").setOutputCol("indexed_label")
-      .setStringOrderType("alphabetDesc").fit(df)
-    val labels = labelModel.labelsArray(0)
-    val st = stages(labelModel, labels)
-    val pipeline = new Pipeline().setStages(st)
+      val metric = evaluator.evaluate(fitted.transform(test))
 
-    val Array(train, test) = df.randomSplit(Array(0.7, 0.3), seed = 42L)
-    // deliberate deviation from the reference (train.py:334-336 points
-    // the evaluator at the hard 'prediction' column): AUC over 0/1
-    // predictions is threshold-degenerate and makes CV selection
-    // tie-blind; the tree's rawPrediction column gives a real ROC
-    val evaluator = new BinaryClassificationEvaluator()
-      .setLabelCol("indexed_label").setRawPredictionCol("rawPrediction")
-
-    val fitted: PipelineModel =
-      if (useCv) {
-        val dtc = st.collectFirst { case d: DecisionTreeClassifier => d }.get
-        // maxBins {8,16} vs the reference grid's {2,4} (train.py:330-333):
-        // deliberate — the fixture's 25-country one-hot needs maxBins ≥
-        // the largest categorical cardinality per split or the tree
-        // cannot separate categories; {2,4} underfits here by design of
-        // the reference's tiny demo dims
-        val grid = new ParamGridBuilder()
-          .addGrid(dtc.maxDepth, Array(2, 3, 4))
-          .addGrid(dtc.maxBins, Array(8, 16))
-          .build()
-        val cv = new CrossValidator().setEstimator(pipeline)
-          .setEvaluator(evaluator).setEstimatorParamMaps(grid)
-          .setNumFolds(3).setSeed(42L)
-        cv.fit(train).bestModel.asInstanceOf[PipelineModel]
-      } else pipeline.fit(train)
-
-    val metric = evaluator.evaluate(fitted.transform(test))
-
-    // M11 serving surgery: drop the label indexer so the scorer
-    // consumes raw features and emits predicted_label.
-    val servingStages = fitted.stages.patch(st.indexOf(labelModel), Nil, 1)
-    val serving = org.apache.spark.ml.GraftMlBridge.pipelineModel(
-      fitted.uid + "-serving", servingStages)
-    Trained(serving, metric, labels)
+      // M11 serving surgery: drop the label indexer so the scorer
+      // consumes raw features and emits predicted_label.
+      val servingStages = fitted.stages.patch(st.indexOf(labelModel), Nil, 1)
+      val serving = org.apache.spark.ml.GraftMlBridge.pipelineModel(
+        fitted.uid + "-serving", servingStages)
+      Trained(serving, metric, labels)
+    } finally df.unpersist()
   }
 
   /** End-to-end: build frame → fit → register. Returns (version, metric). */

@@ -168,14 +168,10 @@ object DimStore {
     */
   def publish(df: DataFrame, root: String, numFiles: Int = 0,
       keep: Int = 2): String = {
-    val spark = df.sparkSession
     val sized = if (numFiles > 0) df.repartition(numFiles) else df
-    val out = publishWith(spark, root)(dir =>
+    val out = publishWith(df.sparkSession, root)(dir =>
       sized.write.mode("overwrite").parquet(dir)) // _SUCCESS = complete
-    // the version holds the frame just written: [[read]] takes its schema
-    // from here instead of from the footers
-    successTime(spark, out).foreach(w => readSchemas.put(root, (out, w, df.schema)))
-    if (keep > 0) prune(spark, root, keep)
+    if (keep > 0) prune(df.sparkSession, root, keep)
     out
   }
 
@@ -299,12 +295,10 @@ object DimStore {
     * the version last read under `root` is kept, keyed by its path and
     * the modification time of its `_SUCCESS`, and reused while the
     * marker still names that version, so a re-read of an unchanged
-    * version runs no Spark job. [[publish]] records the schema of the
-    * frame it wrote, so in the publishing process even the first read of
-    * a new version runs none. A publish changes the path, and a root
+    * version runs no Spark job. A publish changes the path, and a root
     * deleted and rebuilt under a reused version number changes the
-    * `_SUCCESS` time; either way a version this process did not publish
-    * is read from its footers once. One entry per root, replaced on each
+    * `_SUCCESS` time; either way the next read takes the new version's
+    * schema from its footers, once. One entry per root, replaced on each
     * new version.
     */
   def read(spark: SparkSession, root: String): DataFrame = {
