@@ -47,22 +47,24 @@ object Sessions {
     spark
   }
 
-  /** Partition count for a corpus: one shuffle task per
-    * `targetInputBytesPerTask` of ON-DISK input, floored at the core
-    * count (never undersubscribe the cluster) and capped (a runaway
-    * figure helps nobody — real clusters tune the cap to executor
-    * count). The default target is 8 MiB of compressed parquet per
-    * task: narrow event rows expand ~8–16× through snappy + dictionary
-    * decoding into shuffle rows, so 8 MiB on disk ≈ the classic
-    * 64–128 MB in-memory task — and it is the factor the sf100
-    * measurement backs out exactly (2.1 GB events → 256 partitions).
+  /** Shuffle input per task: 8 MiB of compressed parquet. Narrow event
+    * rows expand ~8–16× through snappy + dictionary decoding into
+    * shuffle rows, so 8 MiB on disk ≈ the classic 64–128 MB in-memory
+    * task — and it is the factor the sf100 measurement backs out exactly
+    * (2.1 GB events → 256 partitions).
     */
-  def shufflePartitionsFor(
-      bytes: Long,
-      cores: Int,
-      targetInputBytesPerTask: Long = 8L << 20,
-      maxPartitions: Int = 65536): Int = {
-    require(cores > 0 && targetInputBytesPerTask > 0)
+  private val TargetInputBytesPerTask = 8L << 20
+
+  /** Cap on [[shufflePartitionsFor]]: a runaway figure helps nobody. */
+  private val MaxPartitions = 65536
+
+  /** Partition count for a corpus: one shuffle task per
+    * [[TargetInputBytesPerTask]] of ON-DISK input, floored at the core
+    * count (never undersubscribe the cluster) and capped at
+    * [[MaxPartitions]].
+    */
+  def shufflePartitionsFor(bytes: Long, cores: Int): Int = {
+    require(cores > 0)
     // divide-first overflow guard: `bytes + target - 1` wraps NEGATIVE
     // near Long.MaxValue (the value Catalyst assigns an unknown-size
     // leaf), and the old form then silently landed on the CORE FLOOR —
@@ -70,10 +72,10 @@ object Sessions {
     // (caught by the r15 width audit: q_zorder_ranked's uncached rank
     // RDDs recorded leafBytes = Long.MaxValue with autoWidth = 8)
     val fromBytes =
-      if (bytes / targetInputBytesPerTask >= maxPartitions.toLong) maxPartitions
-      else ((bytes + targetInputBytesPerTask - 1) / targetInputBytesPerTask)
+      if (bytes / TargetInputBytesPerTask >= MaxPartitions.toLong) MaxPartitions
+      else ((bytes + TargetInputBytesPerTask - 1) / TargetInputBytesPerTask)
         .max(0L).toInt
-    fromBytes.max(cores).min(maxPartitions.max(cores))
+    fromBytes.max(cores).min(MaxPartitions.max(cores))
   }
 
   /** The query's SCANNED bytes: the sum of its leaf relations' Catalyst

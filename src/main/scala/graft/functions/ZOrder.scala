@@ -432,12 +432,18 @@ object ZOrder {
       // added — a before/after root listing, not the requested
       // partition count, so empty range partitions (which write no
       // file) and any sizing fallback can't inflate the COMPACTION
-      // axis (see zorderAppendAuto's maxAppendFiles; r16 ADVICE)
+      // axis (see zorderAppendAuto's MaxAppendFiles; r16 ADVICE)
       import spark.implicits._
       Seq(math.max(1L, partCount - before)).toDF("files")
         .coalesce(1).write.mode("append").parquet(s"$live/_zmeta/appendlog")
     } finally { withZ.unpersist(); () }
   }
+
+  /** [[zorderAppendAuto]]'s staleness triggers, calibrated there. */
+  private val RebuildThreshold = 2.0
+  private val SkewThreshold = 4.0
+  private val MinShare = 0.05
+  private val MaxAppendFiles = 16L
 
   /** Append + staleness decision — the NINTH adaptive element,
     * mirroring [[graft.llm.Similarity.ivfPqAppendAuto]] (the IVF
@@ -458,8 +464,8 @@ object ZOrder {
     *    build's occupied cells (1.0 = appends spread like the build,
     *    the cell count = everything crammed into one cell).
     * Dual rule as calibrated for IVF and re-measured here: rebuild on
-    * signal ≥ rebuildThreshold, OR on skew ≥ skewThreshold once share
-    * clears minShare (a drifted sliver's product under-fires while its
+    * signal ≥ [[RebuildThreshold]], OR on skew ≥ [[SkewThreshold]] once
+    * share clears [[MinShare]] (a drifted sliver's product under-fires while its
     * skew is unambiguous; same-distribution skew stays ≈ 1).
     *
     * THIRD trigger, the COMPACTION axis: every appended batch small
@@ -471,26 +477,22 @@ object ZOrder {
     * (measured: 2–5× stale-vs-rebuilt gap at share ≤ 0.5 under 1-file
     * slices, flat under production 128 MiB slices — SCALE.md "Round 16:
     * z-order append staleness"). The `_zmeta/appendlog` ledger counts
-    * files per append; total appended files ≥ `maxAppendFiles` fires a
+    * files per append; total appended files ≥ [[MaxAppendFiles]] fires a
     * rebuild — the OPTIMIZE cadence every production table format
-    * schedules. `maxAppendFiles = 16` is swept (r17, 4/8/16/32;
+    * schedules. `MaxAppendFiles = 16` is swept (r17, 4/8/16/32;
     * SCALE.md "Round 17: maxAppendFiles probe-swept"): each halving
     * doubles rebuild spend and halves mean scan amplification; 16
     * bounds a point query's extra file opens at ~16 — a
     * table-size-independent latency bound —
     * while rebuild cost grows WITH table size, which at 100 TB pushes
-    * the crossover toward higher thresholds (read-heavy medium tables:
-    * pass 8). A fired rebuild is [[zorderRebuildVersioned]]: the next
+    * the crossover toward higher thresholds (read-heavy medium tables
+    * want 8). A fired rebuild is [[zorderRebuildVersioned]]: the next
     * generation, published beside the live one. Returns "append" |
     * "rebuild".
     */
   def zorderAppendAuto(
       batch: DataFrame,
-      path: String,
-      rebuildThreshold: Double = 2.0,
-      skewThreshold: Double = 4.0,
-      minShare: Double = 0.05,
-      maxAppendFiles: Long = 16L): String = {
+      path: String): String = {
     val spark = batch.sparkSession
     requireVersioned(spark, path, "zorderAppendAuto")
     // resolve the generation ONCE: the append below lands in it, the
@@ -505,7 +507,7 @@ object ZOrder {
     val lgFs = lgP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!lgFs.exists(lgP)) {
       graft.Sessions.recordDecision("zorderAppendAuto", 0.0,
-        rebuildThreshold, "append")
+        RebuildThreshold, "append")
       return "append"
     }
     val appendedFiles = spark.read.parquet(s"$live/_zmeta/appendlog")
@@ -513,9 +515,9 @@ object ZOrder {
         case r if r.isNullAt(0) => 0L
         case r => r.getLong(0)
       }
-    if (appendedFiles >= maxAppendFiles) {
+    if (appendedFiles >= MaxAppendFiles) {
       graft.Sessions.recordDecision("zorderAppendAuto",
-        appendedFiles.toDouble, maxAppendFiles.toDouble,
+        appendedFiles.toDouble, MaxAppendFiles.toDouble,
         s"rebuild(files $appendedFiles)")
       rebuildNow()
       return "rebuild"
@@ -526,7 +528,7 @@ object ZOrder {
     val r = app.agg(sum(col("rows")), max(col("rows"))).head()
     if (r.isNullAt(0)) { // empty batch ledger: nothing to decide
       graft.Sessions.recordDecision("zorderAppendAuto", 0.0,
-        rebuildThreshold, "append")
+        RebuildThreshold, "append")
       return "append"
     }
     val appended = r.getLong(0)
@@ -537,14 +539,14 @@ object ZOrder {
     val share = appended.toDouble / baseRows
     val skew = maxCell.toDouble / (appended.toDouble / baseCells)
     val signal = share * skew
-    val rebuild = signal >= rebuildThreshold ||
-      (skew >= skewThreshold && share >= minShare)
+    val rebuild = signal >= RebuildThreshold ||
+      (skew >= SkewThreshold && share >= MinShare)
     val choice =
       if (!rebuild) "append"
-      else if (signal >= rebuildThreshold) "rebuild"
+      else if (signal >= RebuildThreshold) "rebuild"
       else f"rebuild(skew $skew%.1f)"
     graft.Sessions.recordDecision("zorderAppendAuto", signal,
-      rebuildThreshold, choice)
+      RebuildThreshold, choice)
     if (rebuild) { rebuildNow(); "rebuild" } else "append"
   }
 
@@ -623,13 +625,12 @@ object ZOrder {
 
   /** Reader-atomic rebuild: re-cluster the live generation's current
     * rows (base + appends) into the NEXT generation and flip. Readers
-    * never quiesce; `keep` generations are retained for readers pinned
+    * never quiesce; two generations are retained for readers pinned
     * to a superseded path (retire with prune's retention contract).
     */
   def zorderRebuildVersioned(
       spark: org.apache.spark.sql.SparkSession,
-      root: String,
-      keep: Int = 2): String = {
+      root: String): String = {
     val live = graft.sources.DimStore.currentPath(spark, root, zComplete)
     val meta = spark.read.parquet(s"$live/_zmeta/meta").head()
     val (xCol, yCol, bits) =
@@ -644,25 +645,24 @@ object ZOrder {
         zorderWriteRanked(current, xCol, yCol, dir, bits)
         graft.sources.DimStore.stamp(spark, dir) // terminal artifact
     }
-    graft.sources.DimStore.prune(spark, root, keep, zComplete)
+    graft.sources.DimStore.prune(spark, root, 2, zComplete)
     out
   }
 
   /** N-column cluster-write ([[zValueN]] over min/max-scaled
     * dimensions) — the training-data layout shape: cluster documents on
     * (source, length-bucket, quality-bucket) so per-dimension range
-    * filters all prune. `bits` defaults to the per-column share of the
-    * 62-bit budget; everything else as [[zorderWrite]].
+    * filters all prune. Each column gets its share of the 62-bit
+    * budget; everything else as [[zorderWrite]].
     */
   def zorderWriteN(
       df: DataFrame,
       cols: Seq[String],
       path: String,
-      bits: Int = 0,
       numFiles: Int = 0): Unit = {
     require(cols.size >= 2 && cols.size <= 8,
       s"zorderWriteN takes 2..8 columns, got ${cols.size}")
-    val b = if (bits > 0) bits else 62 / cols.size
+    val b = 62 / cols.size
     val r = df.agg(
       min(col(cols.head)).cast("long"),
       max(col(cols.head)).cast("long") +:

@@ -25,9 +25,9 @@ object Dedup {
     * doc_id as survivor. One hash aggregation with partial-agg; shuffle
     * key is the 16-byte md5.
     */
-  def exact(docs: DataFrame, textCol: String = "text"): DataFrame =
+  def exact(docs: DataFrame): DataFrame =
     docs
-      .select(TextOps.fingerprint(col(textCol)).as("fp"), col("doc_id"))
+      .select(TextOps.fingerprint(col("text")).as("fp"), col("doc_id"))
       .groupBy(col("fp"))
       .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_copies"))
       .select(col("doc_id"), col("n_copies"))
@@ -61,8 +61,8 @@ object Dedup {
   def simhash(text: Column): Column =
     graft.functions.TextHashExpressions.simhash64(text)
 
-  def simhashes(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs.select(col("doc_id"), simhash(col(textCol)).as("simhash"))
+  def simhashes(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), simhash(col("text")).as("simhash"))
 
   // band keys use the native band_hash expression (same xxhash64 chain
   // the aggregate-HOF fold computed, minus the per-band slice allocation
@@ -75,7 +75,6 @@ object Dedup {
     */
   def simhashNearDups(
       docs: DataFrame,
-      textCol: String = "text",
       maxHamming: Int = 3,
       bands: Int = 4,
       maxBucket: Int = Int.MaxValue): DataFrame = {
@@ -91,7 +90,7 @@ object Dedup {
       s"simhashNearDups: a finite maxBucket needs bands >= maxHamming+2 " +
         s"(got bands=$bands, maxHamming=$maxHamming) so every true pair " +
         "keeps >=2 guaranteed collision bands")
-    val sh = simhashes(docs, textCol).localCheckpoint()
+    val sh = simhashes(docs).localCheckpoint()
     simhashNearDupsFromSigs(sh, "simhash", maxHamming, bands, maxBucket)
   }
 
@@ -161,9 +160,8 @@ object Dedup {
     */
   def simhashExactPairs(
       docs: DataFrame,
-      maxHamming: Int = 3,
-      textCol: String = "text"): DataFrame = {
-    val sigs = simhash32Sigs(docs, textCol).localCheckpoint()
+      maxHamming: Int = 3): DataFrame = {
+    val sigs = simhash32Sigs(docs).localCheckpoint()
     val l = sigs.select(col("doc_id").as("a"), col("sig").as("sig_a"))
     val r = sigs.select(col("doc_id").as("b"), col("sig").as("sig_b"))
     l.join(r, col("a") < col("b"))
@@ -178,9 +176,9 @@ object Dedup {
     * signature 0 via the left join, matching the production expression's
     * empty-input convention.
     */
-  private[llm] def simhash32Sigs(docs: DataFrame, textCol: String = "text"): DataFrame = {
+  private[llm] def simhash32Sigs(docs: DataFrame): DataFrame = {
     val toks = docs.select(col("doc_id"),
-      explode(filter(split(col(textCol), " "), t => t =!= "")).as("tok"))
+      explode(filter(split(col("text"), " "), t => t =!= "")).as("tok"))
     val hashed = toks.withColumn("h",
       expr("aggregate(filter(split(tok, ''), c -> c <> ''), 0L, " +
         "(h, c) -> (h * 31 + ascii(c)) % 4294967296)"))
@@ -194,27 +192,26 @@ object Dedup {
       .select(col("doc_id"), sigExpr.as("sig"))
   }
 
+  private val MaxAnchorsPerDoc = 20
+  private val MaxAnchorBucket = 64
+
   /** n-gram Jaccard near-dup pairs with shingle-anchored candidate
     * generation: only docs sharing ≥1 anchor shingle hash become
     * candidates; exact Jaccard is then computed on the hash sets (never
-    * the strings). `maxShinglesPerDoc` caps fan-out via smallest-hash
-    * (min-wise) sampling.
+    * the strings). [[MaxAnchorsPerDoc]] caps fan-out via smallest-hash
+    * (min-wise) sampling, and [[MaxAnchorBucket]] drops hot anchors.
     */
   def ngramJaccardPairs(
       docs: DataFrame,
-      textCol: String = "text",
-      w: Int = 3,
-      threshold: Double = 0.8,
-      maxShinglesPerDoc: Int = 20,
-      maxBucket: Int = 64): DataFrame = {
+      threshold: Double = 0.8): DataFrame = {
     // localCheckpoint (not persist): materializes once before the
     // self-join branches AND is auto-released by the ContextCleaner when
     // the DataFrame goes out of scope — method-local persist() handles
     // would otherwise leak cache entries across invocations
     val sampled = docs
-      .select(col("doc_id"), shingleHashes(col(textCol), w).as("sh")) // pre-sorted
+      .select(col("doc_id"), shingleHashes(col("text")).as("sh")) // pre-sorted
       .select(col("doc_id"), col("sh"), size(col("sh")).as("n_sh"),
-        slice(col("sh"), 1, maxShinglesPerDoc).as("anchor_hashes"))
+        slice(col("sh"), 1, MaxAnchorsPerDoc).as("anchor_hashes"))
       .localCheckpoint()
     // candidate generation carries ONLY (anchor, id): the wide shingle
     // arrays never enter the pair explosion
@@ -223,7 +220,7 @@ object Dedup {
     // quadratic junk pairs without finding anything a rarer shingle
     // wouldn't; cap bucket size (standard prefix-filter hygiene at scale)
     val useful = anchors.groupBy("anchor").count()
-      .filter(col("count") >= 2 && col("count") <= maxBucket)
+      .filter(col("count") >= 2 && col("count") <= MaxAnchorBucket)
       .select("anchor")
     val filtered = anchors.join(broadcast(useful), "anchor")
     val cand = filtered.select(col("anchor"), col("doc_id").as("a"))
@@ -256,11 +253,9 @@ object Dedup {
     */
   def ngramJaccardPairsExact(
       docs: DataFrame,
-      textCol: String = "text",
-      w: Int = 3,
       threshold: Double = 0.8): DataFrame = {
     val sets = docs
-      .select(col("doc_id"), shingles(col(textCol), w).as("sh"))
+      .select(col("doc_id"), shingles(col("text")).as("sh"))
       .withColumn("n_sh", size(col("sh")))
       .filter(col("n_sh") > 0)
       .localCheckpoint()
@@ -290,11 +285,9 @@ object Dedup {
     */
   def ngramContainmentPairsExact(
       docs: DataFrame,
-      textCol: String = "text",
-      w: Int = 3,
       threshold: Double = 0.9): DataFrame = {
     val sets = docs
-      .select(col("doc_id"), shingles(col(textCol), w).as("sh"))
+      .select(col("doc_id"), shingles(col("text")).as("sh"))
       .withColumn("n_sh", size(col("sh")))
       .filter(col("n_sh") > 0)
       .localCheckpoint()
@@ -336,7 +329,7 @@ object Dedup {
     * round is two groupBy-join shuffles over the PAIR graph — which at
     * 100 TB is tiny relative to the corpus (only near-dups appear).
     * Convergence (edge set is a fixed point = all components are
-    * min-centered stars) is detected with two anti-joins; `maxIter` is
+    * min-centered stars) is detected with two anti-joins; `MaxIter` is
     * a runaway bound, not a silent truncation: hitting it without
     * convergence THROWS, because unconverged labels would silently
     * keep/drop the wrong docs (and diverge from the exact
@@ -372,7 +365,9 @@ object Dedup {
     (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
   }
 
-  def resolveClusters(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
+  private val MaxIter = 50
+
+  def resolveClusters(pairs: DataFrame): DataFrame = {
     val allNodes = pairs.select(col("a").as("doc_id"))
       .union(pairs.select(col("b").as("doc_id")))
       .distinct()
@@ -387,7 +382,7 @@ object Dedup {
     var converged = false
     var iter = 0
     var fpEdges = edgeFingerprint(edges)
-    while (!converged && iter < maxIter) {
+    while (!converged && iter < MaxIter) {
       // LARGE-STAR: per node u, attach every strictly-larger neighbor to
       // m = min(Γ(u) ∪ {u}); emitted (v, m) has v > u ≥ m — canonical
       val adj = edges.select(col("u"), col("v"))
@@ -469,10 +464,10 @@ object Dedup {
       iter += 1
     }
     if (!converged) throw new IllegalStateException(
-      s"resolveClusters: star contraction did not converge in $maxIter " +
-        "rounds (log-scale bound — pathological input) — raise maxIter")
+      s"resolveClusters: star contraction did not converge in $MaxIter " +
+        "rounds (log-scale bound — pathological input) — raise MaxIter")
     graft.Sessions.recordDecision("resolveClusters", iter.toDouble,
-      maxIter.toDouble, "converged")
+      MaxIter.toDouble, "converged")
     // fixed point = min-centered stars: every non-min node's single
     // neighbor IS its component min; the min's neighbors are all larger
     val adjF = edges.select(col("u").as("doc_id"), col("v").as("nbr"))
@@ -498,8 +493,8 @@ object Dedup {
     * of the 8-byte shingle hash — native expression, each shingle string
     * hashed once, all permutation math in a primitive loop.
     */
-  def minhashSignature(text: Column, k: Int = 32, w: Int = 3): Column =
-    graft.functions.TextHashExpressions.minhash_sig(text, k, w)
+  def minhashSignature(text: Column, k: Int = 32): Column =
+    graft.functions.TextHashExpressions.minhash_sig(text, k)
 
   /** MinHash-LSH near-dup candidate pairs: band the k-length signature
     * into `bands` rows, join on (band, folded band hash) over the
@@ -522,15 +517,13 @@ object Dedup {
     */
   def minhashNearDups(
       docs: DataFrame,
-      textCol: String = "text",
       k: Int = 32,
       bands: Int = 8,
       threshold: Double = 0.5,
-      w: Int = 3,
       maxBucket: Int = 4096): DataFrame = {
     val rows = k / bands
     val sig = docs
-      .select(col("doc_id"), minhashSignature(col(textCol), k, w).as("sig"))
+      .select(col("doc_id"), minhashSignature(col("text"), k).as("sig"))
       .localCheckpoint()
     // narrow banding relation: (band-key, id) only — signatures rejoin
     // per unique candidate pair, never ride the pair explosion. Static
@@ -600,7 +593,6 @@ object Dedup {
     */
   def winnowOverlapPairs(
       docs: DataFrame,
-      textCol: String = "text",
       k: Int = 5,
       w: Int = 4,
       minShared: Int = 2,
@@ -621,7 +613,7 @@ object Dedup {
     // could make the branches disagree. All callers read parquet.
     val fps = graft.operators.Spread.toCores(docs).select(col("doc_id"),
       explode(graft.functions.TextHashExpressions
-        .winnow_fingerprint(col(textCol), k, w)).as("fp"))
+        .winnow_fingerprint(col("text"), k, w)).as("fp"))
     // hot buckets: ≤ |fps|/maxBucket rows by pigeonhole — AQE broadcasts
     // it when (as always in practice) it's tiny; no hint, so an
     // adversarial corpus degrades to a shuffled anti-join, not an OOM
@@ -688,13 +680,11 @@ object Dedup {
     */
   def winnowOverlapPairsExact(
       docs: DataFrame,
-      textCol: String = "text",
       k: Int = 5,
-      w: Int = 4,
-      minShared: Int = 2): DataFrame = {
-    val n = length(col(textCol))
+      w: Int = 4): DataFrame = {
+    val n = length(col("text"))
     val grams = transform(sequence(lit(0), n - k),
-      i => col(textCol).substr(i + lit(1), lit(k)))
+      i => col("text").substr(i + lit(1), lit(k)))
     val fpsArr = element_at(
       transform(array(grams), gms =>
         // complete windows only: starts 0..ng-w (ng = n-k+1 grams)
@@ -710,7 +700,7 @@ object Dedup {
         col("fp") === col("r_fp") && col("a") < col("b"))
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("shared_fps"))
-      .filter(col("shared_fps") >= minShared)
+      .filter(col("shared_fps") >= 2)
   }
 
   /** Materialize the MinHash dedup index for a corpus: the banded
@@ -725,16 +715,12 @@ object Dedup {
     */
   def minhashWriteIndex(
       docs: DataFrame,
-      indexDir: String,
-      textCol: String = "text",
-      k: Int = 32,
-      bands: Int = 8,
-      w: Int = 3): Unit = {
+      indexDir: String): Unit = {
     val sig = docs
-      .select(col("doc_id"), minhashSignature(col(textCol), k, w).as("sig"))
+      .select(col("doc_id"), minhashSignature(col("text")).as("sig"))
       .localCheckpoint()
     sig.write.mode("overwrite").parquet(s"$indexDir/sigs")
-    bandRelation(sig, k, bands).write.mode("overwrite").parquet(s"$indexDir/bands")
+    bandRelation(sig, 32, 8).write.mode("overwrite").parquet(s"$indexDir/bands")
   }
 
   /** Bucketed variant of [[minhashWriteIndex]]: the band relation is
@@ -748,18 +734,13 @@ object Dedup {
     */
   def minhashWriteIndexBucketed(
       docs: DataFrame,
-      tablePrefix: String,
-      buckets: Int = 8,
-      textCol: String = "text",
-      k: Int = 32,
-      bands: Int = 8,
-      w: Int = 3): Unit = {
+      tablePrefix: String): Unit = {
     val sig = docs
-      .select(col("doc_id"), minhashSignature(col(textCol), k, w).as("sig"))
+      .select(col("doc_id"), minhashSignature(col("text")).as("sig"))
       .localCheckpoint()
     sig.write.mode("overwrite").saveAsTable(s"${tablePrefix}_sigs")
-    bandRelation(sig, k, bands).write.mode("overwrite")
-      .bucketBy(buckets, "bkey").sortBy("bkey")
+    bandRelation(sig, 32, 8).write.mode("overwrite")
+      .bucketBy(8, "bkey").sortBy("bkey")
       .saveAsTable(s"${tablePrefix}_bands")
   }
 
@@ -800,15 +781,11 @@ object Dedup {
       newDocs: DataFrame,
       indexBands: DataFrame,
       indexSigs: DataFrame,
-      textCol: String = "text",
-      k: Int = 32,
-      bands: Int = 8,
-      threshold: Double = 0.5,
-      w: Int = 3): DataFrame = {
+      threshold: Double = 0.5): DataFrame = {
     val newSig = newDocs
-      .select(col("doc_id"), minhashSignature(col(textCol), k, w).as("sig"))
+      .select(col("doc_id"), minhashSignature(col("text")).as("sig"))
       .localCheckpoint()
-    val newBands = bandRelation(newSig, k, bands)
+    val newBands = bandRelation(newSig, 32, 8)
     // new-vs-index candidates (any band collision). a =!= b guards the
     // replayed-ingest case: a doc present in BOTH the batch and the index
     // must not pair with itself (est_jaccard 1.0 → spurious self-drop)
@@ -849,7 +826,7 @@ object Dedup {
       .withColumn("est_jaccard",
         round(graft.functions.VecExpressions
           .vec_match_count(col("sig_a"), col("sig_b"))
-          .cast("double") / lit(k), 6))
+          .cast("double") / lit(32), 6))
       .filter(col("est_jaccard") >= threshold)
       .select(col("a"), col("b"), col("est_jaccard"))
   }
@@ -872,11 +849,9 @@ object Dedup {
   def ngramJaccardDeltaPairsExact(
       newDocs: DataFrame,
       corpus: DataFrame,
-      textCol: String = "text",
-      w: Int = 3,
       threshold: Double = 0.8): DataFrame = {
     def sets(d: DataFrame) = d
-      .select(col("doc_id"), shingles(col(textCol), w).as("sh"))
+      .select(col("doc_id"), shingles(col("text")).as("sh"))
       .withColumn("n_sh", size(col("sh")))
       .filter(col("n_sh") > 0)
     val newSets = sets(newDocs).localCheckpoint()
@@ -928,13 +903,12 @@ object Dedup {
   def trimRepeatedSpans(
       docs: DataFrame,
       spanTokens: Int = 8,
-      hashGrams: Boolean = false,
-      textCol: String = "text"): DataFrame = {
+      hashGrams: Boolean = false): DataFrame = {
     val L = spanTokens
     require(L >= 2, s"spanTokens must be >= 2, got $L")
     // gram building is the compute; spread it off a narrow scan
     val base = graft.operators.Spread.toCores(docs)
-      .select(col("doc_id"), split(col(textCol), " ").as("toks"))
+      .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .withColumn("n", size(col("toks")))
     val gramStr = expr(
       s"transform(sequence(0, n - $L), i -> array_join(slice(toks, i + 1, $L), ' '))")
@@ -984,11 +958,9 @@ object Dedup {
       nlist: Int = 16,
       threshold: Double = 0.99,
       maxCell: Int = Int.MaxValue,
-      seed: Long = 42L,
-      vecCol: String = "embedding",
-      idCol: String = "vec_id"): DataFrame = {
+      seed: Long = 42L): DataFrame = {
     val (assigned0, _) =
-      Similarity.fitQuantizer(corpus, nlist, seed, vecCol, idCol)
+      Similarity.fitQuantizer(corpus, nlist, seed, "embedding", "vec_id")
     // sub-split oversized cells: sub = hash(id) % ceil(|cell| / maxCell)
     val sizes = assigned0.groupBy(col("cell")).agg(count(lit(1)).as("_sz"))
     val assigned = assigned0.join(broadcast(sizes), "cell")
@@ -1017,7 +989,7 @@ object Dedup {
   }
 
   /** Cross-source overlap matrix: for every pair of sources, the number
-    * of distinct `n`-token shingles that appear in BOTH — the dedup /
+    * of distinct 3-token shingles that appear in BOTH — the dedup /
     * contamination diagnostic a pipeline reads before trusting a source
     * mix (heavy off-diagonal mass means shared boilerplate or mirrored
     * content; which pairs carry it tells you where).
@@ -1031,18 +1003,14 @@ object Dedup {
     * this diagnostic exists to find.
     */
   def sourceOverlap(
-      docs: DataFrame,
-      groupCol: String = "source",
-      n: Int = 3,
-      textCol: String = "text"): DataFrame = {
-    require(n >= 1, s"sourceOverlap: n >= 1, got $n")
-    val toks = TextOps.tokens(col(textCol))
-    // n-gram string building is the compute; spread it off a narrow scan
+      docs: DataFrame): DataFrame = {
+    val toks = TextOps.tokens(col("text"))
+    // 3-gram string building is the compute; spread it off a narrow scan
     val fp = graft.operators.Spread.toCores(docs)
-      .filter(size(toks) >= n)
-      .select(col(groupCol).as("grp"),
-        explode(transform(sequence(lit(0), size(toks) - n),
-          i => array_join(slice(toks, i + 1, lit(n)), " "))).as("sh"))
+      .filter(size(toks) >= 3)
+      .select(col("source").as("grp"),
+        explode(transform(sequence(lit(0), size(toks) - 3),
+          i => array_join(slice(toks, i + 1, lit(3)), " "))).as("sh"))
       .distinct()
     fp.groupBy(col("sh"))
       .agg(sort_array(collect_set(col("grp"))).as("grps"))
@@ -1061,8 +1029,8 @@ object Dedup {
     * is one row: cluster_size 1). Two grouped aggregations, both with
     * map-side partials; output is bounded by the largest multiplicity.
     */
-  def dupProfile(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs.select(TextOps.fingerprint(col(textCol)).as("fp"))
+  def dupProfile(docs: DataFrame): DataFrame =
+    docs.select(TextOps.fingerprint(col("text")).as("fp"))
       .groupBy(col("fp")).agg(count(lit(1)).as("sz"))
       .groupBy(col("sz").as("cluster_size"))
       .agg(count(lit(1)).as("n_clusters"))

@@ -21,10 +21,8 @@ object EmbeddingOps {
     * vectors pass through as zeros (guarded divide).
     */
   def normalize(
-      emb: DataFrame,
-      vecCol: String = "embedding",
-      scale: Int = 6): DataFrame = {
-    val v = asDouble(col(vecCol))
+      emb: DataFrame): DataFrame = {
+    val v = asDouble(col("embedding"))
     // norm computed ONCE in a prior projection: HOF lambdas get no
     // common-subexpression elimination, so an inline norm would be
     // re-evaluated per element (O(dim²) per row)
@@ -34,7 +32,7 @@ object EmbeddingOps {
       .select(
         col("vec_id"),
         transform(col("_v"),
-          x => round(when(col("_n") === 0.0, lit(0.0)).otherwise(x / col("_n")), scale))
+          x => round(when(col("_n") === 0.0, lit(0.0)).otherwise(x / col("_n")), 6))
           .as("unit_vec"))
   }
 
@@ -47,9 +45,9 @@ object EmbeddingOps {
     * scan-speed. All arithmetic in double with a fixed op order, so the
     * DuckDB oracle matches the int codes exactly.
     */
-  def quantize(emb: DataFrame, vecCol: String = "embedding"): DataFrame = {
+  def quantize(emb: DataFrame): DataFrame = {
     def exploded = emb
-      .select(col("vec_id"), posexplode(asDouble(col(vecCol))).as(Seq("dim", "v")))
+      .select(col("vec_id"), posexplode(asDouble(col("embedding"))).as(Seq("dim", "v")))
       .select(col("vec_id"), col("dim").cast("long").as("dim"), col("v"))
     val stats = exploded.groupBy("dim")
       .agg(min(col("v")).as("mn"), max(col("v")).as("mx"))
@@ -76,11 +74,10 @@ object EmbeddingOps {
     */
   def centroidCosine(
       emb: DataFrame,
-      groupCol: String,
-      vecCol: String = "embedding"): DataFrame = {
+      groupCol: String): DataFrame = {
     val comp = emb
       .select(col(groupCol).as("_grp"),
-        posexplode(asDouble(col(vecCol))).as(Seq("dim", "v")))
+        posexplode(asDouble(col("embedding"))).as(Seq("dim", "v")))
       .groupBy(col("_grp"), col("dim"))
       .agg(round(avg(col("v")), 6).as("c"))
     val cent = comp.groupBy(col("_grp"))
@@ -89,16 +86,16 @@ object EmbeddingOps {
     emb
       .join(broadcast(cent), col(groupCol) === col("_grp"))
       .select(col("vec_id"), col(groupCol),
-        round(Similarity.dot(asDouble(col(vecCol)), col("cv")) /
-          (sqrt(Similarity.dot(asDouble(col(vecCol)), asDouble(col(vecCol)))) *
+        round(Similarity.dot(asDouble(col("embedding")), col("cv")) /
+          (sqrt(Similarity.dot(asDouble(col("embedding")), asDouble(col("embedding")))) *
             sqrt(Similarity.dot(col("cv"), col("cv")))), 6)
           .as("cos_to_centroid"))
   }
 
   /** Per-dimension mean / sample-stddev / min / max across the corpus. */
-  def dimStats(emb: DataFrame, vecCol: String = "embedding"): DataFrame =
+  def dimStats(emb: DataFrame): DataFrame =
     emb
-      .select(posexplode(asDouble(col(vecCol))).as(Seq("dim", "v")))
+      .select(posexplode(asDouble(col("embedding"))).as(Seq("dim", "v")))
       .groupBy(col("dim").cast("long").as("dim")) // bigint: matches the oracle's RANGE type
       .agg(
         round(avg(col("v")), 4).as("mean"),
@@ -120,19 +117,17 @@ object EmbeddingOps {
     */
   def pcaProject(
       emb: DataFrame,
-      k: Int,
-      vecCol: String = "embedding",
-      idCol: String = "vec_id"): DataFrame = {
+      k: Int): DataFrame = {
     import org.apache.spark.ml.feature.PCA
     import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
     require(k >= 1, s"k must be >= 1, got $k")
-    val withVec = emb.select(col(idCol),
-      array_to_vector(asDouble(col(vecCol))).as("features"))
+    val withVec = emb.select(col("vec_id"),
+      array_to_vector(asDouble(col("embedding"))).as("features"))
     val model = new PCA().setK(k)
       .setInputCol("features").setOutputCol("pca")
       .fit(withVec)
     model.transform(withVec)
-      .select(col(idCol), vector_to_array(col("pca")).as("pca"))
+      .select(col("vec_id"), vector_to_array(col("pca")).as("pca"))
   }
 
   /** EXACT sample covariance of the embedding corpus, upper triangle —
@@ -162,8 +157,7 @@ object EmbeddingOps {
     */
   def covarianceExact(
       emb: DataFrame,
-      dims: Int,
-      vecCol: String = "embedding"): DataFrame = {
+      dims: Int): DataFrame = {
     require(dims >= 1 && dims <= 512, s"covarianceExact: 1 <= dims <= 512, got $dims")
     // the d(d+1)/2 expansion is the compute; it must not serialize
     // behind a narrow scan (a demo-sized corpus is often ONE file = ONE
@@ -176,7 +170,7 @@ object EmbeddingOps {
     // r8->r9 bench_diff ledger now flags as uniform-load noise. A real
     // 100 TB corpus arrives in thousands of splits and skips this.
     val m = graft.operators.Spread.toCores(emb)
-      .select(transform(slice(asDouble(col(vecCol)), 1, dims),
+      .select(transform(slice(asDouble(col("embedding")), 1, dims),
         x => round(x * 1e6).cast("long")).as("m"))
 
     // Pass 1 (narrow, d additions/row): per-dim sums Σx_i and n in ONE
@@ -246,21 +240,19 @@ object EmbeddingOps {
     */
   private[llm] def assignToCentroids(
       emb: DataFrame,
-      centroids: DataFrame,
-      vecCol: String = "embedding",
-      scale: Int = 6): DataFrame = {
+      centroids: DataFrame): DataFrame = {
     val cents = broadcast(centroids.select(
       col("cell").cast("long").as("cell"),
       asDouble(col("centroid")).as("_c"))
       .withColumn("_cc", Similarity.dot(col("_c"), col("_c"))))
-    emb.select(col("vec_id"), asDouble(col(vecCol)).as("_v"))
+    emb.select(col("vec_id"), asDouble(col("embedding")).as("_v"))
       .withColumn("_vv", Similarity.dot(col("_v"), col("_v")))
       .crossJoin(cents)
       // same algebraic form and op order as the DuckDB oracle:
       // (vv - 2·v·c) + cc, rounded before comparison
       .withColumn("_d2", round(
         col("_vv") - lit(2.0) * Similarity.dot(col("_v"), col("_c"))
-          + col("_cc"), scale))
+          + col("_cc"), 6))
       .groupBy(col("vec_id"))
       .agg(min(struct(col("_d2"), col("cell"))).as("_m"))
       .select(col("vec_id"), col("_m").getField("cell").as("cluster"))
@@ -314,23 +306,21 @@ object EmbeddingOps {
       docs: DataFrame,
       emb: DataFrame,
       k: Int = 8,
-      seed: Long = 42L,
-      fitFraction: Double = 1.0,
-      vecCol: String = "embedding"): DataFrame = {
+      fitFraction: Double = 1.0): DataFrame = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    val base = emb.select(col("vec_id"), asDouble(col(vecCol)).as("_v"))
+    val base = emb.select(col("vec_id"), asDouble(col("embedding")).as("_v"))
     val fitOn =
       if (fitFraction >= 1.0) base
       else Sampling.deterministicSample(base, col("vec_id"), fitFraction)
-    val model = new KMeans().setK(k).setSeed(seed).setFeaturesCol("_f")
+    val model = new KMeans().setK(k).setSeed(42L).setFeaturesCol("_f")
       .fit(fitOn.select(array_to_vector(col("_v")).as("_f")))
     val spark = emb.sparkSession
     import spark.implicits._
     val centroids = model.clusterCenters.zipWithIndex
       .map { case (c, i) => (i.toLong, c.toArray) }.toSeq
       .toDF("cell", "centroid")
-    clusterStats(docs, assignToCentroids(emb, centroids, vecCol))
+    clusterStats(docs, assignToCentroids(emb, centroids))
   }
 
   /** Exact-oracle twin of [[corpusClusters]]: centroids are the
@@ -342,11 +332,10 @@ object EmbeddingOps {
   def corpusClustersFixed(
       docs: DataFrame,
       emb: DataFrame,
-      k: Int = 8,
-      vecCol: String = "embedding"): DataFrame = {
+      k: Int = 8): DataFrame = {
     val centroids = emb.filter(col("vec_id") < k)
-      .select(col("vec_id").as("cell"), col(vecCol).as("centroid"))
-    clusterStats(docs, assignToCentroids(emb, centroids, vecCol))
+      .select(col("vec_id").as("cell"), col("embedding").as("centroid"))
+    clusterStats(docs, assignToCentroids(emb, centroids))
   }
 
 }

@@ -19,37 +19,36 @@ import org.apache.spark.sql.functions._
   */
 object LangModel {
 
+  /** The add-k smoothing mass: > 0 so unseen tokens keep probability. */
+  private val AddK = 0.5
+
   /** Unigram table: (token, cnt) over the whitespace tokenization shared
     * with [[TextOps]] (same `tokens`, so LM scores and token budgets can
     * never disagree about what a token is).
     */
-  def unigramCounts(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs.select(explode(TextOps.tokens(col(textCol))).as("token"))
+  def unigramCounts(docs: DataFrame): DataFrame =
+    docs.select(explode(TextOps.tokens(col("text"))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("cnt"))
 
   /** Per-document cross-entropy (bits/token) under the add-k-smoothed
     * unigram LM trained on `docs` itself:
     * p(t) = (cnt_t + k) / (total + k·|vocab|), xent = avg(−log2 p(t)).
-    * Output (idCol, n_tokens, xent); xent rounds to 6 places because the
+    * Output (doc_id, n_tokens, xent); xent rounds to 6 places because the
     * per-doc average's float add order is engine-dependent.
     */
   def crossEntropy(
-      docs: DataFrame,
-      textCol: String = "text",
-      idCol: String = "doc_id",
-      addK: Double = 0.5): DataFrame = {
-    require(addK > 0.0, s"addK must be positive for unseen-token mass, got $addK")
-    val counts = unigramCounts(docs, textCol)
+      docs: DataFrame): DataFrame = {
+    val counts = unigramCounts(docs)
     // one-row (total, vocab) relation: broadcast cross join, no collect
     val totals = counts.agg(
       sum(col("cnt")).cast("double").as("total"),
       count(lit(1)).cast("double").as("vocab"))
     val probs = counts.crossJoin(broadcast(totals))
       .select(col("token"),
-        ((col("cnt") + lit(addK)) / (col("total") + lit(addK) * col("vocab"))).as("p"))
-    docs.select(col(idCol), explode(TextOps.tokens(col(textCol))).as("token"))
+        ((col("cnt") + lit(AddK)) / (col("total") + lit(AddK) * col("vocab"))).as("p"))
+    docs.select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("token"))
       .join(probs, "token") // equi-join on token; AQE broadcasts while vocab fits
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(
         count(lit(1)).as("n_tokens"),
         round(avg(-log2(col("p"))), 6).as("xent"))
@@ -80,13 +79,9 @@ object LangModel {
     */
   def dsirWeights(
       docs: DataFrame,
-      targetPred: Column,
-      textCol: String = "text",
-      idCol: String = "doc_id",
-      addK: Double = 0.5): DataFrame = {
-    require(addK > 0.0, s"addK must be positive for unseen-token mass, got $addK")
+      targetPred: Column): DataFrame = {
     val counts = docs
-      .select(targetPred.as("is_tgt"), explode(TextOps.tokens(col(textCol))).as("token"))
+      .select(targetPred.as("is_tgt"), explode(TextOps.tokens(col("text"))).as("token"))
       .groupBy(col("token"))
       .agg(count(lit(1)).as("c_all"),
         sum(when(col("is_tgt"), 1L).otherwise(0L)).as("c_tgt"))
@@ -97,12 +92,12 @@ object LangModel {
     val ratios = counts.crossJoin(broadcast(totals))
       .select(col("token"),
         round((
-          log((col("c_tgt") + addK) / (col("t_tgt") + lit(addK) * col("vocab"))) -
-            log((col("c_all") + addK) / (col("t_all") + lit(addK) * col("vocab")))
+          log((col("c_tgt") + AddK) / (col("t_tgt") + lit(AddK) * col("vocab"))) -
+            log((col("c_all") + AddK) / (col("t_all") + lit(AddK) * col("vocab")))
           ) * 1e6).cast("long").as("_r_micro"))
-    docs.select(col(idCol), explode(TextOps.tokens(col(textCol))).as("token"))
+    docs.select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("token"))
       .join(ratios, "token")
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(
         count(lit(1)).as("n_tokens"),
         round(sum(col("_r_micro")) / 1e6, 6).as("logratio"))
@@ -123,16 +118,12 @@ object LangModel {
     * the lambda would re-tokenize per element — O(n²) per doc).
     */
   def crossEntropyBigram(
-      docs: DataFrame,
-      textCol: String = "text",
-      idCol: String = "doc_id",
-      addK: Double = 0.5): DataFrame = {
-    require(addK > 0.0, s"addK must be positive for unseen mass, got $addK")
+      docs: DataFrame): DataFrame = {
     // bigram string building is the compute; spread it off a narrow scan
     val tkd = graft.operators.Spread.toCores(docs)
-      .select(col(idCol), TextOps.tokens(col(textCol)).as("tk"))
+      .select(col("doc_id"), TextOps.tokens(col("text")).as("tk"))
       .filter(size(col("tk")) >= 2)
-    def bigrams = tkd.select(col(idCol),
+    def bigrams = tkd.select(col("doc_id"),
       explode(transform(sequence(lit(0), size(col("tk")) - 2),
         i => concat_ws(" ",
           element_at(col("tk"), i + 1), element_at(col("tk"), i + 2))))
@@ -141,16 +132,16 @@ object LangModel {
     val ctx = c
       .groupBy(split(col("g"), " ").getItem(0).as("w1"))
       .agg(sum(col("cnt")).as("ctx"))
-    val vocab = unigramCounts(docs, textCol)
+    val vocab = unigramCounts(docs)
       .agg(count(lit(1)).cast("double").as("vocab"))
     val probs = c.withColumn("w1", split(col("g"), " ").getItem(0))
       .join(ctx, "w1")
       .crossJoin(broadcast(vocab))
       .select(col("g"),
-        ((col("cnt") + lit(addK)) / (col("ctx") + lit(addK) * col("vocab")))
+        ((col("cnt") + lit(AddK)) / (col("ctx") + lit(AddK) * col("vocab")))
           .as("p"))
     bigrams.join(probs, "g")
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(
         count(lit(1)).as("n_bigrams"),
         round(avg(-log2(col("p"))), 6).as("xent2"))

@@ -34,13 +34,12 @@ object Retrieval {
     */
   def invertedIndex(
       docs: DataFrame,
-      textCol: String = "text",
       maxDf: Long = 1000L,
       k: Int = 10): DataFrame = {
     require(k >= 1, s"invertedIndex: k >= 1, got $k")
     require(maxDf >= 1, s"invertedIndex: maxDf >= 1, got $maxDf")
     val tf = docs
-      .select(col("doc_id"), explode(TextOps.tokens(col(textCol))).as("term"))
+      .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("term"))
       .groupBy(col("term"), col("doc_id"))
       .agg(count(lit(1)).as("tf"))
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
@@ -76,17 +75,16 @@ object Retrieval {
       docs: DataFrame,
       queryTerms: Seq[String],
       k1: Double = 1.2,
-      b: Double = 0.75,
-      textCol: String = "text"): DataFrame = {
+      b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "bm25: queryTerms must be non-empty")
     val base = docs.select(col("doc_id"),
-      size(TextOps.tokens(col(textCol))).cast("long").as("dl"))
+      size(TextOps.tokens(col("text"))).cast("long").as("dl"))
     val stats = base.agg(
       count(lit(1)).as("n_docs"),
       (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
     val hits = docs
-      .select(col("doc_id"), size(TextOps.tokens(col(textCol))).cast("long").as("dl"),
-        explode(TextOps.tokens(col(textCol))).as("term"))
+      .select(col("doc_id"), size(TextOps.tokens(col("text"))).cast("long").as("dl"),
+        explode(TextOps.tokens(col("text"))).as("term"))
       .filter(col("term").isin(queryTerms: _*))
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
@@ -123,8 +121,7 @@ object Retrieval {
     */
   def phraseSearch(
       docs: DataFrame,
-      phrase: Seq[String],
-      textCol: String = "text"): DataFrame = {
+      phrase: Seq[String]): DataFrame = {
     require(phrase.length >= 2, s"phraseSearch: need >= 2 terms, got $phrase")
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     val matchCond = phrase.zipWithIndex.tail.foldLeft(
@@ -133,7 +130,7 @@ object Retrieval {
           lead(col("term"), j).over(w) === t
     }
     docs
-      .select(col("doc_id"), posexplode(TextOps.tokens(col(textCol))))
+      .select(col("doc_id"), posexplode(TextOps.tokens(col("text"))))
       .toDF("doc_id", "pos", "term")
       .filter(col("term").isin(phrase: _*))
       .withColumn("_hit", matchCond)

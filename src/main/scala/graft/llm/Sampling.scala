@@ -255,15 +255,12 @@ object Sampling {
     */
   def tokenBudgetSample(
       docs: DataFrame,
-      budgetTokens: Long,
-      groupCol: String = "source",
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val w = Window.partitionBy(col(groupCol))
-      .orderBy(hashOrder(idCol): _*)
+      budgetTokens: Long): DataFrame = {
+    val w = Window.partitionBy(col("source"))
+      .orderBy(hashOrder("doc_id"): _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     docs
-      .select(col(idCol), col(groupCol), nTokens(textCol).cast("long").as("n_tokens"))
+      .select(col("doc_id"), col("source"), nTokens("text").cast("long").as("n_tokens"))
       .withColumn("cum_tokens", sum(col("n_tokens")).over(w))
       .filter(col("cum_tokens") <= budgetTokens)
   }
@@ -282,23 +279,20 @@ object Sampling {
     */
   def packSequences(
       docs: DataFrame,
-      contextLen: Int,
-      groupCol: String = "source",
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
+      contextLen: Int): DataFrame = {
     require(contextLen >= 1, s"contextLen must be >= 1 (got $contextLen)")
-    val w = Window.partitionBy(col(groupCol))
-      .orderBy(hashOrder(idCol): _*)
+    val w = Window.partitionBy(col("source"))
+      .orderBy(hashOrder("doc_id"): _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val start = col("cum_tokens") - col("n_tokens")
     // non-negative longs far below 2^52: double floor-div is exact
     def binOf(tokenIdx: Column): Column =
       floor(tokenIdx / contextLen).cast("long")
     docs
-      .select(col(idCol), col(groupCol), nTokens(textCol).cast("long").as("n_tokens"))
+      .select(col("doc_id"), col("source"), nTokens("text").cast("long").as("n_tokens"))
       .withColumn("cum_tokens", sum(col("n_tokens")).over(w))
       .select(
-        col(idCol), col(groupCol), col("n_tokens"),
+        col("doc_id"), col("source"), col("n_tokens"),
         start.as("start_offset"),
         binOf(start).as("bin_id"),
         (col("n_tokens") > 0 && binOf(start) =!= binOf(col("cum_tokens") - 1))
@@ -369,12 +363,12 @@ object Sampling {
     * This is the scale-safe replacement for
     * `row_number().over(Window.orderBy(...))`, which plans a
     * SINGLE-TASK sort of the whole table (the q_auc hazard class).
-    * Two-level instead: rows bucket by the first `prefixLen` hex chars
-    * of their hash (16^prefixLen buckets, uniform by construction);
-    * bucket COUNTS — a bounded ≤4096-row relation — get cumulative
+    * Two-level instead: rows bucket by the first two hex chars of
+    * their hash (256 buckets, uniform by construction); bucket
+    * COUNTS — a bounded 256-row relation — get cumulative
     * offsets from one window over that aggregate; each bucket then
     * ranks internally with a PARTITIONED window and adds its bucket's
-    * offset. No task ever sorts more than ~n/16^prefixLen rows, and the
+    * offset. No task ever sorts more than ~n/256 rows, and the
     * only unpartitioned window consumes the bounded count relation.
     *
     * `key` must be unique (it is the tiebreak that makes the order
@@ -384,17 +378,13 @@ object Sampling {
     */
   def globalOrderIndex(
       df: DataFrame,
-      key: Column,
-      prefixLen: Int = 2,
-      outCol: String = "ord"): DataFrame = {
-    require(prefixLen >= 1 && prefixLen <= 3,
-      s"globalOrderIndex: 1 <= prefixLen <= 3 (16..4096 buckets), got $prefixLen")
+      key: Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val keyed = df
       .withColumn("_gk", samplingKey(key))
-      .withColumn("_gb", substring(col("_gk"), 1, prefixLen))
+      .withColumn("_gb", substring(col("_gk"), 1, 2))
     // bounded relation: one row per hex-prefix bucket; the running
-    // offset window is over ≤ 16^prefixLen rows BY CONSTRUCTION (the
+    // offset window is over ≤ 256 rows BY CONSTRUCTION (the
     // aggregate precedes it — SamplingSpec plan-asserts this shape)
     val offsets = keyed.groupBy(col("_gb")).agg(count(lit(1)).as("_bn"))
       .withColumn("_off",
@@ -406,7 +396,7 @@ object Sampling {
       .drop("_bn")
     keyed
       .join(broadcast(offsets), "_gb")
-      .withColumn(outCol,
+      .withColumn("ord",
         row_number().over(
           Window.partitionBy(col("_gb")).orderBy(col("_gk"), key))
           .cast("long") + col("_off"))
@@ -435,8 +425,7 @@ object Sampling {
       df: DataFrame,
       valueCol: Column,
       key: Column,
-      buckets: Int = 1024,
-      outCol: String = "ord"): DataFrame = {
+      buckets: Int = 1024): DataFrame = {
     require(buckets >= 2, s"orderIndexByValue: buckets >= 2, got $buckets")
     import org.apache.spark.sql.expressions.Window
     val v = valueCol.cast("double")
@@ -461,7 +450,7 @@ object Sampling {
       .drop("_bn")
     keyed
       .join(broadcast(offsets), "_vb")
-      .withColumn(outCol,
+      .withColumn("ord",
         row_number().over(
           Window.partitionBy(col("_vb")).orderBy(col("_vv"), key))
           .cast("long") + col("_off"))
@@ -477,10 +466,9 @@ object Sampling {
   def shardAssign(
       df: DataFrame,
       key: Column,
-      nShards: Int,
-      prefixLen: Int = 2): DataFrame = {
+      nShards: Int): DataFrame = {
     require(nShards >= 1, s"shardAssign: nShards >= 1, got $nShards")
-    globalOrderIndex(df, key, prefixLen)
+    globalOrderIndex(df, key)
       .withColumn("shard", ((col("ord") - 1) % nShards).cast("int"))
   }
 

@@ -58,16 +58,14 @@ object Similarity {
   def bruteForceTopK(
       queries: DataFrame,
       corpus: DataFrame,
-      k: Int = 5,
-      vecCol: String = "embedding",
-      idCol: String = "vec_id"): DataFrame = {
+      k: Int = 5): DataFrame = {
     val q = queries.select(
-      col(idCol).as("query_id"),
-      asDouble(col(vecCol)).as("qv"))
+      col("vec_id").as("query_id"),
+      asDouble(col("embedding")).as("qv"))
       .withColumn("qn", norm(col("qv")))
     val c = corpus.select(
-      col(idCol).as("neighbor_id"),
-      asDouble(col(vecCol)).as("cv"))
+      col("vec_id").as("neighbor_id"),
+      asDouble(col("embedding")).as("cv"))
       .withColumn("cn", norm(col("cv")))
     val scored = c
       .join(broadcast(q), col("query_id") =!= col("neighbor_id"))
@@ -136,21 +134,17 @@ object Similarity {
       corpus: DataFrame,
       k: Int = 5,
       nBits: Int = 8,
-      nTables: Int = 4,
-      dim: Int = 64,
-      seed: Long = 42L,
-      vecCol: String = "embedding",
-      idCol: String = "vec_id"): DataFrame = {
-    requireDim(corpus, vecCol, dim)
-    requireDim(queries, vecCol, dim) // a short query vector degenerates identically
+      nTables: Int = 4): DataFrame = {
+    requireDim(corpus, "embedding", 64)
+    requireDim(queries, "embedding", 64) // a short query vector degenerates identically
     def tablesFor(vec: Column) = (0 until nTables).map { t =>
       struct(lit(t).as("table"),
-        srpSignature(vec, hyperplanes(nBits, dim, seed + t)).as("bucket"))
+        srpSignature(vec, hyperplanes(nBits, 64, 42L + t)).as("bucket"))
     }
     // norms computed once per vector BEFORE the per-table explode — the
     // fan-out and every candidate comparison reuse them
     def bucketed(df: DataFrame, id: String, v: String, n: String, bk: String): DataFrame =
-      df.select(col(idCol).as(id), asDouble(col(vecCol)).as(v))
+      df.select(col("vec_id").as(id), asDouble(col("embedding")).as(v))
         .withColumn(n, norm(col(v)))
         .select(col(id), col(v), col(n),
           explode(array(tablesFor(col(v)): _*)).as(bk))
@@ -258,14 +252,9 @@ object Similarity {
   def ivfTopK(
       queries: DataFrame,
       corpus: DataFrame,
-      k: Int = 5,
-      nlist: Int = 16,
-      nprobe: Int = 4,
-      seed: Long = 42L,
-      vecCol: String = "embedding",
-      idCol: String = "vec_id"): DataFrame = {
-    val (assigned, centroids) = fitQuantizer(corpus, nlist, seed, vecCol, idCol)
-    val probed = probeCells(queries, centroids, nprobe, vecCol, idCol)
+      k: Int = 5): DataFrame = {
+    val (assigned, centroids) = fitQuantizer(corpus, 16, 42L, "embedding", "vec_id")
+    val probed = probeCells(queries, centroids, 4, "embedding", "vec_id")
     rankTopK(
       assigned.join(broadcast(probed),
           assigned("cell") === probed("cell") && col("query_id") =!= col("neighbor_id"))
@@ -284,12 +273,8 @@ object Similarity {
     */
   def ivfWriteIndex(
       corpus: DataFrame,
-      path: String,
-      nlist: Int = 16,
-      seed: Long = 42L,
-      vecCol: String = "embedding",
-      idCol: String = "vec_id"): Unit = {
-    val (assigned, centroids) = fitQuantizer(corpus, nlist, seed, vecCol, idCol)
+      path: String): Unit = {
+    val (assigned, centroids) = fitQuantizer(corpus, 16, 42L, "embedding", "vec_id")
     assigned.write.mode("overwrite").partitionBy("cell").parquet(s"$path/data")
     centroids.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
   }
@@ -304,10 +289,7 @@ object Similarity {
   def ivfQueryIndex(
       queries: DataFrame,
       root: String,
-      k: Int = 5,
-      nprobe: Int = 4,
-      vecCol: String = "embedding",
-      idCol: String = "vec_id"): DataFrame = {
+      k: Int = 5): DataFrame = {
     val spark = queries.sparkSession
     // plan-time generation resolution (r18): a rebuild flipping the
     // pointer mid-query never changes the files under this scan
@@ -316,7 +298,7 @@ object Similarity {
     // materialize the (tiny: queries × nprobe) probe relation ONCE — it
     // feeds both the IN-list collect and the final join, and without the
     // checkpoint the crossJoin+window plan would execute twice
-    val probed = probeCells(queries, centroids, nprobe, vecCol, idCol)
+    val probed = probeCells(queries, centroids, 4, "embedding", "vec_id")
       .localCheckpoint()
     // probed cell ids become a literal IN-list the scan can prune on;
     // keeping them in a join would defeat partition pruning
@@ -374,8 +356,6 @@ object Similarity {
       corpus: DataFrame,
       m: Int = 8,
       ksub: Int = 16,
-      iters: Int = 8,
-      seed: Long = 42L,
       vecCol: String = "embedding",
       idCol: String = "vec_id"): Array[Double] = {
     val normed = normalizedVec(corpus, vecCol)
@@ -389,7 +369,7 @@ object Similarity {
     // init: subvectors of the ksub hash-first vectors (distinct rows by
     // construction of the ordering; ties on the id column)
     val initRows = normed
-      .orderBy(md5(concat(col("_id").cast("string"), lit(seed.toString))), col("_id"))
+      .orderBy(md5(concat(col("_id").cast("string"), lit("42"))), col("_id"))
       .limit(ksub).select(col("nv")).collect()
       .map(_.getSeq[Double](0).toArray)
     require(initRows.length == ksub,
@@ -400,7 +380,7 @@ object Similarity {
     }
 
     var it = 0
-    while (it < iters) {
+    while (it < 8) {
       // one encode + one (subspace, code, dim) mean agg == full Lloyd's
       // step for every subspace simultaneously
       val updates = normed
@@ -495,13 +475,10 @@ object Similarity {
       k: Int = 5,
       m: Int = 8,
       ksub: Int = 16,
-      rerankFactor: Int = 4,
-      seed: Long = 42L,
-      vecCol: String = "embedding",
-      idCol: String = "vec_id"): DataFrame = {
-    val cb = pqTrain(corpus, m, ksub, seed = seed, vecCol = vecCol, idCol = idCol)
-    val coded = pqEncode(corpus, cb, m, ksub, vecCol, idCol)
-    val q = adcQuerySide(queries, cb, m, ksub, vecCol, idCol)
+      rerankFactor: Int = 4): DataFrame = {
+    val cb = pqTrain(corpus, m, ksub)
+    val coded = pqEncode(corpus, cb, m, ksub)
+    val q = adcQuerySide(queries, cb, m, ksub, "embedding", "vec_id")
     val adcScored = coded
       .join(broadcast(q), col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
@@ -513,10 +490,10 @@ object Similarity {
       val cand = rankTopK(adcScored, k * rerankFactor)
         .select(col("query_id"), col("neighbor_id"))
       val c = corpus.select(
-        col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("cv"))
+        col("vec_id").as("neighbor_id"), asDouble(col("embedding")).as("cv"))
         .withColumn("cn", norm(col("cv")))
-      val qn = normalizedVec(queries, vecCol)
-        .select(col(idCol).as("query_id"), col("nv").as("qv"))
+      val qn = normalizedVec(queries, "embedding")
+        .select(col("vec_id").as("query_id"), col("nv").as("qv"))
       rankTopK(
         cand.join(c, "neighbor_id").join(broadcast(qn), "query_id")
           .select(col("query_id"), col("neighbor_id"),
@@ -542,11 +519,10 @@ object Similarity {
       nlist: Int = 16,
       m: Int = 8,
       ksub: Int = 16,
-      seed: Long = 42L,
       vecCol: String = "embedding",
       idCol: String = "vec_id",
       trainFraction: Option[Double] = None): Unit = {
-    val (assigned, centroids) = fitQuantizer(corpus, nlist, seed, vecCol, idCol)
+    val (assigned, centroids) = fitQuantizer(corpus, nlist, 42L, vecCol, idCol)
     // The codebook needs DISTRIBUTION COVERAGE, not every row: train
     // Lloyd's on a deterministic (md5-keyed, partition-order-free) sample
     // sized ~100 rows per centroid by default, so the 2-jobs-per-iteration
@@ -563,7 +539,7 @@ object Similarity {
         if (n <= trainTarget) corpus
         else Sampling.deterministicSample(corpus, col(idCol), trainTarget.toDouble / n)
     }
-    val cb = pqTrain(trainRows, m, ksub, seed = seed, vecCol = vecCol, idCol = idCol)
+    val cb = pqTrain(trainRows, m, ksub, vecCol = vecCol, idCol = idCol)
     val coded = pqEncode(corpus, cb, m, ksub, vecCol, idCol)
     assigned.join(coded, "neighbor_id")
       .select(col("neighbor_id"), col("cv"), col("cn"), col("codes"), col("cell"))
@@ -602,9 +578,7 @@ object Similarity {
     */
   def ivfPqAppendIndex(
       newVecs: DataFrame,
-      path: String,
-      vecCol: String = "embedding",
-      idCol: String = "vec_id"): Unit = {
+      path: String): Unit = {
     val spark = newVecs.sparkSession
     requireVersioned(spark, path, "ivfPqAppendIndex")
     val live = graft.sources.DimStore.currentPath(spark, path, ivfComplete)
@@ -616,10 +590,10 @@ object Similarity {
     val ksub = meta.getInt(1)
     val cb = meta.getSeq[Double](2).toArray
     val centroids = spark.read.parquet(s"$live/centroids")
-    val assigned = probeCells(newVecs, centroids, 1, vecCol, idCol)
+    val assigned = probeCells(newVecs, centroids, 1, "embedding", "vec_id")
       .select(col("query_id").as("neighbor_id"), col("qv").as("cv"),
         col("qn").as("cn"), col("cell"))
-    val coded = pqEncode(newVecs, cb, m, ksub, vecCol, idCol)
+    val coded = pqEncode(newVecs, cb, m, ksub)
     assigned.join(coded, "neighbor_id")
       .select(col("neighbor_id"), col("cv"), col("cn"), col("codes"), col("cell"))
       .write.mode("append").partitionBy("cell").parquet(s"$live/data")
@@ -627,7 +601,7 @@ object Similarity {
     // it touches, so per-cell file count — and probed-cell open cost —
     // grows linearly with append COUNT regardless of volume (the same
     // compaction axis zorderAppendAuto measures; SCALE.md r16 drip
-    // table). ivfPqAppendAuto's maxAppendBatches trigger reads this.
+    // table). ivfPqAppendAuto's MaxAppendBatches trigger reads this.
     import spark.implicits._
     Seq(1).toDF("batches")
       .coalesce(1).write.mode("append").parquet(s"$live/appendlog")
@@ -691,28 +665,21 @@ object Similarity {
       root: String,
       nlist: Int = 16,
       m: Int = 8,
-      ksub: Int = 16,
-      seed: Long = 42L,
-      vecCol: String = "embedding",
-      idCol: String = "vec_id",
-      trainFraction: Option[Double] = None): String =
+      ksub: Int = 16): String =
     graft.sources.DimStore.publishWith(corpus.sparkSession, root,
       ivfComplete) { dir =>
-      ivfPqWriteIndex(corpus, dir, nlist, m, ksub, seed, vecCol, idCol,
-        trainFraction)
+      ivfPqWriteIndex(corpus, dir, nlist, m, ksub)
       graft.sources.DimStore.stamp(corpus.sparkSession, dir) // terminal
     }
 
   /** Reader-atomic rebuild: refit quantizer + codebook on the live
     * generation's current vectors (base + appends) into the NEXT
-    * generation and flip. Readers never quiesce; `keep` generations
+    * generation and flip. Readers never quiesce; two generations
     * are retained for readers pinned to a superseded path.
     */
   def ivfPqRebuildVersioned(
       spark: org.apache.spark.sql.SparkSession,
-      root: String,
-      seed: Long = 42L,
-      keep: Int = 2): String = {
+      root: String): String = {
     val live = graft.sources.DimStore.currentPath(spark, root, ivfComplete)
     val meta = spark.read.parquet(s"$live/codebook").collect().head
     val m = meta.getInt(0)
@@ -723,12 +690,18 @@ object Similarity {
     val out = graft.sources.DimStore.publishWith(spark, root, ivfComplete) {
       dir =>
         ivfPqWriteIndex(corpus, dir, nlist = nlist, m = m, ksub = ksub,
-          seed = seed, vecCol = "cv", idCol = "neighbor_id")
+          vecCol = "cv", idCol = "neighbor_id")
         graft.sources.DimStore.stamp(spark, dir) // terminal artifact
     }
-    graft.sources.DimStore.prune(spark, root, keep, ivfComplete)
+    graft.sources.DimStore.prune(spark, root, 2, ivfComplete)
     out
   }
+
+  /** [[ivfPqAppendAuto]]'s staleness triggers, calibrated there. */
+  private val RebuildThreshold = 2.0
+  private val SkewThreshold = 4.0
+  private val MinShare = 0.05
+  private val MaxAppendBatches = 16L
 
   /** Append + staleness decision — the EIGHTH adaptive element.
     * [[ivfPqAppendIndex]] encodes new rows against the FROZEN coarse
@@ -755,8 +728,8 @@ object Similarity {
     *    nlist = everything crammed into one cell, the
     *    uncovered-region signature.
     * Same-distribution ingest keeps the signal ≈ share (harmless at
-    * any volume); a shifted batch drives it toward share × nlist. The
-    * default threshold comes from the probe's decay table.
+    * any volume); a shifted batch drives it toward share × nlist.
+    * `RebuildThreshold` comes from the probe's decay table.
     *
     * Second trigger, skew-alone: the probe's 10× base showed the
     * PRODUCT can under-fire — at (share 0.25, skew 5.8) the signal is
@@ -765,8 +738,8 @@ object Similarity {
     * ingest is multinomially balanced over the trained cells (measured
     * ≤ 1.4 at every share and both base sizes), while an uncovered
     * region concentrates 5.8–15.8×. So a rebuild also fires on
-    * `skew ≥ skewThreshold` once the appended share clears a floor
-    * (below `minShare` the damage is confined to a sliver of queries
+    * `skew ≥ SkewThreshold` once the appended share clears a floor
+    * (below `MinShare` the damage is confined to a sliver of queries
     * and one more ingest crosses the floor anyway).
     *
     * Third trigger (r16), the COMPACTION axis: every append batch adds
@@ -775,29 +748,22 @@ object Similarity {
     * of volume, a decay the share-based signals never price for a drip
     * of tiny batches (the z-order sibling measured 10→25 % box-scan
     * decay over 16 one-file appends; same mechanism, SCALE.md r16).
-    * The `appendlog` ledger counts batches; `maxAppendBatches` (16)
+    * The `appendlog` ledger counts batches; `MaxAppendBatches` (16)
     * fires a compacting rebuild, whose fresh generation resets it.
     * A fired rebuild is [[ivfPqRebuildVersioned]].
     * Returns the choice ("append" | "rebuild").
     */
   def ivfPqAppendAuto(
       newVecs: DataFrame,
-      path: String,
-      rebuildThreshold: Double = 2.0,
-      skewThreshold: Double = 4.0,
-      minShare: Double = 0.05,
-      seed: Long = 42L,
-      vecCol: String = "embedding",
-      idCol: String = "vec_id",
-      maxAppendBatches: Long = 16L): String = {
+      path: String): String = {
     val spark = newVecs.sparkSession
     requireVersioned(spark, path, "ivfPqAppendAuto")
     // resolve the generation ONCE: the append lands in it, the ledgers
     // are read from it, and a fired rebuild publishes the NEXT
     // generation
     val live = graft.sources.DimStore.currentPath(spark, path, ivfComplete)
-    def rebuildNow(): Unit = { ivfPqRebuildVersioned(spark, path, seed); () }
-    ivfPqAppendIndex(newVecs, path, vecCol, idCol)
+    def rebuildNow(): Unit = { ivfPqRebuildVersioned(spark, path); () }
+    ivfPqAppendIndex(newVecs, path)
     // compaction axis (r16, mirrors zorderAppendAuto's third trigger):
     // per-cell file count grows ~1 per append batch — rebuild compacts
     val logP = new org.apache.hadoop.fs.Path(s"$live/appendlog")
@@ -805,9 +771,9 @@ object Similarity {
     val batches =
       if (logFs.exists(logP)) spark.read.parquet(s"$live/appendlog").count()
       else 0L
-    if (batches >= maxAppendBatches) {
+    if (batches >= MaxAppendBatches) {
       graft.Sessions.recordDecision("ivfPqAppendAuto", batches.toDouble,
-        maxAppendBatches.toDouble, s"rebuild(batches $batches)")
+        MaxAppendBatches.toDouble, s"rebuild(batches $batches)")
       rebuildNow()
       return "rebuild"
     }
@@ -829,10 +795,10 @@ object Similarity {
       else (appended.toDouble / baseTotal,
         maxCellAppended.toDouble / (appended.toDouble / nlist))
     val signal = share * skew
-    val bySignal = signal >= rebuildThreshold
-    val bySkew = skew >= skewThreshold && share >= minShare
+    val bySignal = signal >= RebuildThreshold
+    val bySkew = skew >= SkewThreshold && share >= MinShare
     val rebuild = bySignal || bySkew
-    graft.Sessions.recordDecision("ivfPqAppendAuto", signal, rebuildThreshold,
+    graft.Sessions.recordDecision("ivfPqAppendAuto", signal, RebuildThreshold,
       if (bySignal) "rebuild(signal)"
       else if (bySkew) f"rebuild(skew=$skew%.1f)"
       else "append")
@@ -853,9 +819,7 @@ object Similarity {
       root: String,
       k: Int = 5,
       nprobe: Int = 4,
-      rerankFactor: Int = 4,
-      vecCol: String = "embedding",
-      idCol: String = "vec_id"): DataFrame = {
+      rerankFactor: Int = 4): DataFrame = {
     val spark = queries.sparkSession
     // readers never mutate the index; versioned roots resolve to the
     // live generation at plan time (r18), flat indexes to themselves
@@ -865,13 +829,13 @@ object Similarity {
     val ksub = meta.getInt(1)
     val cb = meta.getSeq[Double](2).toArray
     val centroids = spark.read.parquet(s"$indexPath/centroids")
-    val probed = probeCells(queries, centroids, nprobe, vecCol, idCol)
+    val probed = probeCells(queries, centroids, nprobe, "embedding", "vec_id")
       .localCheckpoint()
     val cells = probed.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).toSeq
     // per-query LUT joined to its own probed cells: the (queries×nprobe)
     // relation the data side broadcast-joins on `cell`
-    val q = adcQuerySide(queries, cb, m, ksub, vecCol, idCol)
+    val q = adcQuerySide(queries, cb, m, ksub, "embedding", "vec_id")
       .join(probed.select(col("query_id"), col("cell")), "query_id")
     val data = spark.read.parquet(s"$indexPath/data")
       .filter(col("cell").isin(cells: _*))
@@ -888,8 +852,8 @@ object Similarity {
       val vecs = spark.read.parquet(s"$indexPath/data")
         .filter(col("cell").isin(cells: _*))
         .select(col("neighbor_id"), col("cv"), col("cn"))
-      val qn = normalizedVec(queries, vecCol)
-        .select(col(idCol).as("query_id"), col("nv").as("qv"))
+      val qn = normalizedVec(queries, "embedding")
+        .select(col("vec_id").as("query_id"), col("nv").as("qv"))
       rankTopK(
         cand.join(vecs, "neighbor_id").join(broadcast(qn), "query_id")
           .select(col("query_id"), col("neighbor_id"),
@@ -940,10 +904,7 @@ object Similarity {
       corpus: DataFrame,
       k: Int = 5,
       indexPath: Option[String] = None,
-      queryThreshold: Long = 24L,
-      nprobe: Int = 4,
-      vecCol: String = "embedding",
-      idCol: String = "vec_id"): DataFrame = {
+      queryThreshold: Long = 24L): DataFrame = {
     val spark = queries.sparkSession
     val indexReady = indexPath.exists { p =>
       try {
@@ -964,9 +925,9 @@ object Similarity {
       if (useIndex) "ivfIndex"
       else if (indexReady) "brute" else "brute(noIndex)")
     if (useIndex)
-      ivfQueryIndex(queries, indexPath.get, k, nprobe, vecCol, idCol)
+      ivfQueryIndex(queries, indexPath.get, k)
     else
-      bruteForceTopK(queries, corpus, k, vecCol, idCol)
+      bruteForceTopK(queries, corpus, k)
   }
 
   /** Embedding-cosine near-duplicate pairs (dedup family): all pairs with
@@ -976,22 +937,16 @@ object Similarity {
   def embeddingNearDups(
       corpus: DataFrame,
       threshold: Double = 0.95,
-      nBits: Int = 8,
-      nTables: Int = 8,
-      dim: Int = 64,
-      seed: Long = 42L,
-      vecCol: String = "embedding",
-      idCol: String = "vec_id",
       maxBucket: Int = 1024): DataFrame = {
-    requireDim(corpus, vecCol, dim)
-    val tables = (0 until nTables).map { t =>
+    requireDim(corpus, "embedding", 64)
+    val tables = (0 until 8).map { t =>
       struct(lit(t).as("table"),
-        srpSignature(col("v"), hyperplanes(nBits, dim, seed + t)).as("bucket"))
+        srpSignature(col("v"), hyperplanes(8, 64, 42L + t)).as("bucket"))
     }
     val b = corpus
-      .select(col(idCol), asDouble(col(vecCol)).as("v"))
+      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
       .withColumn("vn", norm(col("v"))) // once per vector, reused per pair
-      .select(col(idCol), col("v"), col("vn"), explode(array(tables: _*)).as("bk"))
+      .select(col("vec_id"), col("v"), col("vn"), explode(array(tables: _*)).as("bk"))
       // materialize once for both join branches; auto-released on GC.
       // KEPT after an r19 A/B (winnowOverlapPairs dropped its analog and
       // won): here the per-branch recompute is 8 SRP signatures over the
@@ -1008,9 +963,9 @@ object Similarity {
       .filter(col("count") >= 2 && col("count") <= maxBucket)
       .select("bk")
     val pruned = b.join(useful, "bk")
-    val l = pruned.select(col("bk").as("l_bk"), col(idCol).as("a"),
+    val l = pruned.select(col("bk").as("l_bk"), col("vec_id").as("a"),
       col("v").as("va"), col("vn").as("na"))
-    val r = pruned.select(col("bk").as("r_bk"), col(idCol).as("b"),
+    val r = pruned.select(col("bk").as("r_bk"), col("vec_id").as("b"),
       col("v").as("vb"), col("vn").as("nb"))
     l.join(r, col("l_bk") === col("r_bk") && col("a") < col("b"))
       .dropDuplicates("a", "b")

@@ -36,12 +36,11 @@ object TextOps {
   def chunkDocs(
       docs: DataFrame,
       chunkTokens: Int = 64,
-      stride: Int = 32,
-      textCol: String = "text"): DataFrame = {
+      stride: Int = 32): DataFrame = {
     require(stride >= 1, s"stride must be >= 1 (got $stride)")
     require(chunkTokens >= stride,
       s"chunkTokens ($chunkTokens) must be >= stride ($stride) or tokens get skipped")
-    val toks = tokens(col(textCol))
+    val toks = tokens(col("text"))
     val n = size(toks)
     // positive int / int via double division + truncation = floor = ceil
     // of the original quotient after the (+ stride − 1) shift
@@ -62,16 +61,16 @@ object TextOps {
   /** Quality-scoring stats: char/word counts, average word length,
     * punctuation and digit ratios. One projection, no shuffle.
     */
-  def textStats(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
+  def textStats(docs: DataFrame): DataFrame = {
+    val t = col("text")
     val toks = tokens(t)
     docs.select(
       col("doc_id"),
       length(t).as("n_chars_calc"),
       size(toks).as("n_words"),
       round(length(t).cast("double") / size(toks), 4).as("avg_token_span"),
-      hitCount(textCol, Stopwords.EnSql).as("n_stopwords"),
-      round(hitCount(textCol, Stopwords.EnSql).cast("double") / size(toks), 4)
+      hitCount("text", Stopwords.EnSql).as("n_stopwords"),
+      round(hitCount("text", Stopwords.EnSql).cast("double") / size(toks), 4)
         .as("stopword_ratio")
     )
   }
@@ -80,8 +79,8 @@ object TextOps {
     * (letter runs / digit runs / single punctuation marks), the usual
     * pre-tokenizer shape for byte-pair encoders.
     */
-  def tokenCounts(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
+  def tokenCounts(docs: DataFrame): DataFrame = {
+    val t = col("text")
     docs.select(
       col("doc_id"),
       size(tokens(t)).as("ws_tokens"),
@@ -103,10 +102,9 @@ object TextOps {
     */
   def ngrams(
       docs: DataFrame,
-      n: Int = 2,
-      textCol: String = "text"): DataFrame = {
+      n: Int = 2): DataFrame = {
     require(n >= 1, s"need n >= 1, got n=$n")
-    val toks = tokens(col(textCol))
+    val toks = tokens(col("text"))
     // n-gram string building is the compute; spread it off a narrow scan
     graft.operators.Spread.toCores(docs)
       // guard: sequence(0, negative) would generate a DESCENDING range
@@ -118,10 +116,9 @@ object TextOps {
   def topNgrams(
       docs: DataFrame,
       n: Int = 2,
-      k: Int = 20,
-      textCol: String = "text"): DataFrame = {
+      k: Int = 20): DataFrame = {
     require(k >= 1, s"need k >= 1, got k=$k")
-    ngrams(docs, n, textCol)
+    ngrams(docs, n)
       .groupBy("gram").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("gram"))
       .limit(k)
@@ -142,12 +139,11 @@ object TextOps {
     */
   def vocabCoverage(
       docs: DataFrame,
-      v: Int = 20,
-      textCol: String = "text"): DataFrame = {
+      v: Int = 20): DataFrame = {
     require(v >= 1, s"vocabCoverage: v >= 1, got $v")
     import org.apache.spark.sql.expressions.Window
     val counts = docs
-      .select(explode(tokens(col(textCol))).as("term"))
+      .select(explode(tokens(col("text"))).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
     val total = counts.agg(sum(col("cnt")).as("_total"))
     val top = counts.orderBy(col("cnt").desc, col("term")).limit(v)
@@ -179,9 +175,7 @@ object TextOps {
     * totals derive from that relation (vocabulary-sized and
     * group-count-sized). The ranking window partitions by group over
     * per-group vocabularies — bounded by Heaps-law vocab growth, not
-    * corpus rows; `minCount` prunes the rare-term tail before the sort
-    * (rare terms have noisy keyness and would dominate the list
-    * otherwise). The counts subtree feeds four consumers whose pruned
+    * corpus rows. The counts subtree feeds four consumers whose pruned
     * projections defeat exchange reuse, so physically the corpus
     * aggregates more than once; at demo scale that beats a checkpoint
     * (same A/B finding as [[LangModel.dsirWeights]]).
@@ -189,19 +183,16 @@ object TextOps {
   def domainKeyness(
       docs: DataFrame,
       groupCol: String = "lang",
-      k: Int = 5,
-      minCount: Long = 1L,
-      textCol: String = "text"): DataFrame = {
+      k: Int = 5): DataFrame = {
     require(k >= 1, s"domainKeyness: k >= 1, got $k")
     import org.apache.spark.sql.expressions.Window
     val counts = docs
-      .select(col(groupCol).as("grp"), explode(tokens(col(textCol))).as("term"))
+      .select(col(groupCol).as("grp"), explode(tokens(col("text"))).as("term"))
       .groupBy(col("grp"), col("term")).agg(count(lit(1)).as("c_in"))
     val termTot = counts.groupBy(col("term")).agg(sum(col("c_in")).as("c_all"))
     val grpTot = counts.groupBy(col("grp")).agg(sum(col("c_in")).as("tot_in"))
     val grand = grpTot.agg(sum(col("tot_in")).as("_t"))
     val scored = counts
-      .filter(col("c_in") >= minCount)
       .join(termTot, "term")
       .join(broadcast(grpTot), "grp")
       .crossJoin(broadcast(grand))
@@ -228,17 +219,15 @@ object TextOps {
     * aggregate). All ratios are exact integer quotients rounded once.
     */
   def corpusReport(
-      docs: DataFrame,
-      groupCol: String = "source",
-      textCol: String = "text"): DataFrame =
-    docs.groupBy(col(groupCol))
+      docs: DataFrame): DataFrame =
+    docs.groupBy(col("source"))
       .agg(
         count(lit(1)).as("n_docs"),
-        sum(size(tokens(col(textCol))).cast("long")).as("n_tokens"),
-        countDistinct(fingerprint(col(textCol))).as("n_uniq"),
+        sum(size(tokens(col("text"))).cast("long")).as("n_tokens"),
+        countDistinct(fingerprint(col("text"))).as("n_uniq"),
         sum(when(col("lang") === "en", 1L).otherwise(0L)).as("n_en"),
         sum(col("n_chars")).as("sum_chars"))
-      .select(col(groupCol),
+      .select(col("source"),
         col("n_docs"), col("n_tokens"), col("n_uniq"),
         round(lit(1.0) - col("n_uniq") / col("n_docs"), 6).as("dup_rate"),
         round(col("n_en") / col("n_docs"), 6).as("en_share"),
@@ -250,8 +239,8 @@ object TextOps {
   def fingerprint(text: Column): Column =
     md5(trim(regexp_replace(lower(text), "[^a-z0-9]+", " ")))
 
-  def fingerprints(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs.select(col("doc_id"), fingerprint(col(textCol)).as("fp"))
+  def fingerprints(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), fingerprint(col("text")).as("fp"))
 
   /** Winnowing (rolling-hash) local fingerprints — the MOSS scheme:
     * k-gram rolling hashes, per-window minima selection (native
@@ -264,28 +253,23 @@ object TextOps {
     * shape as the other dedup families).
     */
   def winnowFingerprints(
-      docs: DataFrame,
-      textCol: String = "text",
-      k: Int = 5,
-      w: Int = 4): DataFrame =
+      docs: DataFrame): DataFrame =
     docs.select(
       col("doc_id"),
       explode(graft.functions.TextHashExpressions
-        .winnow_fingerprint(col(textCol), k, w)).as("fp"))
+        .winnow_fingerprint(col("text"))).as("fp"))
 
   /** Composite quality score → keep/drop decision (the corpus-filtering
     * step of a training-data pipeline): length band, word-count band,
     * stopword-ratio band combined into [0,1]. All deterministic
-    * arithmetic — oracle-checked; thresholds are the tunable policy.
+    * arithmetic — oracle-checked; keeps a score ≥ 0.5.
     */
   def qualityFilter(
-      docs: DataFrame,
-      textCol: String = "text",
-      keepThreshold: Double = 0.5): DataFrame = {
-    val t = col(textCol)
+      docs: DataFrame): DataFrame = {
+    val t = col("text")
     val toks = tokens(t)
     val nWords = size(toks)
-    val stopRatio = hitCount(textCol, Stopwords.EnSql).cast("double") / nWords
+    val stopRatio = hitCount("text", Stopwords.EnSql).cast("double") / nWords
     val score = round(
       least(nWords.cast("double") / 50.0, lit(1.0)) * 0.5 +
         when(stopRatio.between(0.05, 0.6), lit(0.3)).otherwise(lit(0.0)) +
@@ -294,7 +278,7 @@ object TextOps {
     docs.select(
       col("doc_id"),
       score.as("quality_score"),
-      (score >= keepThreshold).as("keep"))
+      (score >= 0.5).as("keep"))
   }
 
   /** TF-IDF keyword extraction: top-k terms per document by
@@ -306,14 +290,13 @@ object TextOps {
     */
   def tfidfKeywords(
       docs: DataFrame,
-      textCol: String = "text",
       k: Int = 3): DataFrame = {
     // N (corpus size, incl. zero-token docs) folded into the plan as a
     // broadcast 1-row aggregate instead of a separate blocking
     // docs.count() job on the driver
     val nDocs = docs.agg(count(lit(1)).cast("double").as("n_docs"))
     val terms = docs.select(col("doc_id"),
-      explode(tokens(col(textCol))).as("term"))
+      explode(tokens(col("text"))).as("term"))
       .localCheckpoint() // one scan+tokenize for both aggregations below
     val tf = terms.groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))
@@ -339,8 +322,8 @@ object TextOps {
   val EmailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
   val Ipv4Re = "\\b[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\b"
 
-  def piiScrub(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
+  def piiScrub(docs: DataFrame): DataFrame = {
+    val t = col("text")
     docs.select(
       col("doc_id"),
       size(regexp_extract_all(t, lit(EmailRe), lit(0))).as("n_emails"),
@@ -356,8 +339,8 @@ object TextOps {
     * map-side, so at 100 TB this is one well-shaped aggregation, not a
     * per-doc driver loop.
     */
-  def repetitionStats(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs.select(col("doc_id"), explode(tokens(col(textCol))).as("tok"))
+  def repetitionStats(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
       .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("n"))
       .groupBy(col("doc_id"))
       .agg(max(col("n")).as("mx"), sum(col("n")).as("tot"),
@@ -381,8 +364,8 @@ object TextOps {
     * all map-side combinable; docs shorter than one bigram are absent
     * (no 0/0 row).
     */
-  def charEntropy(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
+  def charEntropy(docs: DataFrame): DataFrame = {
+    val t = col("text")
     val grams = docs
       .filter(length(t) >= 2)
       .select(col("doc_id"),
@@ -410,16 +393,14 @@ object TextOps {
     */
   def contamination(
       corpus: DataFrame,
-      benchmark: DataFrame,
-      textCol: String = "text",
-      w: Int = 3): DataFrame = {
+      benchmark: DataFrame): DataFrame = {
     val corpusSh = corpus
       .select(col("doc_id"),
         explode(graft.functions.TextHashExpressions
-          .shingle_hashes(col(textCol), w)).as("sh"))
+          .shingle_hashes(col("text"))).as("sh"))
     val benchSh = benchmark
       .select(explode(graft.functions.TextHashExpressions
-        .shingle_hashes(col(textCol), w)).as("b_sh"))
+        .shingle_hashes(col("text"))).as("b_sh"))
       .distinct()
     corpusSh
       .join(benchSh, col("sh") === col("b_sh"), "left")
@@ -455,10 +436,8 @@ object TextOps {
   def decontaminate(
       corpus: DataFrame,
       benchmark: DataFrame,
-      threshold: Double = 0.2,
-      textCol: String = "text",
-      w: Int = 3): DataFrame = {
-    val flagged = contamination(corpus, benchmark, textCol, w)
+      threshold: Double = 0.2): DataFrame = {
+    val flagged = contamination(corpus, benchmark)
       .filter(col("contamination_ratio") >= threshold)
       .select(col("doc_id"))
     corpus.join(flagged, Seq("doc_id"), "left_anti")
@@ -483,13 +462,11 @@ object TextOps {
       corpus: DataFrame,
       benchmark: DataFrame,
       threshold: Double = 0.2,
-      textCol: String = "text",
-      w: Int = 3,
       fpp: Double = 0.01): DataFrame = {
     val spark = corpus.sparkSession
     val benchSh = benchmark
       .select(explode(graft.functions.TextHashExpressions
-        .shingle_hashes(col(textCol), w)).as("b_sh"))
+        .shingle_hashes(col("text"))).as("b_sh"))
       .distinct()
     val expected = math.max(benchSh.count(), 1L)
     val bloom = benchSh.stat.bloomFilter("b_sh", expected, fpp)
@@ -499,7 +476,7 @@ object TextOps {
     val mightContain = udf((h: Long) => bc.value.mightContainLong(h))
     val corpusSh = corpus.select(col("doc_id"),
       explode(graft.functions.TextHashExpressions
-        .shingle_hashes(col(textCol), w)).as("sh"))
+        .shingle_hashes(col("text"))).as("sh"))
     val totals = corpusSh.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_shingles"))
     val hits = corpusSh
@@ -518,7 +495,7 @@ object TextOps {
     * (≈ the shingle hit rate against the benchmark set), estimated on a
     * bounded deterministic file sample of the corpus — the decision
     * input [[decontaminateAuto]] prices the prefilter with. One left
-    * join + one agg over ≤ `sampleBytes` of corpus text against the
+    * join + one agg over ≤ 64 MiB of corpus text against the
     * benchmark's distinct shingle hashes (small by the operator's
     * premise). Between-file variance is both-ways unbiased for a
     * hash-spread sample (the hoppingStateUpperBound lesson) — absorbed
@@ -528,24 +505,24 @@ object TextOps {
     */
   def bloomSurvivorShare(
       corpus: DataFrame,
-      benchmark: DataFrame,
-      textCol: String = "text",
-      w: Int = 3,
-      sampleBytes: Long = 64L << 20): Double = {
+      benchmark: DataFrame): Double = {
     val (sample, _, _) =
-      graft.Sessions.boundedFileSample(corpus, Seq(textCol), sampleBytes)
+      graft.Sessions.boundedFileSample(corpus, Seq("text"))
     val sampleSh = sample.select(
       explode(graft.functions.TextHashExpressions
-        .shingle_hashes(col(textCol), w)).as("sh"))
+        .shingle_hashes(col("text"))).as("sh"))
     val benchSh = benchmark
       .select(explode(graft.functions.TextHashExpressions
-        .shingle_hashes(col(textCol), w)).as("b_sh"))
+        .shingle_hashes(col("text"))).as("b_sh"))
       .distinct()
     val r = sampleSh.join(benchSh, col("sh") === col("b_sh"), "left")
       .agg(count(lit(1)), count(col("b_sh"))).head()
     if (r.getLong(0) == 0L) 0.0
     else r.getLong(1).toDouble / r.getLong(0)
   }
+
+  /** [[decontaminateAuto]]'s survivor-share cut-over, measured there. */
+  private val SurvivorShareThreshold = 0.5
 
   /** Adaptive decontamination — the seventh adaptive element (after
     * hoppingPivotAuto / asOfJoinAuto / saltedJoinAuto / simTopKAuto /
@@ -578,7 +555,7 @@ object TextOps {
     *     estimator itself would cost more than the plan delta;
     *  2. else estimate the survivor share on a bounded corpus sample
     *     ([[bloomSurvivorShare]], memoized per corpus+benchmark plan) →
-    *     Bloom iff share ≤ `survivorShareThreshold`. The default 0.5
+    *     Bloom iff share ≤ `SurvivorShareThreshold`. Its 0.5
     *     sits mid-regime between the measured extremes; both measured
     *     mis-pick costs are mild (≤ ~1.3×) and the asymmetry GROWS
     *     toward Bloom at cluster scale, where the deleted exchange
@@ -597,11 +574,7 @@ object TextOps {
       corpus: DataFrame,
       benchmark: DataFrame,
       threshold: Double = 0.2,
-      textCol: String = "text",
-      w: Int = 3,
-      fpp: Double = 0.01,
       corpusBytesThreshold: Long = 32L << 20,
-      survivorShareThreshold: Double = 0.5,
       maxBenchBytes: Long = 4L << 30): DataFrame = {
     val corpusBytes = graft.Sessions.statsBytes(corpus)
     val benchOk = graft.Sessions.statsBytes(benchmark) <= maxBenchBytes
@@ -612,17 +585,17 @@ object TextOps {
         val bench = s"${benchmark.queryExecution.optimizedPlan.semanticHash()}|" +
           s"${graft.Sessions.statsBytes(benchmark)}"
         graft.Sessions.memoEstimate(corpus, s"bloomshare|$bench") {
-          bloomSurvivorShare(corpus, benchmark, textCol, w)
+          bloomSurvivorShare(corpus, benchmark)
         }
       }
-    val useBloom = benchOk && bigEnough && share <= survivorShareThreshold
+    val useBloom = benchOk && bigEnough && share <= SurvivorShareThreshold
     graft.Sessions.recordDecision("decontaminateAuto", share,
-      survivorShareThreshold,
+      SurvivorShareThreshold,
       if (useBloom) "bloomPrefilter"
       else if (!benchOk) "exact(benchTooBig)"
       else if (!bigEnough) "exact(small)" else "exact(highOverlap)")
-    if (useBloom) decontaminateBloom(corpus, benchmark, threshold, textCol, w, fpp)
-    else decontaminate(corpus, benchmark, threshold, textCol, w)
+    if (useBloom) decontaminateBloom(corpus, benchmark, threshold)
+    else decontaminate(corpus, benchmark, threshold)
   }
 
   /** Characteristic character trigrams per language (high-frequency
@@ -646,8 +619,8 @@ object TextOps {
     * projection, scan-speed; unlike the stopword variant this needs no
     * tokenization and catches inflected/concatenated forms.
     */
-  def langIdNgram(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = lower(col(textCol))
+  def langIdNgram(docs: DataFrame): DataFrame = {
+    val t = lower(col("text"))
     def score(grams: Seq[String]): Column =
       grams.map(g => ngramCount(t, g)).reduce(_ + _).cast("long")
     val en = score(EnTrigrams)
@@ -667,10 +640,10 @@ object TextOps {
     * preference order on ties. Companion of [[langIdNgram]]; both stay
     * pure column expressions (scan-speed at scale).
     */
-  def langId(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val en = hitCount(textCol, Stopwords.EnSql)
-    val de = hitCount(textCol, Stopwords.DeSql)
-    val fr = hitCount(textCol, Stopwords.FrSql)
+  def langId(docs: DataFrame): DataFrame = {
+    val en = hitCount("text", Stopwords.EnSql)
+    val de = hitCount("text", Stopwords.DeSql)
+    val fr = hitCount("text", Stopwords.FrSql)
     docs.select(
       col("doc_id"),
       en.as("en_hits"),
@@ -697,9 +670,8 @@ object TextOps {
   def segmentFilter(
       docs: DataFrame,
       delim: String,
-      minWords: Int = 3,
-      textCol: String = "text"): DataFrame = {
-    val segs = split(col(textCol), java.util.regex.Pattern.quote(delim))
+      minWords: Int = 3): DataFrame = {
+    val segs = split(col("text"), java.util.regex.Pattern.quote(delim))
     val kept = filter(segs, s => size(split(s, " ")) >= minWords)
     docs.select(
       col("doc_id"),
@@ -727,10 +699,9 @@ object TextOps {
   def removeBoilerplate(
       docs: DataFrame,
       delim: String,
-      minDocs: Int = 2,
-      textCol: String = "text"): DataFrame = {
+      minDocs: Int = 2): DataFrame = {
     val segs = docs.select(col("doc_id"),
-      posexplode(split(col(textCol), java.util.regex.Pattern.quote(delim)))
+      posexplode(split(col("text"), java.util.regex.Pattern.quote(delim)))
         .as(Seq("pos", "seg")))
     val boiler = segs.groupBy(col("seg"))
       .agg(countDistinct(col("doc_id")).as("nd"))
@@ -765,9 +736,8 @@ object TextOps {
     */
   def dedupSegments(
       docs: DataFrame,
-      delim: String,
-      textCol: String = "text"): DataFrame = {
-    val segs = split(col(textCol), java.util.regex.Pattern.quote(delim))
+      delim: String): DataFrame = {
+    val segs = split(col("text"), java.util.regex.Pattern.quote(delim))
     // Spark's lambda index is 0-based, array_position 1-based
     val kept = filter(segs, (x, i) => array_position(segs, x) === (i + 1))
     docs.select(
@@ -791,10 +761,9 @@ object TextOps {
     */
   def oovRate(
       docs: DataFrame,
-      vocabSize: Int = 500,
-      textCol: String = "text"): DataFrame = {
+      vocabSize: Int = 500): DataFrame = {
     val toks = docs.select(col("doc_id"),
-      explode(tokens(col(textCol))).as("t"))
+      explode(tokens(col("text"))).as("t"))
     val vocab = toks.groupBy(col("t")).agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("t"))
       .limit(vocabSize)

@@ -56,19 +56,18 @@ object Tokenizer {
     merges.foldLeft(symbolize(word))(applyMerge)
 
   /** Train `numMerges` BPE merges over the whitespace words of
-    * `docs(textCol)`. Ties break deterministically by (freq desc, lhs,
+    * `docs("text")`. Ties break deterministically by (freq desc, lhs,
     * rhs). Returns fewer merges if the vocabulary runs out of adjacent
     * pairs first.
     */
   def bpeTrain(
       docs: DataFrame,
-      numMerges: Int,
-      textCol: String = "text"): Seq[Merge] = {
+      numMerges: Int): Seq[Merge] = {
     require(numMerges >= 1, s"bpeTrain: numMerges >= 1, got $numMerges")
     // the one corpus-wide pass; cached so iterations replay the
     // vocabulary-sized relation, never the corpus scan
     val wordFreq = docs
-      .select(explode(TextOps.tokens(col(textCol))).as("word"))
+      .select(explode(TextOps.tokens(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .persist()
     try {
@@ -104,15 +103,14 @@ object Tokenizer {
   def bpeMerges(
       spark: SparkSession,
       docs: DataFrame,
-      numMerges: Int,
-      textCol: String = "text"): DataFrame = {
+      numMerges: Int): DataFrame = {
     import spark.implicits._
-    bpeTrain(docs, numMerges, textCol).toDF()
+    bpeTrain(docs, numMerges).toDF()
       .select(col("rank"), col("lhs"), col("rhs"), col("freq"))
       .orderBy(col("rank"))
   }
 
-  /** Tokenize `docs(textCol)` with a learned merge list: per whitespace
+  /** Tokenize `docs("text")` with a learned merge list: per whitespace
     * word, apply merges in rank order and emit the subword stream
     * space-joined (word-internal boundaries collapse; a doc's
     * `bpe_text` is its subword sequence). `n_subtokens` counts
@@ -131,17 +129,15 @@ object Tokenizer {
 
   def bpeTokenize(
       docs: DataFrame,
-      merges: Seq[Merge],
-      textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = {
+      merges: Seq[Merge]): DataFrame = {
     require(merges.length <= MaxLiteralMerges,
       s"bpeTokenize folds each merge as one chained replace expression — " +
         s"${merges.length} merges exceed the $MaxLiteralMerges expression-" +
         s"depth ceiling; use bpeTokenizeScalable for production vocabs")
     val perWord: Column => Column = w =>
       call_function("replace", trim(folded(w, merges)), lit("  "), lit(" "))
-    docs.select(col(idCol),
-      concat_ws(" ", transform(TextOps.tokens(col(textCol)), perWord)).as("bpe_text"))
+    docs.select(col("doc_id"),
+      concat_ws(" ", transform(TextOps.tokens(col("text")), perWord)).as("bpe_text"))
       .withColumn("n_subtokens",
         size(filter(split(col("bpe_text"), " "), t => t =!= "")))
   }
@@ -206,13 +202,11 @@ object Tokenizer {
     */
   def bpeTokenizeScalable(
       docs: DataFrame,
-      merges: Seq[Merge],
-      textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = {
+      merges: Seq[Merge]): DataFrame = {
     val spark = docs.sparkSession
     val ranked = merges.sortBy(_.rank).map(m => (m.lhs, m.rhs)).toArray
     val bc = spark.sparkContext.broadcast(ranked)
-    val in = docs.select(col(idCol), col(textCol).cast("string").as("_text"))
+    val in = docs.select(col("doc_id"), col("text").cast("string").as("_text"))
     val outSchema = StructType(Seq(
       in.schema.fields(0),
       StructField("bpe_text", StringType, nullable = true),
@@ -238,10 +232,8 @@ object Tokenizer {
     */
   def bpeTrainTokenize(
       docs: DataFrame,
-      numMerges: Int,
-      textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame =
-    bpeTokenize(docs, bpeTrain(docs, numMerges, textCol), textCol, idCol)
+      numMerges: Int): DataFrame =
+    bpeTokenize(docs, bpeTrain(docs, numMerges))
 
   /** The subword vocabulary after `numMerges` merges: every surviving
     * symbol with its corpus frequency and whether it is a merge product
@@ -251,10 +243,8 @@ object Tokenizer {
     */
   def bpeVocab(
       docs: DataFrame,
-      numMerges: Int,
-      textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame =
-    bpeTrainTokenize(docs, numMerges, textCol, idCol)
+      numMerges: Int): DataFrame =
+    bpeTrainTokenize(docs, numMerges)
       .select(explode(filter(split(col("bpe_text"), " "), t => t =!= ""))
         .as("subword"))
       .groupBy(col("subword")).agg(count(lit(1)).as("cnt"))

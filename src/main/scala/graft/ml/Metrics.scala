@@ -94,6 +94,9 @@ object Metrics {
           .as("auc"))
   }
 
+  /** Score buckets of [[aucByGroup]]: [[aucExact]]'s default. */
+  private val GroupBuckets = 1024
+
   /** [[aucExact]] PER GROUP — segment-wise / per-day model evaluation
     * (AUC by market, by cohort, by scoring date for drift monitoring)
     * as one relation. The identical two-level bucket-localized algebra
@@ -112,9 +115,7 @@ object Metrics {
       groupCol: Column,
       labelCol: Column,
       scoreCol: Column,
-      buckets: Int = 1024,
       outGroup: String = "grp"): DataFrame = {
-    require(buckets >= 2, s"aucByGroup: buckets must be >= 2, got $buckets")
     // materialized once, same reason as aucExact: six-scan plan without
     // the barrier (the group key makes each pruned subtree even wider)
     val h = df
@@ -129,9 +130,9 @@ object Metrics {
       .withColumn("_b",
         when(col("s").isNull, lit(-1))
           .when(col("_mx") === col("_mn"), lit(0))
-          .otherwise(least(lit(buckets - 1),
+          .otherwise(least(lit(GroupBuckets - 1),
             floor((col("s") - col("_mn")) /
-              ((col("_mx") - col("_mn")) / buckets)).cast("int"))))
+              ((col("_mx") - col("_mn")) / GroupBuckets)).cast("int"))))
       .drop("_mn", "_mx")
     val bsum = hb.groupBy(col(outGroup), col("_b")).agg(sum(col("nn")).as("_bn"))
     val below = bsum.select(

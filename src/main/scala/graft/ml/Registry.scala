@@ -25,7 +25,7 @@ class Registry(val rootDir: String) {
 
   private def nameDir(name: String): Path = Paths.get(rootDir, name)
 
-  /** Save a model as the next version of `name`, promoted to `stage`.
+  /** Save a model as the next version of `name`, promoted to stage "Production".
     * Writes the signature (input column names/types + output column) the
     * way the reference logs the MLmodel signature (train.py:352-362).
     */
@@ -33,8 +33,7 @@ class Registry(val rootDir: String) {
       name: String,
       model: PipelineModel,
       inputCols: Seq[(String, String)],
-      outputCol: String,
-      stage: String = "Production"): Int = {
+      outputCol: String): Int = {
     val version = latestVersion(name).getOrElse(0) + 1
     val vdir = nameDir(name).resolve(version.toString)
     Files.createDirectories(vdir)
@@ -44,7 +43,7 @@ class Registry(val rootDir: String) {
       .mkString("[", ", ", "]")
     Files.writeString(vdir.resolve("metadata.json"),
       s"""{"inputs": $inputsJson, "output": "$outputCol", "spark": "$SPARK_VERSION"}""")
-    Files.writeString(vdir.resolve("STAGE"), stage)
+    Files.writeString(vdir.resolve("STAGE"), "Production")
     version
   }
 
@@ -65,11 +64,11 @@ class Registry(val rootDir: String) {
 
   private def latestVersion(name: String): Option[Int] = versions(name).maxOption
 
-  /** U7 — latest version in stage "Production" (or requested stage). */
-  def latestProduction(name: String, stage: String = "Production"): Option[Int] =
+  /** U7 — latest version in stage "Production". */
+  def latestProduction(name: String): Option[Int] =
     versions(name).filter { v =>
       val marker = nameDir(name).resolve(v.toString).resolve("STAGE")
-      Files.exists(marker) && Files.readString(marker).trim == stage
+      Files.exists(marker) && Files.readString(marker).trim == "Production"
     }.maxOption
 
   /** U10 analog — load the production model + its signature.

@@ -155,14 +155,18 @@ object Trainer {
     * Seeded throughout (the reference's unseeded randomSplit, M6, is a
     * reproducibility bug we do not copy).
     */
-  def fit(df: DataFrame, useCv: Boolean = true): Trained = {
+  def fit(rows: DataFrame, useCv: Boolean = true): Trained = {
     // the label fit, the split, every fit pass and the evaluation read
     // the frame: computed once, not once per action. `persist` keeps the
     // lineage, so a lost block is recomputed instead of failing the job.
-    // Cached in the partitions it is read in: the seeded split, the
-    // tree's split-candidate sample and the CV folds all sample per
-    // partition, so other partitions would train another model.
-    org.apache.spark.sql.GraftSqlBridge.persistAsRead(df)
+    // The seeded split, the tree's split-candidate sample and the CV
+    // folds all sample per partition, so the layout is fixed by the
+    // rows alone: hashed on the frame's key into a count from its scan
+    // bytes, never from the session's cores or shuffle width (AQE does
+    // not coalesce a repartition with an explicit count).
+    val df = rows.repartition(
+      graft.Sessions.shufflePartitionsFor(graft.Sessions.statsBytes(rows), 1),
+      col("user_id"), col("w_start")).persist()
     try {
       // label vocabulary fit eagerly like train.py:306 (one fixed order)
       val labelModel: StringIndexerModel = new StringIndexer()

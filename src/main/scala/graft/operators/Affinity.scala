@@ -23,16 +23,12 @@ object Affinity {
     * both engines agree bit-for-bit after rounding.
     */
   def transitionMatrix(
-      events: DataFrame,
-      keyCol: String = "user_id",
-      typeCol: String = "event_type",
-      tsCol: String = "ts",
-      tieCol: String = "event_id"): DataFrame = {
-    val w = Window.partitionBy(col(keyCol)).orderBy(col(tsCol), col(tieCol))
+      events: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val pairs = events
-      .withColumn("next_type", lead(col(typeCol), 1).over(w))
+      .withColumn("next_type", lead(col("event_type"), 1).over(w))
       .filter(col("next_type").isNotNull)
-      .select(col(typeCol).as("from_type"), col("next_type").as("to_type"))
+      .select(col("event_type").as("from_type"), col("next_type").as("to_type"))
     val counts = pairs.groupBy(col("from_type"), col("to_type"))
       .agg(count(lit(1)).as("n"))
     val totals = counts.groupBy(col("from_type"))

@@ -10,6 +10,12 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
+  private val Damping = 0.85
+
+  /** [[pageRankIntScaled]]'s rank unit: ranks are micro-units of it, so
+    * it must be ≥ 10⁶. */
+  private val RankScale = 1000000000000L
+
   /** PageRank over a directed edge list — the classic importance
     * measure (used in data pipelines for domain/source authority
     * weighting, e.g. CommonCrawl host ranking feeding crawl-priority
@@ -31,12 +37,9 @@ object Graph {
     */
   def pageRank(
       edges: DataFrame,
-      iterations: Int = 10,
-      damping: Double = 0.85,
-      srcCol: String = "src",
-      dstCol: String = "dst"): DataFrame = {
+      iterations: Int = 10): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val e = edges.select(col("src"), col("dst"))
       .distinct()
     val nodes = e.select(col("src").as("node"))
       .unionAll(e.select(col("dst").as("node")))
@@ -66,8 +69,8 @@ object Graph {
       ranks = nodes.join(contribs, Seq("node"), "left")
         .crossJoin(broadcast(dangling))
         .select(col("node"),
-          (lit((1.0 - damping) / n) +
-            lit(damping) * (coalesce(col("in_sum"), lit(0.0)) + col("_dm") / n))
+          (lit((1.0 - Damping) / n) +
+            lit(Damping) * (coalesce(col("in_sum"), lit(0.0)) + col("_dm") / n))
             .as("rank"))
         .localCheckpoint() // truncate the iteration lineage
     }
@@ -81,7 +84,7 @@ object Graph {
   }
 
   /** Oracle-grade PageRank: the same damped iteration in PURE INTEGER
-    * arithmetic — ranks carried as micro-units of `scale`, every
+    * arithmetic — ranks carried as micro-units of [[RankScale]], every
     * division an explicit floor (`DIV`), every sum an integer sum — so
     * the result is bit-identical across engines and partition orders
     * (integer addition commutes; doubles don't). This is what upgrades
@@ -92,7 +95,7 @@ object Graph {
     *
     * Deliberately simpler than [[pageRank]]: no dangling-mass
     * redistribution — mass reaching a sink is dropped, so ranks no
-    * longer sum to `scale` on graphs with sinks. Symmetrize first (as
+    * longer sum to [[RankScale]] on graphs with sinks. Symmetrize first (as
     * the registered trade graph does) if that matters; the float
     * variant remains the production path. Same per-iteration
     * `localCheckpoint` lineage discipline; `iterations` is capped
@@ -100,14 +103,10 @@ object Graph {
     */
   def pageRankIntScaled(
       edges: DataFrame,
-      iterations: Int = 3,
-      srcCol: String = "src",
-      dstCol: String = "dst",
-      scale: Long = 1000000000000L): DataFrame = {
+      iterations: Int = 3): DataFrame = {
     require(iterations >= 1 && iterations <= 8,
       s"pageRankIntScaled: 1 <= iterations <= 8, got $iterations")
-    require(scale >= 1000000L, s"scale too small for micro-unit ranks: $scale")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val e = edges.select(col("src"), col("dst"))
       .distinct().localCheckpoint()
     val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .localCheckpoint()
@@ -115,8 +114,8 @@ object Graph {
       .unionAll(e.select(col("dst").as("node")))
       .distinct().localCheckpoint()
     val n = nodes.count() // one bounded driver long, as in pageRank
-    val base = 15L * scale / (100L * n)
-    var ranks = nodes.withColumn("r", lit(scale / n)).localCheckpoint()
+    val base = 15L * RankScale / (100L * n)
+    var ranks = nodes.withColumn("r", lit(RankScale / n)).localCheckpoint()
     for (_ <- 1 to iterations) {
       val contribs = e.join(outDeg, "src")
         .join(ranks, col("src") === col("node"))

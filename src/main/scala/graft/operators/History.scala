@@ -72,28 +72,24 @@ object History {
   def lastTouchAttribution(
       events: DataFrame,
       conversionType: String,
-      maxGapSec: Long,
-      tsCol: String = "ts",
-      userCol: String = "user_id",
-      typeCol: String = "event_type",
-      idCol: String = "event_id"): DataFrame = {
-    val w = Window.partitionBy(col(userCol))
-      .orderBy(col(tsCol), col(idCol))
+      maxGapSec: Long): DataFrame = {
+    val w = Window.partitionBy(col("user_id"))
+      .orderBy(col("ts"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val isTouch = col(typeCol) =!= lit(conversionType)
+    val isTouch = col("event_type") =!= lit(conversionType)
     // the two last() calls share the NULL pattern (same CASE condition),
     // so they always come from the same touch row
     val withTouch = events
       .withColumn("touch_ts",
-        last(when(isTouch, col(tsCol)), ignoreNulls = true).over(w))
+        last(when(isTouch, col("ts")), ignoreNulls = true).over(w))
       .withColumn("touch_type",
-        last(when(isTouch, col(typeCol)), ignoreNulls = true).over(w))
-      .filter(col(typeCol) === lit(conversionType))
+        last(when(isTouch, col("event_type")), ignoreNulls = true).over(w))
+      .filter(col("event_type") === lit(conversionType))
     val inGap = col("touch_ts").isNotNull &&
-      (unix_micros(col(tsCol).cast("timestamp")) -
+      (unix_micros(col("ts").cast("timestamp")) -
         unix_micros(col("touch_ts").cast("timestamp"))) <= maxGapSec * 1000000L
     withTouch.select(
-      col(idCol), col(userCol), col(tsCol).as("conversion_ts"),
+      col("event_id"), col("user_id"), col("ts").as("conversion_ts"),
       when(inGap, col("touch_type")).as("attributed_type"),
       when(inGap, col("touch_ts")).as("attributed_ts"))
   }

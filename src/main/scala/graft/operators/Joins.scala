@@ -393,11 +393,13 @@ object Joins {
       .drop("_bucket")
   }
 
+  private val MaxReplication = 4096L
+
   /** The width [[rangeLookupJoinAuto]] decides on: the dim's MEDIAN
     * interval length (exact percentile — the dim is broadcast-sized by
     * the operator's own contract, so the probe is a tiny local job;
     * memoized per plan+size), CLAMPED so the WIDEST interval replicates
-    * at most `maxReplication` buckets: one open-ended catch-all tier in
+    * at most [[MaxReplication]] buckets: one open-ended catch-all tier in
     * an otherwise-narrow config (median 5, one [0, 1e9) row) would
     * otherwise explode 2×10^8 rows through the broadcast. The clamp
     * trades residual-filter work on the wide interval's buckets for a
@@ -409,11 +411,9 @@ object Joins {
   def rangeBucketWidth(
       dim: DataFrame,
       loCol: String,
-      hiCol: String,
-      maxReplication: Long = 4096L): Double = {
-    require(maxReplication >= 1, s"maxReplication must be >= 1, got $maxReplication")
+      hiCol: String): Double = {
     math.max(graft.Sessions.memoEstimate(dim,
-      s"rangewidth|$loCol|$hiCol|$maxReplication") {
+      s"rangewidth|$loCol|$hiCol|$MaxReplication") {
       // exact interpolating median, not percentile_approx: the dim is
       // tiny by contract, and approx returns a lower-neighbor DATA value
       // at even counts where the interpolated midpoint is the honest
@@ -421,7 +421,7 @@ object Joins {
       val len = (col(hiCol) - col(loCol)).cast("double")
       val r = dim.agg(median(len).as("m"), max(len).as("mx")).head()
       if (r.isNullAt(0)) 1.0
-      else math.max(r.getDouble(0), r.getDouble(1) / maxReplication)
+      else math.max(r.getDouble(0), r.getDouble(1) / MaxReplication)
     }, 1e-9)
   }
 

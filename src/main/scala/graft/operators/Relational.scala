@@ -66,8 +66,8 @@ object Relational {
     }
 
   /** P5 — `TIMESTAMPTOSTRING(ts, 'HH:mm:ss')` (reference README.md:43-44). */
-  def timestampToString(ts: Column, fmt: String = "HH:mm:ss"): Column =
-    date_format(ts, fmt)
+  def timestampToString(ts: Column): Column =
+    date_format(ts, "HH:mm:ss")
 
   /** P6 — `as_array(a, b, …)` homogeneous array constructor
     * (reference README.md:68). Spark arrays are homogeneous, matching the
@@ -202,15 +202,14 @@ object Relational {
     */
   def cdcUnwrapJson(
       df: DataFrame,
-      afterSchema: StructType,
-      valueCol: String = "value"): DataFrame = {
+      afterSchema: StructType): DataFrame = {
     val envelope = StructType(Seq(
       StructField("before", afterSchema, nullable = true),
       StructField("after", afterSchema, nullable = true),
       StructField("op", StringType, nullable = true),
       StructField("ts_ms", LongType, nullable = true)))
     df
-      .select(from_json(col(valueCol), envelope).as("env"))
+      .select(from_json(col("value"), envelope).as("env"))
       .filter(col("env.op") =!= lit("d") && col("env.after").isNotNull)
       .select(col("env.after.*"))
   }

@@ -203,13 +203,11 @@ object Sketches {
     */
   def cmsTermCounts(
       docs: DataFrame,
-      probes: Seq[String],
-      textCol: String = "text",
-      groupCol: String = "source"): DataFrame =
+      probes: Seq[String]): DataFrame =
     cmsMergeEstimates(
       cmsPartials(
-        docs.select(col(groupCol),
-          explode(split(col(textCol), " ")).as("term")),
-        col("term"), 0.0001, 0.99, 42, col(groupCol)),
+        docs.select(col("source"),
+          explode(split(col("text"), " ")).as("term")),
+        col("term"), 0.0001, 0.99, 42, col("source")),
       probes)
 }

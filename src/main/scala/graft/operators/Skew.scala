@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Skew-handling aggregation (SCALE.md): two-stage salted aggregation
   * for hot keys. Stage 1 aggregates on (key, salt) — a hot key's rows
-  * spread over `saltBuckets` reducers — stage 2 combines the partials on
+  * spread over 16 salt buckets — stage 2 combines the partials on
   * the key alone. Semantically identical to the direct aggregation for
   * any commutative+associative aggregate (verified against the plain
   * GROUP BY oracle).
@@ -51,9 +51,8 @@ object Skew {
       df: DataFrame,
       key: String,
       sums: Map[String, Column],
-      saltBuckets: Int = 16,
       saltOn: Seq[Column] = Nil): DataFrame = {
-    val salted = df.withColumn("_salt", rowSalt(df, saltBuckets, saltOn))
+    val salted = df.withColumn("_salt", rowSalt(df, 16, saltOn))
     val partial = salted
       .groupBy(col(key), col("_salt"))
       .agg(

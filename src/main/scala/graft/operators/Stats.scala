@@ -288,11 +288,10 @@ object Stats {
       groupCol: String,
       valueCol: String,
       loP: Double = 0.05,
-      hiP: Double = 0.95,
-      buckets: Int = 1024): DataFrame = {
+      hiP: Double = 0.95): DataFrame = {
     require(loP <= hiP, s"outlierFilter: loP $loP must be <= hiP $hiP")
     val b = percentilesByGroup(df, groupCol, valueCol,
-      Seq("_lo" -> loP, "_hi" -> hiP), buckets)
+      Seq("_lo" -> loP, "_hi" -> hiP))
       .select(col(groupCol),
         round(col("_lo"), 6).as("_lo"), round(col("_hi"), 6).as("_hi"))
     df.join(broadcast(b), groupCol)
@@ -313,11 +312,10 @@ object Stats {
       groupCol: String,
       valueCol: String,
       loP: Double = 0.05,
-      hiP: Double = 0.95,
-      buckets: Int = 1024): DataFrame = {
+      hiP: Double = 0.95): DataFrame = {
     require(loP <= hiP, s"winsorize: loP $loP must be <= hiP $hiP")
     val b = percentilesByGroup(df, groupCol, valueCol,
-      Seq("_lo" -> loP, "_hi" -> hiP), buckets)
+      Seq("_lo" -> loP, "_hi" -> hiP))
       .select(col(groupCol),
         round(col("_lo"), 6).as("_lo"), round(col("_hi"), 6).as("_hi"))
     df.join(broadcast(b), groupCol)
@@ -397,13 +395,12 @@ object Stats {
   def histogramEquiDepth(
       df: DataFrame,
       valueCol: String,
-      bins: Int = 20,
-      buckets: Int = 1024): DataFrame = {
+      bins: Int = 20): DataFrame = {
     require(bins >= 2, s"histogramEquiDepth: bins must be >= 2, got $bins")
     val v = col(valueCol).cast("double")
     val nonNull = df.filter(v.isNotNull)
     val bs = percentilesGlobal(
-      nonNull, valueCol, (1 until bins).map(_.toDouble / bins), buckets)
+      nonNull, valueCol, (1 until bins).map(_.toDouble / bins))
     if (bs.exists(_.isNaN)) {
       // empty input: keep the empty-result contract (and the schema)
       // without constant-folding round(NaN) — BigDecimal can't hold NaN
@@ -862,16 +859,14 @@ object Stats {
     * relation — the q_revenue_share contract.
     */
   def quantileDrift(
-      df: DataFrame,
-      tsCol: String = "ts",
-      valCol: String = "value"): DataFrame = {
+      df: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.orderBy(col("day"))
-    df.groupBy(to_date(col(tsCol)).as("day"))
+    df.groupBy(to_date(col("ts")).as("day"))
       .agg(
         count(lit(1)).as("n_events"),
-        round(expr(s"percentile($valCol, 0.5)"), 6).as("p50"),
-        round(expr(s"percentile($valCol, 0.9)"), 6).as("p90"))
+        round(expr("percentile(value, 0.5)"), 6).as("p50"),
+        round(expr("percentile(value, 0.9)"), 6).as("p90"))
       .select(col("day"), col("n_events"), col("p50"), col("p90"),
         round(col("p50") - lag(col("p50"), 1).over(w), 6).as("d_p50"),
         round(col("p90") - lag(col("p90"), 1).over(w), 6).as("d_p90"))

@@ -114,13 +114,10 @@ object WindowOps {
       events: DataFrame,
       tsCol: String = "ts",
       keyCol: String = "user_id",
-      size: String = "10 minutes",
-      slide: String = "2 minutes",
       keySampleMod: Int = 64,
       maxSampleBytes: Long = 64L << 20): Double = {
-    val sizeUs = intervalUs(size)
-    val slideUs = intervalUs(slide)
-    require(sizeUs % slideUs == 0, s"size $size must be a multiple of slide $slide")
+    val sizeUs = intervalUs("10 minutes")
+    val slideUs = intervalUs("2 minutes")
     // memoized per (plan, input size): repeated pivots over the same
     // corpus pay the estimator scan once (~0.3 s at sf0.1; bounded to
     // the file subset at derived SFs); changed data re-estimates via
@@ -182,29 +179,24 @@ object WindowOps {
     */
   def hoppingStateUpperBound(
       events: DataFrame,
-      tsCol: String = "ts",
-      keyCol: String = "user_id",
-      size: String = "10 minutes",
-      slide: String = "2 minutes",
       maxSampleBytes: Long = 128L << 20): Long = {
-    val sizeUs = intervalUs(size)
-    val slideUs = intervalUs(slide)
-    require(sizeUs % slideUs == 0, s"size $size must be a multiple of slide $slide")
+    val sizeUs = intervalUs("10 minutes")
+    val slideUs = intervalUs("2 minutes")
     val hops = sizeUs / slideUs
     graft.Sessions.memoEstimate(events,
-      s"hopstate|$tsCol|$keyCol|$sizeUs|$slideUs|$maxSampleBytes") {
+      s"hopstate|ts|user_id|$sizeUs|$slideUs|$maxSampleBytes") {
       val trivial = events.count().toDouble * hops
       val (src, total, read) =
-        graft.Sessions.boundedFileSample(events, Seq(keyCol, tsCol), maxSampleBytes)
+        graft.Sessions.boundedFileSample(events, Seq("user_id", "ts"), maxSampleBytes)
       val ts =
-        if (src.schema(tsCol).dataType == org.apache.spark.sql.types.TimestampType) col(tsCol)
-        else col(tsCol).cast("timestamp")
+        if (src.schema("ts").dataType == org.apache.spark.sql.types.TimestampType) col("ts")
+        else col("ts").cast("timestamp")
       val e = unix_micros(ts)
       val aligned = e - pmod(e, lit(slideUs))
       // exact distinct (file, key, hop) count: an approximate per-file
       // count can sum below the truth, and this value is read as a bound
       val perFile = src
-        .select(input_file_name().as("_f"), col(keyCol).as("_k"), explode(
+        .select(input_file_name().as("_f"), col("user_id").as("_k"), explode(
           sequence(aligned - lit(sizeUs - slideUs), aligned, lit(slideUs))).as("_ws"))
         .distinct().count()
       math.min(trivial, perFile.toDouble * total / read).max(1.0)
@@ -238,22 +230,19 @@ object WindowOps {
     */
   def sessionStateUpperBound(
       events: DataFrame,
-      tsCol: String = "ts",
-      keyCol: String = "user_id",
-      gap: String = "30 minutes",
-      maxSampleBytes: Long = 128L << 20): Long = {
+      gap: String = "30 minutes"): Long = {
     val gapUs = intervalUs(gap)
     graft.Sessions.memoEstimate(events,
-      s"sessstate|$tsCol|$keyCol|$gapUs|$maxSampleBytes") {
+      s"sessstate|ts|user_id|$gapUs") {
       val trivial = events.count().toDouble
       val (src, total, read) =
-        graft.Sessions.boundedFileSample(events, Seq(keyCol, tsCol), maxSampleBytes)
+        graft.Sessions.boundedFileSample(events, Seq("user_id", "ts"), 128L << 20)
       val ts =
-        if (src.schema(tsCol).dataType == org.apache.spark.sql.types.TimestampType) col(tsCol)
-        else col(tsCol).cast("timestamp")
+        if (src.schema("ts").dataType == org.apache.spark.sql.types.TimestampType) col("ts")
+        else col("ts").cast("timestamp")
       val w = Window.partitionBy(col("_f"), col("_k")).orderBy(col("_e"))
       val starts = src
-        .select(col(keyCol).as("_k"), unix_micros(ts).as("_e"),
+        .select(col("user_id").as("_k"), unix_micros(ts).as("_e"),
           input_file_name().as("_f"))
         .withColumn("_prev", lag(col("_e"), 1).over(w))
         .filter(col("_prev").isNull || col("_e") - col("_prev") > gapUs)
@@ -261,6 +250,8 @@ object WindowOps {
       math.min(trivial, starts.toDouble * total / read).max(1.0)
     }.toLong
   }
+
+  private val MultiplicityThreshold = 3.0
 
   /** Adaptive hopping pivot — picks the plan from the measured key
     * multiplicity, so the regime split SCALE.md measured (second
@@ -271,7 +262,7 @@ object WindowOps {
     * plan: preShuffle is batch-only (no event-time metadata) and an
     * estimator job can't run on an unbounded source anyway.
     *
-    * `multiplicityThreshold` = the reduction factor below which the
+    * [[MultiplicityThreshold]] = the reduction factor below which the
     * partial-agg pass stops paying for itself. The measured endpoints
     * (SCALE.md: ~1 → preShuffle 2× better; tumbling's high-multiplicity
     * contrast flat for default) bracket the crossover loosely; 3.0 sits
@@ -282,20 +273,17 @@ object WindowOps {
       events: DataFrame,
       tsCol: String = "ts",
       keyCol: String = "user_id",
-      size: String = "10 minutes",
-      slide: String = "2 minutes",
       eventCol: String = "event_type",
       eventTypes: Seq[String],
-      multiplicityThreshold: Double = 3.0,
       keySampleMod: Int = 64): DataFrame = {
     val streamingIn = events.isStreaming
     val mult = if (streamingIn) -1.0
-      else hoppingMultiplicity(events, tsCol, keyCol, size, slide, keySampleMod)
-    val pre = !streamingIn && mult < multiplicityThreshold
-    graft.Sessions.recordDecision("hoppingPivotAuto", mult, multiplicityThreshold,
+      else hoppingMultiplicity(events, tsCol, keyCol, keySampleMod = keySampleMod)
+    val pre = !streamingIn && mult < MultiplicityThreshold
+    graft.Sessions.recordDecision("hoppingPivotAuto", mult, MultiplicityThreshold,
       if (pre) "preShuffle"
       else if (streamingIn) "default(streaming)" else "default")
-    hoppingPivot(events, tsCol, keyCol, size, slide, eventCol, eventTypes,
+    hoppingPivot(events, tsCol, keyCol, eventCol = eventCol, eventTypes = eventTypes,
       preShuffle = pre)
   }
 
@@ -303,8 +291,6 @@ object WindowOps {
       events: DataFrame,
       tsCol: String = "ts",
       keyCol: String = "user_id",
-      size: String = "10 minutes",
-      slide: String = "2 minutes",
       eventCol: String = "event_type",
       eventTypes: Seq[String],
       preShuffle: Boolean = false): DataFrame = {
@@ -320,7 +306,7 @@ object WindowOps {
     val grouped =
       if (!preShuffle)
         events
-          .groupBy(window(ts, size, slide).as("w"), col(keyCol))
+          .groupBy(window(ts, "10 minutes", "2 minutes").as("w"), col(keyCol))
           .agg(aggCols.head, aggCols.tail: _*)
           .withColumn("w_start", col("w.start").cast("long"))
       else {
@@ -337,10 +323,8 @@ object WindowOps {
         // explode(sequence(...)) lowers to Generate, which preserves its
         // child's partitioning, so the same epoch-aligned hop set keeps
         // the agg exchange-free above the one compact-events exchange.
-        val sizeUs = intervalUs(size)
-        val slideUs = intervalUs(slide)
-        require(sizeUs % slideUs == 0,
-          s"size $size must be a multiple of slide $slide")
+        val sizeUs = intervalUs("10 minutes")
+        val slideUs = intervalUs("2 minutes")
         val e = unix_micros(ts)
         val aligned = e - pmod(e, lit(slideUs))
         // The pinned width is derived from the EVENTS' own scan stats
@@ -389,7 +373,7 @@ object WindowOps {
     * hopping window; reference train.py:260-274: per-user rolling
     * [t-600s, t] sum over event indicators, one output row per input row).
     *
-    * `rangeBetween(-windowSec, 0)` over epoch seconds — a window
+    * `rangeBetween(-600, 0)` over epoch seconds — a window
     * *function*, not a groupBy: Spark sorts within each user partition
     * (one shuffle + per-partition sort). At 100 TB this is the right
     * shape: state is bounded by the range frame and skew is bounded by
@@ -397,19 +381,15 @@ object WindowOps {
     */
   def rollingCounts(
       events: DataFrame,
-      epochSecCol: String = "ts_sec",
-      keyCol: String = "user_id",
-      eventCol: String = "event_type",
-      eventTypes: Seq[String],
-      windowSec: Long = 600L): DataFrame = {
+      eventTypes: Seq[String]): DataFrame = {
     val w = Window
-      .partitionBy(col(keyCol))
-      .orderBy(col(epochSecCol))
-      .rangeBetween(-windowSec, 0)
+      .partitionBy(col("user_id"))
+      .orderBy(col("ts_sec"))
+      .rangeBetween(-600L, 0)
     eventTypes.foldLeft(events) { (d, v) =>
       d.withColumn(
-        s"${v}s_last_${windowSec}s",
-        sum(Relational.indicator(col(eventCol), v)).over(w)
+        s"${v}s_last_600s",
+        sum(Relational.indicator(col("event_type"), v)).over(w)
       )
     }
   }
@@ -419,15 +399,13 @@ object WindowOps {
     */
   def tumblingAgg(
       events: DataFrame,
-      tsCol: String = "ts",
-      size: String = "10 minutes",
       aggs: Seq[Column],
       extraKeys: Seq[String] = Nil): DataFrame = {
     val ts =
-      if (events.schema(tsCol).dataType == org.apache.spark.sql.types.TimestampType) col(tsCol)
-      else col(tsCol).cast("timestamp")
+      if (events.schema("ts").dataType == org.apache.spark.sql.types.TimestampType) col("ts")
+      else col("ts").cast("timestamp")
     events
-      .groupBy(window(ts, size).as("w") +: extraKeys.map(col): _*)
+      .groupBy(window(ts, "10 minutes").as("w") +: extraKeys.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
       .withColumn("w_start", col("w.start").cast("long"))
       .drop("w")
@@ -457,19 +435,17 @@ object WindowOps {
     */
   def sessionAgg(
       events: DataFrame,
-      tsCol: String = "ts",
-      keyCol: String = "user_id",
       gap: String = "30 minutes"): DataFrame = {
     val gapUs = intervalUs(gap)
     require(gapUs % 1000000L == 0, s"sessionAgg needs a whole-second gap: $gap")
     val ts =
-      if (events.schema(tsCol).dataType == org.apache.spark.sql.types.TimestampType) col(tsCol)
-      else col(tsCol).cast("timestamp")
+      if (events.schema("ts").dataType == org.apache.spark.sql.types.TimestampType) col("ts")
+      else col("ts").cast("timestamp")
     events
-      .groupBy(session_window(ts, gap).as("w"), col(keyCol))
+      .groupBy(session_window(ts, gap).as("w"), col("user_id"))
       .agg(count(lit(1)).as("n_events"), min(ts).as("_first"), max(ts).as("_last"))
       .select(
-        col(keyCol),
+        col("user_id"),
         col("_first").cast("long").as("session_start"),
         (col("_last").cast("long") + lit(gapUs / 1000000L)).as("session_end"),
         col("n_events"))
@@ -493,11 +469,9 @@ object WindowOps {
     * exchanges total, both on already-reduced relations.
     */
   def retentionCohorts(
-      events: DataFrame,
-      userCol: String = "user_id",
-      tsCol: String = "ts"): DataFrame = {
+      events: DataFrame): DataFrame = {
     val days = events
-      .select(col(userCol).as("u"), to_date(col(tsCol)).as("d"))
+      .select(col("user_id").as("u"), to_date(col("ts")).as("d"))
       .distinct()
     val byUser = Window.partitionBy(col("u"))
     days
@@ -525,14 +499,11 @@ object WindowOps {
   def funnelStages(
       events: DataFrame,
       stages: Seq[String],
-      maxGapSec: Long,
-      userCol: String = "user_id",
-      tsCol: String = "ts",
-      typeCol: String = "event_type"): DataFrame = {
+      maxGapSec: Long): DataFrame = {
     require(stages.nonEmpty)
     val w = Window.partitionBy(col("u"))
-    var df = events.select(col(userCol).as("u"),
-      col(tsCol).as("ts"), col(typeCol).as("et"))
+    var df = events.select(col("user_id").as("u"),
+      col("ts").as("ts"), col("event_type").as("et"))
     stages.zipWithIndex.foreach { case (s, i) =>
       val cond =
         if (i == 0) col("et") === lit(s)
@@ -542,10 +513,10 @@ object WindowOps {
       df = df.withColumn(s"t${i + 1}", min(when(cond, col("ts"))).over(w))
     }
     val stageCols = stages.indices.map(i => s"t${i + 1}")
-    df.groupBy(col("u").as(userCol))
+    df.groupBy(col("u").as("user_id"))
       .agg(min(col(stageCols.head)).as(stageCols.head),
         stageCols.tail.map(c => min(col(c)).as(c)): _*)
-      .select(col(userCol) +:
+      .select(col("user_id") +:
         stageCols.map(c => unix_micros(col(c)).as(s"${c}_us")) :+
         // fold ascending so the LAST-built when() checks the DEEPEST
         // stage first (when-chains evaluate outermost-first)
@@ -569,14 +540,11 @@ object WindowOps {
     */
   def resampleFill(
       events: DataFrame,
-      stepSec: Long,
-      userCol: String = "user_id",
-      tsCol: String = "ts",
-      valueCol: String = "value"): DataFrame = {
+      stepSec: Long): DataFrame = {
     val obs = events
-      .select(col(userCol).as("u"),
-        expr(s"unix_micros($tsCol) DIV 1000000 DIV $stepSec").as("bucket"),
-        col(valueCol).as("v"))
+      .select(col("user_id").as("u"),
+        expr(s"unix_micros(ts) DIV 1000000 DIV $stepSec").as("bucket"),
+        col("value").as("v"))
       .groupBy(col("u"), col("bucket"))
       .agg(max(col("v")).as("v_obs"))
     val grid = obs.groupBy(col("u"))
@@ -585,7 +553,7 @@ object WindowOps {
     val filled = Window.partitionBy(col("u")).orderBy(col("bucket"))
       .rowsBetween(Window.unboundedPreceding, 0)
     grid.join(obs, Seq("u", "bucket"), "left")
-      .select(col("u").as(userCol), col("bucket"),
+      .select(col("u").as("user_id"), col("bucket"),
         last(col("v_obs"), ignoreNulls = true).over(filled).as("v_filled"))
   }
 
@@ -767,12 +735,9 @@ object WindowOps {
     */
   def sessionize(
       df: DataFrame,
-      keyCol: String = "user_id",
-      tsCol: String = "ts",
-      tieCol: String = "event_id",
       gapSec: Long = 1800L): DataFrame = {
-    val w = Window.partitionBy(col(keyCol)).orderBy(col(tsCol), col(tieCol))
-    val ep = unix_micros(col(tsCol).cast("timestamp"))
+    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+    val ep = unix_micros(col("ts").cast("timestamp"))
     df
       .withColumn("_new_session",
         when(ep - lag(ep, 1).over(w) >= gapSec * 1000000L || // NULL lag =
@@ -799,8 +764,7 @@ object WindowOps {
       df: DataFrame,
       partitionCol: String,
       orderCols: Seq[String],
-      valueCol: String,
-      tiles: Int = 4): DataFrame = {
+      valueCol: String): DataFrame = {
     val w = Window.partitionBy(col(partitionCol)).orderBy(orderCols.map(col): _*)
     df.select(
       col(partitionCol), orderCols.map(col).last, col(valueCol),
@@ -808,19 +772,19 @@ object WindowOps {
       lag(col(valueCol), 1).over(w).as("prev_value"),
       lead(col(valueCol), 1).over(w).as("next_value"),
       (col(valueCol) - lag(col(valueCol), 1).over(w)).as("delta"),
-      ntile(tiles).over(w).as("quartile"),
+      ntile(4).over(w).as("quartile"),
       percent_rank().over(w).as("pct_rank"),
       cume_dist().over(w).as("cume"))
   }
 
   /** Exact trailing EWMA feature (adjust=true / truncated form): per
     * key, ordered by (ts, id), the exponentially-weighted mean of the
-    * trailing `w` values with decay `keepNum/keepDen` per step —
+    * trailing `w` values with decay d = 7/10 per step —
     * ewma_t = Σⱼ x_{t−j}·d^j / Σⱼ d^j over the last min(t, w) rows.
     *
     * Exactness across engines, with NO runtime `pow`: the decay is a
-    * RATIONAL d = keepNum/keepDen, so weight_j · keepDen^(w−1) =
-    * keepNum^j · keepDen^(w−1−j) is an exact 64-bit integer computed
+    * RATIONAL d = 7/10, so weight_j · 10^(w−1) =
+    * 7^j · 10^(w−1−j) is an exact 64-bit integer computed
     * once at plan time and embedded as a literal array. Values quantize
     * to integer micros, the weighted sum folds in pure integer
     * arithmetic, and the single FP step is the final division — two
@@ -833,29 +797,21 @@ object WindowOps {
     */
   def ewma(
       df: DataFrame,
-      keyCol: String = "user_id",
-      tsCol: String = "ts",
-      idCol: String = "event_id",
-      valCol: String = "value",
-      keepNum: Int = 7,
-      keepDen: Int = 10,
       w: Int = 8): DataFrame = {
     require(w >= 1 && w <= 20, s"ewma: 1 <= w <= 20, got $w")
-    require(keepNum >= 1 && keepNum < keepDen,
-      s"ewma: need 0 < keepNum/keepDen < 1, got $keepNum/$keepDen")
-    // weight_j scaled by keepDen^(w-1): exact longs, newest (j=0) first
+    // weight_j scaled by 10^(w-1): exact longs, newest (j=0) first
     val weights: Seq[Long] = (0 until w).map { j =>
-      (BigInt(keepNum).pow(j) * BigInt(keepDen).pow(w - 1 - j)).toLong
+      (BigInt(7).pow(j) * BigInt(10).pow(w - 1 - j)).toLong
     }
     require(weights.forall(_ <= Long.MaxValue / (w * 2000000000L)),
       "ewma: weight scale leaves no headroom for micro-quantized values")
-    val win = Window.partitionBy(col(keyCol))
-      .orderBy(col(tsCol), col(idCol))
+    val win = Window.partitionBy(col("user_id"))
+      .orderBy(col("ts"), col("event_id"))
       .rowsBetween(-(w - 1), 0)
     val wts = array(weights.map(lit(_)): _*)
-    val lst = reverse(collect_list(round(col(valCol) * 1e6).cast("long")).over(win))
-    df.select(col(idCol), col(keyCol), col(tsCol), col(valCol), lst.as("_lst"))
-      .select(col(idCol), col(keyCol), col(tsCol), col(valCol),
+    val lst = reverse(collect_list(round(col("value") * 1e6).cast("long")).over(win))
+    df.select(col("event_id"), col("user_id"), col("ts"), col("value"), lst.as("_lst"))
+      .select(col("event_id"), col("user_id"), col("ts"), col("value"),
         round(
           aggregate(zip_with(col("_lst"), slice(wts, lit(1), size(col("_lst"))),
             (x, wt) => x * wt), lit(0L), (acc, t) => acc + t).cast("double")

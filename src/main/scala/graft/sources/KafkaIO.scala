@@ -51,8 +51,8 @@ object KafkaIO {
       .option("topic", topic)
       .option("checkpointLocation", checkpointDir)
 
-  /** Decode a binary Avro `value` column (Schema-Registry framed when
-    * `framed=true`) into typed columns. mapPartitions so the
+  /** Decode a binary Schema-Registry-framed Avro `value` column into
+    * typed columns. mapPartitions so the
     * DatumReader/schema parse is amortized once per partition — the same
     * seam a real codec (or a registry client cache) initializes behind.
     *
@@ -61,9 +61,7 @@ object KafkaIO {
     */
   def fromAvro(
       df: DataFrame,
-      schema: StructType,
-      valueCol: String = "value",
-      framed: Boolean = true): DataFrame = {
+      schema: StructType): DataFrame = {
     // the wire schema is ALWAYS the all-nullable normalization (see
     // toAvro) — normalizing here too means a caller passing a
     // non-nullable schema cannot silently misalign the Avro reader with
@@ -71,10 +69,10 @@ object KafkaIO {
     // mismatch shifts every subsequent field)
     val wireSchema = StructType(schema.fields.map(_.copy(nullable = true)))
     val enc = org.apache.spark.sql.Encoders.row(wireSchema)
-    df.select(col(valueCol))
+    df.select(col("value"))
       // null values are topic tombstones (compaction deletes) — there is
       // nothing to decode; the changelog consumer handles deletion
-      .filter(col(valueCol).isNotNull)
+      .filter(col("value").isNotNull)
       .mapPartitions { rows =>
         // per-partition init: schema parse + datum reader + decoder
         // constructed once, reused for every record
@@ -82,7 +80,7 @@ object KafkaIO {
           wireSchema, AvroCodec.avroSchemaFor(wireSchema))
         rows.map { r =>
           val raw = r.getAs[Array[Byte]](0)
-          decoder.decode(if (framed) AvroCodec.unframe(raw)._2 else raw)
+          decoder.decode(AvroCodec.unframe(raw)._2)
         }
       }(enc)
   }
@@ -100,13 +98,11 @@ object KafkaIO {
   def fromAvroEvolved(
       df: DataFrame,
       writerSchemaJson: String,
-      readerSchema: StructType,
-      valueCol: String = "value",
-      framed: Boolean = true): DataFrame = {
+      readerSchema: StructType): DataFrame = {
     val wireReader = StructType(readerSchema.fields.map(_.copy(nullable = true)))
     val enc = org.apache.spark.sql.Encoders.row(wireReader)
-    df.select(col(valueCol))
-      .filter(col(valueCol).isNotNull)
+    df.select(col("value"))
+      .filter(col("value").isNotNull)
       .mapPartitions { rows =>
         // writer schema ships as JSON (serializable) and parses once per
         // partition, like a registry client's per-id cache entry
@@ -115,7 +111,7 @@ object KafkaIO {
           AvroCodec.avroSchemaFor(wireReader))
         rows.map { r =>
           val raw = r.getAs[Array[Byte]](0)
-          decoder.decode(if (framed) AvroCodec.unframe(raw)._2 else raw)
+          decoder.decode(AvroCodec.unframe(raw)._2)
         }
       }(enc)
   }
@@ -126,12 +122,9 @@ object KafkaIO {
     */
   def fromAvroInferred(
       df: DataFrame,
-      avroSchemaJson: String,
-      valueCol: String = "value",
-      framed: Boolean = true): DataFrame =
+      avroSchemaJson: String): DataFrame =
     fromAvro(df,
-      AvroCodec.structTypeFor(AvroCodec.schemaFromJson(avroSchemaJson)),
-      valueCol, framed)
+      AvroCodec.structTypeFor(AvroCodec.schemaFromJson(avroSchemaJson)))
 
   /** Encode typed columns into a binary Avro `value` column (plus a
     * binary key from `keyCol`), producing the wire frame [[writer]]
@@ -140,8 +133,7 @@ object KafkaIO {
   def toAvro(
       df: DataFrame,
       keyCol: String,
-      schemaId: Int = 1,
-      framed: Boolean = true): DataFrame = {
+      schemaId: Int = 1): DataFrame = {
     // normalize to all-nullable (Connect "optional" fields): Avro binary
     // carries no field tags, so the DECODER must use the exact writer
     // schema — fixing the wire schema to the nullable normalization
@@ -157,7 +149,7 @@ object KafkaIO {
         schema, AvroCodec.avroSchemaFor(schema))
       rows.map { r =>
         val body = encoder.encode(r)
-        val value = if (framed) AvroCodec.frame(body, schemaId) else body
+        val value = AvroCodec.frame(body, schemaId)
         val key =
           if (r.isNullAt(keyIdx)) null
           else String.valueOf(r.get(keyIdx)).getBytes("UTF-8")

@@ -270,11 +270,9 @@ object Streaming {
   def autoStateSession(
       spark: SparkSession,
       dir: String,
-      size: String = "10 minutes",
-      slide: String = "2 minutes",
       heapBytes: Long = Runtime.getRuntime.maxMemory): (SparkSession, String) = {
     val est = WindowOps.hoppingStateUpperBound(
-      Tables.events(spark, dir), size = size, slide = slide)
+      Tables.events(spark, dir))
     stateSessionFor(spark, "autoStateSession", est, heapBytes, MeasuredStateBytesPerEntry)
   }
 
@@ -323,10 +321,9 @@ object Streaming {
   def autoStateSessionWindow(
       spark: SparkSession,
       dir: String,
-      gap: String = "30 minutes",
       heapBytes: Long = Runtime.getRuntime.maxMemory): (SparkSession, String) = {
     val est = WindowOps.sessionStateUpperBound(
-      Tables.events(spark, dir), gap = gap)
+      Tables.events(spark, dir))
     stateSessionFor(spark, "autoStateSessionWindow", est, heapBytes,
       MeasuredSessionStateBytesPerEntry)
   }
@@ -505,10 +502,8 @@ object Streaming {
     */
   def dedupStream(
       df: DataFrame,
-      keyCols: Seq[String],
-      lateness: String = "10 minutes",
-      tsCol: String = "ts"): DataFrame =
-    df.withWatermark(tsCol, lateness)
+      keyCols: Seq[String]): DataFrame =
+    df.withWatermark("ts", "10 minutes")
       .dropDuplicatesWithinWatermark(keyCols)
 
   /** Streaming exact distinct over the event stream, projected to the
@@ -542,10 +537,7 @@ object Streaming {
     */
   def tokenBudgetStream(
       docs: DataFrame,
-      budgetTokens: Long,
-      groupCol: String = "source",
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
+      budgetTokens: Long): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val md5Hex8 = (id: Long) => {
@@ -554,9 +546,9 @@ object Streaming {
       d.take(4).map(b => f"${b & 0xff}%02x").mkString
     }
     docs
-      .select(col(idCol).cast("long").as("_id"),
-        col(groupCol).cast("string").as("_g"),
-        size(graft.llm.TextOps.tokens(col(textCol))).cast("long").as("_n"))
+      .select(col("doc_id").cast("long").as("_id"),
+        col("source").cast("string").as("_g"),
+        size(graft.llm.TextOps.tokens(col("text"))).cast("long").as("_n"))
       .as[(Long, String, Long)]
       .groupByKey(_._2)
       .flatMapGroupsWithState[Long, (Long, String, Long, Long)](
@@ -571,7 +563,7 @@ object Streaming {
           state.update(cum)
           out.iterator
       }
-      .toDF(idCol, groupCol, "n_tokens", "cum_tokens")
+      .toDF("doc_id", "source", "n_tokens", "cum_tokens")
   }
 
   /** S3/A6 streaming TABLE semantics: continuously-updating latest row
@@ -640,10 +632,9 @@ object Streaming {
       spark: SparkSession,
       name: String,
       avroSchemaJson: String,
-      binaryTopic: DataFrame,
-      valueCol: String = "value"): DataFrame = {
+      binaryTopic: DataFrame): DataFrame = {
     val typed = graft.sources.KafkaIO
-      .fromAvroInferred(binaryTopic, avroSchemaJson, valueCol)
+      .fromAvroInferred(binaryTopic, avroSchemaJson)
     typed.createOrReplaceTempView(name)
     typed
   }

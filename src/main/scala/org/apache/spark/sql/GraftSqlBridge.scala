@@ -22,21 +22,4 @@ object GraftSqlBridge {
     ext.registerFunctions(reg)
     reg.listFunction()
   }
-
-  /** Persist `df` in the partitions an uncached read of it has. Spark
-    * plans a cached query with AQE's final-stage shuffle coalescing off
-    * unless [[internal.SQLConf.CAN_CHANGE_CACHED_PLAN_OUTPUT_PARTITIONING]]
-    * is set on the session that caches it, so a small frame would be
-    * cached in more partitions than it is read in. The setting goes on a
-    * clone of the frame's session (`cloneSession` is private[sql]), which
-    * shares the cache but not the conf: `df` reads the cached relation,
-    * and no other query on the caller's session sees the setting.
-    * Unpersist through `df`.
-    */
-  def persistAsRead(df: DataFrame): Unit = {
-    val session = df.sparkSession.asInstanceOf[classic.SparkSession].cloneSession()
-    session.conf.set(internal.SQLConf.CAN_CHANGE_CACHED_PLAN_OUTPUT_PARTITIONING.key, "true")
-    classic.Dataset.ofRows(session, df.queryExecution.analyzed).persist()
-    ()
-  }
 }

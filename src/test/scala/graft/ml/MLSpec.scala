@@ -161,7 +161,30 @@ class MLSpec extends SparkSpec {
     val (version, metric) = trained
     assert(version == 1)
     assert(java.lang.Double.doubleToLongBits(metric) == 0x3ff0000000000000L, s"metric $metric")
-    val rows = Scorer.scoreDF(reg.load("Bot Detector"), Trainer.trainingFrame(spark, sf0001))
+    assert(modelDigest(reg) == PinnedDigest)
+  }
+
+  test("the trained model does not depend on the session's shuffle width") {
+    // the seeded split and the tree's sampling draw per partition, so a
+    // width taken from the session would train another model; with
+    // coalescing off, the session's width reaches the frame's layout
+    Seq(2, 7).foreach { width =>
+      val s = graft.Sessions.isolatedSession(spark)
+      s.conf.set("spark.sql.shuffle.partitions", width.toLong)
+      s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      val r = new Registry(Files.createTempDirectory("graft_reg_width").toString)
+      Trainer.trainAndRegister(s, sf0001, r, "Bot Detector", useCv = false)
+      assert(modelDigest(r) == PinnedDigest, s"shuffle width $width")
+    }
+  }
+
+  private val PinnedDigest = "1dac6f4e932ffe07735a865f0369beeef7f7cf22dd4ff7b059de8ab67e9b0868"
+
+  /** SHA-256 over every training row's prediction, raw prediction and
+    * probability under the model `registry` holds.
+    */
+  private def modelDigest(registry: Registry): String = {
+    val rows = Scorer.scoreDF(registry.load("Bot Detector"), Trainer.trainingFrame(spark, sf0001))
       .select(col("user_id"), col("w_start"), col("predicted_label"),
         vector_to_array(col("rawPrediction")), vector_to_array(col("probability")))
       .collect()
@@ -173,9 +196,8 @@ class MLSpec extends SparkSpec {
       s"$u,$w,$p," + scores.map(d =>
         java.lang.Long.toHexString(java.lang.Double.doubleToLongBits(d))).mkString(",")
     }.mkString("\n")
-    val digest = java.security.MessageDigest.getInstance("SHA-256")
+    java.security.MessageDigest.getInstance("SHA-256")
       .digest(text.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    assert(digest == "1dac6f4e932ffe07735a865f0369beeef7f7cf22dd4ff7b059de8ab67e9b0868")
   }
 
   test("registry save, load and LocalScorer.compile run no Spark job") {
